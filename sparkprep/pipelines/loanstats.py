@@ -6,13 +6,18 @@ engine pipeline. Same observable semantics, different physics:
 |-----------------------------------------|---------------------------------|
 | 73-col then 22-col select (:44-129)     | one 22-col select (Catalyst     |
 |                                         | prunes the scan regardless)     |
-| repartition(60) x3 + cache x3 (:149-307)| AQE sizes partitions; single    |
-|                                         | cache before the scalar agg     |
+| repartition(60) x3 + cache x3 (:149-307)| AQE sizes partitions; no cache: |
+|                                         | the min/max side re-runs the    |
+|                                         | codegen'd prep (a checkpoint    |
+|                                         | measured a wash, ep1_prep)      |
 | 7 Python row UDFs (:178-287)            | native expressions (functions/) |
 | 4 collect() jobs for min/max (:241-266) | ONE fused aggregate             |
 | union of 2 filters (:301)               | one isin scan                   |
 | registerTempTable never used (:161)     | dropped (dead op)               |
 | CSV staging + `bq load` (:330-382)      | same contract, emulated sink    |
+| audit counts (none in the reference)    | observed on the staging write's |
+|                                         | own jobs; malformed count in    |
+|                                         | the JVM (no Python round trip)  |
 """
 
 from __future__ import annotations
@@ -98,11 +103,15 @@ def run_loanstats_job(
     """End-to-end EP1: permissive CSV read → prep pipeline → staged
     CSV + schema-string load contract (loanStat.py:32,330-382), with the
     observability the reference lacked: malformed-drop count and
-    per-step report in the returned manifest."""
+    per-step report in the returned manifest.
+
+    ``count_rows`` steps are observed, not counted: their row counts
+    ride on the staging write, so an audited run launches the same
+    Spark jobs as an unaudited one."""
     raw = readers.read_csv(spark, csv_path, header=True, mode="DROPMALFORMED")
     dropped = readers.malformed_drop_count(spark, csv_path, raw)
-    out, report = loanstats_prep_pipeline(count_rows).run(raw)
+    out, finish = loanstats_prep_pipeline(count_rows).run_observed(raw)
     manifest = writers.bq_load_emulated(out, staging_dir, dataset, table)
     manifest["malformed_rows_dropped"] = dropped
-    manifest["steps"] = report.as_rows()
+    manifest["steps"] = finish().as_rows()
     return manifest

@@ -21,8 +21,9 @@ from pyspark.sql import DataFrame
 class Step:
     name: str
     fn: Callable[[DataFrame], DataFrame]
-    # row counting forces a job per step; default off (lazy end-to-end),
-    # turn on for audited runs (the reference's dedup audit mode)
+    # row counting forces a job per step under ``run`` (none under
+    # ``run_observed``); default off (lazy end-to-end), turn on for
+    # audited runs (the reference's dedup audit mode)
     count_rows: bool = False
 
 
@@ -53,8 +54,9 @@ class Pipeline:
 
     Lazy by default: steps only build the plan (one Spark job at the
     terminal action, letting Catalyst fuse everything). With
-    ``count_rows`` steps, each counted step materializes — use
-    deliberately, exactly like the reference's audit counts.
+    ``count_rows`` steps, ``run`` materializes each counted step — use
+    deliberately, exactly like the reference's audit counts — and
+    ``run_observed`` counts them inside the caller's action instead.
     """
 
     def __init__(self, *steps: Step):
@@ -66,33 +68,43 @@ class Pipeline:
 
     def run_observed(self, df: DataFrame):
         """One-pass funnel accounting via the Observation API: each
-        step's output carries an ``observe(count)`` node, so the SINGLE
-        terminal action the caller runs yields every step's row count —
-        no per-step count() jobs (``run`` with ``count_rows`` pays one
-        full materialization per audited step; this pays zero).
+        ``count_rows`` step's output carries an ``observe(count)`` node,
+        so the SINGLE terminal action the caller runs yields every
+        counted step's row count — no per-step count() jobs (``run``
+        pays one re-execution per counted step; this pays zero).
+        Uncounted steps report ``rows_out=None``, as in ``run``.
 
         Returns ``(out, finish)``; call ``finish()`` AFTER running an
         action on ``out`` (or a descendant) to collect the RunReport.
-        Caveat: observe nodes count rows per EXECUTION — keep the
-        downstream plan linear (a self-join above the observed subtree
-        re-executes it and double-counts unless the exchange is reused).
+        A step's ``seconds`` is its plan-build time: the work happens in
+        the caller's action.
+
+        Re-executed subtrees do not double-count: when the plan above
+        an observed step runs that step twice in one action (EP1's
+        ``normalize`` cross-joins a broadcast aggregate of its own
+        input), each copy of the observe node has its own accumulator
+        and the report takes one copy's count — equal to ``run``'s
+        count (tests/test_loanstats_pipeline.py pins this).
         """
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
-        observations: list[tuple[str, Observation]] = []
+        steps: list[tuple[str, float, Observation | None]] = []
         out = df
         for step in self.steps:
+            t0 = time.perf_counter()
             out = step.fn(out)
-            o = Observation()
-            out = out.observe(o, F.count(F.lit(1)).alias("rows"))
-            observations.append((step.name, o))
+            o = None
+            if step.count_rows:
+                o = Observation()
+                out = out.observe(o, F.count(F.lit(1)).alias("rows"))
+            steps.append((step.name, time.perf_counter() - t0, o))
 
         def finish() -> RunReport:
-            report = RunReport()
-            for name, o in observations:
-                report.steps.append(StepReport(name, 0.0, o.get["rows"]))
-            return report
+            return RunReport([
+                StepReport(name, seconds, o.get["rows"] if o else None)
+                for name, seconds, o in steps
+            ])
 
         return out, finish
 

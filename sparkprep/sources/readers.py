@@ -48,32 +48,40 @@ def malformed_drop_count(spark: SparkSession, path: str, df: DataFrame, header: 
     Spark quirk this must work around: ``df.count()`` on a CSV read
     skips parsing entirely (zero-column pushdown), so malformed rows are
     COUNTED even though any real projection drops them — and column
-    pruning can even hide extra-trailing-token rows. ``df.rdd.count()``
-    materializes every column, giving the true post-DROPMALFORMED
-    cardinality. This is an audit operator; the extra full parse is the
-    point.
+    pruning can even hide extra-trailing-token rows. The parsed side is
+    therefore a full-width count: an ``observe(count)`` over ``df``
+    drained by a ``noop`` write, which materializes every column (no
+    pruning, so DROPMALFORMED drops exactly the lines a full parse
+    rejects) without leaving the JVM — ``df.rdd.count()`` gives the same
+    number but pickles every parsed row into a Python worker. This is
+    an audit operator; the extra full parse is the point.
     """
-    from pyspark.sql import functions as F
+    from pyspark.sql import Observation
 
-    # one pass for BOTH totals: raw line count and the number of files —
-    # a directory/glob of N header CSVs carries N header lines (the
-    # parsed side drops every one), so subtracting a single header
-    # would overstate the malformed count by N-1
-    totals = (
+    # one exchange for BOTH raw totals: lines per input file — a
+    # directory/glob of N header CSVs carries N header lines (the parsed
+    # side drops every one), so subtracting a single header would
+    # overstate the malformed count by N-1
+    per_file = (
         spark.read.text(path)
         # input_file_name() is non-deterministic — Spark rejects it
         # INSIDE an aggregate; a projection first is fine
         .select(F.input_file_name().alias("__f"))
-        .agg(
-            F.count(F.lit(1)).alias("lines"),
-            F.count_distinct("__f").alias("files"),
-        )
-        .collect()[0]
+        .groupBy("__f")
+        .count()
+        .collect()
     )
-    raw = totals["lines"]
+    raw = sum(r["count"] for r in per_file)
     if header:
-        raw -= totals["files"]
-    return raw - df.rdd.count()
+        raw -= len(per_file)
+    parsed = Observation()
+    (
+        df.observe(parsed, F.count(F.lit(1)).alias("rows"))
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
+    return raw - parsed.get["rows"]
 
 
 def read_text(spark: SparkSession, path: str) -> DataFrame:

@@ -86,7 +86,7 @@ def test_observed_funnel_matches_counted_funnel(spark, sf_dir):
     pipe_counted = corpus_prep_pipeline(count_rows=True)
     _, counted = pipe_counted.run(docs)
 
-    pipe_obs = corpus_prep_pipeline(count_rows=False)
+    pipe_obs = corpus_prep_pipeline(count_rows=True)
     out, finish = pipe_obs.run_observed(docs)
     out.write.format("noop").mode("overwrite").save()   # ONE action
     observed = finish()

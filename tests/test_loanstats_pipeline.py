@@ -44,6 +44,7 @@ def csv_dir():
         lines.append(_row(i, status="Current"))          # filtered out
     lines.append(_row(30, annual_inc=""))                # null annual_inc -> dropna
     lines.append(_row(31).replace("18.24", ""))          # null dti -> dropna
+    lines.append(_row(33) + ",extra")                    # extra trailing token -> DROPMALFORMED
     lines.append('"' + _row(32))                         # unterminated quote -> DROPMALFORMED
     with open(os.path.join(d, "loans.csv"), "w") as f:
         f.write("\n".join(lines))
@@ -55,18 +56,21 @@ def test_ep1_end_to_end(spark, csv_dir):
     staging = tempfile.mkdtemp(prefix="loanstats-staging-")
     try:
         manifest = run_loanstats_job(spark, csv_dir, staging, count_rows=True)
-        assert manifest["malformed_rows_dropped"] == 1
+        assert manifest["malformed_rows_dropped"] == 2
         steps = {s["step"]: s for s in manifest["steps"]}
-        # Spark CSV quirk: under column pruning the quote-broken line is
+        # Spark CSV quirks: under column pruning the quote-broken line is
         # null-padded instead of dropped (full-width parse drops it —
         # which is what malformed_rows_dropped reports); dropna catches
-        # it either way, so the pipeline output is identical.
-        assert steps["select_working_cols"]["rows_out"] == 33
-        assert steps["drop_any_null"]["rows_out"] == 30   # rows 30, 31 + quoted line
-        assert steps["filter_status"]["rows_out"] == 26   # 20 FP + 6 CO
+        # it either way. The pruned scan never sees the extra trailing
+        # token, so that line flows through as a valid Fully Paid row
+        # although the full-width parse counts it as malformed.
+        assert steps["select_working_cols"]["rows_out"] == 34
+        assert steps["drop_any_null"]["rows_out"] == 31   # rows 30, 31 + quoted line
+        assert steps["normalize"]["rows_out"] is None     # not a counted step
+        assert steps["filter_status"]["rows_out"] == 27   # 20 FP + 6 CO + extra-token row
 
         out = spark.read.csv(manifest["staging_path"], header=False)
-        assert out.count() == 26
+        assert out.count() == 27
         assert "loan_amnt:FLOAT" in manifest["schema_string"]
         assert "grade:STRING" in manifest["schema_string"]
     finally:
@@ -89,8 +93,55 @@ def test_ep1_transform_semantics(spark, csv_dir):
 
 
 def test_malformed_accounting(spark, csv_dir):
+    # the quote-broken line and the extra-token line; the full-width
+    # count must agree with the Python-side definition it replaced
+    # (raw lines - header - df.rdd.count())
     raw = readers.read_csv(spark, csv_dir, header=True)
-    assert readers.malformed_drop_count(spark, csv_dir, raw) == 1
+    lines = spark.read.text(csv_dir).count()
+    assert readers.malformed_drop_count(spark, csv_dir, raw) == 2
+    assert lines - 1 - raw.rdd.count() == 2
+
+
+def test_observed_funnel_matches_counted_funnel(spark, csv_dir):
+    # one-action Observation accounting == the per-step count() jobs,
+    # although normalize's crossJoin(broadcast(agg)) runs every step
+    # before it twice: once per join side, each with its own observe node
+    from sparkprep.pipelines.loanstats import loanstats_prep_pipeline
+    from sparkprep.plans import explain_formatted
+
+    raw = readers.read_csv(spark, csv_dir, header=True)
+    _, counted = loanstats_prep_pipeline(count_rows=True).run(raw)
+    out, finish = loanstats_prep_pipeline(count_rows=True).run_observed(raw)
+    # 3 observed steps below normalize, once per side, + filter_status
+    assert explain_formatted(out).count("CollectMetrics (") == 7
+    out.write.format("noop").mode("overwrite").save()   # ONE action
+    observed = finish()
+
+    got = {s.name: s.rows_out for s in observed.steps}
+    want = {s.name: s.rows_out for s in counted.steps}
+    assert got == want
+    assert got["normalize"] is None and got["filter_status"] == 27
+
+
+def test_audit_launches_no_extra_jobs(spark, csv_dir):
+    # the audited run's step counts ride on the staging write, and the
+    # malformed count is one groupBy + one noop write whether audited
+    # or not
+    sc = spark.sparkContext
+    jobs = {}
+    for audited in (True, False):
+        group = f"ep1-audit-{audited}"
+        staging = tempfile.mkdtemp(prefix="loanstats-jobs-")
+        sc.setJobGroup(group, "EP1 job count")
+        try:
+            run_loanstats_job(spark, csv_dir, staging, count_rows=audited)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            shutil.rmtree(staging, ignore_errors=True)
+        jobs[audited] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs[True] == jobs[False]
+    assert jobs[False] <= 7
+
 
 def test_scheduled_job_lifecycle(spark, csv_dir):
     # OR5: the cron-callable path runs the SAME pipeline the Airflow
@@ -112,7 +163,7 @@ def test_scheduled_job_lifecycle(spark, csv_dir):
         )
         manifest = run_scheduled(job, stop_session=False)
         assert set(manifest["phases_sec"]) == {"acquire_session", "run_task", "teardown"}
-        assert manifest["result"]["malformed_rows_dropped"] == 1
+        assert manifest["result"]["malformed_rows_dropped"] == 2
         on_disk = json.load(open(manifest["manifest_path"]))
         assert on_disk["job"] == "loanstats_test"
         assert on_disk["result"]["schema_string"] == manifest["result"]["schema_string"]
