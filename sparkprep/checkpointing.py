@@ -10,9 +10,10 @@ that computed them, so a lost executor invalidates the checkpoint and —
 because localCheckpoint also SEVERS lineage — the job cannot recompute
 and dies (VERDICT r9 next-round #4).
 
-``lazy_checkpoint``/``eager_checkpoint`` are drop-in replacements for
-``df.localCheckpoint(...)`` call sites (use via ``df.transform(...)``)
-that consult the session conf key ``sparkprep.checkpoint.mode``:
+``lazy_checkpoint`` is the engine's one lineage-cut seam: a drop-in
+replacement for ``df.localCheckpoint(eager=False)`` (use via
+``df.transform(lazy_checkpoint)``) that consults the session conf key
+``sparkprep.checkpoint.mode``:
 
 - ``local`` (default): ``df.localCheckpoint`` — fastest, single-node /
   ephemeral-job posture. Unchanged behavior for every existing caller.
@@ -30,6 +31,11 @@ configured (Spark's own error is an opaque SparkException mid-job).
 
 Tested by tests/test_checkpoint_mode.py: the same connected-components
 and k-core iterations produce identical results under both modes.
+
+Plan-shape tests that must see below a cut (a checkpoint truncates
+``explain()`` to ``Scan ExistingRDD``) replace ``_checkpoint`` with an
+identity function while they build — ``tests/plan_util.no_lineage_cuts``.
+No operator takes a per-call flag to skip its cut.
 """
 
 from __future__ import annotations
@@ -52,7 +58,7 @@ def checkpoint_mode(spark) -> str:
     return mode
 
 
-def _checkpoint(df: DataFrame, eager: bool) -> DataFrame:
+def _checkpoint(df: DataFrame) -> DataFrame:
     spark = df.sparkSession
     if checkpoint_mode(spark) == "reliable":
         if spark.sparkContext.getCheckpointDir() is None:
@@ -62,15 +68,10 @@ def _checkpoint(df: DataFrame, eager: bool) -> DataFrame:
                 "set it to an HDFS/object-store path before running "
                 "iterative operators in reliable mode"
             )
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+        return df.checkpoint(eager=False)
+    return df.localCheckpoint(eager=False)
 
 
 def lazy_checkpoint(df: DataFrame) -> DataFrame:
     """Lineage cut, materialized on first use — ``df.transform(lazy_checkpoint)``."""
-    return _checkpoint(df, eager=False)
-
-
-def eager_checkpoint(df: DataFrame) -> DataFrame:
-    """Lineage cut, materialized now — ``df.transform(eager_checkpoint)``."""
-    return _checkpoint(df, eager=True)
+    return _checkpoint(df)

@@ -80,7 +80,6 @@ def kmeans_lloyd(
     k: int,
     dims: int,
     rounds: int = 3,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Fixed-round distributed Lloyd iteration over quantized points
     ``(id, xi: array<long>)``; returns the final assignment
@@ -100,20 +99,11 @@ def kmeans_lloyd(
     The assignment frame is localCheckpoint-ed per round: it anchors
     both the next centroid aggregate and the broadcast join, and
     without lineage truncation every round re-executes all prior
-    rounds (the k_core loop discipline). ``checkpoint=False`` exists
-    for plan-shape tests only (localCheckpoint truncates explain() to
-    ``Scan ExistingRDD``, hiding the round structure — the
-    ranks.global_rank convention).
+    rounds (the k_core loop discipline).
     """
-
-    def _cp(df: DataFrame) -> DataFrame:
-        return df.transform(lazy_checkpoint) if checkpoint else df
-
-    asg = _cp(
-        points.select(
-            "id", "xi", (F.col("id") % F.lit(int(k))).cast("int").alias("cluster")
-        )
-    )
+    asg = points.select(
+        "id", "xi", (F.col("id") % F.lit(int(k))).cast("int").alias("cluster")
+    ).transform(lazy_checkpoint)
 
     for _ in range(int(rounds)):
         cent = asg.groupBy("cluster").agg(
@@ -151,10 +141,11 @@ def kmeans_lloyd(
             )
         )
         w = Window.partitionBy("id").orderBy("__dist", "__c")
-        asg = _cp(
+        asg = (
             scored.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .select("id", "xi", F.col("__c").alias("cluster"))
+            .transform(lazy_checkpoint)
         )
     return asg
 

@@ -45,7 +45,6 @@ def global_rank(
     rank_name: str = "rank",
     total_name: str | None = None,
     num_partitions: int = 32,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Exact global ``row_number`` over ``order_exprs`` (pass sort-order
     columns, e.g. ``[F.desc("x"), F.asc("id")]`` — the ordering must be
@@ -60,13 +59,8 @@ def global_rank(
         "__pid", F.spark_partition_id()
     )
     # frozen pids + single execution of the range shuffle for BOTH
-    # consumers (the counts agg and the final per-partition window).
-    # checkpoint=False exists for plan-shape tests only (the checkpoint
-    # truncates lineage to Scan ExistingRDD, hiding the range exchange
-    # from explain); correctness does not depend on it as long as the
-    # range partitioning is deterministic for both consumers.
-    if checkpoint:
-        parted = parted.transform(lazy_checkpoint)
+    # consumers (the counts agg and the final per-partition window)
+    parted = parted.transform(lazy_checkpoint)
     counts = parted.groupBy("__pid").agg(F.count(F.lit(1)).alias("__c"))
     # cumulative offsets over the <= num_partitions-row counts frame:
     # the only global window in the operator, bounded O(N) post-agg
@@ -148,7 +142,6 @@ def global_cumsum(
     cum_name: str = "cum",
     total_name: str | None = None,
     num_partitions: int = 32,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Exact running total of ``value_col`` over a global TOTAL ordering
     with no single-partition sort — the distributed prefix-sum that
@@ -168,8 +161,7 @@ def global_cumsum(
     parted = df.repartitionByRange(num_partitions, *order_exprs).withColumn(
         "__pid", F.spark_partition_id()
     )
-    if checkpoint:
-        parted = parted.transform(lazy_checkpoint)
+    parted = parted.transform(lazy_checkpoint)
     partials = parted.groupBy("__pid").agg(F.sum(value_col).alias("__c"))
     w_off = Window.orderBy("__pid").rowsBetween(
         Window.unboundedPreceding, -1
@@ -201,7 +193,6 @@ def multi_order_global_ntile(
     layout_name: str = "__layout",
     bucket_name: str = "bucket",
     num_partitions: int = 32,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Exact ``ntile(k)`` under SEVERAL candidate orderings in ONE range
     pass — the layout-simulation primitive (layout_advisor, pruning_sim
@@ -246,10 +237,6 @@ def multi_order_global_ntile(
         rank_name="__mrk",
         group_total_name="__mtot",
         num_partitions=num_partitions,
-        # checkpoint=False exists for plan-shape tests only — the
-        # localCheckpoint truncates explain() to Scan ExistingRDD
-        # (ranks.global_rank convention)
-        checkpoint=checkpoint,
     )
     return ranked.withColumn(
         bucket_name, ntile_from_rank(F.col("__mrk"), F.col("__mtot"), k)
@@ -263,7 +250,6 @@ def grouped_global_rank(
     rank_name: str = "rank",
     group_total_name: str | None = None,
     num_partitions: int = 32,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Per-GROUP exact ``row_number`` for LOW-CARDINALITY group keys —
     the case the plan audit cannot even see: ``Window.partitionBy(key)``
@@ -282,8 +268,7 @@ def grouped_global_rank(
     parted = df.repartitionByRange(
         num_partitions, *gexprs, *order_exprs
     ).withColumn("__pid", F.spark_partition_id())
-    if checkpoint:
-        parted = parted.transform(lazy_checkpoint)
+    parted = parted.transform(lazy_checkpoint)
     counts = parted.groupBy("__pid", *group_cols).agg(
         F.count(F.lit(1)).alias("__c")
     )
@@ -318,7 +303,6 @@ def grouped_global_cumsum(
     value_col: str,
     cum_name: str = "cum",
     num_partitions: int = 32,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Per-GROUP exact running total for LOW-CARDINALITY group keys —
     :func:`global_cumsum`'s grouped form, completing the primitive
@@ -332,8 +316,7 @@ def grouped_global_cumsum(
     parted = df.repartitionByRange(
         num_partitions, *gexprs, *order_exprs
     ).withColumn("__pid", F.spark_partition_id())
-    if checkpoint:
-        parted = parted.transform(lazy_checkpoint)
+    parted = parted.transform(lazy_checkpoint)
     partials = parted.groupBy("__pid", *group_cols).agg(
         F.sum(value_col).alias("__c")
     )

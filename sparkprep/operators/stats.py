@@ -468,7 +468,6 @@ def isotonic_bins(
     bin_col: str,
     cnt_col: str,
     pos_col: str,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Weighted isotonic regression on an AGGREGATED bin frame
     ``(bin, cnt, pos)`` — returns ``(bin, iso)`` with ``iso`` the
@@ -487,11 +486,8 @@ def isotonic_bins(
     every max/min compares identical doubles on any engine.
 
     Exactness caveat shared with its oracle: bin stats must be integer
-    counts. The input frame is localCheckpoint-ed (three self-join
-    consumers — CLAUDE.md discipline); ``checkpoint=False`` exists for
-    plan-shape audits only (the checkpoint truncates explain() to Scan
-    ExistingRDD, hiding the bounded prefix window from the detector —
-    the ranks.global_rank convention).
+    counts. The prefix frame is localCheckpoint-ed (three self-join
+    consumers — CLAUDE.md discipline).
     """
     wc = Window.orderBy(bin_col).rowsBetween(Window.unboundedPreceding, 0)
     prefix = bins.select(
@@ -500,9 +496,7 @@ def isotonic_bins(
         F.col(pos_col).alias("__p"),
         F.sum(cnt_col).over(wc).alias("__cc"),
         F.sum(pos_col).over(wc).alias("__cp"),
-    )
-    if checkpoint:
-        prefix = prefix.transform(lazy_checkpoint)
+    ).transform(lazy_checkpoint)
     pj = prefix.select(
         F.col("__b").alias("jb"),
         (F.col("__cc") - F.col("__c")).alias("jpc"),

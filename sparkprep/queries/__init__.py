@@ -66,268 +66,6 @@ def _read(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-# Round-4 rotation (VERDICT r3 "What's wrong" #1): pin the 50 of the 58
-# never-driver-verified queries chosen to run THIS round — the whole
-# round-3 governance module, the Arrow-recurrence pair (user_ewma,
-# cusum_drift), embedding_covariance/retrieval_overlap, and the temporal/
-# cleaning extension block. The 8 deferred to round 5 (listed in
-# _ROUND5_OVERFLOW below, go first next round) are simple map-only text
-# metrics with strong sf0.001 local oracle replays — least risk to wait.
-# The list is SELF-CLEANING: registry() drops any name the driver has
-# already verified, so a stale pin can never again strand new queries
-# outside the window (the round-3 failure mode).
-_DRIVER_WINDOW_PRIORITY = [
-    # governance module (entirely round-3-new, never adjudicated)
-    "fk_audit",
-    "fd_audit",
-    "sample_ks",
-    "pseudonym_audit",
-    "purge_audit",
-    "k_anonymity",
-    "l_diversity",
-    "benford",
-    "revenue_concentration",
-    # Arrow-recurrence + heavy-math pair ops the verdict called out
-    "user_ewma",
-    "cusum_drift",
-    "embedding_covariance",
-    "retrieval_overlap",
-    # similarity / dedup extensions
-    "minhash_eval",
-    "containment_pairs",
-    "substr_coverage",
-    "cluster_reps",
-    "hard_negatives",
-    # temporal / windowed extensions
-    "mad_outliers",
-    "join_forecast",
-    "mom_growth",
-    "ab_test",
-    "active_users",
-    "rolling_quantiles",
-    "watermark_audit",
-    "did_readout",
-    "freshness_check",
-    "markov_3step",
-    "debounce",
-    "decayed_value",
-    "time_split",
-    "session_paths",
-    "cooccurrence",
-    "mutual_info",
-    "attribution",
-    # cleaning / feature-prep extensions
-    "filtered_join",
-    "target_encode",
-    "collapse_rare",
-    "drift_panel",
-    "feature_hash",
-    "impute_mode",
-    "key_skew",
-    "winsorize",
-    "quantile_normalize",
-    "incr_agg",
-    # corpus / token ops
-    "top_p_sources",
-    "ngram_diversity",
-    "weighted_sample",
-    "token_budget",
-    "vocab_coverage",
-]
-
-# Verification queue behind the pinned window: the 8 deferred from
-# round 4 (window was 50 slots, 58 candidates — map-only text metrics
-# + rows-only pca_project, all green in local sf0.001 oracle replay),
-# then the round-4 and round-5 session additions in landing order,
-# pinned explicitly so module-merge order can't reshuffle them. All
-# fall out automatically once a CORRECTNESS file records them. NOTE:
-# no CORRECTNESS_r04 was ever recorded (the round-4 driver run did not
-# land), so the round-4 pins above still hold the 50-slot window and
-# this queue drains over the following rounds; every name in it stays
-# covered by the local sf0.001 oracle replay in the meantime.
-_ROUND5_OVERFLOW = [
-    "auc_quality",
-    "readability",
-    "zipf",
-    "blocklist",
-    "token_fertility",
-    "lang_margin",
-    "url_canon",
-    "pca_project",
-    # round-4 session additions (never driver-verified)
-    "embedding_truncate",
-    "preference_pairs",
-    "sft_assembly",
-    "token_js",
-    "cluster_split",
-    "bpe_merges",
-    "cms_counts",
-    "pagerank",
-    "skyline",
-    "setsim_join",
-    "autocorr",
-    # round-5 session additions (never driver-verified)
-    "triangle_count",
-    "salted_join",
-    "window_funnel",
-    "cohort_retention",
-    "peak_concurrency",
-    "mutual_nn",
-    "chi_square",
-    "anova_f",
-    "spearman",
-    "assortativity",
-    "assoc_rules",
-    "gini_revenue",
-    "source_overlap",
-    "session_stats",
-    "survival_table",
-    "reorder_gaps",
-    "embedding_drift",
-    "lorenz_curve",
-    "two_hop_reach",
-    "price_spread",
-    "bigram_pmi",
-    "supplier_hhi",
-    "user_migration",
-    "basket_size_dist",
-    "rfm_segments",
-    "ship_delay",
-    "weekday_effect",
-    # round-6 session additions (never driver-verified): the three
-    # entity-grain scale twins + the join fan-out profile — exactly
-    # fills the 50-slot round-6 window (46 + 4)
-    "gini_scale",
-    "lorenz_scale",
-    "rfm_scale",
-    "join_fanout",
-    # round-6 OLAP batch — lands in the ROUND-7 window (the round-6
-    # window is exactly full); all four are sf0.001/sf0.01
-    # driver-sim-green already
-    "rollup_revenue",
-    "cube_mix",
-    "region_share",
-    "seasonal_adjust",
-    "equidepth_bins",
-    "value_deciles",
-    "percent_rank_scale",
-    "rolling_quantiles_scale",
-    "token_packing_scale",
-]
-
-# Round-7 queue: the 37 round-6/7 session additions that were riding on
-# module-merge auto-promotion, pinned in their established order so new
-# modules can't reshuffle them out of the 50-slot window, followed by
-# this session's additions in landing order. 46 pre-session names + the
-# first 4 here fill the round-7 window; the rest drain in round 8 (all
-# covered by the sf0.001 oracle replay in pytest meanwhile).
-_ROUND7_QUEUE = [
-    "pr_auc",
-    "calibration_error",
-    "vocab_growth",
-    "label_consistency",
-    "cuped",
-    "holt_trend",
-    "churn_labels",
-    "forecast_eval",
-    "forecast_anomalies",
-    "signed_rank",
-    "trend_robust",
-    "cumulative_reach",
-    "user_twa",
-    "interval_merge",
-    "cross_corr",
-    "changepoint",
-    "burstiness",
-    "repeat_purchase_curve",
-    "kendall_tau",
-    "woe_iv",
-    "theil_index",
-    "stump_split",
-    "ols_elasticity",
-    "degree_dist",
-    "tail_quantiles",
-    "mann_whitney",
-    "kruskal_wallis",
-    "weighted_median",
-    "k_core",
-    "null_patterns",
-    "fd_repair",
-    "bootstrap_ci",
-    "gains_table",
-    "ngram_novelty",
-    "t_closeness",
-    "dp_counts",
-    "dp_histogram",
-    # round-7 session additions (never driver-verified)
-    "kmeans_assign",
-    "communities",
-    "spell_pairs",
-    "cohens_kappa",
-    "transition_gini",
-    "resample_interp",
-    "isotonic_fit",
-    "hits_scores",
-    "sprt_stop",
-    "modularity",
-    "position_attribution",
-    "jaccard_histogram",
-    "conformal_interval",
-    "ndcg_eval",
-    "bfs_layers",
-]
-
-# Round-8 session additions, pinned in landing order behind the round-7
-# stragglers (the established window discipline — new modules can't
-# reshuffle them, the self-cleaning filter drops them once adjudicated).
-_ROUND8_QUEUE = [
-    "levene_bf",
-    "jarque_bera",
-    "cramers_v",
-    "durbin_watson",
-    "pit_snapshot",
-    "closeness_centrality",
-    "mmr_rerank",
-    "growth_decomposition",
-    "group_sequential",
-    "local_clustering",
-    "generalization_ladder",
-    "eb_shrinkage",
-    "source_dup_report",
-    "copurchase_chi2",
-    "capture_recapture",
-    "unseen_mass",
-    "bounce_rate",
-    "budget_apportion",
-    "yuen_test",
-    "markov_stationary",
-    "frequent_triples",
-    "croston",
-    "journey_distance",
-    "top_movers",
-    "revenue_bridge",
-    "abc_classification",
-    "ltv_curve",
-    "pruning_sim",
-]
-
-
-# Round-10 session additions, pinned in landing order (the established
-# window discipline — the self-cleaning filter drops them once
-# adjudicated; every name stays covered by the sf0.001 oracle replay).
-_ROUND10_QUEUE = [
-    "holt_winters",
-    "link_prediction",
-    "k_truss",
-    "merkle_manifest",
-    "krippendorff_alpha",
-    "earth_movers",
-    "silhouette_score",
-    "burrows_delta",
-    "lsh_tuning",
-]
-
-
 def registry():
     from sparkprep.queries import (
         advanced,
@@ -349,36 +87,21 @@ def registry():
         merged_q.update(mod.QUERIES)
         oracles.update(mod.ORACLES)
     # The correctness driver adjudicates the FIRST 50 registry entries
-    # per round: never-verified names first (KeyError here = a priority
-    # name was renamed without updating the rotation — fail loudly),
-    # then everything else LEAST-RECENTLY-VERIFIED first (VERDICT r8
-    # #5: with all 339 queries adjudicated at least once, the window
-    # now re-confirms the stalest greens against the current testdata
-    # generation — r1 greens had gone seven regenerations unchecked).
-    # Every query keeps local sf0.001 oracle coverage regardless
-    # (tests/test_entry_oracle.py). Safety net: any registered query
-    # absent from EVERY recorded CORRECTNESS_r*.json is auto-promoted
-    # behind the explicit list, so forgetting to extend the rotation
-    # can't strand a new query outside the adjudication window.
+    # per round: names absent from every recorded CORRECTNESS_r*.json
+    # go first, in module-merge order, so a new query can never be
+    # stranded outside the adjudication window; then everything else
+    # LEAST-RECENTLY-VERIFIED first (VERDICT r8 #5: the window
+    # re-confirms the stalest greens against the current testdata
+    # generation). Every query keeps local sf0.001 oracle coverage
+    # regardless (tests/test_entry_oracle.py).
     last_round = _last_verified_round()
-    seen = set(last_round)
-    # self-cleaning: names the driver has already adjudicated fall out of
-    # the pinned list automatically, so a stale pin can't hold a window
-    # slot that a never-verified query needs (round-3 failure mode)
-    priority = [n for n in _DRIVER_WINDOW_PRIORITY if n not in seen]
-    priority += [n for n in _ROUND5_OVERFLOW if n not in seen and n not in priority]
-    priority += [n for n in _ROUND7_QUEUE if n not in seen and n not in priority]
-    priority += [n for n in _ROUND8_QUEUE if n not in seen and n not in priority]
-    priority += [n for n in _ROUND10_QUEUE if n not in seen and n not in priority]
-    priority += [n for n in merged_q if n not in seen and n not in priority]
-    # stale-first rotation for the already-verified remainder: sort by
-    # the LAST round each name was adjudicated (ascending — stable, so
-    # ties keep module-merge order and the rotation stays deterministic)
-    rest = sorted(
-        (n for n in merged_q if n not in priority),
-        key=lambda n: last_round.get(n, 0),
+    fresh = [n for n in merged_q if n not in last_round]
+    # ascending last round; sorted() is stable, so ties keep
+    # module-merge order and the rotation stays deterministic
+    stale = sorted(
+        (n for n in merged_q if n in last_round), key=last_round.__getitem__
     )
-    queries: dict = {name: merged_q[name] for name in (*priority, *rest)}
+    queries: dict = {name: merged_q[name] for name in (*fresh, *stale)}
     return queries, oracles
 
 

@@ -513,9 +513,7 @@ _ISO_BINS = 50
 _ISO_MULT = 200
 
 
-def q_isotonic_fit(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def q_isotonic_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted isotonic regression of P(lang = 'en') against the
     English-stopword-ratio score, on fixed integer score bins: the
     monotone calibration curve (what an sklearn IsotonicRegression
@@ -527,10 +525,7 @@ def q_isotonic_fit(
     ONLY single-partition window, bounded by the fixed bin grid); the
     (j,k) pair frame is ≤ 50·51/2 rows and each weighted average is
     ONE IEEE division of exact int64 prefix differences, so every
-    max/min compares identical doubles on both engines.
-    ``checkpoint=False`` is the plan-audit path: it disables the two
-    lazy localCheckpoints so test_plan_audit_all's window detector SEES
-    the bounded bin-prefix window instead of Scan ExistingRDD."""
+    max/min compares identical doubles on both engines."""
     docs = t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     toks = F.split("text", " ")
     hits = F.size(F.filter(toks, lambda x: x.isin(*tx.EN_STOPWORDS)))
@@ -548,12 +543,11 @@ def q_isotonic_fit(
         staged.select(bin_col.alias("bin"), "__y")
         .groupBy("bin")
         .agg(F.count(F.lit(1)).alias("cnt"), F.sum("__y").alias("pos"))
+        .transform(lazy_checkpoint)
     )
-    if checkpoint:
-        bins = bins.transform(lazy_checkpoint)
-    iso = stats.isotonic_bins(
-        bins, "bin", "cnt", "pos", checkpoint=checkpoint
-    ).withColumnRenamed("bin", "ib")
+    iso = stats.isotonic_bins(bins, "bin", "cnt", "pos").withColumnRenamed(
+        "bin", "ib"
+    )
     return (
         bins.join(iso, bins["bin"] == iso["ib"])
         .select(

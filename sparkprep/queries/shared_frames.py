@@ -148,68 +148,57 @@ def customer_revenue_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets → per-partition window), so every derived quantity is
     bit-identical to the single-purpose operators and the consumers
     keep their window-form oracles."""
-    return session_frame(
-        spark,
-        "customer_revenue_ranked",
-        sf_dir,
-        lambda: build_customer_revenue_ranked(spark, sf_dir),
-    )
-
-
-def build_customer_revenue_ranked(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
-    """The scaffold behind :func:`customer_revenue_ranked`.
-    ``checkpoint=False`` exists for plan-shape tests only: the
-    localCheckpoint truncates explain() to ``Scan ExistingRDD``
-    (ranks.global_rank convention), hiding the one-range-exchange
-    shape the audit asserts."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
     from sparkprep.queries import relational_ext
 
-    def _cp(df: DataFrame) -> DataFrame:
-        return df.transform(lazy_checkpoint) if checkpoint else df
-
-    per_cust = relational_ext.per_customer_revenue(spark, sf_dir)
-    units = per_cust.withColumn(
-        "__u", (F.col("__rev") * 10000).cast("long")
-    )
-    order_exprs = [F.asc("__rev"), F.asc("o_custkey")]
-    parted = _cp(
-        units.repartitionByRange(32, *order_exprs).withColumn(
-            "__pid", F.spark_partition_id()
+    def build() -> DataFrame:
+        per_cust = relational_ext.per_customer_revenue(spark, sf_dir)
+        units = per_cust.withColumn(
+            "__u", (F.col("__rev") * 10000).cast("long")
         )
-    )
-    partials = parted.groupBy("__pid").agg(
-        F.count(F.lit(1)).alias("__c"), F.sum("__u").alias("__cu")
-    )
-    w_off = Window.orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = partials.select(
-        "__pid",
-        F.coalesce(F.sum("__c").over(w_off), F.lit(0)).alias("__offc"),
-        F.sum("__c").over(Window.partitionBy()).alias("__totc"),
-        F.coalesce(
-            F.sum("__cu").over(w_off), F.lit(0).cast("long")
-        ).alias("__offu"),
-        F.sum("__cu").over(Window.partitionBy()).alias("__totu"),
-    )
-    w_local = Window.partitionBy("__pid").orderBy(*order_exprs)
-    w_cum = w_local.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    out = parted.join(F.broadcast(offsets), "__pid").select(
-        "o_custkey",
-        "__rev",
-        "__u",
-        (F.row_number().over(w_local) + F.col("__offc")).cast("long").alias(
-            "__rank"
-        ),
-        (F.sum("__u").over(w_cum) + F.col("__offu")).alias("__cum"),
-        F.col("__totc").cast("long").alias("__n"),
-        F.col("__totu").alias("__tot"),
-    )
-    return _cp(out)
+        order_exprs = [F.asc("__rev"), F.asc("o_custkey")]
+        parted = (
+            units.repartitionByRange(32, *order_exprs)
+            .withColumn("__pid", F.spark_partition_id())
+            .transform(lazy_checkpoint)
+        )
+        partials = parted.groupBy("__pid").agg(
+            F.count(F.lit(1)).alias("__c"), F.sum("__u").alias("__cu")
+        )
+        w_off = Window.orderBy("__pid").rowsBetween(
+            Window.unboundedPreceding, -1
+        )
+        offsets = partials.select(
+            "__pid",
+            F.coalesce(F.sum("__c").over(w_off), F.lit(0)).alias("__offc"),
+            F.sum("__c").over(Window.partitionBy()).alias("__totc"),
+            F.coalesce(
+                F.sum("__cu").over(w_off), F.lit(0).cast("long")
+            ).alias("__offu"),
+            F.sum("__cu").over(Window.partitionBy()).alias("__totu"),
+        )
+        w_local = Window.partitionBy("__pid").orderBy(*order_exprs)
+        w_cum = w_local.rowsBetween(
+            Window.unboundedPreceding, Window.currentRow
+        )
+        return (
+            parted.join(F.broadcast(offsets), "__pid")
+            .select(
+                "o_custkey",
+                "__rev",
+                "__u",
+                (F.row_number().over(w_local) + F.col("__offc"))
+                .cast("long")
+                .alias("__rank"),
+                (F.sum("__u").over(w_cum) + F.col("__offu")).alias("__cum"),
+                F.col("__totc").cast("long").alias("__n"),
+                F.col("__totu").alias("__tot"),
+            )
+            .transform(lazy_checkpoint)
+        )
+
+    return session_frame(spark, "customer_revenue_ranked", sf_dir, build)
 
 
 def copurchase_edges(

@@ -11,13 +11,20 @@ conf `sparkprep.checkpoint.mode`:
 
 The contract: identical results under both modes (checkpointing is a
 physical materialization decision, never a semantic one).
+
+Plan-shape tests see below the cuts through one seam,
+`tests.plan_util.no_lineage_cuts`, never through a per-operator flag.
 """
+
+import ast
+import pathlib
 
 import pytest
 from pyspark.sql import functions as F
 
 from sparkprep import checkpointing as cp
 from sparkprep.operators import dedup, graph
+from tests.plan_util import no_lineage_cuts, simple_plan
 
 
 @pytest.fixture
@@ -96,3 +103,52 @@ def test_reliable_lazy_checkpoint_materializes(spark, tmp_path):
         assert any(f.is_file() for f in files)
     finally:
         spark.conf.unset(cp.MODE_KEY)
+
+
+def test_no_lineage_cuts_leaves_no_trace(spark, sf_dir):
+    from sparkprep.queries import shared_frames
+
+    original = cp._checkpoint
+    # a cut frame cached before entry must not serve the uncut build
+    before = simple_plan(shared_frames.customer_revenue_ranked(spark, sf_dir))
+    with no_lineage_cuts():
+        assert cp._checkpoint is not original
+        uncut = simple_plan(shared_frames.customer_revenue_ranked(spark, sf_dir))
+    assert cp._checkpoint is original
+    # ...and the uncut frame must not outlive the block in the cache
+    after = simple_plan(shared_frames.customer_revenue_ranked(spark, sf_dir))
+    assert "ExistingRDD" in before and "ExistingRDD" in after
+    assert "ExistingRDD" not in uncut
+    with pytest.raises(RuntimeError, match="boom"):
+        with no_lineage_cuts():
+            raise RuntimeError("boom")
+    assert cp._checkpoint is original
+
+
+def test_no_bool_checkpoint_flag_in_engine():
+    # one lineage-cut seam: plan tests use no_lineage_cuts(), so no
+    # operator or query may grow a `checkpoint: bool` escape hatch again
+    # (streaming `checkpoint=<path>` parameters are strings)
+    pkg = pathlib.Path(cp.__file__).parent
+    flagged = []
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = node.args
+            params = a.posonlyargs + a.args
+            defaults = dict(zip(params[len(params) - len(a.defaults):], a.defaults))
+            defaults.update(zip(a.kwonlyargs, a.kw_defaults))
+            for arg in params + a.kwonlyargs:
+                if arg.arg != "checkpoint":
+                    continue
+                default = defaults.get(arg)
+                bool_default = isinstance(default, ast.Constant) and isinstance(
+                    default.value, bool
+                )
+                bool_annotation = isinstance(arg.annotation, ast.Name) and (
+                    arg.annotation.id == "bool"
+                )
+                if bool_default or bool_annotation:
+                    flagged.append(f"{path.relative_to(pkg.parent)}:{node.name}")
+    assert not flagged, f"bool checkpoint flags: {flagged}"

@@ -252,6 +252,36 @@ def test_rotation_safety_net_reads_driver_verdicts():
         )
 
 
+# the registry's module-merge order (sparkprep.queries.registry)
+_MERGE_ORDER = (
+    "textops", "llmprep", "temporal_grouped", "relational_ext", "cleaning",
+    "relational", "scale_ops", "corpus", "governance", "advanced", "stat_tests",
+)
+
+
+@pytest.mark.parametrize("verdicts", ["recorded", "partial"])
+def test_registry_order_fresh_then_stale_first(monkeypatch, verdicts):
+    # the driver's adjudication window reads registry() order: names no
+    # CORRECTNESS_r*.json has recorded come first in module-merge order,
+    # then the rest by ascending last-verified round, ties in
+    # module-merge order. "partial" forgets every third name and spreads
+    # the others over three rounds, so both halves of the rule are hit.
+    import importlib
+
+    import sparkprep.queries as queries_pkg
+
+    merged: dict = {}
+    for mod in _MERGE_ORDER:
+        merged.update(importlib.import_module(f"sparkprep.queries.{mod}").QUERIES)
+    last = queries_pkg._last_verified_round()
+    if verdicts == "partial":
+        last = {n: 1 + i % 3 for i, n in enumerate(merged) if i % 3}
+        monkeypatch.setattr(queries_pkg, "_last_verified_round", lambda: last)
+    fresh = [n for n in merged if n not in last]
+    stale = sorted((n for n in merged if n in last), key=last.__getitem__)
+    assert list(queries_pkg.registry()[0]) == fresh + stale
+
+
 class TestScd2NullKey:
     def test_null_keyed_target_row_passes_through(self, spark):
         # a NULL business key never joins; MERGE's NOT-MATCHED-BY-SOURCE

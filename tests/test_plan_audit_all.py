@@ -1,6 +1,10 @@
-"""Whole-registry plan audit: every one of the 100+ registered queries
-must be free of the scale-killers, not just the 9 spot-checked in
-test_plans_quality. A correct result from a bad plan fails here.
+"""Whole-registry plan audit: every registered query must be free of
+the scale-killers, not just the 9 spot-checked in test_plans_quality.
+A correct result from a bad plan fails here.
+
+Every plan is built inside ``no_lineage_cuts()``, so the detectors see
+below each lineage cut (shared frames, iterative rounds, rank
+scaffolds) instead of ``Scan ExistingRDD``.
 
 Checks per query (static optimized/physical plan, no execution):
 - no CartesianProduct / BroadcastNestedLoopJoin (accidental cross)
@@ -15,22 +19,9 @@ Checks per query (static optimized/physical plan, no execution):
 import pytest
 
 from sparkprep.queries import registry
+from tests.plan_util import no_lineage_cuts, simple_plan as _simple
 
 QUERIES, _ = registry()
-
-
-def _simple(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "simple"
-    )
-
-
-# Queries whose production plan hides structure below a lazy
-# localCheckpoint: the audit builds THEIR plan on the checkpoint=False
-# path (a keyword the query fn exposes for exactly this purpose — the
-# ranks.global_rank convention) so the detectors see the full tree.
-# Production/driver calls keep the default and the checkpoint.
-_AUDIT_CHECKPOINT_FREE = {"isotonic_fit"}
 
 
 def _analyzed(df) -> str:
@@ -41,13 +32,8 @@ def _analyzed(df) -> str:
 def _built_frames(spark, sf_dir):
     # ONE construction pass shared by both plan layers (several queries
     # execute bounded jobs at build time — don't pay that twice)
-    out = {}
-    for name, fn in QUERIES.items():
-        if name in _AUDIT_CHECKPOINT_FREE:
-            out[name] = fn(spark, sf_dir, checkpoint=False)
-        else:
-            out[name] = fn(spark, sf_dir)
-    return out
+    with no_lineage_cuts():
+        return {name: fn(spark, sf_dir) for name, fn in QUERIES.items()}
 
 
 @pytest.fixture(scope="module")
@@ -142,13 +128,6 @@ def test_single_partition_windows_only_post_agg(all_plans):
     # exchange in the tree, i.e., later in the plan string).
     offenders = []
     for name, plan in all_plans.items():
-        if name in _ENTITY_GRAIN_TOGGLED:
-            # exact entity-grain trio: their per-customer aggregate is the
-            # session-shared checkpointed per_customer_revenue frame (r10),
-            # which truncates the plan to Scan ExistingRDD below the window
-            # — the aggregate is there but machine-invisible; these queries
-            # are adjudicated by the stronger toggle audit below.
-            continue
         lines = plan.splitlines()
         for i, line in enumerate(lines):
             if "Exchange SinglePartition" not in line:
@@ -195,11 +174,11 @@ _BOUNDED_GLOBAL_WINDOW = {
     "durbin_watson": "calendar-bounded daily-revenue frame (~2.4k rows at any fact scale)",
     "budget_apportion": "per-source frame (~20 rows, bounded by the source domain)",
     "equidepth_bins": "O(32) ranks.global_ntile offsets frame only (raw-fact ntile distributed)",
+    "earth_movers": "SinglePartition is the 1-row bin-range (min/max) scalar; the cumulative-count window is priority-KEYED over the dense |priorities| x |bins| grid (~5 x 60)",
     "gains_table": "10-row decile frame + O(32) ranks.global_ntile offsets",
-    # gini_scale dropped r10: rank comes from the checkpointed
-    # shared_frames.customer_revenue_ranked scaffold — no window in-plan
+    "gini_scale": "O(32) per-partition offsets frame of the shared customer_revenue_ranked scaffold only (rank itself distributed)",
     "hybrid_rrf": "bounded top-k retrieval legs",
-    "isotonic_fit": "<=50-row bin-prefix window (fixed integer bin grid; machine-visible via the _AUDIT_CHECKPOINT_FREE plan path)",
+    "isotonic_fit": "<=50-row bin-prefix window (fixed integer bin grid)",
     "resample_interp": "SinglePartition is the 1-row grid-bounds scalar; the fill windows are event_type-KEYED over the calendar-span-bounded grid",
     "ltv_curve": "SinglePartition is the 1-row max-year horizon scalar; the cumsum window is customer-KEYED over the <=8-age grid",
     "k_anonymity": "quasi-identifier cross-product frame (125 classes), bounded by QI domains not rows",
@@ -207,7 +186,7 @@ _BOUNDED_GLOBAL_WINDOW = {
     "l_diversity": "same QI-class frame as k_anonymity",
     "length_histogram": "fixed length-bin frame",
     "lm_score": "score-bin frame",
-    "lorenz_scale": "10-row decile cum/total frames only (rank scaffold checkpointed in customer_revenue_ranked)",
+    "lorenz_scale": "10-row decile cum/total frames + O(32) offsets frame of the shared customer_revenue_ranked scaffold",
     "mann_whitney": "50-row quantity value-frequency rank frame",
     "kruskal_wallis": "50-row quantity value-frequency rank frame",
     "markov_3step": "|event_types|^2 transition frame",
@@ -217,10 +196,10 @@ _BOUNDED_GLOBAL_WINDOW = {
     "mutual_info": "|types| x 7 contingency frame",
     "null_patterns": "<=2^3-row null-bitmask pattern frame",
     "pr_auc": "<=1000-row score-bin PR frame (auc_quality's twin)",
+    "quantile_normalize": "SinglePartition is the 1-row reference-size (n_ref) scalar; the rank/size windows are event_type-KEYED (per-group sort, numeric.quantile_normalize scale note)",
     "psi_drift": "2 x K-bin cohort frame",
     "repeat_purchase_curve": "distinct per-user purchase-count frame (10-24 values; canary-pinned <=512 in test_headroom_canaries)",
-    # rfm_scale dropped r10: the fused multi_order_global_ntile keys its
-    # offsets window by dimension — no single-partition window remains
+    "rfm_scale": "SinglePartition is the 1-row recency-horizon (max day) scalar in rfm_staged; the fused multi_order_global_ntile windows are (partition, dimension)-KEYED",
     "sample_ks": "ECDF over bounded value-frequency frame",
     "signed_rank": "|d| value-frequency rank frame (8-26 distinct values; canary-pinned <=512 in test_headroom_canaries)",
     "skyline": "per-level frame of the skyline lattice (bounded)",
@@ -234,11 +213,10 @@ _BOUNDED_GLOBAL_WINDOW = {
     "token_budget": "20-row source frame",
     "token_js": "two-scan vocab panel (vocab-grain, sublinear)",
     "user_migration": "per-period argmax frames + 1-row bounds attach",
-    # value_deciles dropped r10: cumsum comes from the checkpointed
-    # shared_frames.customer_revenue_ranked scaffold — no window in-plan
+    "value_deciles": "O(32) per-partition offsets frame of the shared customer_revenue_ranked scaffold only (cumsum itself distributed)",
     "abc_classification": "O(32) ranks.global_cumsum offsets frame only (part-grain cumsum distributed)",
-    # pruning_sim dropped r10: the fused multi_order_global_ntile keys its
-    # offsets window by layout, so no single-partition window remains
+    # no pruning_sim entry: the fused multi_order_global_ntile keys its
+    # offsets window by layout, so no single-partition window exists
     "vocab_growth": "O(32) offsets frames only (2 chained global_cumsum passes)",
     "vocab_coverage": "1-row folded coverage frames",
     "window_funnel": "per-step funnel frame (4 steps)",

@@ -11,6 +11,7 @@ import pytest
 
 from sparkprep.plans import explain_formatted
 from sparkprep.queries import registry
+from tests.plan_util import no_lineage_cuts, simple_plan as _simple
 
 QUERIES, _ = registry()
 
@@ -19,12 +20,6 @@ _NAMES = (
     "freq_orderpriority", "minhash_pairs", "window_dedup",
     "cosine_topk", "null_census",
 )
-
-
-def _simple(df) -> str:
-    """Physical plan tree WITHOUT the formatted details section (which
-    repeats every node's arguments and breaks occurrence counting)."""
-    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
 
 
 @pytest.fixture(scope="module")
@@ -372,15 +367,12 @@ def test_kmeans_broadcast_centroids_not_shuffle(spark, sf_dir):
     # points — the points side may never hash-shuffle on a join key
     # (there is none); the cross is the sanctioned k-row BNLJ and the
     # per-point argmin window is keyed by point id, never global.
-    # checkpoint=False path: the production localCheckpoint truncates
-    # explain() above the rounds (ranks.global_rank convention)
     from sparkprep.operators import clustering
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     pts = clustering.quantize_points(emb, "vec_id", "embedding", dims=4)
-    plan = _simple(
-        clustering.kmeans_lloyd(pts, k=4, dims=4, rounds=2, checkpoint=False)
-    )
+    with no_lineage_cuts():
+        plan = _simple(clustering.kmeans_lloyd(pts, k=4, dims=4, rounds=2))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" in plan  # the k-row centroid attach
     # the argmin window is keyed by point id — never a global sort
@@ -439,9 +431,7 @@ def test_jaccard_histogram_equijoin_integer_bins(spark, sf_dir):
 
 def test_conformal_interval_distributed_rank(spark, sf_dir):
     # q_hat selection must ride ranks.global_rank (range partition +
-    # offsets, asserted on the checkpoint=False path — the production
-    # localCheckpoint truncates explain() to Scan ExistingRDD); the
-    # registered query itself must stay cartesian-free
+    # offsets); the registered query itself must stay cartesian-free
     from pyspark.sql import functions as F
 
     from sparkprep.operators import ranks
@@ -451,9 +441,8 @@ def test_conformal_interval_distributed_rank(spark, sf_dir):
     cal = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         F.col("o_totalprice").alias("r")
     )
-    rk_plan = _simple(
-        ranks.global_rank(cal, [F.asc("r")], rank_name="rk", checkpoint=False)
-    )
+    with no_lineage_cuts():
+        rk_plan = _simple(ranks.global_rank(cal, [F.asc("r")], rank_name="rk"))
     assert "rangepartitioning" in rk_plan.lower()
 
 
@@ -461,8 +450,6 @@ def test_multi_order_global_ntile_one_range_exchange(spark):
     # VERDICT r10 item 3: the fused multi-layout scaffold must show
     # exactly ONE range exchange (not one per layout) and ZERO
     # single-partition exchanges — its offsets window is layout-keyed.
-    # Asserted on the checkpoint=False twin; the production
-    # localCheckpoint blinds explain() to Scan ExistingRDD.
     from pyspark.sql import functions as F
 
     from sparkprep.operators import ranks
@@ -470,16 +457,16 @@ def test_multi_order_global_ntile_one_range_exchange(spark):
     df = spark.createDataFrame(
         [(i, i % 7, i % 3) for i in range(50)], ["id", "v", "w"]
     )
-    fused = ranks.multi_order_global_ntile(
-        df,
-        4,
-        {
-            "a": [F.col("v"), F.col("id"), F.lit(0)],
-            "b": [F.col("w"), F.col("v"), F.col("id")],
-        },
-        carry=["id"],
-        checkpoint=False,
-    )
+    with no_lineage_cuts():
+        fused = ranks.multi_order_global_ntile(
+            df,
+            4,
+            {
+                "a": [F.col("v"), F.col("id"), F.lit(0)],
+                "b": [F.col("w"), F.col("v"), F.col("id")],
+            },
+            carry=["id"],
+        )
     plan = _simple(fused)
     # the scaffold appears once per consumer (counts + final join) in
     # the un-checkpointed plan text; BOTH occurrences must be the SAME
@@ -501,10 +488,8 @@ def test_customer_revenue_ranked_one_range_exchange(spark, sf_dir):
     # such exchange, and exactly one range exchange of the data.
     from sparkprep.queries import shared_frames
 
-    out = shared_frames.build_customer_revenue_ranked(
-        spark, sf_dir, checkpoint=False
-    )
-    plan = _simple(out)
+    with no_lineage_cuts():
+        plan = _simple(shared_frames.customer_revenue_ranked(spark, sf_dir))
     # one shared (__rev, o_custkey) range pass, embedded once per
     # consumer (partials + final join) in the un-checkpointed text —
     # never one dedicated pass per family member

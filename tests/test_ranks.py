@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sparkprep.operators import ranks
+from tests.plan_util import no_lineage_cuts, simple_plan
 
 
 def _df(spark, vals):
@@ -279,12 +280,10 @@ def test_global_rank_plan_has_no_single_partition_sort_of_input(spark):
     partitioned (parallel), with the only SinglePartition exchange the
     O(num_partitions) offsets frame (post-aggregate)."""
     df = _df(spark, [float(i % 17) for i in range(200)])
-    out = ranks.global_rank(
-        df, [F.asc("v"), F.asc("id")], rank_name="rk", checkpoint=False
-    )
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "simple"
-    )
+    with no_lineage_cuts():
+        plan = simple_plan(
+            ranks.global_rank(df, [F.asc("v"), F.asc("id")], rank_name="rk")
+        )
     assert "rangepartitioning" in plan.lower()
     # every SinglePartition exchange sits above an Aggregate (the
     # bounded counts frame), mirroring the registry-wide audit rule
