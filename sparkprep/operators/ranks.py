@@ -7,22 +7,28 @@ lorenz_curve, gini_revenue): their global ``ntile``/``row_number``
 windows run over the per-CUSTOMER aggregate, which grows with the data
 (hundreds of millions of rows at 100 TB) — one task sorts everything.
 
-``global_rank`` computes the EXACT same global ``row_number`` with no
-single-partition stage, via the classic two-phase range-sort:
+Every operator here is a projection over ONE scaffold,
+:func:`range_prefix`, the classic two-phase range-sort:
 
-1. ``repartitionByRange`` on the sort expressions — each partition
-   holds a contiguous key range, ascending with partition id (Spark's
-   RangePartitioner contract), data spread over N parallel tasks;
-2. per-partition row counts → cumulative offsets (one O(N)-row frame,
-   N = shuffle partitions, driver-bounded);
+1. ``repartitionByRange`` on the (group, sort) expressions — each
+   partition holds a contiguous key range, ascending with partition id
+   (Spark's RangePartitioner contract), data spread over
+   ``_RANGE_PARTITIONS`` parallel tasks;
+2. per-(partition, group) row counts and value sums → prefix offsets
+   (one O(partitions + groups)-row frame, broadcast);
 3. a per-PARTITION window (``partitionBy(spark_partition_id)``) local
-   row_number, plus the broadcast offset = the global rank.
+   row_number / running sum, plus the broadcast offset = the exact
+   per-group rank / cumsum.
 
-The ranked frame is localCheckpoint-ed between the range shuffle and
-its two consumers (counts + final window) so partition ids are frozen
-and the subtree runs once (the self-join/multi-consumer re-execution
-landmine). Total cost: one range exchange + one pid-hash exchange +
-an O(N) broadcast — every stage parallel, any scale.
+The ranged frame is lazily localCheckpoint-ed between the range
+shuffle and its two consumers (partials + final window) so partition
+ids are frozen and the subtree runs once (the self-join/multi-consumer
+re-execution landmine). Total cost: one range exchange + one pid-hash
+exchange + an O(partitions) broadcast — every stage parallel, any
+scale. ``group_cols`` covers LOW-CARDINALITY window keys too:
+``Window.partitionBy(key)`` over 5 distinct keys sorts each key's whole
+data in ONE task, while the range pass spreads every group over many
+partitions.
 
 ``global_ntile`` derives the exact SQL ``ntile(k)`` bucket from that
 rank with pure integer arithmetic (first ``n mod k`` buckets get one
@@ -33,10 +39,73 @@ total ordering and shares its oracle.
 
 from __future__ import annotations
 
+from typing import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from sparkprep.checkpointing import lazy_checkpoint
+
+_RANGE_PARTITIONS = 32
+
+
+def range_prefix(
+    df: DataFrame,
+    order_exprs: list[Column],
+    group_cols: Sequence[str] = (),
+    value_col: str | None = None,
+) -> DataFrame:
+    """One range pass over ``df`` ordered by ``order_exprs`` within each
+    ``group_cols`` group (no groups = the whole frame). The ordering must
+    be TOTAL within a group, so include a tie-break key.
+
+    Appends ``__rank`` (exact per-group row_number, BIGINT) and ``__n``
+    (group row count); with ``value_col`` also ``__cum`` (exact running
+    sum, value type kept) and ``__tot`` (group sum). Feed an exact value
+    type (DECIMAL or integer units) — a double sum would reorder between
+    engines (the CLAUDE.md money-sum landmine). Rows come back
+    range-partitioned and locally sorted by (group, order)."""
+    keys = ["__pid", *group_cols]
+    parted = (
+        df.repartitionByRange(
+            _RANGE_PARTITIONS, *[F.asc(c) for c in group_cols], *order_exprs
+        )
+        .withColumn("__pid", F.spark_partition_id())
+        .transform(lazy_checkpoint)
+    )
+    parts = [F.count(F.lit(1)).alias("__pc")]
+    if value_col is not None:
+        parts.append(F.sum(value_col).alias("__pv"))
+    partials = parted.groupBy(*keys).agg(*parts)
+    # prefix offsets over the <= partitions x groups partials frame:
+    # the only group-wide window in the pass, bounded post-aggregate
+    w_grp = Window.partitionBy(*group_cols)
+    w_off = w_grp.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
+    offsets = [
+        F.coalesce(F.sum("__pc").over(w_off), F.lit(0)).alias("__oc"),
+        F.sum("__pc").over(w_grp).alias("__n"),
+    ]
+    if value_col is not None:
+        offsets += [
+            F.coalesce(F.sum("__pv").over(w_off), F.lit(0)).alias("__ov"),
+            F.sum("__pv").over(w_grp).alias("__tot"),
+        ]
+    w_loc = Window.partitionBy(*keys).orderBy(*order_exprs)
+    out = parted.join(F.broadcast(partials.select(*keys, *offsets)), keys)
+    cols = [
+        *df.columns,
+        (F.row_number().over(w_loc) + F.col("__oc"))
+        .cast("long")
+        .alias("__rank"),
+        F.col("__n"),
+    ]
+    if value_col is not None:
+        w_cum = w_loc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        cols += [
+            (F.sum(value_col).over(w_cum) + F.col("__ov")).alias("__cum"),
+            F.col("__tot"),
+        ]
+    return out.select(*cols)
 
 
 def global_rank(
@@ -44,45 +113,20 @@ def global_rank(
     order_exprs: list[Column],
     rank_name: str = "rank",
     total_name: str | None = None,
-    num_partitions: int = 32,
+    group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Exact global ``row_number`` over ``order_exprs`` (pass sort-order
+    """Exact ``row_number`` over ``order_exprs`` (pass sort-order
     columns, e.g. ``[F.desc("x"), F.asc("id")]`` — the ordering must be
-    TOTAL, so include a tie-break key) with no single-partition sort.
+    TOTAL, so include a tie-break key) with no single-partition sort,
+    per ``group_cols`` group when given.
 
     Appends ``rank_name`` (1-based BIGINT) and, when ``total_name`` is
-    given, the frame's total row count on every row (free — the offsets
-    frame already folds it). Rows are returned range-partitioned and
-    locally sorted by ``order_exprs``.
-    """
-    parted = df.repartitionByRange(num_partitions, *order_exprs).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    # frozen pids + single execution of the range shuffle for BOTH
-    # consumers (the counts agg and the final per-partition window)
-    parted = parted.transform(lazy_checkpoint)
-    counts = parted.groupBy("__pid").agg(F.count(F.lit(1)).alias("__c"))
-    # cumulative offsets over the <= num_partitions-row counts frame:
-    # the only global window in the operator, bounded O(N) post-agg
-    w_off = Window.orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = counts.select(
-        "__pid",
-        F.coalesce(F.sum("__c").over(w_off), F.lit(0)).alias("__off"),
-        F.sum("__c").over(Window.partitionBy()).alias("__tot"),
-    )
-    w_local = Window.partitionBy("__pid").orderBy(*order_exprs)
-    out = parted.join(F.broadcast(offsets), "__pid").withColumn(
-        rank_name,
-        (F.row_number().over(w_local) + F.col("__off")).cast("long"),
-    )
+    given, the group's row count on every row (free — the offsets
+    frame already folds it). Either name may equal an internal one."""
+    cols = [*df.columns, F.col("__rank").alias(rank_name)]
     if total_name is not None:
-        out = out.withColumn(total_name, F.col("__tot").cast("long"))
-    # a caller-requested name may coincide with an internal one
-    # (total_name="__tot") — drop only the internals that remain internal
-    keep = {rank_name, total_name}
-    return out.drop(*[c for c in ("__pid", "__off", "__tot") if c not in keep])
+        cols.append(F.col("__n").alias(total_name))
+    return range_prefix(df, order_exprs, group_cols).select(*cols)
 
 
 def _idiv(a: Column, b: Column) -> Column:
@@ -118,21 +162,14 @@ def global_ntile(
     k: int,
     order_exprs: list[Column],
     bucket_name: str = "bucket",
-    num_partitions: int = 32,
 ) -> DataFrame:
     """Exact ``ntile(k) OVER (ORDER BY order_exprs)`` with no
-    single-partition sort: :func:`global_rank` + integer bucket math.
+    single-partition sort: :func:`range_prefix` + integer bucket math.
     Bit-identical to the window form under the same total ordering."""
-    ranked = global_rank(
-        df,
-        order_exprs,
-        rank_name="__grk",
-        total_name="__gtot",
-        num_partitions=num_partitions,
+    return range_prefix(df, order_exprs).select(
+        *df.columns,
+        ntile_from_rank(F.col("__rank"), F.col("__n"), k).alias(bucket_name),
     )
-    return ranked.withColumn(
-        bucket_name, ntile_from_rank(F.col("__grk"), F.col("__gtot"), k)
-    ).drop("__grk", "__gtot")
 
 
 def global_cumsum(
@@ -141,48 +178,24 @@ def global_cumsum(
     value_col: str,
     cum_name: str = "cum",
     total_name: str | None = None,
-    num_partitions: int = 32,
+    group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Exact running total of ``value_col`` over a global TOTAL ordering
-    with no single-partition sort — the distributed prefix-sum that
-    unlocks weighted quantiles, exact Lorenz/ECDF curves, and
-    cumulative-share bucketing at entity/fact grain.
+    """Exact running total of ``value_col`` over a TOTAL ordering with
+    no single-partition sort, per ``group_cols`` group when given — the
+    distributed prefix-sum that unlocks weighted quantiles, exact
+    Lorenz/ECDF curves, and cumulative-share bucketing at entity/fact
+    grain.
 
-    Same two-phase scaffold as :func:`global_rank`: range partition on
-    the sort expressions, per-partition PARTIAL sums → broadcast prefix
-    offsets (sum of every earlier partition's partial), per-partition
-    running-sum window + offset. The value's type is preserved — feed
-    an exact DECIMAL (or integer units) so the cumsum is
-    order-independent and engine-exact; a double value would reorder
-    summation between engines (the CLAUDE.md money-sum landmine).
-    ``total_name`` attaches the grand total to every row for share /
-    bucket math (free — the offsets frame already folds it).
+    The value's type is preserved — feed an exact DECIMAL (or integer
+    units) so the cumsum is order-independent and engine-exact.
+    ``total_name`` attaches the group's total to every row for share /
+    bucket math (free — the offsets frame already folds it). Either
+    name may equal an internal one.
     """
-    parted = df.repartitionByRange(num_partitions, *order_exprs).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    parted = parted.transform(lazy_checkpoint)
-    partials = parted.groupBy("__pid").agg(F.sum(value_col).alias("__c"))
-    w_off = Window.orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = partials.select(
-        "__pid",
-        F.coalesce(F.sum("__c").over(w_off), F.lit(0)).alias("__off"),
-        F.sum("__c").over(Window.partitionBy()).alias("__tot"),
-    )
-    w_local = (
-        Window.partitionBy("__pid")
-        .orderBy(*order_exprs)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = parted.join(F.broadcast(offsets), "__pid").withColumn(
-        cum_name, F.sum(value_col).over(w_local) + F.col("__off")
-    )
+    cols = [*df.columns, F.col("__cum").alias(cum_name)]
     if total_name is not None:
-        out = out.withColumn(total_name, F.col("__tot"))
-    keep = {cum_name, total_name}
-    return out.drop(*[c for c in ("__pid", "__off", "__tot") if c not in keep])
+        cols.append(F.col("__tot").alias(total_name))
+    return range_prefix(df, order_exprs, group_cols, value_col).select(*cols)
 
 
 def multi_order_global_ntile(
@@ -192,7 +205,6 @@ def multi_order_global_ntile(
     carry: list[str],
     layout_name: str = "__layout",
     bucket_name: str = "bucket",
-    num_partitions: int = 32,
 ) -> DataFrame:
     """Exact ``ntile(k)`` under SEVERAL candidate orderings in ONE range
     pass — the layout-simulation primitive (layout_advisor, pruning_sim
@@ -200,7 +212,7 @@ def multi_order_global_ntile(
     :func:`global_ntile` per layout costs one sampling job + one range
     exchange + one checkpoint + one counts job PER LAYOUT — measured
     6.7s for 3 layouts at sf0.1 where this fused form runs the whole
-    panel through a single :func:`grouped_global_rank`).
+    panel through a single :func:`range_prefix` grouped by layout).
 
     ``layouts``: name -> equal-width list of NUMERIC sort columns, all
     ascending (cast to long internally, which also aligns struct slot
@@ -230,113 +242,11 @@ def multi_order_global_ntile(
         *[F.col(f"__ml.__mk{i}").alias(f"__mk{i}") for i in range(width)],
         *carry,
     )
-    ranked = grouped_global_rank(
-        ex,
-        [layout_name],
-        [F.asc(f"__mk{i}") for i in range(width)],
-        rank_name="__mrk",
-        group_total_name="__mtot",
-        num_partitions=num_partitions,
+    ranked = range_prefix(
+        ex, [F.asc(f"__mk{i}") for i in range(width)], [layout_name]
     )
-    return ranked.withColumn(
-        bucket_name, ntile_from_rank(F.col("__mrk"), F.col("__mtot"), k)
-    ).drop("__mrk", "__mtot", *[f"__mk{i}" for i in range(width)])
-
-
-def grouped_global_rank(
-    df: DataFrame,
-    group_cols: list[str],
-    order_exprs: list[Column],
-    rank_name: str = "rank",
-    group_total_name: str | None = None,
-    num_partitions: int = 32,
-) -> DataFrame:
-    """Per-GROUP exact ``row_number`` for LOW-CARDINALITY group keys —
-    the case the plan audit cannot even see: ``Window.partitionBy(key)``
-    over 5 distinct keys is "keyed", but each key's whole data lands in
-    ONE task (5 tasks sort 100 TB). Range-partitioning on
-    ``(group_cols, order_exprs)`` spreads every group over many
-    partitions while keeping each partition a contiguous slice of one
-    group-ordering, so the same partial-counts + broadcast-offsets
-    scaffold as :func:`global_rank` yields the exact per-group rank —
-    offsets and totals are computed PER (partition, group), a frame
-    bounded by num_partitions + |groups| rows. ``group_total_name``
-    attaches each group's row count (for percent_rank-style math).
-    ``order_exprs`` must totally order rows WITHIN a group (include a
-    tie-break key)."""
-    gexprs = [F.asc(c) for c in group_cols]
-    parted = df.repartitionByRange(
-        num_partitions, *gexprs, *order_exprs
-    ).withColumn("__pid", F.spark_partition_id())
-    parted = parted.transform(lazy_checkpoint)
-    counts = parted.groupBy("__pid", *group_cols).agg(
-        F.count(F.lit(1)).alias("__c")
+    return ranked.select(
+        layout_name,
+        *carry,
+        ntile_from_rank(F.col("__rank"), F.col("__n"), k).alias(bucket_name),
     )
-    w_off = (
-        Window.partitionBy(*group_cols)
-        .orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        "__pid",
-        *group_cols,
-        F.coalesce(F.sum("__c").over(w_off), F.lit(0)).alias("__off"),
-        F.sum("__c").over(Window.partitionBy(*group_cols)).alias("__tot"),
-    )
-    w_local = Window.partitionBy("__pid", *group_cols).orderBy(*order_exprs)
-    out = parted.join(
-        F.broadcast(offsets), ["__pid", *group_cols]
-    ).withColumn(
-        rank_name,
-        (F.row_number().over(w_local) + F.col("__off")).cast("long"),
-    )
-    if group_total_name is not None:
-        out = out.withColumn(group_total_name, F.col("__tot").cast("long"))
-    keep = {rank_name, group_total_name}
-    return out.drop(*[c for c in ("__pid", "__off", "__tot") if c not in keep])
-
-
-def grouped_global_cumsum(
-    df: DataFrame,
-    group_cols: list[str],
-    order_exprs: list[Column],
-    value_col: str,
-    cum_name: str = "cum",
-    num_partitions: int = 32,
-) -> DataFrame:
-    """Per-GROUP exact running total for LOW-CARDINALITY group keys —
-    :func:`global_cumsum`'s grouped form, completing the primitive
-    family (rank / ntile / cumsum × global / grouped). Range-partition
-    on (group, order) spreads each group over many partitions;
-    per-(partition, group) partial sums → broadcast prefix offsets →
-    per-(partition, group) running-sum window + offset. Feed an exact
-    type (DECIMAL / integer) — double summation would reorder between
-    engines."""
-    gexprs = [F.asc(c) for c in group_cols]
-    parted = df.repartitionByRange(
-        num_partitions, *gexprs, *order_exprs
-    ).withColumn("__pid", F.spark_partition_id())
-    parted = parted.transform(lazy_checkpoint)
-    partials = parted.groupBy("__pid", *group_cols).agg(
-        F.sum(value_col).alias("__c")
-    )
-    w_off = (
-        Window.partitionBy(*group_cols)
-        .orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = partials.select(
-        "__pid",
-        *group_cols,
-        F.coalesce(F.sum("__c").over(w_off), F.lit(0)).alias("__off"),
-    )
-    w_local = (
-        Window.partitionBy("__pid", *group_cols)
-        .orderBy(*order_exprs)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = parted.join(
-        F.broadcast(offsets), ["__pid", *group_cols]
-    ).withColumn(cum_name, F.sum(value_col).over(w_local) + F.col("__off"))
-    keep = {cum_name}
-    return out.drop(*[c for c in ("__pid", "__off") if c not in keep])

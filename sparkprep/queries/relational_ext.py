@@ -126,8 +126,8 @@ def q_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     100x toggle: the window key has only ~5 distinct values, so each
     type's whole data sorts in ONE task at scale — use
     ``percent_rank_scale`` (scale_ops.q_percent_rank_scale:
-    ranks.grouped_global_rank range-spread, bit-identical output, same
-    oracle) beyond driver SFs."""
+    ranks.global_rank grouped by type, range-spread, bit-identical
+    output, same oracle) beyond driver SFs."""
     ev = t(spark, sf_dir, "events")
     from pyspark.sql.window import Window
 
@@ -1258,9 +1258,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     silently diverge)."""
     from sparkprep.queries import shared_frames
 
-    edges = shared_frames.copurchase_pairs(spark, sf_dir).filter(
-        F.col("n_keys") >= 2
-    )
+    edges = shared_frames.copurchase_edges(spark, sf_dir, a="item_a", b="item_b")
     return graph.triangle_stats(edges)
 
 
@@ -2141,9 +2139,7 @@ def q_two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct for the direct-degree column. TakeOrdered top-k."""
     from sparkprep.queries import shared_frames
 
-    edges = shared_frames.copurchase_pairs(spark, sf_dir).filter(
-        F.col("n_keys") >= 2
-    )
+    edges = shared_frames.copurchase_edges(spark, sf_dir, a="item_a", b="item_b")
     dirs = graph.directed_ends_capped(
         edges, max_degree=256
     ).transform(lazy_checkpoint)
@@ -2334,9 +2330,7 @@ def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     directed-ends join."""
     from sparkprep.queries import shared_frames
 
-    edges = shared_frames.copurchase_pairs(spark, sf_dir).filter(
-        F.col("n_keys") >= 2
-    )
+    edges = shared_frames.copurchase_edges(spark, sf_dir, a="item_a", b="item_b")
     return graph.assortativity(edges)
 
 

@@ -858,19 +858,20 @@ def q_percent_rank_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     — keyed, so the plan audit passes it, but with only ~5 distinct
     types each key's ENTIRE data sorts in one task at scale (the
     low-cardinality-key trap a single-partition check can't see).
-    ``ranks.grouped_global_rank`` range-partitions on (type, value, id)
-    so every type spreads over many partitions; the tie-sharing SQL
+    ``ranks.global_rank(..., group_cols=["event_type"])``
+    range-partitions on (type, value, id) so every type spreads over
+    many partitions; the tie-sharing SQL
     rank() is then min(row_number) over the (type, value) peer group (a
     high-cardinality keyed window — bounded per distinct value), and
     percent_rank = (rank−1)/(n_type−1), the same IEEE division
     percent_rank() itself performs. Identical output, same oracle."""
     ev = t(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    rn = ranks.grouped_global_rank(
+    rn = ranks.global_rank(
         ev,
-        ["event_type"],
         [F.asc("value"), F.asc("event_id")],
         rank_name="__rn",
-        group_total_name="__n",
+        total_name="__n",
+        group_cols=["event_type"],
     )
     from pyspark.sql.window import Window
 
@@ -962,9 +963,9 @@ def q_rolling_quantiles_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_token_packing_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     """token_packing's 100x twin: the per-source running token total
-    comes from ``ranks.grouped_global_cumsum`` (range-partition on
-    (source, doc_id) + per-(partition, source) partials + broadcast
-    prefix offsets) instead of a per-source keyed window whose few keys
+    comes from ``ranks.global_cumsum(..., group_cols=["source"])``
+    (range-partition on (source, doc_id) + per-(partition, source)
+    partials + broadcast prefix offsets) instead of a per-source keyed window whose few keys
     each sort a whole source in one task. Same pack-assignment formula
     on identical int64 running totals → bit-identical manifest, same
     oracle."""
@@ -974,8 +975,8 @@ def q_token_packing_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents").select(
         "doc_id", "source", _tx.token_count("text").alias("__nt")
     )
-    c = ranks.grouped_global_cumsum(
-        docs, ["source"], [F.asc("doc_id")], "__nt", cum_name="__cum"
+    c = ranks.global_cumsum(
+        docs, [F.asc("doc_id")], "__nt", cum_name="__cum", group_cols=["source"]
     )
     packed = c.withColumn(
         "pack_id",

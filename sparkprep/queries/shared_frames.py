@@ -129,12 +129,12 @@ def lpa_labels(spark: SparkSession, sf_dir: str, rounds: int) -> DataFrame:
 
 
 def customer_revenue_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rank + running-sum scaffold over per-customer revenue in the ONE
-    total ordering (revenue asc, custkey asc) that gini_scale,
+    """One ``ranks.range_prefix`` pass over per-customer revenue in the
+    ONE total ordering (revenue asc, custkey asc) that gini_scale,
     lorenz_scale AND value_deciles all sort by — each previously ran its
     own ranks.global_rank/ntile/cumsum pass (sampling job + range
     exchange + checkpoint + counts apiece) over the same 150k-row frame.
-    One range pass emits everything each consumer derives row-locally:
+    The pass emits everything each consumer derives row-locally:
 
     - ``__rank``  exact global row_number (gini's Σ i·x term)
     - ``__n``     total rows (ntile math → lorenz deciles, bit-identical
@@ -143,13 +143,11 @@ def customer_revenue_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
                   (``__u = __rev·10⁴`` as int64 — value_deciles' input)
     - ``__tot``   total units
 
-    Same two-phase scaffold as ranks.global_rank/global_cumsum (range
-    partition → per-partition counts/partials → broadcast prefix
-    offsets → per-partition window), so every derived quantity is
-    bit-identical to the single-purpose operators and the consumers
-    keep their window-form oracles."""
-    from pyspark.sql import Window
+    The same kernel backs ranks.global_rank/global_cumsum, so every
+    derived quantity is bit-identical to the single-purpose operators
+    and the consumers keep their window-form oracles."""
     from pyspark.sql import functions as F
+    from sparkprep.operators import ranks
     from sparkprep.queries import relational_ext
 
     def build() -> DataFrame:
@@ -157,46 +155,9 @@ def customer_revenue_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
         units = per_cust.withColumn(
             "__u", (F.col("__rev") * 10000).cast("long")
         )
-        order_exprs = [F.asc("__rev"), F.asc("o_custkey")]
-        parted = (
-            units.repartitionByRange(32, *order_exprs)
-            .withColumn("__pid", F.spark_partition_id())
-            .transform(lazy_checkpoint)
-        )
-        partials = parted.groupBy("__pid").agg(
-            F.count(F.lit(1)).alias("__c"), F.sum("__u").alias("__cu")
-        )
-        w_off = Window.orderBy("__pid").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        offsets = partials.select(
-            "__pid",
-            F.coalesce(F.sum("__c").over(w_off), F.lit(0)).alias("__offc"),
-            F.sum("__c").over(Window.partitionBy()).alias("__totc"),
-            F.coalesce(
-                F.sum("__cu").over(w_off), F.lit(0).cast("long")
-            ).alias("__offu"),
-            F.sum("__cu").over(Window.partitionBy()).alias("__totu"),
-        )
-        w_local = Window.partitionBy("__pid").orderBy(*order_exprs)
-        w_cum = w_local.rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        return (
-            parted.join(F.broadcast(offsets), "__pid")
-            .select(
-                "o_custkey",
-                "__rev",
-                "__u",
-                (F.row_number().over(w_local) + F.col("__offc"))
-                .cast("long")
-                .alias("__rank"),
-                (F.sum("__u").over(w_cum) + F.col("__offu")).alias("__cum"),
-                F.col("__totc").cast("long").alias("__n"),
-                F.col("__totu").alias("__tot"),
-            )
-            .transform(lazy_checkpoint)
-        )
+        return ranks.range_prefix(
+            units, [F.asc("__rev"), F.asc("o_custkey")], value_col="__u"
+        ).transform(lazy_checkpoint)
 
     return session_frame(spark, "customer_revenue_ranked", sf_dir, build)
 

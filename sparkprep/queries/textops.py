@@ -472,8 +472,8 @@ def q_token_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic. Output is the per-pack manifest.
 
     100x toggle: ``token_packing_scale`` (scale_ops.q_token_packing_scale:
-    ranks.grouped_global_cumsum range-spread of the per-source running
-    total, bit-identical manifest, same oracle) removes even the
+    ranks.global_cumsum grouped by source, range-spread running total,
+    bit-identical manifest, same oracle) removes even the
     few-key window without needing the date-shard key."""
     budget = 2048
     from pyspark.sql import Window

@@ -1,5 +1,6 @@
-"""ranks.global_rank / global_ntile — the distributed exact twins of
-the single-partition ``Window.orderBy`` rank/ntile (VERDICT r5 #2).
+"""ranks.range_prefix and its projections (global_rank / global_ntile /
+global_cumsum) — the distributed exact twins of the single-partition
+``Window.orderBy`` rank/ntile/running sum (VERDICT r5 #2).
 
 The scale queries (gini_scale / lorenz_scale / rfm_scale) are asserted
 bit-identical to their exact window forms in test_entry_oracle's sf0.001
@@ -123,6 +124,39 @@ def test_global_cumsum_matches_window_running_sum(spark, name):
     assert got == want
 
 
+@pytest.mark.parametrize(
+    "kind,name,total",
+    [("rank", "rk", "__n"), ("rank", "__rank", "n"), ("cum", "__tot", "t")],
+)
+def test_output_names_may_equal_internal_ones(spark, kind, name, total):
+    # range_prefix's own output columns are __rank/__n/__cum/__tot; a
+    # caller may reuse any of them as an output name
+    df = _df(spark, CASES["ties"]).withColumn(
+        "w", (F.col("id") % 5 + 1).cast("long")
+    )
+    order = [F.asc("v"), F.asc("id")]
+    w = Window.orderBy(*order)
+    if kind == "rank":
+        out = ranks.global_rank(df, order, rank_name=name, total_name=total)
+        first = F.row_number().over(w)
+        second = F.count(F.lit(1)).over(Window.partitionBy())
+    else:
+        out = ranks.global_cumsum(
+            df, order, "w", cum_name=name, total_name=total
+        )
+        first = F.sum("w").over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+        second = F.sum("w").over(Window.partitionBy())
+    assert out.columns == ["id", "v", "w", name, total]
+    got = {r["id"]: (r[name], r[total]) for r in out.collect()}
+    want = {
+        r["id"]: (r["a"], r["b"])
+        for r in df.select("id", first.alias("a"), second.alias("b")).collect()
+    }
+    assert got == want
+
+
 def test_global_cumsum_preserves_decimal_exactness(spark):
     from decimal import Decimal
 
@@ -145,8 +179,8 @@ def test_grouped_global_rank_matches_per_group_window(spark):
     order = [F.asc("v"), F.asc("id")]
     got = {
         r["id"]: (r["rk"], r["n"])
-        for r in ranks.grouped_global_rank(
-            df, ["g"], order, rank_name="rk", group_total_name="n"
+        for r in ranks.global_rank(
+            df, order, rank_name="rk", total_name="n", group_cols=["g"]
         ).collect()
     }
     wg = Window.partitionBy("g").orderBy(*order)
@@ -169,8 +203,8 @@ def test_grouped_global_cumsum_matches_per_group_window(spark):
     order = [F.asc("id")]
     got = {
         r["id"]: r["c"]
-        for r in ranks.grouped_global_cumsum(
-            df, ["g"], order, "w", cum_name="c"
+        for r in ranks.global_cumsum(
+            df, order, "w", cum_name="c", group_cols=["g"]
         ).collect()
     }
     wg = (
@@ -191,9 +225,9 @@ def test_grouped_global_rank_single_row_groups(spark):
     )
     out = {
         r["id"]: (r["rk"], r["n"])
-        for r in ranks.grouped_global_rank(
-            df, ["g"], [F.asc("v"), F.asc("id")], rank_name="rk",
-            group_total_name="n",
+        for r in ranks.global_rank(
+            df, [F.asc("v"), F.asc("id")], rank_name="rk", total_name="n",
+            group_cols=["g"],
         ).collect()
     }
     assert out == {1: (1, 1), 2: (1, 1)}
@@ -278,7 +312,7 @@ def test_ntile_from_rank_matches_sql_semantics_exhaustively(spark):
 def test_global_rank_plan_has_no_single_partition_sort_of_input(spark):
     """The operator's whole point: the input-frame sort must be range-
     partitioned (parallel), with the only SinglePartition exchange the
-    O(num_partitions) offsets frame (post-aggregate)."""
+    O(partitions) offsets frame (post-aggregate)."""
     df = _df(spark, [float(i % 17) for i in range(200)])
     with no_lineage_cuts():
         plan = simple_plan(
@@ -292,3 +326,40 @@ def test_global_rank_plan_has_no_single_partition_sort_of_input(spark):
         if "Exchange SinglePartition" in line:
             below = "\n".join(lines[i:])
             assert "Aggregate" in below, plan
+
+
+def test_range_prefix_is_the_only_rank_scaffold():
+    """One scaffold, no per-call knobs: ``F.spark_partition_id`` is
+    called in exactly one function under ``sparkprep/`` (the shared
+    range pass), and no ranks operator takes a partition-count
+    parameter."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(ranks.__file__).resolve().parents[1]
+    callers = set()
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "spark_partition_id"
+                ):
+                    callers.add(f"{path.relative_to(pkg)}:{fn.name}")
+    assert callers == {"operators/ranks.py:range_prefix"}, callers
+
+    tree = ast.parse(pathlib.Path(ranks.__file__).read_text())
+    knobs = [
+        fn.name
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef)
+        and any(
+            a.arg == "num_partitions"
+            for a in fn.args.args + fn.args.kwonlyargs
+        )
+    ]
+    assert not knobs, knobs
