@@ -10,7 +10,9 @@ sorted by name):
 - ``round()`` float aggregates on both sides (engine summation order
   differs at ~1e-12);
 - cast computed ints to BIGINT both sides;
-- pin session TZ to UTC (``tune_for_engine``) before timestamp queries.
+- load every table through ``t``: it pins the engine's session contract
+  (UTC time zone, AQE on; ``session.tune_for_engine``) before the read,
+  so query bodies never set session conf themselves.
 """
 
 from __future__ import annotations
@@ -18,11 +20,22 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from sparkprep.session import tune_for_engine
+
+_D18 = "decimal(18,8)"
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = _read(spark, os.path.join(sf_dir, f"{name}.parquet"))
-    return df
+    tune_for_engine(spark)
+    return _read(spark, os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def _dec_round(col, n: int):
+    """DECIMAL(18,8)-recast round, emitted as DOUBLE (the cross-engine
+    round-half discipline, CLAUDE.md)."""
+    return F.round(col.cast(_D18), n).cast("double")
 
 
 def _read(spark: SparkSession, path: str) -> DataFrame:
@@ -32,8 +45,8 @@ def _read(spark: SparkSession, path: str) -> DataFrame:
     generations (timestamp[ns] → timestamp[us]); this loader is the
     single place that absorbs that drift. Contract: whatever the file
     stores, a ``ts`` column comes out as session-TZ ``TimestampType``
-    (queries that touch it pin UTC via ``tune_for_engine`` first, so
-    values match DuckDB's naive microsecond timestamps).
+    (``t`` pins the session to UTC first, so values match DuckDB's
+    naive microsecond timestamps).
 
     - timestamp[ns]: Spark's reader rejects NANOS outright
       ([PARQUET_TYPE_ILLEGAL]); read nanos as LONG (legacy conf) and
@@ -45,8 +58,6 @@ def _read(spark: SparkSession, path: str) -> DataFrame:
       forbids NTZ→numeric casts, so leaving NTZ leak into queries
       crashes epoch arithmetic — normalize here, once.
     """
-    from pyspark.sql import functions as F
-
     try:
         df = spark.read.parquet(path)
         # force schema resolution now; the error surfaces lazily otherwise

@@ -21,18 +21,10 @@ from pyspark.sql.window import Window
 
 from sparkprep.operators import clustering, dedup, graph
 from sparkprep.operators import text as tx
-from sparkprep.queries import t
-from sparkprep.session import tune_for_engine
+from sparkprep.queries import _D18, _dec_round, t
 from sparkprep.checkpointing import lazy_checkpoint
 
-_D18 = "decimal(18,8)"
 _D38 = "decimal(38,0)"
-
-
-def _dec_round(col, n: int):
-    """DECIMAL(18,8)-recast round, emitted as DOUBLE (the cross-engine
-    round-half discipline, CLAUDE.md)."""
-    return F.round(col.cast(_D18), n).cast("double")
 
 
 # ---------------------------------------------------------------------------
@@ -348,7 +340,6 @@ def q_transition_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     libm drift is the reason this panel is Gini), ONE division per
     type. One user-keyed lag window over raw events (high-cardinality
     key), one map-combined count, one 5-row fold."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = ev.select(
@@ -410,7 +401,6 @@ def q_resample_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     wall-clock time, not data volume; 720×5 here), never raw events;
     the observed aggregate is localCheckpoint-ed because the grid
     bounds, the type list and the fill join all consume it."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events")
     obs = (
         ev.groupBy(
@@ -667,7 +657,6 @@ def q_sprt_stop(spark: SparkSession, sf_dir: str) -> DataFrame:
     under one user-keyed window. Readout: how many users the monitor
     would stop early for H1 / for H0 / leave running, and the average
     stopping time of each group (sum/count — ONE division)."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     cum = ev.select(
@@ -882,7 +871,6 @@ def q_position_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     of exact ints, recast DECIMAL(18,8) per row so the per-channel
     credit sums are order-independent (the decayed_value discipline).
     last-touch attribution is the asof-join sibling (q_attribution)."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events")
     w_next = (
         Window.partitionBy("user_id")
@@ -1065,7 +1053,6 @@ def q_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     The 1-row model/q_hat frames are sanctioned broadcast crosses."""
     from sparkprep.operators import ranks
 
-    tune_for_engine(spark)
     # o_orderdate arrives TIMESTAMP_NTZ (the loader only normalizes
     # `ts`); cast to session-TZ TIMESTAMP first (identity under the
     # pinned-UTC session — the reorder_gaps convention)

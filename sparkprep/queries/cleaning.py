@@ -17,7 +17,6 @@ from sparkprep.functions import numeric as npx
 from sparkprep.functions import strings as sx
 from sparkprep.operators import clean, transform
 from sparkprep.queries import t
-from sparkprep.session import tune_for_engine
 
 
 def q_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -160,7 +159,6 @@ FROM lineitem
 def q_month_token(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3 — 'Apr-2001' → 'Apr' (split('-')[0], loanStat.py:193-200),
     over date-formatted order dates; frequency per token."""
-    tune_for_engine(spark)
     orders = t(spark, sf_dir, "orders")
     tokens = orders.select(
         sx.month_token(F.date_format("o_orderdate", "MMM-yyyy")).alias("month_token")
@@ -252,7 +250,6 @@ def q_log_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X11/S3 — the Apache log parser, fully native (vs. nasa.py's
     Python-re RDD pipeline). Log lines synthesized from events so both
     engines parse identical text."""
-    tune_for_engine(spark)
     from sparkprep.functions.logs import parse_apache_log
 
     ev = t(spark, sf_dir, "events")
@@ -305,7 +302,6 @@ def q_ep1_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     strings synthesized from lineitem. This is the direct BASELINE.md
     comparison point: the reference spent ~100s on 1.43M rows with
     Python row UDFs; this plan is pure Catalyst expressions."""
-    tune_for_engine(spark)
     li = t(spark, sf_dir, "lineitem")
     raw = li.select(
         "l_orderkey",
@@ -812,7 +808,6 @@ def q_drift_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode-over-struct binning)."""
     from sparkprep.operators import expect as ex
 
-    tune_for_engine(spark)
     li = t(spark, sf_dir, "lineitem")
     cutoff = F.lit(_PANEL_CUTOFF).cast("timestamp")
     before = li.filter(F.col("l_shipdate") < cutoff)

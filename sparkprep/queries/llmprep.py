@@ -1482,9 +1482,7 @@ def q_sft_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     user's events (operators/text.chat_assemble). Digest-compared:
     DuckDB renders the identical template via ordered string_agg."""
     from sparkprep.operators import text as tx
-    from sparkprep.session import tune_for_engine
 
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     )

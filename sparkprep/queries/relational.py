@@ -11,13 +11,11 @@ from pyspark.sql import functions as F
 from sparkprep.functions import numeric
 from sparkprep.operators import profile, transform
 from sparkprep.queries import t
-from sparkprep.session import tune_for_engine
 
 
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: TPC-H Q1-shaped pricing summary. One shuffle on the
     group keys; every aggregate partial-aggregates map-side."""
-    tune_for_engine(spark)
     li = t(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
@@ -176,7 +174,6 @@ def q_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     each scan; customer (small side after filter) broadcasts under AQE;
     ordering on the raw (unrounded) revenue keeps the top-10 set
     engine-independent."""
-    tune_for_engine(spark)
     cust = t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = t(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")
@@ -218,7 +215,6 @@ def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-window aggregation over the events table — the batch
     equivalent of the streaming path (sparkprep.streaming); the same
     ``F.window`` expression runs under readStream with a watermark."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -255,7 +251,6 @@ def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches. Exact-boundary events (gap of precisely 30:00.000000) would
     diverge — microsecond event times make that measure-zero.
     """
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events")
     return (
         ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
@@ -447,7 +442,6 @@ def q_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding windows (1 h width, 30 min slide): every event lands in
     two overlapping windows. Oracle mirrors via a union of the two
     aligned bucketings."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
@@ -559,7 +553,6 @@ def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     at any SF where it fits, and the only large shuffles are the two
     fact-chain joins on their natural keys — the same keys a bucketed
     layout (writers.write_bucketed) would co-locate to zero-exchange."""
-    tune_for_engine(spark)
     region = t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     nation = t(spark, sf_dir, "nation")
     cust = t(spark, sf_dir, "customer")
@@ -611,7 +604,6 @@ def q_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     per month. part (small dim) broadcasts; the ratio is two conditional
     sums in ONE aggregate — no second pass, no self-join. ANSI-safe:
     denominator guarded (a month with zero revenue yields null)."""
-    tune_for_engine(spark)
     li = t(spark, sf_dir, "lineitem")
     part = t(spark, sf_dir, "part")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -650,7 +642,6 @@ def q_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle on l_orderkey, map-combined), which then broadcasts into
     the orders join under AQE — the anti-pattern it replaces is joining
     full lineitem to orders and aggregating after."""
-    tune_for_engine(spark)
     li = t(spark, sf_dir, "lineitem")
     orders = t(spark, sf_dir, "orders")
     cust = t(spark, sf_dir, "customer")
@@ -684,7 +675,6 @@ def q_cheapest_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     window-min over the part key — one shuffle, no subquery re-scan,
     then a broadcast join to supplier names. Ties kept (same as the
     SQL EXISTS form); min_price carried for the oracle hash."""
-    tune_for_engine(spark)
     from pyspark.sql import Window
 
     li = t(spark, sf_dir, "lineitem").select(
@@ -727,7 +717,6 @@ def q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-joins — the naive funnel is k-1 joins over the full event
     stream), then step-ordering comparisons and a single global count.
     Scales as one shuffle on user_id + a scalar rollup."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("t_view"),
@@ -768,7 +757,6 @@ def q_user_event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     to one row per user. The window partitions on user_id — max
     parallelism |users|, no global sort — and (ts, event_id) ordering
     makes lag/frame results deterministic under ties."""
-    tune_for_engine(spark)
     from pyspark.sql import Window
 
     ev = t(spark, sf_dir, "events")
@@ -816,7 +804,6 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts it at any realistic fan-out) — then one distinct-count
     aggregate. The standard product-analytics rollup, expressed so no
     stage ever sees more than |events| rows."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events").select(
         "user_id", F.date_trunc("day", "ts").alias("__day")
     )
@@ -1122,7 +1109,6 @@ def q_returned_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe side narrow (no lineitem columns survive, no row blowup for
     multi-match orders); the returned-only filter prunes the build side
     before the shuffle, and only l_orderkey is scanned from lineitem."""
-    tune_for_engine(spark)
     orders = t(spark, sf_dir, "orders")
     returned = (
         t(spark, sf_dir, "lineitem")
@@ -1154,7 +1140,6 @@ def q_priority_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     two columns before the shuffle; at cluster scale the join is a
     sort-merge on l_orderkey/o_orderkey — bucketing both tables on the
     order key (writers.write_bucketed) makes it zero-exchange."""
-    tune_for_engine(spark)
     li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_linestatus")
     orders = t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
@@ -1189,7 +1174,6 @@ def q_quiet_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     crossJoin(broadcast(agg)), which re-executes the upstream subtree.
     The urgent-customer build side is filtered then deduped map-side
     (distinct partial-aggregates) before the LEFT ANTI shuffle."""
-    tune_for_engine(spark)
     cust = t(spark, sf_dir, "customer")
     orders = t(spark, sf_dir, "orders")
     # rounded to 6dp BOTH here and in the oracle subquery: engine
@@ -1255,7 +1239,6 @@ def q_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     |orders|), unmatched customers surface as count 0 via coalesce, and
     the histogram is a second tiny agg. The naive shape — left-join raw
     orders then double-aggregate — shuffles the full orders table."""
-    tune_for_engine(spark)
     cust = t(spark, sf_dir, "customer").select("c_custkey")
     per_cust = (
         t(spark, sf_dir, "orders")
@@ -1288,7 +1271,6 @@ def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     ECONOMY-part revenue sold to ASIA customers, by order year. The
     share is a conditional sum over the SAME joined frame (one pass,
     no second scan); all dims broadcast before the fact joins."""
-    tune_for_engine(spark)
     li = t(spark, sf_dir, "lineitem")
     orders = t(spark, sf_dir, "orders")
     cust = t(spark, sf_dir, "customer")
@@ -1416,7 +1398,6 @@ def q_promo_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate -> join -> semi-join, no correlated subquery."""
     from pyspark.sql.window import Window
 
-    tune_for_engine(spark)
     li = t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
@@ -1484,7 +1465,6 @@ def q_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     dates). The exists/not-exists pair collapses to ONE per-order
     aggregate (distinct suppliers, distinct late suppliers) joined back
     to the late rows — two shuffles total, no correlated subqueries."""
-    tune_for_engine(spark)
     li = t(spark, sf_dir, "lineitem")
     orders = t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     supp = t(spark, sf_dir, "supplier")
@@ -1591,7 +1571,6 @@ def q_calendar_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     warehouse pipeline derives): y/q/m/dow/doy + month-end flag from
     o_orderdate — pure projection, zero shuffles beyond the final
     group count."""
-    tune_for_engine(spark)
     orders = t(spark, sf_dir, "orders")
     feats = orders.select(
         F.year("o_orderdate").cast("bigint").alias("y"),

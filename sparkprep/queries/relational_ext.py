@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from sparkprep.operators import graph, transform
 from sparkprep.queries import t
-from sparkprep.session import tune_for_engine
 from sparkprep.checkpointing import lazy_checkpoint
 
 
@@ -152,7 +151,6 @@ def q_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters push to the scans; nation broadcasts; top-k compiles to
     TakeOrderedAndProject (no global sort). ``c_custkey`` tie-break
     keeps the limit deterministic for the oracle."""
-    tune_for_engine(spark)
     cust = t(spark, sf_dir, "customer")
     orders = t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -203,7 +201,6 @@ def q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``isnotnull`` filter de-canonicalizes the exchanges, so a lazy
     localCheckpoint materializes the aggregate once (the CLAUDE.md
     both-join-sides discipline)."""
-    tune_for_engine(spark)
     li = t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
@@ -348,7 +345,6 @@ def q_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     supply cost is proxied as 10%% of ``p_retailprice`` per unit
     (documented, oracle uses the same formula). PROMO parts prune the
     part scan before the big join; dims broadcast."""
-    tune_for_engine(spark)
     li = t(spark, sf_dir, "lineitem")
     part = t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
     supp = t(spark, sf_dir, "supplier")
@@ -395,7 +391,6 @@ def q_nation_trade_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     nations (both directions) by ship year. Nation filters broadcast
     into both legs BEFORE the lineitem join, so the big fact only
     joins rows that can survive the pair predicate."""
-    tune_for_engine(spark)
     li = t(spark, sf_dir, "lineitem")
     orders = t(spark, sf_dir, "orders")
     cust = t(spark, sf_dir, "customer")
@@ -617,7 +612,6 @@ def q_filtered_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join proper. Result is identical to the plain join (the oracle IS
     the plain join); the plan shape is the point — asserted in
     tests/test_plans_quality.py with auto-broadcast disabled."""
-    tune_for_engine(spark)
     orders = (
         t(spark, sf_dir, "orders")
         .filter(
@@ -1300,7 +1294,6 @@ def q_ship_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact int64 epoch-day differences (both date columns cast NTZ →
     session-TZ TIMESTAMP first — the loader only normalizes `ts`);
     the breach share is an exact 0/1 average."""
-    tune_for_engine(spark)
     li = t(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         F.expr(
@@ -1862,7 +1855,7 @@ def rfm_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared RFM staging for rfm_segments and scale_ops.q_rfm_scale
     (same oracle): per-customer (recency, frequency, monetary) with the
     recency horizon attached via the broadcast 1-row max-day frame.
-    Caller must have pinned the session TZ (tune_for_engine).
+    The TZ-sensitive date cast relies on the UTC pin ``t`` applies.
 
     Session-shared + lazily checkpointed (r10): rfm_segments and
     rfm_scale each re-ran the orders scan + per-customer aggregate —
@@ -1910,7 +1903,6 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     global ntile windows single-task-sort everything at scale — use
     ``rfm_scale`` (scale_ops.q_rfm_scale: chained ranks.global_ntile
     passes, bit-identical output, same oracle) beyond driver SFs."""
-    tune_for_engine(spark)
     from pyspark.sql.window import Window
 
     staged = rfm_staged(spark, sf_dir)
@@ -2208,7 +2200,6 @@ def q_gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame (one task sorts every customer at scale) — use ``gini_scale``
     (scale_ops.q_gini_scale: ranks.global_rank distributed row_number,
     bit-identical output, same oracle) beyond driver SFs."""
-    tune_for_engine(spark)
     from pyspark.sql.window import Window
 
     per_cust = per_customer_revenue(spark, sf_dir)
@@ -2268,7 +2259,6 @@ def q_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame — use ``lorenz_scale`` (scale_ops.q_lorenz_scale:
     ranks.global_ntile, bit-identical output, same oracle) beyond
     driver SFs; only the 10-row cumulative windows remain global."""
-    tune_for_engine(spark)
     from pyspark.sql.window import Window
 
     per_cust = per_customer_revenue(spark, sf_dir)
@@ -2430,7 +2420,6 @@ def q_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     up NULLs coalesced to an 'ALL' sentinel on BOTH engines (a NULL
     int column comes back NaN via fetchdf and hashes differently);
     revenue is the standard exact-decimal money sum."""
-    tune_for_engine(spark)
     li = t(spark, sf_dir, "lineitem")
     orders = t(spark, sf_dir, "orders")
     rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
@@ -2740,7 +2729,6 @@ def q_pit_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-key exists); the census groupBy is the only data shuffle."""
     from pyspark.sql.window import Window
 
-    tune_for_engine(spark)
     orders = t(spark, sf_dir, "orders").select(
         "o_custkey",
         "o_orderkey",
@@ -2822,7 +2810,6 @@ def q_growth_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact aggregates, so every effect is a short identical float tree
     on both engines. One fact-table aggregate (conditional sums per
     year), dimensions broadcast."""
-    tune_for_engine(spark)
     li = t(spark, sf_dir, "lineitem")
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -3022,7 +3009,6 @@ def q_top_movers(spark: SparkSession, sf_dir: str) -> DataFrame:
     size check (part is unfiltered catalog grain); one conditional-sum
     fact aggregate; the 1-row period-totals frame is a sanctioned
     broadcast attach."""
-    tune_for_engine(spark)
     li = t(spark, sf_dir, "lineitem")
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -3118,7 +3104,6 @@ def q_revenue_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     view can't answer. The five components telescope EXACTLY to ΔR
     (asserted in the test): all sums are per-customer cents-exact
     DECIMAL; the sign split is row-local on the per-customer frame."""
-    tune_for_engine(spark)
     orders = t(spark, sf_dir, "orders").select(
         "o_custkey",
         F.year(F.col("o_orderdate").cast("timestamp")).alias("yr"),

@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from sparkprep.operators import quantize, ranks, sketches
 from sparkprep.queries import relational_ext, t
 from sparkprep.queries import temporal_grouped as _tg
-from sparkprep.session import tune_for_engine
 from sparkprep.checkpointing import lazy_checkpoint
 
 _DIM = 64
@@ -469,9 +468,7 @@ def q_incr_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-deterministic on event_id, so both engines can draw it."""
     from sparkprep.operators import transform
     from sparkprep.operators.dedup import string_to_int_hash
-    from sparkprep.session import tune_for_engine
 
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events").select(
         "event_type",
         F.date_format("ts", "yyyy-MM-dd").alias("day"),
@@ -632,7 +629,6 @@ def q_gini_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast offsets — every stage parallel) instead of a
     single-partition ``row_number`` window. Identical output, same
     oracle (relational_ext._GINI_REVENUE_SQL)."""
-    tune_for_engine(spark)
     from sparkprep.queries import shared_frames
 
     # rank from the session-shared one-pass scaffold (r10): same range
@@ -664,7 +660,6 @@ def q_lorenz_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     (distributed exact ntile) instead of a single-partition ntile
     window; the cumulative/total windows that remain run over the
     10-row decile frame. Identical output, same oracle."""
-    tune_for_engine(spark)
     from pyspark.sql.window import Window
 
     from sparkprep.queries import shared_frames
@@ -706,7 +701,6 @@ def q_rfm_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     chained ``ranks.global_ntile`` passes (one range exchange + one
     pid-hash exchange each, all parallel) instead of three
     single-partition ntile windows. Identical output, same oracle."""
-    tune_for_engine(spark)
     staged = relational_ext.rfm_staged(spark, sf_dir)
     # all three quintile orderings through ONE grouped range pass (r10)
     # instead of three chained global_ntile pipelines (each paid its own
@@ -903,7 +897,6 @@ def q_rolling_quantiles_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     also swap percentile → percentile_approx (documented trade)."""
     from pyspark.sql.window import Window
 
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -1379,7 +1372,6 @@ def q_pruning_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkprep.functions import zorder as zo
     from sparkprep.operators import ranks
 
-    tune_for_engine(spark)
     li = t(spark, sf_dir, "lineitem").select(
         (
             F.expr("unix_micros(cast(l_shipdate as timestamp)) div 86400000000")
@@ -1542,7 +1534,6 @@ def q_layout_advice(spark: SparkSession, sf_dir: str) -> DataFrame:
     createDataFrame (bounded, same class as the A6 scalar contract)."""
     from sparkprep.operators.physical import layout_advisor
 
-    tune_for_engine(spark)
     li = t(spark, sf_dir, "lineitem").select(
         (
             F.expr("unix_micros(cast(l_shipdate as timestamp)) div 86400000000")

@@ -21,17 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from sparkprep.queries import t
-from sparkprep.session import tune_for_engine
+from sparkprep.queries import _D18, _dec_round, t
 from sparkprep.checkpointing import lazy_checkpoint
-
-_D18 = "decimal(18,8)"
-
-
-def _dec_round(col, n: int):
-    """DECIMAL(18,8)-recast round, emitted as DOUBLE (the cross-engine
-    round-half discipline, CLAUDE.md)."""
-    return F.round(col.cast(_D18), n).cast("double")
 
 
 QUERIES: dict = {}
@@ -389,7 +380,6 @@ def q_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic-form sums recast each per-day double term to
     DECIMAL(38,6) so the accumulation is order-independent. The 1-row
     model frame is a sanctioned broadcast attach."""
-    tune_for_engine(spark)
     orders = t(spark, sf_dir, "orders")
     daily = (
         orders.select(
@@ -542,7 +532,6 @@ def q_group_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     over exact int64 counts; the boundaries are Python double
     literals; crossed = |z| > bound is an exact comparison of
     engine-identical doubles."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events").select(
         (
             F.substring(F.md5(F.col("user_id").cast("string")), 1, 1) < "8"
@@ -784,7 +773,6 @@ def q_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts); the estimate and its Seber variance are a short IEEE
     tree; √ is correctly rounded, so the CI bounds agree bit-for-bit
     across engines."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events")
     cut = "2024-01-16"
     per_user = ev.groupBy("user_id").agg(
@@ -1111,7 +1099,6 @@ def q_earth_movers(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid join, totals); the cum frame too (both pair-join sides — the
     self-join ReusedExchange landmine). Scale shape: everything after
     the one groupBy over orders lives on ≤|priorities|·|bins| rows."""
-    tune_for_engine(spark)
     o = t(spark, sf_dir, "orders")
     cnt = (
         o.groupBy(

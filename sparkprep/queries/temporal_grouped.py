@@ -17,14 +17,12 @@ from pyspark.sql import functions as F
 from sparkprep.functions import numeric
 from sparkprep.operators import graph, grouped, skew, temporal
 from sparkprep.queries import t
-from sparkprep.session import tune_for_engine
 from sparkprep.checkpointing import lazy_checkpoint
 
 
 def q_asof_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Each event joined to the most recent hourly per-type average at
     or before its timestamp (feature-store point-in-time-correct join)."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events").select("event_id", "event_type", "ts")
     rates = (
         t(spark, sf_dir, "events")
@@ -53,7 +51,6 @@ def q_range_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events inside each user's first-24h interval, via the binned
     equi-join (a naive inequality join would be a nested-loop over
     |events| x |intervals|)."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events")
     intervals = (
         ev.filter(F.col("user_id") < 20)
@@ -122,7 +119,6 @@ def q_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     observed span, forward-filled (timeseries resample — the feature-
     store densification step). Bucket math on epoch seconds keeps it
     session-TZ-independent; ts reconstructed for the output."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events").filter(F.col("user_id") < 20)
     return temporal.resample_ffill(ev, "ts", "user_id", "value", step="1 hour")
 
@@ -154,7 +150,6 @@ def q_rolling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     in its user's last hour regardless of how many there are. Frame
     bounds ride on exact int64 ``unix_micros`` (see
     temporal.rolling_time_agg for why not a double epoch)."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
     out = temporal.rolling_time_agg(ev, "ts", "user_id", "value", window="1 hour")
     return out.select("event_id", "user_id", "value_roll_avg", "n_in_window")
@@ -177,7 +172,6 @@ def q_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     two map-combined shuffles, day counts first, then the 5-row fit).
     x is days since a fixed epoch so the intercept is interpretable and
     the doubles stay small."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.to_date("ts").alias("day")
@@ -256,7 +250,6 @@ def q_anomaly_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern)."""
     from pyspark.sql.window import Window
 
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
     w = (
         Window.partitionBy("user_id")
@@ -302,7 +295,6 @@ def q_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     one partitioning); latency math on exact int64 ``unix_micros``.
     The product-analytics companion to event_funnel — the funnel says
     how many convert, this says how long conversion takes."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events")
     clicks = (
         ev.filter(F.col("event_type") == "click")
@@ -357,7 +349,6 @@ def q_pattern_completions(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-based chain needs no per-step self-join over raw events beyond
     the two stage filters, and the streaming reconcile test pins the
     stateful path to THIS definition."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events")
     views = ev.groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("t_view")
@@ -455,7 +446,6 @@ def q_markov_3step(spark: SparkSession, sf_dir: str) -> DataFrame:
     session sit after three clicks". The heavy work (keyed lag window +
     transition count aggregate) runs once; the three iterations are
     broadcast joins over the |states|^2 matrix (operators/graph)."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events")
     trans = graph.transition_matrix(
         ev, "user_id", "event_type", [F.col("ts"), F.col("event_id")]
@@ -511,7 +501,6 @@ def q_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lag boundary + running burst id + per-burst agg share the
     partitioning). The accounting that separates '40 retry spasms' from
     '40 independent actions' before rate features are built."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events")
     out = temporal.debounce(
         ev, ["user_id", "event_type"], "ts",
@@ -550,7 +539,6 @@ def q_decayed_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σ value · 0.5^(age_days / 7), age from the user's newest event.
     Weight rounded at 6 (libm pow ulp drift) and each term summed as
     DECIMAL(18,6) so the total is order-independent across engines."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events")
     return temporal.decayed_agg(
         ev, "user_id", "ts", "value", half_life="7 days"
@@ -566,7 +554,6 @@ def q_user_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     path (operators/grouped.grouped_ewma). The oracle replays the SAME
     recurrence with a recursive CTE, same float op order, same
     constants — bit parity, not approximate agreement."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events").filter(F.col("user_id") < 50).select(
         "event_id", "user_id", "ts", "value"
     )
@@ -609,7 +596,6 @@ def q_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential drift detector (operators/grouped.grouped_cusum), alarm
     at s > 200. Second recurrence on the Arrow path, pinned bit-exact
     by the same recursive-CTE oracle technique as user_ewma."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events").filter(F.col("user_id") < 50).select(
         "event_id", "user_id", "ts", "value"
     )
@@ -669,7 +655,6 @@ def q_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange) and event_sequences (cap-before-collect, one session-
     keyed exchange); the final path rollup aggregates a frame with one
     row per SESSION, not per event."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "event_type"
     )
@@ -723,7 +708,6 @@ def q_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     else windows over the aggregated contingency frame."""
     from sparkprep.operators import profile
 
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events").select(
         "event_type", F.expr("weekday(ts)").cast("long").alias("dow")
     )
@@ -797,7 +781,6 @@ def q_time_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     mix.time_split for the look-ahead-leakage rationale."""
     from sparkprep.operators import mix
 
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events").select("event_id", "ts")
     return mix.time_split(
         ev, "ts", "2024-01-20 00:00:00", "2024-01-22 00:00:00"
@@ -819,7 +802,6 @@ def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     user's most recent view/click/signup within a 7-day lookback (or
     '(none)'), rolled up per channel with attributed revenue. Rides
     temporal.asof_join — one keyed exchange, no inequality join."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", "ts", "value"
@@ -943,7 +925,6 @@ def q_mom_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-agg empty-frame window — never over raw rows)."""
     from pyspark.sql.window import Window
 
-    tune_for_engine(spark)
     orders = t(spark, sf_dir, "orders")
     monthly = orders.groupBy(
         F.date_format("o_orderdate", "yyyy-MM").alias("month")
@@ -1027,7 +1008,6 @@ def q_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISTINCT no range frame can express: dedup to the daily grain,
     explode each (day,user) into the 7 window ends it serves, dedup,
     count (cost ∝ daily grain x 7, independent of raw event volume)."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events")
     return temporal.active_users(ev, "ts", "user_id", window_days=7).orderBy(
         "day"
@@ -1067,7 +1047,6 @@ def q_rolling_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (type, hour-bucket), bit-identical output, same oracle)."""
     from pyspark.sql.window import Window
 
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events").select("event_id", "event_type", "ts", "value")
     w = (
         Window.partitionBy("event_type")
@@ -1105,7 +1084,6 @@ def q_watermark_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate over int64-µs lateness."""
     from pyspark.sql.window import Window
 
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     w = (
         Window.partitionBy("user_id")
@@ -1153,7 +1131,6 @@ def q_did_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     four means and the effect engine-exact."""
     from sparkprep.operators import features
 
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events").select(
         (F.col("user_id") % 2 == 1).alias("treated"),
         (F.col("ts") >= F.lit("2024-01-16").cast("timestamp")).alias("after"),
@@ -1203,7 +1180,6 @@ def q_freshness_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     dayofweek + 1."""
     from pyspark.sql.window import Window
 
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events")
     daily = ev.groupBy(
         F.date_format("ts", "yyyy-MM-dd").alias("day")
@@ -1269,7 +1245,6 @@ def q_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     One daily groupBy, keyed lag window over the |days|-per-key frame,
     one grouped corr pass; round(4) pins summation-order drift exactly
     as q_correlations does."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events")
     return temporal.autocorrelation(
         ev, "event_type", "ts", lags=(1, 2, 3)
@@ -1336,7 +1311,6 @@ def q_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain). The step-count companion of conversion_latency — how MANY
     reach each stage in order, not just how fast the converters are.
     The oracle replays the identical sequential-min CTE chain."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events")
     return temporal.window_funnel(
         ev, "user_id", "event_type", "ts",
@@ -1392,7 +1366,6 @@ def q_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     locale/day-name dependence); each χ² term is 3 IEEE ops on exact
     ints cast to DECIMAL(18,8) per-row so the cross-engine sum is
     order-independent (CLAUDE.md decimal-sum contract)."""
-    tune_for_engine(spark)
     from pyspark.sql.window import Window
 
     ev = t(spark, sf_dir, "events")
@@ -1515,7 +1488,6 @@ def q_reorder_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     a global exact-percentile aggregate. Gap days are exact int64
     epoch-day differences; the mean is one division of an exact sum.
     The inter-purchase twin of user_event_gaps' intra-session view."""
-    tune_for_engine(spark)
     from pyspark.sql.window import Window
 
     # o_orderdate arrives TIMESTAMP_NTZ (the loader only normalizes
@@ -1569,7 +1541,6 @@ def q_weekday_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(18,6) casts make both conditional sums exact; each mean is
     ONE double division, the lift one more, re-cast DECIMAL(18,8)
     before the display round (half-round landmine)."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     is_we = F.expr("(unix_micros(ts) div 86400000000) % 7").isin(2, 3)
     x = F.col("value").cast("decimal(18,6)")
@@ -1627,7 +1598,6 @@ def q_user_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max ts (no hard-coded dates — testdata regenerates between
     rounds); the argmax windows run over the aggregated (user, period,
     type) frame."""
-    tune_for_engine(spark)
     from pyspark.sql.window import Window
 
     ev = t(spark, sf_dir, "events").select("user_id", "event_type", "ts")
@@ -1711,7 +1681,6 @@ def q_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep and session_paths' journeys both hang off. Durations are
     exact int64 µs differences with ONE division; the percentile runs
     over the AGGREGATED per-session frame (|sessions| rows)."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events").select("user_id", "event_id", "ts")
     sess = temporal.sessionize_ids(
         ev, ["user_id"], "ts", gap="30 minutes",
@@ -1779,7 +1748,6 @@ def q_survival_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     float-chain landmine), while the life table is the part that
     actually needs the cluster. All windows run over aggregated
     per-user / per-lifetime frames."""
-    tune_for_engine(spark)
     from pyspark.sql.window import Window
 
     ev = t(spark, sf_dir, "events")
@@ -1853,7 +1821,6 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     a window over the AGGREGATED (cohort, offset) frame (≤ days² rows).
     Day emitted as a yyyy-MM-dd string (cross-engine date-hash
     contract, CLAUDE.md)."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events").select(
         "user_id", F.to_date("ts").alias("__d")
     )
@@ -1906,7 +1873,6 @@ def q_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     at day boundaries so the running-sum window partitions by day,
     never a global sweep. The oracle replays the identical
     sessionize → clip → sweep chain in SQL windows."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events").select("user_id", "event_id", "ts")
     sess = temporal.sessionize_ids(
         ev, ["user_id"], "ts", gap="30 minutes",
@@ -1969,7 +1935,6 @@ def q_seasonal_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
     division; residual = actual − expected, DECIMAL-recast before the
     display round (half-round landmine). Day-of-week is exact int64
     epoch-day arithmetic, no locale dependence (chi_square's idiom)."""
-    tune_for_engine(spark)
     from pyspark.sql.window import Window
 
     ev = t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
@@ -2027,7 +1992,6 @@ def q_churn_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     churners at the observation edge). Keyed on user_id (entity-grain
     key, scales with users); weeks are exact int64 epoch-week
     numbers."""
-    tune_for_engine(spark)
     from pyspark.sql.window import Window
 
     ev = t(spark, sf_dir, "events")
@@ -2109,7 +2073,6 @@ def q_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact recurrence as a recursive CTE with repr-interpolated
     constants — bit parity, not approximate agreement (user_ewma's
     convention). Day emitted as the int64 epoch-day."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type",
@@ -2183,7 +2146,6 @@ def q_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     via CASE on the row's phase — bit parity (holt_trend's
     convention), with the final round run through DECIMAL(18,8) on
     both engines (exact-half round() divergence, CLAUDE.md)."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type",
@@ -2290,7 +2252,6 @@ def q_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(38,12) so the per-type sums are order-independent; one
     division per metric at the end. The honest-accuracy readout that
     should gate any forecast op before anyone trusts it."""
-    tune_for_engine(spark)
     from pyspark.sql.window import Window
 
     ev = t(spark, sf_dir, "events")
@@ -2385,7 +2346,6 @@ def q_forecast_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     squares accumulation (population σ, one sqrt at the end — a plain
     double stddev would be summation-order-dependent), broadcast back
     over the bounded per-type panel."""
-    tune_for_engine(spark)
     from pyspark.sql.window import Window
 
     ev = t(spark, sf_dir, "events")
@@ -2501,7 +2461,6 @@ def q_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     single arm's var_y_adj can exceed its var_y when that arm's own
     cov/var ratio disagrees with the pooled fit (observed at
     sf0.001)."""
-    tune_for_engine(spark)
     from pyspark.sql.window import Window
 
     ev = t(spark, sf_dir, "events")
@@ -2634,7 +2593,6 @@ def q_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``stats.wilcoxon_signed_rank`` — |d| mid-ranks from the
     value-frequency table, every accumulated term an exact
     DECIMAL(38,0) integer, one division at the end."""
-    tune_for_engine(spark)
     from sparkprep.operators.stats import wilcoxon_signed_rank
 
     ev = t(spark, sf_dir, "events")
@@ -2701,7 +2659,6 @@ def q_trend_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
     median is LOWER-median row selection (no interpolation — the
     cross-engine quantile-interpolation landmine); S, the tie term and
     Var(S)'s numerator are exact integers."""
-    tune_for_engine(spark)
     from pyspark.sql.window import Window
 
     ev = t(spark, sf_dir, "events")
@@ -2844,7 +2801,6 @@ def q_cumulative_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-combined min), a second folds days; the running-sum window
     runs over the bounded per-day frame (~90 rows), never raw events.
     Day emitted as a string (DATE-dtype hash divergence, CLAUDE.md)."""
-    tune_for_engine(spark)
     from pyspark.sql.window import Window
 
     ev = t(spark, sf_dir, "events")
@@ -2901,7 +2857,6 @@ def q_user_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
     landmine); the per-interval product re-casts to DECIMAL(38,6) so
     the per-user sum is order-independent; one IEEE division at the
     end. Users with one non-null observation drop (no interval)."""
-    tune_for_engine(spark)
     from pyspark.sql.window import Window
 
     ev = t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
@@ -2975,7 +2930,6 @@ def q_interval_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     microseconds (no float seconds, no date-type hash landmine); two
     same-key windows share one exchange+sort; keyed by user_id —
     entity-parallel at any scale."""
-    tune_for_engine(spark)
     from pyspark.sql.window import Window
 
     ev = t(spark, sf_dir, "events").select(
@@ -3070,7 +3024,6 @@ def q_cross_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(19,0) first, finish = one IEEE division per lag. The daily
     panel feeds both join sides — lazily checkpointed (the CLAUDE.md
     both-sides discipline)."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "purchase")
     )
@@ -3159,7 +3112,6 @@ def q_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     the naive form recomputes both segment means per split (O(days²)
     work and a correlated-subquery shape); prefix sums make it one
     pass."""
-    tune_for_engine(spark)
     from pyspark.sql.window import Window
 
     ev = t(spark, sf_dir, "events")
@@ -3265,7 +3217,6 @@ def q_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     S1 = Σc, S2 = Σc² over observed hours only — exact int64 algebra
     (products cast DECIMAL(19,0) for warehouse headroom). One
     map-combined (type, hour) count, one per-type fold."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events")
     hourly = ev.groupBy(
         "event_type",
@@ -3346,7 +3297,6 @@ def q_repeat_purchase_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     generations — value-frequency-bounded like signed_rank's |d| map,
     not user-grain), survival = reverse cumulative sum over that tiny
     frame. share = one division of exact ints per row."""
-    tune_for_engine(spark)
     from pyspark.sql.window import Window
 
     ev = t(spark, sf_dir, "events").filter(
@@ -3534,7 +3484,6 @@ def q_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     entry row and per-session size come from two window functions over
     ONE keyed exchange; the readout groupBy runs on |sessions| rows.
     Rates are exact-int divisions, DECIMAL-recast rounds."""
-    tune_for_engine(spark)
     from pyspark.sql.window import Window
 
     from sparkprep.operators import temporal
@@ -3647,7 +3596,6 @@ def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaf); every iteration is a broadcast join over the |states|²
     matrix with the per-step round(12) drift pin power_iteration
     documents."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events")
     # |states|² ≈ 25 rows: repartition the loop's working set to match
     # its size BEFORE the 6 rounds (the BPE-loop discipline — tiny
@@ -3743,7 +3691,6 @@ def q_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
     an exact binary fraction, so every float step is bit-identical to
     the oracle's keyed recursive-CTE replay. Parts below
     5 demand-weeks are excluded (Croston state is noise there)."""
-    tune_for_engine(spark)
     from pyspark.sql.window import Window
 
     from sparkprep.operators import grouped as gr
@@ -3841,7 +3788,6 @@ def q_journey_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     is what scales: at 100 TB you compare cohort exemplars, not every
     user pair. Levenshtein is exact-integer native in both engines;
     the similarity is ONE division."""
-    tune_for_engine(spark)
     ev = t(spark, sf_dir, "events")
     journeys = (
         ev.filter(F.col("user_id") < _JOURNEY_USERS)
@@ -3932,7 +3878,6 @@ def q_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar; cumulative sums are keyed (per customer) over exact
     int64 cents; the horizon is a 1-row broadcast attach; the readout
     averages per (cohort, age) with ONE exact-int division."""
-    tune_for_engine(spark)
     from pyspark.sql.window import Window
 
     orders = t(spark, sf_dir, "orders").select(

@@ -76,8 +76,9 @@ def tune_for_engine(spark: SparkSession) -> SparkSession:
 
     The correctness driver hands us its own SparkSession; static conf
     (driver memory, master) is out of our hands, but runtime SQL conf is
-    not. Used by ``__spark_entry__`` so query semantics (timezone) and
-    plans (AQE) are consistent no matter who built the session.
+    not. Called by ``sparkprep.queries.t`` on every table read, so query
+    semantics (timezone) and plans (AQE) are consistent no matter who
+    built the session.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")

@@ -2,7 +2,6 @@ from sparkprep.sources.readers import (  # noqa: F401
     read_csv,
     read_jdbc,
     read_parquet,
-    read_table_dir,
     read_text,
 )
 from sparkprep.sources.writers import (  # noqa: F401

@@ -9,8 +9,6 @@ surface the drop count as observability the reference lacks (SURVEY §4).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -143,11 +141,6 @@ def read_avro(spark: SparkSession, path: str) -> DataFrame:
             "Avro source requires the spark-avro package "
             "(--packages org.apache.spark:spark-avro_2.13:<spark-version>)"
         ) from exc
-
-
-def read_table_dir(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    """Load driver testdata tables: ``read_table_dir(spark, sf, 'lineitem', ...)``."""
-    return {n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet")) for n in names}
 
 
 def read_jdbc(

@@ -89,7 +89,7 @@ def test_stream_and_batch_agree_on_epochs(spark, sf_dir, duck):
     DuckDB's. A unit mix-up shifts these by ~1000x."""
     from pyspark.sql import functions as F
 
-    from sparkprep.queries.relational import tune_for_engine
+    from sparkprep.session import tune_for_engine
     from sparkprep.streaming.events import _ts_encoding, events_raw_schema
 
     tune_for_engine(spark)
