@@ -658,11 +658,11 @@ def graph_panel(spark, num_nodes: int = 1_000_000, num_edges: int = 10_000_000) 
     _bench("pagerank (3 iters)", lambda: _materialize(
         graph.pagerank(directed, nodes, iterations=3)))
     _bench("k_core (k=3)", lambda: _materialize(
-        graph.k_core(edges, k=3, num_partitions=64)))
+        graph.k_core(edges, k=3)))
     _bench("LPA communities (4 rounds)", lambda: _materialize(
-        graph.lpa_communities(edges, rounds=4, num_partitions=64)))
+        graph.lpa_communities(edges, rounds=4)))
     _bench("BFS hops (4 rounds)", lambda: _materialize(
-        graph.bfs_hops(edges, rounds=4, num_partitions=64)))
+        graph.bfs_hops(edges, rounds=4)))
     _bench("triangle census", lambda: _materialize(
         graph.triangle_stats(
             edges.select(F.col("u").alias("item_a"), F.col("v").alias("item_b"))
@@ -671,7 +671,7 @@ def graph_panel(spark, num_nodes: int = 1_000_000, num_edges: int = 10_000_000) 
     # neighbors to the wedge fan-out — the naive undirected form would
     # enumerate hub-degree² (~2e10) wedge rows here
     _bench("k_truss (k=3)", lambda: _materialize(
-        graph.k_truss(edges, k=3, max_rounds=4, num_partitions=64)))
+        graph.k_truss(edges, k=3, max_rounds=4)))
 
 
 # --- round-9 panel: per-ROW width (long documents) -------------------------

@@ -32,6 +32,13 @@ configured (Spark's own error is an opaque SparkException mid-job).
 Tested by tests/test_checkpoint_mode.py: the same connected-components
 and k-core iterations produce identical results under both modes.
 
+``lazy_checkpoint`` is not lazy under AQE: building the cut runs every
+shuffle stage below it (producing the cut's RDD finalizes the adaptive
+plan, and that runs its shuffle stages); only the final stage waits
+for the first action. That is also why a cut placed on a count-less
+``repartition`` keeps AQE's coalesced partition count (the loop-sizing
+rule in ``operators/physical.py``).
+
 Plan-shape tests that must see below a cut (a checkpoint truncates
 ``explain()`` to ``Scan ExistingRDD``) replace ``_checkpoint`` with an
 identity function while they build — ``tests/plan_util.no_lineage_cuts``.

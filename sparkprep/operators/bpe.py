@@ -82,13 +82,12 @@ def bpe_train(
         _initial_symbols(F.col("word")).alias("sym"), F.col("n")
     )
     # the working set is vocab-sized (tiny relative to the corpus);
-    # re-spreading it over the session's default shuffle width makes
-    # every round pay multi-stage scheduling for near-empty partitions
-    # (0.8s/round measured at 32 partitions). Size partitions to the
-    # data: ~100k vocab rows per partition keeps each round one small
-    # stage while still scaling past single-machine vocabularies.
-    n_part = max(1, vocab.sparkSession.sparkContext.defaultParallelism // 8)
-    sym = sym.repartition(n_part).transform(lazy_checkpoint)
+    # spread over the session's full shuffle width every round would pay
+    # multi-stage scheduling for near-empty partitions (0.8s/round
+    # measured at 32 partitions). A count-less repartition lets AQE size
+    # it from its measured bytes before the cut (the loop-sizing rule in
+    # operators/physical.py).
+    sym = sym.repartition("sym").transform(lazy_checkpoint)
     merges: list[tuple[str, str, int]] = []
     for _ in range(num_merges):
         arr = F.split(F.col("sym"), " ")

@@ -470,38 +470,18 @@ def connected_components(
         .select("e.u", "e.v")
         .dropDuplicates()
     )
-    edges = edges.cache()
-    # Loop discipline (CLAUDE.md BPE/k_core precedent): a near-dup pair
-    # graph is TINY relative to the corpus (edges ∝ duplicates), so a
-    # working set spread over the session's shuffle partitions pays
-    # ~0.5s/round in multi-stage scheduling. Compact it to a partition
-    # count derived from the measured edge count (scale-adaptive: the
-    # count job is one aggregate over the cached frame; at 1M+ rows per
-    # partition the branch turns itself off and the shape is unchanged).
-    # Measured 3.3-4.6s → 1.8s on the cc_labels family input at sf0.1,
-    # bit-identical labels.
-    n_edges = edges.count()
-    try:
-        max_parts = int(
-            pairs.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    except (TypeError, ValueError):  # "auto" or unset — leave uncompacted
-        max_parts = 1
-    n_parts = max(1, min(max_parts, n_edges // 1_000_000 + 1))
-    compact = n_parts < max_parts
-
-    def _compact(df: DataFrame) -> DataFrame:
-        # coalesce, not repartition: narrow merge of the aggregate's
-        # output partitions — no extra exchange in the per-round plan
-        return df.coalesce(n_parts) if compact else df
-
-    edges = _compact(edges)
+    # Loop discipline (the loop-sizing rule in operators/physical.py): a
+    # near-dup pair graph is TINY relative to the corpus (edges ∝
+    # duplicates), and dropDuplicates already ends in an exchange, so
+    # the cut keeps the partition count AQE coalesced it to. A cache()
+    # would not: AQE never re-partitions a cached plan's output.
+    edges = edges.transform(lazy_checkpoint)
     # round 0 fused: from identity labels, the first hop ALWAYS yields
     # label(u) = min(u, min neighbor) — compute that directly from the
     # edge list (one groupBy) instead of spending a full join round on
     # it. Every graph saves exactly one iteration; a single planted
     # pair now converges in one confirming round.
-    labels = _compact(
+    labels = (
         edges.groupBy("u")
         .agg(F.min("v").alias("__mn"))
         .select(
@@ -548,16 +528,16 @@ def connected_components(
                 .select("node", F.col("p_comp").alias("component"))
             )
             candidates = candidates.unionByName(shortcut)
-        labels = _compact(
+        labels = (
             candidates.groupBy("node")
             .agg(F.min("component").alias("component"))
-        ).transform(lazy_checkpoint)
+            .transform(lazy_checkpoint)
+        )
         new_sum = labels.agg(F.sum("component")).collect()[0][0]
         if new_sum == prev_sum:
             converged = True
             break
         prev_sum = new_sum
-    edges.unpersist()
     if not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} "

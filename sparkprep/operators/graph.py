@@ -532,7 +532,6 @@ def k_core(
     edges: DataFrame,
     k: int = 3,
     max_rounds: int = 12,
-    num_partitions: int = 8,
 ) -> DataFrame:
     """k-core decomposition membership: iteratively PEEL nodes of
     degree < k (and the edges they anchor) until a fixpoint — the
@@ -542,10 +541,11 @@ def k_core(
     scalar used for early exit). ``edges(u, v)`` must be UNDIRECTED
     UNIQUE pairs (u < v).
 
-    Loop disciplines (CLAUDE.md): the working edge set is repartitioned
-    to ``num_partitions`` BEFORE the loop (a vocabulary-sized frame
-    spread over 32 shuffle partitions pays ~0.7s/round in scheduling —
-    the BPE landmine) and localCheckpoint-ed each round (the survivor
+    Loop disciplines: the working edge set is
+    ``repartition("u", "v")`` with no count BEFORE the loop, so AQE
+    sizes it from its measured bytes (the loop-sizing rule in
+    ``operators/physical.py``; the pairs are unique, so a hub cannot
+    skew it), and it is localCheckpoint-ed each round (the survivor
     set anchors the next round's degree aggregate AND both semi-joins;
     without lineage truncation every round re-executes all prior
     rounds).
@@ -562,7 +562,7 @@ def k_core(
     """
     e = (
         edges.select("u", "v")
-        .repartition(num_partitions)
+        .repartition("u", "v")
         .transform(lazy_checkpoint)
     )
     n_edges = e.count()
@@ -592,7 +592,6 @@ def k_truss(
     edges: DataFrame,
     k: int = 4,
     max_rounds: int = 12,
-    num_partitions: int = 8,
 ) -> DataFrame:
     """k-truss decomposition: iteratively PEEL edges supported by
     fewer than k−2 triangles until a fixpoint — the edge-grain
@@ -615,7 +614,7 @@ def k_truss(
     there; scale_smoke's graph panel is the receipt). Edges below
     k−2 support drop (including zero-triangle edges, which never
     appear in the support frame); loop disciplines are k_core's
-    (working set repartitioned small before the loop, survivor set
+    (working set repartitioned on (u, v) before the loop, survivor set
     and per-round orientation lazily checkpoint-ed — routed by the
     engine checkpoint mode — one bounded count scalar per round for
     early exit).
@@ -630,7 +629,7 @@ def k_truss(
     thr = int(k) - 2
     e = (
         edges.select("u", "v")
-        .repartition(num_partitions)
+        .repartition("u", "v")
         .transform(lazy_checkpoint)
     )
     n_edges = e.count()
@@ -712,7 +711,6 @@ def k_truss(
 def lpa_communities(
     edges: DataFrame,
     rounds: int = 4,
-    num_partitions: int = 8,
 ) -> DataFrame:
     """Synchronous label propagation (deterministic variant): every
     node starts labeled with its own id; each round every node adopts
@@ -723,8 +721,9 @@ def lpa_communities(
     min-label is its standard derandomization).
 
     ``edges(u, v)`` must be UNDIRECTED UNIQUE pairs; the adjacency is
-    materialized BOTH directions once, repartitioned small before the
-    loop and localCheckpoint-ed (BPE loop discipline). Each round is
+    materialized BOTH directions once, hash-repartitioned on ``u``
+    before the loop and localCheckpoint-ed (the loop-sizing rule in
+    ``operators/physical.py``: no count, AQE sizes it). Each round is
     one keyed join (labels ⋈ adjacency on the source endpoint) and one
     map-combined groupBy; the per-node argmax is ``min(struct(-count,
     label))`` — an aggregate, not a window, so it partial-aggregates
@@ -741,14 +740,14 @@ def lpa_communities(
     Returns ``(node, community)`` after ``rounds`` rounds.
     """
     # adj hash-partitioned on the JOIN key (not round-robin): the
-    # checkpointed leaf keeps hash(u, num_partitions), so the per-round
-    # labels join re-exchanges only the (tiny) label frame, never the
-    # adjacency (r11: −8% alone, −40% with the vote exchange below,
-    # labels bit-identical).
+    # checkpointed leaf keeps hash(u) at AQE's coalesced count, so the
+    # per-round labels join re-exchanges only the (tiny) label frame,
+    # never the adjacency (r11: −8% alone, −40% with the vote exchange
+    # below, labels bit-identical).
     adj = (
         edges.select("u", "v")
         .union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .repartition(num_partitions, "u")
+        .repartition("u")
         .transform(lazy_checkpoint)
     )
     labels = (
@@ -769,7 +768,7 @@ def lpa_communities(
         # later, label-converged rounds.
         votes = (
             adj.join(labels.withColumnRenamed("node", "u"), "u")
-            .repartition(num_partitions, "v")
+            .repartition("v")
             .groupBy(F.col("v").alias("node"), "lbl")
             .agg(F.count(F.lit(1)).alias("__c"))
         )
@@ -828,7 +827,6 @@ def hits_bipartite(
 def bfs_hops(
     edges: DataFrame,
     rounds: int = 4,
-    num_partitions: int = 8,
 ) -> DataFrame:
     """Breadth-first hop distances from the MINIMUM node id over an
     undirected edge set — the shortest-path-layer primitive (reach
@@ -841,23 +839,26 @@ def bfs_hops(
     collect. A FIXED round count is the contract (hop layers beyond it
     are reported as unreached), which makes the fixed-depth
     unrolled-CTE oracle exact; run more rounds for deeper graphs. The
-    adjacency is repartitioned small and localCheckpoint-ed before the
-    loop, the distance frame per round (each feeds the next join — the
-    k_core lineage discipline).
+    adjacency is repartitioned on (u, v) and localCheckpoint-ed before
+    the loop, the distance frame per round (each feeds the next join —
+    the k_core loop discipline).
 
     Returns ``(node, hop)`` for every node reached within ``rounds``
     hops of the seed; the seed itself is hop 0. Nodes outside the
     seed's component (or beyond the horizon) are absent — callers
-    wanting an unreached census anti-join the node set.
+    wanting an unreached census anti-join the node set. An empty edge
+    set has no seed and returns no rows.
     """
     adj = (
         edges.select("u", "v")
         .union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .repartition(num_partitions)
+        .repartition("u", "v")
         .transform(lazy_checkpoint)
     )
-    seed = adj.agg(F.min("u").alias("node")).select(
-        "node", F.lit(0).cast("long").alias("hop")
+    seed = (
+        adj.agg(F.min("u").alias("node"))
+        .filter(F.col("node").isNotNull())
+        .select("node", F.lit(0).cast("long").alias("hop"))
     )
     dist = seed.transform(lazy_checkpoint)
     for _ in range(int(rounds)):
@@ -878,7 +879,6 @@ def multi_bfs_hops(
     edges: DataFrame,
     seeds: DataFrame,
     rounds: int = 4,
-    num_partitions: int = 8,
 ) -> DataFrame:
     """Multi-source BFS: hop distances from EVERY seed at once, keyed
     (seed, node) — the centrality/neighborhood primitive behind
@@ -900,7 +900,7 @@ def multi_bfs_hops(
     adj = (
         edges.select("u", "v")
         .union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .repartition(num_partitions)
+        .repartition("u", "v")
         .transform(lazy_checkpoint)
     )
     dist = seeds.select(

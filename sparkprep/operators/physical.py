@@ -5,6 +5,19 @@ The reference hard-codes ``repartition(60)`` three times
 here (SURVEY §4): let AQE coalesce; when an explicit repartition IS
 needed (e.g. before a partitioned write), derive the count from data
 size, never a constant; cache only what is referenced more than once.
+
+Loop working sets (graph peeling/propagation, BPE, CC, Markov) follow
+one rule. A working set that comes in from a caller is
+``repartition(<key cols>)`` with no count, then cut with
+``lazy_checkpoint``; one that is already the output of an exchange in
+the same function is cut as it is. A count-less repartition is a
+``REPARTITION_BY_COL`` exchange that AQE coalesces from measured shuffle
+bytes, and under AQE building the cut runs that stage, so the
+checkpointed leaf keeps the coalesced count (1 partition for a few
+thousand rows, up to ``spark.sql.shuffle.partitions`` at scale). No
+loop takes a partition-count knob, reads ``defaultParallelism`` or
+counts rows to size itself, and none caches its working set: AQE never
+re-partitions a cached plan's output.
 """
 
 from __future__ import annotations

@@ -1078,8 +1078,9 @@ def q_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts (degree < 2) until only cycle-supported structure remains —
     the densest-substructure readout beside triangle_count's census.
     ``graph.k_core`` peels distributively (per-round degree groupBy +
-    two endpoint semi-joins, working set repartitioned small before
-    the loop, survivor set localCheckpoint-ed per round); early exit
+    two endpoint semi-joins, working set repartitioned on (u, v) with
+    no count before the loop so AQE sizes it, survivor set
+    localCheckpoint-ed per round); early exit
     at the fixpoint is result-identical to the oracle's fixed-depth
     unrolled-CTE replay because peeling is monotone (pagerank's oracle
     convention). Peel depth 16 vs 5 rounds observed worst-case across

@@ -3597,17 +3597,12 @@ def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix with the per-step round(12) drift pin power_iteration
     documents."""
     ev = t(spark, sf_dir, "events")
-    # |states|² ≈ 25 rows: repartition the loop's working set to match
-    # its size BEFORE the 6 rounds (the BPE-loop discipline — tiny
-    # frames spread over 32 shuffle partitions pay ~0.3s/round in
-    # multi-stage scheduling)
-    trans = (
-        graph.transition_matrix(
-            ev, "user_id", "event_type", [F.col("ts"), F.col("event_id")]
-        )
-        .repartition(1)
-        .transform(lazy_checkpoint)
-    )
+    # |states|² ≈ 25 rows: transition_matrix ends in an exchange, so AQE
+    # has already sized the loop's working set when the cut is built
+    # (the loop-sizing rule in operators/physical.py)
+    trans = graph.transition_matrix(
+        ev, "user_id", "event_type", [F.col("ts"), F.col("event_id")]
+    ).transform(lazy_checkpoint)
     states = ev.select(F.col("event_type").alias("state")).distinct()
     d_prev = graph.power_iteration(trans, states, steps=_STATIONARY_STEPS - 1)
     d_last = (

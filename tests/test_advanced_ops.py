@@ -549,6 +549,13 @@ def test_bfs_hops_path_graph(spark):
     assert got == {0: 0, 1: 1, 2: 2, 3: 3, 4: 4}
 
 
+def test_bfs_hops_empty_edges(spark):
+    # no edges, no seed: min(u) over nothing is NULL and must not
+    # surface as a phantom (node=None, hop=0) row
+    edges = spark.createDataFrame([], "u long, v long")
+    assert graph.bfs_hops(edges, rounds=2).collect() == []
+
+
 def test_bfs_hops_takes_shortest_route(spark):
     # triangle + tail: 0-1, 0-2, 1-2, 2-3 — node 2 is hop 1 (direct),
     # never hop 2 via node 1; node 3 is hop 2

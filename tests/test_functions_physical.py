@@ -225,3 +225,49 @@ def test_canonical_url_edges(spark):
     }
     for i, (raw, want) in enumerate(cases):
         assert got[i] == want, (raw, got[i], want)
+
+
+def test_loop_working_sets_carry_no_sizing_code():
+    """One loop-sizing rule (``physical``'s module docstring): no
+    operator takes a partition-count parameter or reads
+    ``defaultParallelism``, and every DataFrame ``repartition`` in the
+    iterative graph, BPE and CC operators is keyed by columns only —
+    AQE sizes the exchange, never a count."""
+    import ast
+    import pathlib
+
+    ops = pathlib.Path(physical.__file__).resolve().parent
+    knobs, reads, sized = [], [], []
+    for path in sorted(ops.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        where = path.relative_to(ops)
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = node.args
+                if any(
+                    arg.arg == "num_partitions"
+                    for arg in a.posonlyargs + a.args + a.kwonlyargs
+                ):
+                    knobs.append(f"{where}:{node.name}")
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "defaultParallelism"
+            ):
+                reads.append(f"{where}:{node.lineno}")
+            if (
+                path.name in ("graph.py", "bpe.py", "dedup.py")
+                and isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "repartition"
+            ):
+                columns_only = node.args and not node.keywords and all(
+                    isinstance(x, ast.Constant) and isinstance(x.value, str)
+                    or isinstance(x, ast.Call)
+                    and getattr(x.func, "attr", None) == "col"
+                    for x in node.args
+                )
+                if not columns_only:
+                    sized.append(f"{where}:{node.lineno}")
+    assert not knobs, knobs
+    assert not reads, reads
+    assert not sized, sized

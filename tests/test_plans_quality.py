@@ -388,6 +388,28 @@ def test_communities_vote_is_aggregate_not_window(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
+def test_lpa_one_vote_exchange_per_round(spark):
+    # the per-round vote: ONE hash(v) exchange feeds both the (v, lbl)
+    # count and the per-node argmax; neither aggregate plans its own
+    import re
+
+    from sparkprep.operators import graph
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(20)] + [(0, 5), (3, 9)], "u long, v long"
+    )
+    with no_lineage_cuts():
+        plan = _simple(graph.lpa_communities(edges, rounds=1))
+    lines = plan.splitlines()
+    join_at = next(i for i, ln in enumerate(lines) if "Join" in ln)
+    above = "\n".join(lines[:join_at])
+    assert above.count("HashAggregate") >= 2, plan
+    exchanges = re.findall(r"Exchange (\w+)\((\w+)", above)
+    assert [(kind, key.split("#")[0]) for kind, key in exchanges] == [
+        ("hashpartitioning", "v")
+    ], plan
+
+
 def test_spell_pairs_equijoin_on_variant(spark, sf_dir):
     # SymSpell must hash-join deletion variants — never an all-pairs
     # theta join on the vocabulary
