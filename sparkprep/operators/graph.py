@@ -337,15 +337,19 @@ def triangle_stats(
 
     The oriented list anchors both the wedge join and the probe, so it
     is lazily localCheckpoint-ed (multi-consumer re-execution trap).
-    Wedge COUNT (open+closed 2-paths) is Σ deg·(deg-1)/2 over the tiny
-    aggregated degree frame — never enumerated. The final result is a
-    5-column single row: any oracle can replay the unoriented 3-way
-    self-join at test scale while this plan survives hub skew.
+    Wedge COUNT (open+closed 2-paths) is Σ deg·(deg-1)/2 and the edge
+    count Σ deg / 2, both over the tiny aggregated degree frame — never
+    enumerated, never a separate scan. Every counter comes out of ONE
+    global aggregate over a null-tagged union of the closed wedges and
+    the degree frame (no chained 1-row cross joins, no ``count()``
+    job). The final result is a 5-column single row: any oracle can
+    replay the unoriented 3-way self-join at test scale while this plan
+    survives hub skew.
     """
-    # und feeds the degree build, the edge count, AND the orientation
-    # join; deg feeds two orientation joins plus the wedge-count
-    # aggregate — both multi-consumer over a potentially expensive
-    # edge-construction subtree, so truncate lineage once here
+    # und feeds the degree build AND the orientation join; deg feeds
+    # two orientation joins plus the census aggregate — both
+    # multi-consumer over a potentially expensive edge-construction
+    # subtree, so truncate lineage once here
     und = edges.select(
         F.col(a_col).alias("a"), F.col(b_col).alias("b")
     ).transform(lazy_checkpoint)
@@ -374,17 +378,18 @@ def triangle_stats(
         ["b", "c"],
         "left_semi",
     )
-    tri = closed.agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
-    summary = und.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
-    degsum = deg.agg(
-        F.count(F.lit(1)).cast("long").alias("n_nodes"),
-        F.sum(F.expr("(d * (d - 1)) div 2")).cast("long").alias("n_wedges"),
+    # one global aggregate over the closed triangles and the degree
+    # frame (two different frames, so the union re-executes nothing):
+    # a null-tagged column per side, so each counter reads only its rows
+    tagged = closed.select(
+        F.lit(1).alias("tri"), F.lit(None).cast("long").alias("d")
+    ).unionByName(deg.select(F.lit(None).cast("int").alias("tri"), "d"))
+    out = tagged.agg(
+        F.count("d").alias("n_nodes"),
+        F.expr("coalesce(sum(d), 0) div 2").alias("n_edges"),
+        F.sum(F.expr("(d * (d - 1)) div 2")).alias("n_wedges"),
+        F.count("tri").alias("n_triangles"),
     )
-    # three single-row frames -> one row: chained 1x1 broadcast cross
-    # joins are constant-size (allow-listed scalar-attach shape, not a
-    # data join); broadcast hints pin BNLJ over CartesianProduct in the
-    # static plan, and the upstream subtrees are checkpoint-truncated
-    out = degsum.crossJoin(F.broadcast(summary)).crossJoin(F.broadcast(tri))
     return out.select(
         "n_nodes",
         "n_edges",
@@ -537,55 +542,52 @@ def k_core(
     degree < k (and the edges they anchor) until a fixpoint — the
     standard distributed shape (each round is one map-combined degree
     groupBy + two semi-joins keyed on the endpoints; nothing is ever
-    collected except the per-round edge count, one bounded driver
-    scalar used for early exit). ``edges(u, v)`` must be UNDIRECTED
-    UNIQUE pairs (u < v).
+    collected — the loop reads its fixpoint off the round's own degree
+    aggregate). ``edges(u, v)`` must be UNDIRECTED UNIQUE pairs (u < v).
 
     Loop disciplines: the working edge set is
     ``repartition("u", "v")`` with no count BEFORE the loop, so AQE
     sizes it from its measured bytes (the loop-sizing rule in
     ``operators/physical.py``; the pairs are unique, so a hub cannot
-    skew it), and it is localCheckpoint-ed each round (the survivor
-    set anchors the next round's degree aggregate AND both semi-joins;
-    without lineage truncation every round re-executes all prior
-    rounds).
+    skew it). Each round cuts its degree aggregate (it feeds the
+    fixpoint test AND both semi-joins) and the survivor set (it anchors
+    the next round; without lineage truncation every round re-executes
+    all prior rounds).
 
-    Early exit at a fixpoint is RESULT-IDENTICAL to running all
-    ``max_rounds``: peeling is monotone, so once no node falls below
-    k, further rounds are no-ops — which is what makes a fixed-depth
-    unrolled-CTE oracle exact for any graph converging within its
-    depth (the pagerank oracle convention; pin convergence headroom
-    with a canary, tests/test_headroom_canaries.py).
+    The fixpoint test is ``isEmpty`` on the below-k filter of the
+    round's degree aggregate, never a ``count()`` of the cut: peeling
+    is monotone, so a round with no node below k is the fixpoint, and
+    its degree aggregate IS the answer — no confirming round and no
+    final re-aggregation. The empty graph lands there too. Early exit
+    is RESULT-IDENTICAL to running all ``max_rounds``, which is what
+    makes a fixed-depth unrolled-CTE oracle exact for any graph
+    converging within its depth (the pagerank oracle convention; pin
+    convergence headroom with a canary, tests/test_headroom_canaries.py).
 
     Returns the surviving nodes with their within-core degree
-    ``(node, core_degree)``; every core_degree is ≥ k by construction.
+    ``(node, core_degree)``; every core_degree is ≥ k at the fixpoint
+    (a ``max_rounds`` exit reports the degrees of the edges left).
     """
     e = (
         edges.select("u", "v")
         .repartition("u", "v")
         .transform(lazy_checkpoint)
     )
-    n_edges = e.count()
-    for _ in range(int(max_rounds)):
-        if n_edges == 0:
-            break
+    for r in range(int(max_rounds) + 1):
         ends = e.select(F.explode(F.array("u", "v")).alias("n"))
-        deg = ends.groupBy("n").agg(F.count(F.lit(1)).alias("d"))
+        deg = ends.groupBy("n").agg(F.count(F.lit(1)).alias("d")).transform(
+            lazy_checkpoint
+        )
+        if r == int(max_rounds) or deg.filter(F.col("d") < int(k)).isEmpty():
+            break
         keep = deg.filter(F.col("d") >= int(k)).select("n")
-        e2 = (
+        e = (
             e.join(keep.withColumnRenamed("n", "u"), "u", "semi")
             .join(keep.withColumnRenamed("n", "v"), "v", "semi")
             .select("u", "v")
             .transform(lazy_checkpoint)
         )
-        n2 = e2.count()
-        if n2 == n_edges:
-            break
-        e, n_edges = e2, n2
-    ends = e.select(F.explode(F.array("u", "v")).alias("node"))
-    return ends.groupBy("node").agg(
-        F.count(F.lit(1)).cast("long").alias("core_degree")
-    )
+    return deg.select(F.col("n").alias("node"), F.col("d").alias("core_degree"))
 
 
 def k_truss(
@@ -613,26 +615,32 @@ def k_truss(
     wedge rows (the naive undirected-adjacency form dies exactly
     there; scale_smoke's graph panel is the receipt). Edges below
     k−2 support drop (including zero-triangle edges, which never
-    appear in the support frame); loop disciplines are k_core's
+    appear in the support frame, so ``k < 3`` — where a triangle-free
+    edge must survive — is rejected); loop disciplines are k_core's
     (working set repartitioned on (u, v) before the loop, survivor set
     and per-round orientation lazily checkpoint-ed — routed by the
-    engine checkpoint mode — one bounded count scalar per round for
-    early exit).
+    engine checkpoint mode).
 
-    Peeling is monotone, so early exit at the fixpoint is
-    result-identical to a fixed-depth unrolled-CTE oracle replay
-    (k_core's convention; pin convergence headroom with a canary).
+    The loop reads its fixpoint off the round's support aggregate:
+    when no edge of it is below k−2, the round peels only zero-support
+    edges, which close no triangle, so the supports just computed ARE
+    the survivors' final supports — no ``count()`` scalar and no
+    confirming round (at k=3 that is always the first round). Peeling
+    is monotone, so early exit at the fixpoint is result-identical to
+    a fixed-depth unrolled-CTE oracle replay (k_core's convention; pin
+    convergence headroom with a canary).
     Returns surviving edges with their within-truss support
-    ``(u, v, support)`` — recomputed once on the final edge set so a
-    max_rounds exit still reports honest supports.
+    ``(u, v, support)`` — recomputed once on the final edge set when
+    ``max_rounds`` runs out, so that exit still reports honest supports.
     """
+    if int(k) < 3:
+        raise ValueError(f"k_truss needs k >= 3, got k={k}")
     thr = int(k) - 2
     e = (
         edges.select("u", "v")
         .repartition("u", "v")
         .transform(lazy_checkpoint)
     )
-    n_edges = e.count()
 
     def support(cur: DataFrame) -> DataFrame:
         ends = cur.select(F.explode(F.array("u", "v")).alias("n"))
@@ -687,24 +695,13 @@ def k_truss(
         )
 
     for _ in range(int(max_rounds)):
-        if n_edges == 0:
-            break
         sup = lazy_checkpoint(support(e))
-        surv = sup.filter(F.col("support") >= thr)
-        e2 = surv.select("u", "v").transform(lazy_checkpoint)
-        n2 = e2.count()
-        if n2 == n_edges:
-            # fixpoint: every edge survived, so the supports just
-            # computed on e ARE the final within-truss supports — no
-            # recompute pass needed (the survivor filter is a no-op)
-            return surv.select("u", "v", F.col("support").cast("long"))
-        e, n_edges = e2, n2
-    if n_edges == 0:
-        return e.select(
-            "u", "v", F.lit(0).cast("long").alias("support")
-        ).limit(0)
-    # max_rounds exit (or immediate empty): honest supports recomputed
-    # on the final surviving edge set
+        if sup.filter(F.col("support") < thr).isEmpty():
+            return sup.select("u", "v", F.col("support").cast("long"))
+        e = sup.filter(F.col("support") >= thr).select("u", "v").transform(
+            lazy_checkpoint
+        )
+    # max_rounds exit: honest supports recomputed on the final edge set
     return support(e).select("u", "v", F.col("support").cast("long"))
 
 

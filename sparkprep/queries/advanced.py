@@ -1849,10 +1849,12 @@ def q_k_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
     each edge's final triangle support as the readout.
     ``graph.k_truss`` peels distributively (per-round wedge fan-out +
     close join + map-combined support groupBy, survivor set lazily
-    checkpoint-ed, one bounded count scalar per round); early exit at
-    the fixpoint is result-identical to the oracle's fixed-depth
-    unrolled-CTE replay because edge-peeling is monotone (k_core's
-    convention). Fixpoint reached in 2 rounds on every testdata
+    checkpoint-ed) and reads its fixpoint off the round's support
+    aggregate, never a ``count()``: at k=3 no supported edge is below
+    the threshold, so the first round's supports are final and support
+    is computed once. Early exit at the fixpoint is result-identical to
+    the oracle's fixed-depth unrolled-CTE replay because edge-peeling
+    is monotone (k_core's convention). One peel round on every testdata
     generation vs depth 8 — canary-pinned in
     tests/test_headroom_canaries.py."""
     from sparkprep.queries import shared_frames

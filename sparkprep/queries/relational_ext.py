@@ -1079,11 +1079,13 @@ def q_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     the densest-substructure readout beside triangle_count's census.
     ``graph.k_core`` peels distributively (per-round degree groupBy +
     two endpoint semi-joins, working set repartitioned on (u, v) with
-    no count before the loop so AQE sizes it, survivor set
-    localCheckpoint-ed per round); early exit
-    at the fixpoint is result-identical to the oracle's fixed-depth
-    unrolled-CTE replay because peeling is monotone (pagerank's oracle
-    convention). Peel depth 16 vs 5 rounds observed worst-case across
+    no count before the loop so AQE sizes it, degree aggregate and
+    survivor set localCheckpoint-ed per round) and stops at the first
+    round whose degree aggregate has no node below k — that aggregate
+    is the answer, so no confirming round and no ``count()``. Early
+    exit at the fixpoint is result-identical to the oracle's
+    fixed-depth unrolled-CTE replay because peeling is monotone
+    (pagerank's oracle convention). Peel depth 16 vs 5 rounds observed worst-case across
     testdata generations — canary-pinned in
     tests/test_headroom_canaries.py."""
     from sparkprep.queries import shared_frames
@@ -1245,7 +1247,9 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode, fan-out capped per order); the census itself is
     ``graph.triangle_stats``' degree-oriented enumeration, which
     bounds the wedge join by Σ out-deg² = O(m^1.5) even when a hub
-    part dominates. The oracle replays the textbook unoriented 3-way
+    part dominates; all five counters come out of one global
+    aggregate (the edge count is Σ degree / 2), with no cross join of
+    1-row frames. The oracle replays the textbook unoriented 3-way
     self-join — feasible at sf0.01, exactly the plan the oriented
     version exists to avoid at scale. The 64-part fan-out cap never
     binds on driver data (max basket 17; canary-pinned with 2x headroom

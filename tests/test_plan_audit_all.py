@@ -69,7 +69,6 @@ _TINY_BROADCAST_CROSS = {
     "vocab_coverage",    # 1-row folded coverage x 1-row token total
     "quantile_normalize",  # 1-row reference-size scalar attach
     "retrieval_overlap",   # dense leg = 1 query vector broadcast x corpus
-    "triangle_count",    # 1-row node/edge/triangle census frames attach
     "assortativity",     # 1-row Pearson sums x 1-row node count attach
     "user_migration",    # 1-row stream min/max bounds attach
     "basket_size_dist",  # 1-row order-total attach for the share column
@@ -111,6 +110,13 @@ def test_no_nested_loop_joins(all_plans):
         if "BroadcastNestedLoopJoin" in p and n not in _TINY_BROADCAST_CROSS
     ]
     assert not bad, f"nested-loop joins in: {bad}"
+    # keep the allow-list honest: an entry whose plan has no nested-loop
+    # join any more is stale documentation
+    stale = sorted(
+        n for n in _TINY_BROADCAST_CROSS
+        if "BroadcastNestedLoopJoin" not in all_plans.get(n, "")
+    )
+    assert not stale, f"stale _TINY_BROADCAST_CROSS entries: {stale}"
 
 
 def test_no_row_python_udfs_anywhere(all_plans):

@@ -8,6 +8,7 @@ import tempfile
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -125,6 +126,17 @@ def test_k_truss_k4_needs_two_triangles_per_edge(spark):
         max_rounds=8,
     ).toPandas()
     assert len(out) == 6 and (out["support"] == 2).all()
+
+
+def test_k_truss_rejects_k_below_3(spark):
+    # the support frame holds only edges in some triangle, so at k=2 the
+    # triangle-free edge (3,4) would be peeled although the 2-truss is
+    # every edge: refuse k < 3 instead of answering wrongly
+    edges = [(1, 2), (2, 3), (3, 4), (1, 3)]
+    df = spark.createDataFrame(pd.DataFrame(edges, columns=["u", "v"]))
+    for k in (1, 2):
+        with pytest.raises(ValueError, match="k >= 3"):
+            graph.k_truss(df, k=k)
 
 
 # ---------------------------------------------------------------------------
