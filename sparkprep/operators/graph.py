@@ -15,6 +15,16 @@ distribution no longer broadcasts — that regime is :func:`pagerank`
 (keyed-shuffle iteration, integer fixed-point); ``power_iteration`` is
 the user-journey / event-funnel regime where states are event types,
 funnel stages, or content categories (tens to thousands of values).
+
+The undirected-graph operators (co-purchase family) share one spelling
+of each primitive and never re-spell it: :func:`degrees` is the degree
+frame (one endpoint explode, one map-combined count);
+:func:`directed_ends_capped` without a cap is the both-directions
+adjacency (one row-local struct explode, never a union of two selects
+of one frame); ``_triangles`` is the degree-oriented triangle
+enumeration behind :func:`triangle_stats` and :func:`k_truss`; and
+:func:`bfs_hops` is :func:`multi_bfs_hops` from one seed.
+``tests/test_graph_fixpoint.py::test_one_graph_vocabulary`` guards it.
 """
 
 from __future__ import annotations
@@ -263,6 +273,19 @@ def cooccurrence_pairs(
     ).agg(F.count(F.lit(1)).cast("long").alias("n_keys"))
 
 
+def degrees(edges: DataFrame, a_col: str = "u", b_col: str = "v") -> DataFrame:
+    """Node degrees ``(node, d)`` of an undirected edge list holding
+    each edge once: one row-local explode of both endpoints, then one
+    map-combined count — the one degree frame of the graph family.
+    Isolated nodes never appear in an edge list, so they have no row.
+    """
+    return (
+        edges.select(F.explode(F.array(a_col, b_col)).alias("node"))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+
+
 def directed_ends_capped(
     edges: DataFrame,
     max_degree: int | None = None,
@@ -304,6 +327,58 @@ def directed_ends_capped(
     )
 
 
+def _triangles(und: DataFrame, deg: DataFrame) -> DataFrame:
+    """Every triangle of ``und(u, v)`` (each undirected edge once) as
+    ``(x, p, q)``, exactly once, at its lowest-(degree, id) vertex
+    ``x``; ``deg(node, d)`` is :func:`degrees` of ``und``.
+
+    The standard degree-oriented enumeration, which is what keeps
+    triangle work feasible when a few hub nodes have millions of
+    neighbors:
+
+    - each edge is ORIENTED from its (degree, id)-smaller endpoint to
+      the larger (a lexicographic compare on two longs — no composite
+      key arithmetic, no global rank window), so every node's
+      out-neighborhood is bounded by O(√m) regardless of its raw degree;
+    - wedges ``(x; p, q)`` are enumerated from the oriented list only:
+      the self-join on ``x`` fans out Σ out-deg², the quantity the
+      orientation just bounded — an unoriented self-join fans out
+      Σ deg², which a single celebrity node turns into a full cross
+      product;
+    - each wedge, with ``p`` below ``q`` by the SAME (degree, id) key,
+      closes into a triangle iff oriented edge (p, q) exists — one hash
+      semi-join probe. A triangle's minimum-key vertex is the unique
+      wedge center, so it comes out once.
+
+    The oriented list anchors both wedge sides and the probe, so it is
+    lazily localCheckpoint-ed (the self-join re-execution trap).
+    """
+    def below(da, a, db, b):
+        # (da, a) < (db, b) on plain longs: a (degree, id) struct key
+        # orders the same but repeats the id in every oriented row
+        return (F.col(da) < F.col(db)) | ((F.col(da) == F.col(db)) & (F.col(a) < F.col(b)))
+
+    u_first = below("du", "u", "dv", "v")
+    oriented = (
+        und.join(deg.select(F.col("node").alias("u"), F.col("d").alias("du")), "u")
+        .join(deg.select(F.col("node").alias("v"), F.col("d").alias("dv")), "v")
+        .select(
+            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("x"),
+            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("y"),
+            F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("dy"),
+        )
+        .transform(lazy_checkpoint)
+    )
+    w1 = oriented.select("x", F.col("y").alias("p"), F.col("dy").alias("dp"))
+    w2 = oriented.select("x", F.col("y").alias("q"), F.col("dy").alias("dq"))
+    wedges = w1.join(w2, "x").filter(below("dp", "p", "dq", "q")).select("x", "p", "q")
+    return wedges.join(
+        oriented.select(F.col("x").alias("p"), F.col("y").alias("q")),
+        ["p", "q"],
+        "left_semi",
+    )
+
+
 def triangle_stats(
     edges: DataFrame,
     a_col: str = "item_a",
@@ -318,32 +393,15 @@ def triangle_stats(
     endpoint order, no self-loops, no duplicates — e.g. the
     ``item_a < item_b`` output of :func:`cooccurrence_pairs`).
 
-    Scale shape — the standard degree-oriented enumeration, which is
-    what keeps triangle counting feasible when a few hub nodes have
-    millions of neighbors:
-
-    - each edge is ORIENTED from its (degree, id)-smaller endpoint to
-      the larger (struct comparison — no composite key arithmetic, no
-      global rank window), so every node's out-neighborhood is bounded
-      by O(√m) regardless of its raw degree;
-    - wedges are enumerated from the oriented list only: the self-join
-      on ``src`` fans out Σ out-deg², the quantity the orientation
-      just bounded — an unoriented self-join fans out Σ deg², which a
-      single celebrity node turns into a full cross product;
-    - each candidate wedge (b, c), ordered by the SAME (degree, id)
-      key, closes into a triangle iff oriented edge (b, c) exists —
-      one hash semi-join probe; every triangle is counted exactly
-      once (its minimum-key vertex is the unique wedge center).
-
-    The oriented list anchors both the wedge join and the probe, so it
-    is lazily localCheckpoint-ed (multi-consumer re-execution trap).
-    Wedge COUNT (open+closed 2-paths) is Σ deg·(deg-1)/2 and the edge
-    count Σ deg / 2, both over the tiny aggregated degree frame — never
+    Triangles come from the degree-oriented kernel ``_triangles``
+    (each found once, fan-out Σ out-deg², hub-safe). Wedge COUNT
+    (open+closed 2-paths) is Σ deg·(deg-1)/2 and the edge count
+    Σ deg / 2, both over the tiny aggregated degree frame — never
     enumerated, never a separate scan. Every counter comes out of ONE
-    global aggregate over a null-tagged union of the closed wedges and
-    the degree frame (no chained 1-row cross joins, no ``count()``
-    job). The final result is a 5-column single row: any oracle can
-    replay the unoriented 3-way self-join at test scale while this plan
+    global aggregate over a null-tagged union of the triangles and the
+    degree frame (no chained 1-row cross joins, no ``count()`` job).
+    The final result is a 5-column single row: any oracle can replay
+    the unoriented 3-way self-join at test scale while this plan
     survives hub skew.
     """
     # und feeds the degree build AND the orientation join; deg feeds
@@ -351,37 +409,13 @@ def triangle_stats(
     # multi-consumer over a potentially expensive edge-construction
     # subtree, so truncate lineage once here
     und = edges.select(
-        F.col(a_col).alias("a"), F.col(b_col).alias("b")
+        F.col(a_col).alias("u"), F.col(b_col).alias("v")
     ).transform(lazy_checkpoint)
-    # one explode, not a union of selects (re-execution trap)
-    ends = und.select(F.explode(F.array("a", "b")).alias("node"))
-    deg = ends.groupBy("node").agg(
-        F.count(F.lit(1)).alias("d")
-    ).transform(lazy_checkpoint)
-    e = (
-        und.join(deg.select(F.col("node").alias("a"), F.col("d").alias("da")), "a")
-        .join(deg.select(F.col("node").alias("b"), F.col("d").alias("db")), "b")
-    )
-    ka = F.struct(F.col("da").alias("d"), F.col("a").alias("n"))
-    kb = F.struct(F.col("db").alias("d"), F.col("b").alias("n"))
-    a_first = ka < kb
-    oriented = e.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
-        F.when(a_first, kb).otherwise(ka).alias("kd"),
-    ).transform(lazy_checkpoint)
-    e1 = oriented.select(F.col("src"), F.col("dst").alias("b"), F.col("kd").alias("k1"))
-    e2 = oriented.select(F.col("src"), F.col("dst").alias("c"), F.col("kd").alias("k2"))
-    wedges = e1.join(e2, "src").filter(F.col("k1") < F.col("k2")).select("b", "c")
-    closed = wedges.join(
-        oriented.select(F.col("src").alias("b"), F.col("dst").alias("c")),
-        ["b", "c"],
-        "left_semi",
-    )
-    # one global aggregate over the closed triangles and the degree
-    # frame (two different frames, so the union re-executes nothing):
-    # a null-tagged column per side, so each counter reads only its rows
-    tagged = closed.select(
+    deg = degrees(und).transform(lazy_checkpoint)
+    # one global aggregate over the triangles and the degree frame (two
+    # different frames, so the union re-executes nothing): a
+    # null-tagged column per side, so each counter reads only its rows
+    tagged = _triangles(und, deg).select(
         F.lit(1).alias("tri"), F.lit(None).cast("long").alias("d")
     ).unionByName(deg.select(F.lit(None).cast("int").alias("tri"), "d"))
     out = tagged.agg(
@@ -413,55 +447,46 @@ def assortativity(
     (r<0)", the standard Newman formulation.
 
     ``edges`` holds each undirected edge once (any endpoint order).
-    Degrees come from one explode + map-combined groupBy (the triangle
-    census' shape); each edge then explodes to both directions
-    row-locally and joins the degree map twice. All Pearson sums run
-    on exact int64 degrees cast per-row to DECIMAL(38,0) — the finish
+    The directed ends are never materialized: over them Σdu = Σdv =
+    Σ_node d², Σdu² = Σdv² = Σ_node d³, Σdu·dv = 2·Σ_edge da·db and
+    the end count is Σ_node d. So every sum, and the node count, comes
+    off ONE aggregate over a null-tagged union of the per-edge da·db
+    rows and the :func:`degrees` frame (triangle_stats' shape; no
+    scalar cross attach). All sums are exact DECIMAL(38,0) — the finish
     is 5 IEEE ops on deterministic inputs (the stats.spearman
     contract). Returns one row ``(assortativity, n_nodes, n_edges)``.
     Constant-degree graphs (zero variance) yield NULL via try_divide.
     """
     und = edges.select(
-        F.col(a_col).alias("a"), F.col(b_col).alias("b")
-    ).transform(lazy_checkpoint)  # feeds degrees AND the direction explode
-    ends = und.select(F.explode(F.array("a", "b")).alias("node"))
-    deg = ends.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
-    directed = und.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
-                F.struct(F.col("b").alias("u"), F.col("a").alias("v")),
-            )
-        ).alias("e")
-    ).select("e.u", "e.v")
-    joined = (
-        directed.join(deg.select(F.col("node").alias("u"), F.col("d").alias("du")), "u")
+        F.col(a_col).alias("u"), F.col(b_col).alias("v")
+    ).transform(lazy_checkpoint)  # feeds degrees AND the per-edge products
+    deg = degrees(und)
+    prod = (
+        und.join(deg.select(F.col("node").alias("u"), F.col("d").alias("du")), "u")
         .join(deg.select(F.col("node").alias("v"), F.col("d").alias("dv")), "v")
+        .select(
+            (F.col("du") * F.col("dv")).alias("p"), F.lit(None).cast("long").alias("d")
+        )
     )
+    tagged = prod.unionByName(deg.select(F.lit(None).cast("long").alias("p"), "d"))
     d38 = "decimal(38,0)"
-    sums = joined.agg(
-        F.count(F.lit(1)).alias("__m"),
-        F.sum(F.col("du").cast(d38)).alias("__sx"),
-        F.sum(F.col("dv").cast(d38)).alias("__sy"),
-        F.sum((F.col("du") * F.col("dv")).cast(d38)).alias("__sxy"),
-        F.sum((F.col("du") * F.col("du")).cast(d38)).alias("__sxx"),
-        F.sum((F.col("dv") * F.col("dv")).cast(d38)).alias("__syy"),
+    d = F.col("d").cast(d38)
+    sums = tagged.agg(
+        F.count("d").cast("long").alias("n_nodes"),
+        F.coalesce(F.sum(d), F.lit(0).cast(d38)).alias("__m"),
+        F.sum(d * d).alias("__sx"),
+        F.sum(d * d * d).alias("__sxx"),
+        F.sum(F.col("p").cast(d38)).alias("__sp"),
     )
     m = F.col("__m").cast("double")
     sx = F.col("__sx").cast("double")
-    sy = F.col("__sy").cast("double")
-    num = m * F.col("__sxy").cast("double") - sx * sy
+    num = m * (F.col("__sp") * 2).cast("double") - sx * sx
     dx = m * F.col("__sxx").cast("double") - sx * sx
-    dy = m * F.col("__syy").cast("double") - sy * sy
-    r = F.try_divide(num, F.sqrt(dx) * F.sqrt(dy))
-    n_nodes = deg.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
-    return (
-        sums.select(
-            F.round(r, round_to).alias("assortativity"),
-            F.expr("__m div 2").cast("long").alias("n_edges"),
-        )
-        .crossJoin(F.broadcast(n_nodes))
-        .select("assortativity", "n_nodes", "n_edges")
+    r = F.try_divide(num, F.sqrt(dx) * F.sqrt(dx))
+    return sums.select(
+        F.round(r, round_to).alias("assortativity"),
+        "n_nodes",
+        F.expr("__m div 2").cast("long").alias("n_edges"),
     )
 
 
@@ -574,20 +599,17 @@ def k_core(
         .transform(lazy_checkpoint)
     )
     for r in range(int(max_rounds) + 1):
-        ends = e.select(F.explode(F.array("u", "v")).alias("n"))
-        deg = ends.groupBy("n").agg(F.count(F.lit(1)).alias("d")).transform(
-            lazy_checkpoint
-        )
+        deg = degrees(e).transform(lazy_checkpoint)
         if r == int(max_rounds) or deg.filter(F.col("d") < int(k)).isEmpty():
             break
-        keep = deg.filter(F.col("d") >= int(k)).select("n")
+        keep = deg.filter(F.col("d") >= int(k)).select("node")
         e = (
-            e.join(keep.withColumnRenamed("n", "u"), "u", "semi")
-            .join(keep.withColumnRenamed("n", "v"), "v", "semi")
+            e.join(keep.withColumnRenamed("node", "u"), "u", "semi")
+            .join(keep.withColumnRenamed("node", "v"), "v", "semi")
             .select("u", "v")
             .transform(lazy_checkpoint)
         )
-    return deg.select(F.col("n").alias("node"), F.col("d").alias("core_degree"))
+    return deg.select("node", F.col("d").alias("core_degree"))
 
 
 def k_truss(
@@ -602,15 +624,13 @@ def k_truss(
     so bridges and stars that survive coring are peeled here).
     ``edges(u, v)`` must be UNDIRECTED UNIQUE pairs (u < v).
 
-    Per round: triangle support per edge via DEGREE-ORDERED
-    orientation — every edge points from its lower-(degree, id)-rank
-    endpoint to the higher, wedges fan out only over ORIENTED
-    out-neighbor pairs, and the closing edge (always oriented
-    lower→higher rank) is one hash equi-join. Each triangle has a
-    unique lowest-rank vertex, so it is found exactly ONCE, then
-    exploded to its three canonical edges for the map-combined
-    support groupBy. The fan-out is Σ outdeg(x)² with outdeg bounded
-    by O(√E) (graph arboricity) — a 142k-degree power-law hub
+    Per round: triangle support per edge from the degree-oriented
+    kernel ``_triangles`` (triangle_stats' enumeration, over the
+    round's uncut :func:`degrees` frame) — each triangle is found
+    exactly ONCE, then exploded to its three canonical edges for the
+    map-combined support groupBy. The fan-out is Σ outdeg(x)² with
+    outdeg bounded by O(√E) (graph arboricity) — a 142k-degree
+    power-law hub
     contributes its RANK-ABOVE neighbors only, never hub-degree²
     wedge rows (the naive undirected-adjacency form dies exactly
     there; scale_smoke's graph panel is the receipt). Edges below
@@ -643,56 +663,18 @@ def k_truss(
     )
 
     def support(cur: DataFrame) -> DataFrame:
-        ends = cur.select(F.explode(F.array("u", "v")).alias("n"))
-        deg = ends.groupBy("n").agg(F.count(F.lit(1)).alias("d"))
-        ed = cur.join(
-            deg.select(F.col("n").alias("u"), F.col("d").alias("du")), "u"
-        ).join(deg.select(F.col("n").alias("v"), F.col("d").alias("dv")), "v")
-        lower_first = (F.col("du") < F.col("dv")) | (
-            (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-        )
-        # checkpointed: consumed as BOTH wedge sides AND the closing
-        # join (the self-join ReusedExchange landmine, CLAUDE.md)
-        orient = lazy_checkpoint(
-            ed.select(
-                F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("x"),
-                F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("y"),
-                F.when(lower_first, F.col("dv")).otherwise(F.col("du")).alias(
-                    "dy"
-                ),
-            )
-        )
-        w1 = orient.select("x", F.col("y").alias("p"), F.col("dy").alias("dp"))
-        w2 = orient.select("x", F.col("y").alias("q"), F.col("dy").alias("dq"))
-        wed = w1.join(w2, "x").filter(
-            (F.col("dp") < F.col("dq"))
-            | ((F.col("dp") == F.col("dq")) & (F.col("p") < F.col("q")))
-        )
-        tri = wed.join(
-            orient.select(F.col("x").alias("p"), F.col("y").alias("q")),
-            ["p", "q"],
-        ).select("x", "p", "q")
+        # each triangle once, exploded to its three canonical edges
+        tri = _triangles(cur, degrees(cur))
         edges3 = tri.select(
             F.explode(
                 F.array(
-                    F.struct(
-                        F.least("x", "p").alias("u"),
-                        F.greatest("x", "p").alias("v"),
-                    ),
-                    F.struct(
-                        F.least("x", "q").alias("u"),
-                        F.greatest("x", "q").alias("v"),
-                    ),
-                    F.struct(
-                        F.least("p", "q").alias("u"),
-                        F.greatest("p", "q").alias("v"),
-                    ),
+                    F.struct(F.least("x", "p").alias("u"), F.greatest("x", "p").alias("v")),
+                    F.struct(F.least("x", "q").alias("u"), F.greatest("x", "q").alias("v")),
+                    F.struct(F.least("p", "q").alias("u"), F.greatest("p", "q").alias("v")),
                 )
             ).alias("e")
         ).select("e.u", "e.v")
-        return edges3.groupBy("u", "v").agg(
-            F.count(F.lit(1)).alias("support")
-        )
+        return edges3.groupBy("u", "v").agg(F.count(F.lit(1)).alias("support"))
 
     for _ in range(int(max_rounds)):
         sup = lazy_checkpoint(support(e))
@@ -718,7 +700,7 @@ def lpa_communities(
     min-label is its standard derandomization).
 
     ``edges(u, v)`` must be UNDIRECTED UNIQUE pairs; the adjacency is
-    materialized BOTH directions once, hash-repartitioned on ``u``
+    the uncapped :func:`directed_ends_capped`, hash-repartitioned on ``u``
     before the loop and localCheckpoint-ed (the loop-sizing rule in
     ``operators/physical.py``: no count, AQE sizes it). Each round is
     one keyed join (labels ⋈ adjacency on the source endpoint) and one
@@ -742,8 +724,7 @@ def lpa_communities(
     # never the adjacency (r11: −8% alone, −40% with the vote exchange
     # below, labels bit-identical).
     adj = (
-        edges.select("u", "v")
-        .union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        directed_ends_capped(edges, a_col="u", b_col="v")
         .repartition("u")
         .transform(lazy_checkpoint)
     )
@@ -829,47 +810,22 @@ def bfs_hops(
     undirected edge set — the shortest-path-layer primitive (reach
     census, diameter probing, seed-centric neighborhood carving).
 
-    Distance propagation in the connected-components shape: each round
-    relaxes ``dist(v) ≤ min over neighbors(dist(u) + 1)`` via one keyed
-    join (adjacency ⋈ current distances) and one map-combined min
-    aggregate over the union with the current frame — never a frontier
-    collect. A FIXED round count is the contract (hop layers beyond it
-    are reported as unreached), which makes the fixed-depth
-    unrolled-CTE oracle exact; run more rounds for deeper graphs. The
-    adjacency is repartitioned on (u, v) and localCheckpoint-ed before
-    the loop, the distance frame per round (each feeds the next join —
-    the k_core loop discipline).
+    :func:`multi_bfs_hops` with one seed, ``least(min(u), min(v))``:
+    the same relaxation loop, adjacency and cuts. A FIXED round count
+    is the contract (hop layers beyond it are reported as unreached),
+    which makes the fixed-depth unrolled-CTE oracle exact; run more
+    rounds for deeper graphs.
 
     Returns ``(node, hop)`` for every node reached within ``rounds``
     hops of the seed; the seed itself is hop 0. Nodes outside the
     seed's component (or beyond the horizon) are absent — callers
     wanting an unreached census anti-join the node set. An empty edge
-    set has no seed and returns no rows.
+    set has no seed (its NULL minimum is filtered) and returns no rows.
     """
-    adj = (
-        edges.select("u", "v")
-        .union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .repartition("u", "v")
-        .transform(lazy_checkpoint)
+    seed = edges.agg(F.least(F.min("u"), F.min("v")).alias("node")).filter(
+        F.col("node").isNotNull()
     )
-    seed = (
-        adj.agg(F.min("u").alias("node"))
-        .filter(F.col("node").isNotNull())
-        .select("node", F.lit(0).cast("long").alias("hop"))
-    )
-    dist = seed.transform(lazy_checkpoint)
-    for _ in range(int(rounds)):
-        cand = (
-            adj.join(dist.withColumnRenamed("node", "u"), "u")
-            .select(F.col("v").alias("node"), (F.col("hop") + 1).alias("hop"))
-        )
-        dist = (
-            dist.union(cand)
-            .groupBy("node")
-            .agg(F.min("hop").alias("hop"))
-            .transform(lazy_checkpoint)
-        )
-    return dist
+    return multi_bfs_hops(edges, seed, rounds=rounds).drop("seed")
 
 
 def multi_bfs_hops(
@@ -881,22 +837,26 @@ def multi_bfs_hops(
     (seed, node) — the centrality/neighborhood primitive behind
     closeness estimates and landmark-distance features.
 
-    Same relaxation shape as ``bfs_hops`` with the seed id carried
-    through the key: per round one keyed adjacency join fans the
-    frontier out PER SEED, one map-combined min over the union
-    collapses it. Cost per round is O(|E| x seeds-reaching-it) — keep
-    the seed panel small (sampled landmarks), which is exactly how
-    closeness is estimated at scale (Eppstein-Wang style sampling;
-    all-pairs BFS is O(V·E) and is the wrong tool past toy graphs).
-    Frames are checkpointed per the k_core loop discipline.
+    Distance propagation in the connected-components shape, with the
+    seed id carried through the key: each round relaxes
+    ``dist(seed, v) ≤ min over neighbors(dist(seed, u) + 1)`` via one
+    keyed join (adjacency ⋈ current distances) that fans the frontier
+    out PER SEED and one map-combined min over the union with the
+    current frame — never a frontier collect. Cost per round is
+    O(|E| x seeds-reaching-it) — keep the seed panel small (sampled
+    landmarks), which is exactly how closeness is estimated at scale
+    (Eppstein-Wang style sampling; all-pairs BFS is O(V·E) and is the
+    wrong tool past toy graphs). The adjacency is the uncapped
+    :func:`directed_ends_capped`, repartitioned on (u, v) and
+    localCheckpoint-ed before the loop, the distance frame per round
+    (each feeds the next join — the k_core loop discipline).
 
     ``seeds`` must have a single ``node`` column. Returns
     ``(seed, node, hop)`` for every node within ``rounds`` hops of
     each seed (hop 0 = the seed itself); unreached pairs are absent.
     """
     adj = (
-        edges.select("u", "v")
-        .union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        directed_ends_capped(edges, a_col="u", b_col="v")
         .repartition("u", "v")
         .transform(lazy_checkpoint)
     )

@@ -776,11 +776,7 @@ def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = shared_frames.copurchase_edges(spark, sf_dir)
     lbl = shared_frames.lpa_labels(spark, sf_dir, rounds=_LPA_ROUNDS)
     m_row = edges.agg(F.count(F.lit(1)).alias("m"))
-    deg = (
-        edges.select(F.explode(F.array("u", "v")).alias("node"))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    deg = graph.degrees(edges)
     dc = (
         deg.join(lbl, "node")
         .groupBy("community")
@@ -1526,15 +1522,10 @@ def q_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkprep.queries import shared_frames
 
     edges = shared_frames.copurchase_edges(spark, sf_dir, a="ea", b="eb")
-    adj = edges.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("ea").alias("u"), F.col("eb").alias("v")),
-                F.struct(F.col("eb").alias("u"), F.col("ea").alias("v")),
-            )
-        ).alias("e")
-    ).select("e.u", "e.v")
-    deg = adj.groupBy("u").agg(F.count(F.lit(1)).alias("degree"))
+    adj = graph.directed_ends_capped(edges, a_col="ea", b_col="eb")
+    deg = graph.degrees(edges, "ea", "eb").select(
+        F.col("node").alias("u"), F.col("d").alias("degree")
+    )
     top = deg.orderBy(F.desc("degree"), F.asc("u")).limit(_LCC_TOP)
     nbrs = adj.join(F.broadcast(top.select("u", "degree")), "u")
     n1 = nbrs.select("u", "degree", F.col("v").alias("a"))
@@ -1742,15 +1733,10 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkprep.queries import shared_frames
 
     edges = shared_frames.copurchase_edges(spark, sf_dir, a="ea", b="eb")
-    adj = edges.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("ea").alias("u"), F.col("eb").alias("v")),
-                F.struct(F.col("eb").alias("u"), F.col("ea").alias("v")),
-            )
-        ).alias("e")
-    ).select("e.u", "e.v")
-    deg = adj.groupBy("u").agg(F.count(F.lit(1)).alias("degree"))
+    adj = graph.directed_ends_capped(edges, a_col="ea", b_col="eb")
+    deg = graph.degrees(edges, "ea", "eb").select(
+        F.col("node").alias("u"), F.col("d").alias("degree")
+    )
     n1 = adj.select(F.col("u").alias("z"), F.col("v").alias("a"))
     n2 = adj.select(F.col("u").alias("z"), F.col("v").alias("b"))
     cand = n1.join(n2, "z").filter(F.col("a") < F.col("b"))

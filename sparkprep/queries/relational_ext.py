@@ -686,23 +686,18 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-exact against the oracle's unrolled-CTE replay of the SAME
     integer recurrence — no float drift, no rounding contract needed.
     Node ids interleave the two key spaces (part → 2k, supplier →
-    2k+1) to keep one BIGINT node column. The doubled edge list comes
-    from ONE explode over a two-struct array, not a union of selects
-    (the union would re-execute the distinct-pairs shuffle per side —
-    CLAUDE.md re-execution trap)."""
+    2k+1) to keep one BIGINT node column. The doubled edge list is the
+    uncapped ``graph.directed_ends_capped`` (ONE row-local explode, not
+    a union of selects, which would re-execute the distinct-pairs
+    shuffle per side — CLAUDE.md re-execution trap)."""
     li = t(spark, sf_dir, "lineitem")
     pairs = li.select(
         (F.col("l_partkey") * 2).alias("src"),
         (F.col("l_suppkey") * 2 + 1).alias("dst"),
     ).dropDuplicates()
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("src").alias("src"), F.col("dst").alias("dst")),
-                F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
+    edges = graph.directed_ends_capped(pairs, a_col="src", b_col="dst").select(
+        F.col("u").alias("src"), F.col("v").alias("dst")
+    )
     nodes = t(spark, sf_dir, "part").select(
         (F.col("p_partkey") * 2).alias("node")
     ).unionByName(
@@ -1728,8 +1723,9 @@ def q_degree_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     the structure screen that says whether pagerank/k_core/two_hop
     face a power-law hub problem (it is also the input to every
     "should this join be salted" decision). Same capped edge builder
-    as k_core (support >= 2, cap-64 canary-pinned); degrees are one
-    map-combined groupBy over the exploded endpoints; the log2 bucket
+    as k_core (support >= 2, cap-64 canary-pinned); degrees are
+    ``graph.degrees`` (one endpoint explode, one map-combined count,
+    one scan of the edge frame); the log2 bucket
     is EXACT integer arithmetic on both engines — bit-length via
     binary-string length (Spark ``conv(d,10,2)``, DuckDB ``bin(d)``),
     never floor(log2(double)) whose boundary ulp can flip the bucket
@@ -1737,18 +1733,15 @@ def q_degree_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkprep.queries import shared_frames
 
     edges = shared_frames.copurchase_edges(spark, sf_dir)
-    ends = edges.select(F.col("u").alias("node")).unionAll(
-        edges.select(F.col("v").alias("node"))
-    )
-    deg = ends.groupBy("node").agg(F.count(F.lit(1)).alias("__d"))
-    bucket = (F.length(F.conv(F.col("__d"), 10, 2)) - 1).cast("long")
+    deg = graph.degrees(edges)
+    bucket = (F.length(F.conv(F.col("d"), 10, 2)) - 1).cast("long")
     return (
         deg.groupBy(bucket.alias("log2_bucket"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_nodes"),
-            F.min("__d").cast("long").alias("min_degree"),
-            F.max("__d").cast("long").alias("max_degree"),
-            F.sum("__d").cast("long").alias("sum_degree"),
+            F.min("d").cast("long").alias("min_degree"),
+            F.max("d").cast("long").alias("max_degree"),
+            F.sum("d").cast("long").alias("sum_degree"),
         )
     )
 

@@ -1,4 +1,5 @@
-"""Graph peel loops read their fixpoint off the round's own aggregate.
+"""Graph peel loops read their fixpoint off the round's own aggregate,
+and the graph family spells each primitive once.
 
 ``graph.k_core`` and ``graph.k_truss`` stop when the round's degree or
 support aggregate has no value below the threshold, and
@@ -12,6 +13,12 @@ tests pin both halves of that:
   jobs, k_truss at k=3 computes support once whatever it peels, and no
   ``.count()`` call comes back into the three operators.
 
+The shared kernels (``degrees``, the uncapped ``directed_ends_capped``,
+the triangle enumeration, the BFS loop) get the same differential
+treatment through ``triangle_stats``, ``assortativity``, ``bfs_hops``
+and ``multi_bfs_hops``, and ``test_one_graph_vocabulary`` keeps their
+copies from coming back.
+
 Inputs are ``VALUES`` frames: like a file source they carry size
 statistics, so the planner broadcasts the small sides as it does on the
 co-purchase graph, and the job counts match the registry queries'.
@@ -19,8 +26,9 @@ co-purchase graph, and the job counts match the registry queries'.
 
 import ast
 import inspect
+import pathlib
 import random
-from collections import Counter, defaultdict
+from collections import Counter, defaultdict, deque
 
 import pytest
 
@@ -66,11 +74,16 @@ def _core_ref(es, k, rounds):
     return sorted(Counter(x for e in cur for x in e).items())
 
 
-def _supports(es):
+def _adjacency(es):
     adj = defaultdict(set)
     for u, v in es:
         adj[u].add(v)
         adj[v].add(u)
+    return adj
+
+
+def _supports(es):
+    adj = _adjacency(es)
     return {(u, v): len(adj[u] & adj[v]) for u, v in es}
 
 
@@ -159,3 +172,186 @@ def test_no_count_scalar_in_graph_peels(name):
         and not node.args
     ]
     assert not calls, f"graph.{name} calls .count() (source lines {calls})"
+
+
+_GRAPHS = {
+    "random2": _random_graph(2),
+    "random5": _random_graph(5),
+    "tailed3": _tailed_triangle(3),
+}
+
+
+def _bfs_ref(es, seed, rounds):
+    adj, hop, todo = _adjacency(es), {seed: 0}, deque([seed])
+    while todo:
+        x = todo.popleft()
+        if hop[x] == rounds:
+            continue
+        for y in adj[x]:
+            if y not in hop:
+                hop[y] = hop[x] + 1
+                todo.append(y)
+    return hop
+
+
+@pytest.mark.parametrize("name", list(_GRAPHS))
+def test_triangle_stats_matches_python(spark, name):
+    es = _GRAPHS[name]
+    adj = _adjacency(es)
+    tri = sum(len(adj[u] & adj[v]) for u, v in es) // 3
+    wedges = sum(len(n) * (len(n) - 1) // 2 for n in adj.values())
+    df = _values(spark, es).withColumnRenamed("u", "item_a").withColumnRenamed("v", "item_b")
+    row = graph.triangle_stats(df).collect()[0]
+    assert (row.n_nodes, row.n_edges, row.n_wedges, row.n_triangles) == (
+        len(adj), len(es), wedges, tri
+    )
+    assert row.clustering == pytest.approx(3 * tri / wedges, abs=1e-6)
+
+
+@pytest.mark.parametrize("name", list(_GRAPHS))
+def test_assortativity_matches_python_pearson(spark, name):
+    es = _GRAPHS[name]
+    adj = _adjacency(es)
+    ends = [(len(adj[a]), len(adj[b])) for u, v in es for a, b in ((u, v), (v, u))]
+    n = len(ends)
+    mx = sum(x for x, _ in ends) / n
+    my = sum(y for _, y in ends) / n
+    cov = sum((x - mx) * (y - my) for x, y in ends)
+    var = sum((x - mx) ** 2 for x, _ in ends)
+    df = _values(spark, es).withColumnRenamed("u", "item_a").withColumnRenamed("v", "item_b")
+    row = graph.assortativity(df).collect()[0]
+    assert (row.n_nodes, row.n_edges) == (len(adj), len(es))
+    assert row.assortativity == pytest.approx(cov / var, abs=6e-5)
+
+
+@pytest.mark.parametrize("name", list(_GRAPHS))
+def test_bfs_hops_matches_python_bfs(spark, name):
+    es = _GRAPHS[name]
+    got = dict(tuple(r) for r in graph.bfs_hops(_values(spark, es), rounds=3).collect())
+    assert got == _bfs_ref(es, min(x for e in es for x in e), 3)
+
+
+@pytest.mark.parametrize("name", list(_GRAPHS))
+def test_multi_bfs_hops_matches_python_bfs(spark, name):
+    es = _GRAPHS[name]
+    nodes = sorted({x for e in es for x in e})
+    seeds = [nodes[0], nodes[len(nodes) // 2], nodes[-1]]
+    seed_df = spark.sql(
+        "SELECT CAST(node AS BIGINT) AS node FROM VALUES "
+        + ", ".join(f"({s})" for s in seeds)
+        + " AS t(node)"
+    )
+    got = sorted(
+        tuple(r) for r in graph.multi_bfs_hops(_values(spark, es), seed_df, rounds=3).collect()
+    )
+    want = sorted((s, x, h) for s in seeds for x, h in _bfs_ref(es, s, 3).items())
+    assert got == want
+
+
+_VOCAB_FILES = (
+    "sparkprep/operators/graph.py",
+    "sparkprep/queries/advanced.py",
+    "sparkprep/queries/relational_ext.py",
+)
+
+
+def _is_call(node, name):
+    f = getattr(node, "func", None) if isinstance(node, ast.Call) else None
+    return isinstance(f, ast.Attribute) and f.attr == name or isinstance(f, ast.Name) and f.id == name
+
+
+def _union_of_selects(node):
+    # X.select(...).union(X.select(...)): the re-execution trap
+    if not (_is_call(node, "union") or _is_call(node, "unionAll")) or len(node.args) != 1:
+        return False
+    a, b = node.func.value, node.args[0]
+    return (
+        _is_call(a, "select") and _is_call(b, "select")
+        and ast.dump(a.func.value) == ast.dump(b.func.value)
+    )
+
+
+def _swap_explode(node):
+    # explode(array(struct(A as x, B as y), struct(B as x, A as y)))
+    if not (_is_call(node, "explode") and node.args and _is_call(node.args[0], "array")):
+        return False
+    structs = node.args[0].args
+    if len(structs) != 2 or not all(_is_call(s, "struct") and len(s.args) == 2 for s in structs):
+        return False
+    fields = [
+        [(ast.dump(a.func.value), ast.dump(a.args[0])) if _is_call(a, "alias") else None for a in s.args]
+        for s in structs
+    ]
+    if None in fields[0] + fields[1]:
+        return False
+    (a1, x1), (b1, y1) = fields[0]
+    (b2, x2), (a2, y2) = fields[1]
+    return (a1, b1, x1, y1) == (a2, b2, x2, y2)
+
+
+def _endpoint_frame(expr, assigns, seen=frozenset()):
+    """Is ``expr`` a frame of exploded or directed edge endpoints
+    (before any join or aggregate)? Follows the method chain down to
+    its base and local names back to their assignments."""
+    while True:
+        if isinstance(expr, ast.Call):
+            if any(_is_call(expr, m) for m in ("join", "crossJoin", "agg")):
+                return False
+            if _is_call(expr, "directed_ends_capped") or _union_of_selects(expr):
+                return True
+            if _is_call(expr, "select") and any(
+                _is_call(n, "explode") and n.args and _is_call(n.args[0], "array")
+                for a in expr.args
+                for n in ast.walk(a)
+            ):
+                return True
+            if not isinstance(expr.func, ast.Attribute):
+                return False
+            expr = expr.func.value
+        elif isinstance(expr, ast.Name) and expr.id in assigns and expr.id not in seen:
+            return any(_endpoint_frame(v, assigns, seen | {expr.id}) for v in assigns[expr.id])
+        else:
+            return False
+
+
+def test_one_graph_vocabulary():
+    """The graph family spells each primitive once: the degree frame is
+    ``graph.degrees``, the both-directions adjacency is the uncapped
+    ``graph.directed_ends_capped``, and ``bfs_hops`` runs no loop of its
+    own (it is ``multi_bfs_hops`` from one seed). Flags, in the three
+    graph-family modules, a union of two selects of one frame, a
+    two-struct endpoint-swap explode outside ``directed_ends_capped``
+    (a struct that carries a payload column, like association_rules'
+    support, is not an adjacency), and a one-key ``groupBy(...).agg(count)``
+    over exploded or directed endpoints outside ``degrees``."""
+    root = pathlib.Path(__file__).resolve().parents[1]
+    found = []
+    for rel in _VOCAB_FILES:
+        tree = ast.parse((root / rel).read_text())
+        for fn in tree.body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            assigns = defaultdict(list)
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Assign):
+                    for tgt in node.targets:
+                        if isinstance(tgt, ast.Name):
+                            assigns[tgt.id].append(node.value)
+            for node in ast.walk(fn):
+                where = f"{rel}:{fn.name}:{getattr(node, 'lineno', '?')}"
+                if _union_of_selects(node):
+                    found.append(f"union of selects of one frame at {where}")
+                if _swap_explode(node) and fn.name != "directed_ends_capped":
+                    found.append(f"both-directions explode at {where}")
+                if (
+                    _is_call(node, "agg")
+                    and _is_call(node.func.value, "groupBy")
+                    and len(node.func.value.args) == 1
+                    and any(_is_call(n, "count") for a in node.args for n in ast.walk(a))
+                    and _endpoint_frame(node.func.value.func.value, assigns)
+                    and fn.name != "degrees"
+                ):
+                    found.append(f"degree groupBy/count at {where}")
+                if isinstance(node, ast.For) and fn.name == "bfs_hops":
+                    found.append(f"BFS loop at {where}")
+    assert not found, "graph primitives re-spelled:\n" + "\n".join(found)

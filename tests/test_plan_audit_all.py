@@ -69,7 +69,6 @@ _TINY_BROADCAST_CROSS = {
     "vocab_coverage",    # 1-row folded coverage x 1-row token total
     "quantile_normalize",  # 1-row reference-size scalar attach
     "retrieval_overlap",   # dense leg = 1 query vector broadcast x corpus
-    "assortativity",     # 1-row Pearson sums x 1-row node count attach
     "user_migration",    # 1-row stream min/max bounds attach
     "basket_size_dist",  # 1-row order-total attach for the share column
     "rfm_segments",      # 1-row max-order-day attach for recency
