@@ -1,7 +1,10 @@
 """Scale smoke: run the heavy operators on a synthetic corpus 10-50x
-the bench scale and report wall times + rows, to catch nonlinear cliffs
-(quadratic pair blowups, single-partition stages, interpreted-lambda
-hotspots) that sf0.1 is too small to expose.
+the bench scale and report wall times, rows and each op's Spark
+counters (jobs, tasks, executor CPU, shuffle write, spill), to catch
+nonlinear cliffs (quadratic pair blowups, single-partition stages,
+interpreted-lambda hotspots) that sf0.1 is too small to expose. Runs
+local[<host cores>] (``SPARK_GRAFT_CPUS`` when set, else
+``os.cpu_count()``) and prints the master it used.
 
 Usage: python scripts/scale_smoke.py [core|revenue|graph|longdoc|widevec|streaming|all] [args...]
   core    [num_docs] [num_rows]   text/dedup/similarity panel (default)
@@ -89,8 +92,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from perfbench.counters import collect
 from sparkprep.session import build_session
 
 VOCAB = (
@@ -108,10 +113,24 @@ def _materialize(df) -> int:
 
 
 def _bench(name, fn):
+    # each op runs in its own job group, so its Spark counters are its own
+    spark = SparkSession.getActiveSession()
+    sc = spark.sparkContext
+    group = f"scale-smoke-{time.monotonic_ns()}"
+    sc.setJobGroup(group, name)
     t0 = time.perf_counter()
-    n = fn()
+    try:
+        n = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     dt = time.perf_counter() - t0
-    print(f"{name:32s} {dt:8.2f}s  rows={n if n >= 0 else 'n/a'}", flush=True)
+    c = collect(spark, [group])
+    print(
+        f"{name:32s} {dt:8.2f}s  rows={n if n >= 0 else 'n/a'}  "
+        f"jobs={c['jobs']} tasks={c['tasks']} cpu={c['cpu_s']:.1f}s "
+        f"shuffle_w={c['shuffle_write_mb']:.1f}MB spill={c['spill_mb']:.1f}MB",
+        flush=True,
+    )
 
 
 def core_panel(spark, num_docs: int, num_rows: int) -> None:
@@ -149,46 +168,34 @@ def core_panel(spark, num_docs: int, num_rows: int) -> None:
     rows.write.mode("overwrite").parquet("/tmp/scale_rows.parquet")
     rows = spark.read.parquet("/tmp/scale_rows.parquet")
 
-    def materialize(df) -> int:
-        # noop sink: full materialization; a bare count() would let
-        # Catalyst prune projections and fake instant "timings"
-        df.write.format("noop").mode("overwrite").save()
-        return -1
-
-    def bench(name, fn):
-        t0 = time.perf_counter()
-        n = fn()
-        dt = time.perf_counter() - t0
-        print(f"{name:32s} {dt:8.2f}s  rows={n if n >= 0 else 'n/a'}")
-
     from sparkprep.operators import clean, dedup, text
     from sparkprep.operators.skew import salted_agg
 
-    print(f"--- scale smoke: {num_docs:,} docs / {num_rows:,} rows on local[{os.environ.get('SPARK_GRAFT_CPUS','32')}] ---")
-    bench("groupBy agg (1000 groups)", lambda: materialize(rows.groupBy("g").agg(
+    print(f"--- scale smoke: {num_docs:,} docs / {num_rows:,} rows on {spark.sparkContext.master} ---")
+    _bench("groupBy agg (1000 groups)", lambda: _materialize(rows.groupBy("g").agg(
         F.sum("v"), F.avg("v"), F.count(F.lit(1)))))
-    bench("salted agg", lambda: materialize(salted_agg(
+    _bench("salted agg", lambda: _materialize(salted_agg(
         rows, ["g"], {"s": "sum(v)", "n": "count(*)"})))
-    bench("window dedup audit", lambda: materialize(clean.dup_audit(
+    _bench("window dedup audit", lambda: _materialize(clean.dup_audit(
         rows.select("g", (F.col("k") % 1000).alias("k2")), keys=["g", "k2"], order_by="g")))
-    bench("null census (3 cols)", lambda: rows.select(
+    _bench("null census (3 cols)", lambda: rows.select(
         *[F.count(F.when(F.isnull(c), True)) for c in rows.columns]).count())
-    bench("text stats", lambda: materialize(docs.select(
+    _bench("text stats", lambda: _materialize(docs.select(
         text.token_count("text"), text.char_count("text"))))
-    bench("shingle fingerprint", lambda: materialize(text.add_shingle_fingerprint(
+    _bench("shingle fingerprint", lambda: _materialize(text.add_shingle_fingerprint(
         docs, "text").select("fp_shingle")))
-    bench("minhash signatures", lambda: materialize(dedup.minhash_signatures(
+    _bench("minhash signatures", lambda: _materialize(dedup.minhash_signatures(
         docs, "text", "doc_id")))
-    bench("simhash", lambda: materialize(dedup.simhash(docs, "text", "doc_id")))
-    bench("minhash LSH pairs (est>=0.8)", lambda: materialize(dedup.minhash_candidate_pairs(
+    _bench("simhash", lambda: _materialize(dedup.simhash(docs, "text", "doc_id")))
+    _bench("minhash LSH pairs (est>=0.8)", lambda: _materialize(dedup.minhash_candidate_pairs(
         docs, "text", "doc_id", est_threshold=0.8)))
-    bench("unigram LM score", lambda: materialize(text.unigram_lm_score(
+    _bench("unigram LM score", lambda: _materialize(text.unigram_lm_score(
         docs, "text", "doc_id")))
     # pair graph: num_docs/10 chains of length 10 -> CC must converge in
     # ~diameter rounds with bounded lineage (localCheckpoint per round)
     edges = spark.range(num_docs - 1).filter(F.pmod("id", 10) != 9).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
-    bench("connected components (chains)", lambda: materialize(
+    _bench("connected components (chains)", lambda: _materialize(
         dedup.connected_components(edges, max_iterations=15)))
 
     # --- round-2 additions: incremental dedup, quantize, zorder, mix --
@@ -199,7 +206,7 @@ def core_panel(spark, num_docs: int, num_rows: int) -> None:
         (F.col("doc_id") + 10_000_000).alias("doc_id"),
         F.regexp_replace("text", r"^\S+ ", "").alias("text"),
     )
-    bench("incremental dedup (10% batch)", lambda: materialize(
+    _bench("incremental dedup (10% batch)", lambda: _materialize(
         dedup.incremental_minhash_filter(batch, docs, "text", "doc_id",
                                          est_threshold=0.5)))
     vecs = spark.range(num_docs).select(
@@ -209,23 +216,23 @@ def core_panel(spark, num_docs: int, num_rows: int) -> None:
             lambda i: (F.pmod(F.xxhash64(F.col("id") * 100 + i), 1000) / 500.0 - 1.0),
         ).alias("embedding"),
     )
-    bench("scalar quantize + fidelity", lambda: materialize(
+    _bench("scalar quantize + fidelity", lambda: _materialize(
         quantize.reconstruction_stats(vecs, "embedding").select(
             "vec_id", "mean_abs_err", "cos_fidelity")))
-    bench("zorder layout (64 files)", lambda: materialize(
+    _bench("zorder layout (64 files)", lambda: _materialize(
         zorder.zorder_layout(rows.select(
             (F.col("k") % 65536).alias("x"), (F.pmod(F.xxhash64("k"), 65536)).alias("y")),
             ["x", "y"], num_files=64)))
-    bench("train-mix resample", lambda: materialize(
+    _bench("train-mix resample", lambda: _materialize(
         mix.resample_to_quotas(
             docs.withColumn("grp", F.pmod("doc_id", 8).cast("string")),
             "grp", {str(g): num_docs // 20 for g in range(8)}, "doc_id")))
     # span dedup explodes ~4 chunks/doc and shuffles the md5 keep-keys;
     # the op whose shuffle volume grows fastest with corpus size
-    bench("span dedup (32-tok chunks)", lambda: materialize(
+    _bench("span dedup (32-tok chunks)", lambda: _materialize(
         text.dedup_spans(docs, "text", "doc_id", width=32)
         .select("doc_id", "n_chunks", "n_kept")))
-    bench("training order (1024 shards)", lambda: materialize(
+    _bench("training order (1024 shards)", lambda: _materialize(
         mix.training_order(docs, "doc_id", num_shards=1024)))
 
     # --- round-3 additions: semantic dedup, gopher gate ----------------
@@ -239,9 +246,9 @@ def core_panel(spark, num_docs: int, num_rows: int) -> None:
     import math
 
     planes = max(8, math.ceil(math.log2(max(num_docs, 1) / (8 * 25))))
-    bench(f"semantic dedup (8x2^{planes} buckets)", lambda: materialize(
+    _bench(f"semantic dedup (8x2^{planes} buckets)", lambda: _materialize(
         similarity.semantic_dedup(vecs, num_planes=planes)))
-    bench("gopher quality gate", lambda: materialize(
+    _bench("gopher quality gate", lambda: _materialize(
         text.gopher_quality_flags(docs, "text").select("doc_id", "pass")))
 
     # chunk-granular minhash: the explode multiplies the MinHash load by
@@ -252,10 +259,10 @@ def core_panel(spark, num_docs: int, num_rows: int) -> None:
         cdf = chunks.select(
             (F.col("doc_id") * 1000 + F.col("chunk_id")).alias("cid"), "chunk_text"
         )
-        return materialize(dedup.minhash_candidate_pairs(
+        return _materialize(dedup.minhash_candidate_pairs(
             cdf, "chunk_text", "cid", est_threshold=0.8))
 
-    bench("chunk-level minhash pairs", chunk_minhash)
+    _bench("chunk-level minhash pairs", chunk_minhash)
 
     # --- round-3 session-2 additions ----------------------------------
     from sparkprep.operators import temporal, transform
@@ -270,9 +277,9 @@ def core_panel(spark, num_docs: int, num_rows: int) -> None:
         ).alias("ts"),
         "v",
     )
-    bench("rolling 1h window (1000 keys)", lambda: materialize(
+    _bench("rolling 1h window (1000 keys)", lambda: _materialize(
         temporal.rolling_time_agg(events, "ts", "g", "v", window="1 hour")))
-    bench("IQR outlier fences (1000 keys)", lambda: materialize(
+    _bench("IQR outlier fences (1000 keys)", lambda: _materialize(
         numeric.iqr_outlier_report(rows, "g", "v")))
     # SCD2: only CURRENT rows join; 10% of keys arrive changed
     target = rows.select(
@@ -285,7 +292,7 @@ def core_panel(spark, num_docs: int, num_rows: int) -> None:
         "k", (F.col("v") + 1.0).alias("v"),
         F.to_date(F.lit("2024-06-01")).alias("effective_ts"),
     )
-    bench("SCD2 merge (10% changed)", lambda: materialize(
+    _bench("SCD2 merge (10% changed)", lambda: _materialize(
         transform.merge_scd2(target, upd, key_cols=["k"])))
 
     # --- round-3 session-3 additions ----------------------------------
@@ -296,24 +303,24 @@ def core_panel(spark, num_docs: int, num_rows: int) -> None:
         ex.mean_between("v", 400.0, 600.0), ex.non_negative("v"),
         ex.uniqueness("g", 0.0),  # approx HLL path (the 100 TB default)
     ])
-    bench("constraint suite (5 checks, 1 pass)", lambda: materialize(
+    _bench("constraint suite (5 checks, 1 pass)", lambda: _materialize(
         suite.report_df(rows)))
     edges_v = [0.0, 200.0, 400.0, 600.0, 800.0, 1000.0]
     ref = ex.reference_shares(rows.filter(F.pmod("k", 2) == 0), "v", edges_v)
-    bench("PSI vs precomputed reference", lambda: materialize(
+    _bench("PSI vs precomputed reference", lambda: _materialize(
         ex.psi_against_reference(rows.filter(F.pmod("k", 2) == 1), "v", edges_v, ref)))
-    bench("char entropy (28-class)", lambda: materialize(
+    _bench("char entropy (28-class)", lambda: _materialize(
         text.add_char_entropy(docs, "text").select("doc_id", "char_entropy")))
-    bench("grouped split (map-only)", lambda: materialize(
+    _bench("grouped split (map-only)", lambda: _materialize(
         mix.grouped_split(
             docs.withColumn("src", F.pmod("doc_id", 1000).cast("string")),
             "src", {"train": 0.8, "val": 0.1, "test": 0.1})))
     # hot-key sequence export: 1000 keys x ~num_rows/1000 events each,
     # capped at 100 — aggregation state must stay at cap, not key size
-    bench("event sequences (cap 100)", lambda: materialize(
+    _bench("event sequences (cap 100)", lambda: _materialize(
         temporal.event_sequences(events, "g", ["ts"], "v", max_len=100)))
     # RRF over two bounded legs carved from the 10M-row frame
-    bench("RRF fusion (2x top-1000 legs)", lambda: materialize(
+    _bench("RRF fusion (2x top-1000 legs)", lambda: _materialize(
         similarity.rrf_fuse([
             similarity.topk_ranked(rows, "v", "k", 1000),
             similarity.topk_ranked(
@@ -328,7 +335,7 @@ def core_panel(spark, num_docs: int, num_rows: int) -> None:
     # 1000 keys x ~num_rows/1000 steps; 16 states — one lag window + one
     # count agg dominates; the 3 iterations touch 16^2 rows
     chain = rows.select("g", "k", F.pmod("k", 16).cast("string").alias("st"))
-    bench("markov fit + 3-step iterate", lambda: materialize(
+    _bench("markov fit + 3-step iterate", lambda: _materialize(
         graph.power_iteration(
             graph.transition_matrix(chain, "g", "st", ["k"]),
             chain.select(F.col("st").alias("state")).distinct(),
@@ -337,17 +344,17 @@ def core_panel(spark, num_docs: int, num_rows: int) -> None:
     # the per-anchor candidate pool at ~25 rows
     neg_buckets = max(8, num_docs // 25)
     labeled = vecs.withColumn("label", F.pmod("vec_id", 16))
-    bench(f"negative mining ({neg_buckets} buckets)", lambda: materialize(
+    _bench(f"negative mining ({neg_buckets} buckets)", lambda: _materialize(
         similarity.negative_pairs(labeled, k=3, buckets=neg_buckets)))
     scored = rows.select(
         (F.col("v") / 1000.0).alias("score"), (F.pmod("k", 3) == 0).alias("y"))
-    bench("binned AUC (10M rows)", lambda: materialize(
+    _bench("binned AUC (10M rows)", lambda: _materialize(
         binned_auc(scored, "score", "y")))
-    bench("key-skew report (1000 keys)", lambda: materialize(
+    _bench("key-skew report (1000 keys)", lambda: _materialize(
         key_skew_report(rows, "g", top=20)))
-    bench("debounce (1000 keys)", lambda: materialize(
+    _bench("debounce (1000 keys)", lambda: _materialize(
         temporal.debounce(events, ["g"], "ts", gap="5 seconds")))
-    bench("decayed agg (1000 keys)", lambda: materialize(
+    _bench("decayed agg (1000 keys)", lambda: _materialize(
         temporal.decayed_agg(events, "g", "ts", "v", half_life="1 day")))
 
     # --- round-4 additions: pairs, chat assembly, truncation, JS drift -
@@ -356,18 +363,18 @@ def core_panel(spark, num_docs: int, num_rows: int) -> None:
     pref_in = docs.select(
         "doc_id", F.pmod("doc_id", 1000).alias("grp"),
         F.length("text").alias("score"))
-    bench("preference pairs (1000 grps)", lambda: materialize(
+    _bench("preference pairs (1000 grps)", lambda: _materialize(
         mix.preference_pairs(pref_in, ["grp"], "score", "doc_id")))
     # chat assembly: per-key collect_list — num_rows/1000 msgs per key;
     # the cliff is per-key array width, not row count
-    bench("chat assembly (1000 convs)", lambda: materialize(
+    _bench("chat assembly (1000 convs)", lambda: _materialize(
         text.chat_assemble(
             rows.select(F.col("g").alias("conv"), F.col("k").alias("pos"),
                         F.col("v").cast("string").alias("msg")),
             "conv", ["pos"], "msg")))
-    bench("matryoshka stats", lambda: materialize(
+    _bench("matryoshka stats", lambda: _materialize(
         quantize.matryoshka_stats(vecs, "embedding", k=16)))
-    bench("token JS divergence", lambda: materialize(
+    _bench("token JS divergence", lambda: _materialize(
         text.token_js_divergence(docs, "text", F.pmod("doc_id", 2) == 0)))
 
     # --- round-5 additions: graph census, funnels, sweeps, ranks ------
@@ -384,9 +391,11 @@ def core_panel(spark, num_docs: int, num_rows: int) -> None:
     co_edges = graph.cooccurrence_pairs(
         baskets, "basket", "item", max_items_per_key=16, cap_by="id"
     ).filter(F.col("n_keys") >= 2)
-    bench("triangle census (support>=2)", lambda: materialize(
-        graph.triangle_stats(co_edges)))
-    bench("degree assortativity", lambda: materialize(
+    co_und = co_edges.select(F.col("item_a").alias("u"), F.col("item_b").alias("v"))
+    co_deg = graph.degrees(co_und)
+    _bench("triangle census (support>=2)", lambda: _materialize(
+        graph.triangle_stats(graph.edge_support(co_und, co_deg), co_deg)))
+    _bench("degree assortativity", lambda: _materialize(
         graph.assortativity(co_edges)))
 
     # ordered funnel over num_rows events / 1000 users: each stage is a
@@ -402,7 +411,7 @@ def core_panel(spark, num_docs: int, num_rows: int) -> None:
             F.lit(1_700_000_000_000_000) + F.col("k") * 1_000_000
         ).alias("ts"),
     )
-    bench("window funnel (4 stages)", lambda: materialize(
+    _bench("window funnel (4 stages)", lambda: _materialize(
         temporal.window_funnel(
             fev, "user_id", "event_type", "ts", ["a", "b", "c", "d"],
             window="30 days")))
@@ -411,7 +420,7 @@ def core_panel(spark, num_docs: int, num_rows: int) -> None:
     # day boundaries; the running-sum window partitions by day
     iv = fev.groupBy("user_id", (F.col("ts").cast("long") / 3600).cast("long").alias("h")).agg(
         F.min("ts").alias("s"), F.max("ts").alias("e"))
-    bench("peak concurrency (hourly iv)", lambda: materialize(
+    _bench("peak concurrency (hourly iv)", lambda: _materialize(
         temporal.peak_concurrency(iv, "s", "e")))
 
     # sort-free Spearman: rank maps come from 1000- and 100-row
@@ -420,7 +429,7 @@ def core_panel(spark, num_docs: int, num_rows: int) -> None:
         F.col("g").cast("double").alias("x"),
         F.pmod("k", 100).cast("double").alias("y"),
     )
-    bench("spearman (freq-table ranks)", lambda: materialize(
+    _bench("spearman (freq-table ranks)", lambda: _materialize(
         stats.spearman(sp_in, "x", "y")))
 
     # mutual NN inside scaled LSH buckets: unlike semantic dedup's
@@ -429,7 +438,7 @@ def core_panel(spark, num_docs: int, num_rows: int) -> None:
     # at 100k vecs = 195/bucket = 19k pairs/bucket -> 21.7s measured;
     # 2^12 brings per-bucket pairs back to ~300)
     nn_planes = max(8, math.ceil(math.log2(max(num_docs, 1) / 25)))
-    bench(f"mutual NN (2^{nn_planes} buckets)", lambda: materialize(
+    _bench(f"mutual NN (2^{nn_planes} buckets)", lambda: _materialize(
         similarity.mutual_nn_pairs(vecs, num_planes=nn_planes)))
 
     # --- round-7 operators ------------------------------------------
@@ -446,13 +455,13 @@ def core_panel(spark, num_docs: int, num_rows: int) -> None:
             "__md", _boot_digest(F.col("k"))
         ).withColumn("__b", F.explode(F.sequence(F.lit(0), F.lit(31))))
         w = _boot_weight(F.col("__md"), F.col("__b"))
-        return materialize(
+        return _materialize(
             rep.select("__b", w.alias("__w"), "v")
             .groupBy("__b")
             .agg(F.sum(F.col("v") * F.col("__w")), F.sum("__w"))
         )
 
-    bench("poisson bootstrap (32 reps)", boot)
+    _bench("poisson bootstrap (32 reps)", boot)
 
     # kendall tau-b on bounded domains (1000 x 100 contingency grid):
     # cost must be ONE groupBy over num_rows + grid-sized window work
@@ -460,12 +469,12 @@ def core_panel(spark, num_docs: int, num_rows: int) -> None:
         F.col("g").cast("double").alias("x"),
         F.pmod("k", 100).cast("double").alias("y"),
     )
-    bench("kendall tau-b (1000x100 grid)", lambda: materialize(
+    _bench("kendall tau-b (1000x100 grid)", lambda: _materialize(
         stats.kendall_tau(kt_in, "x", "y")))
 
     # exact global rank over num_rows (tail_quantiles' engine): range
     # partition + broadcast offsets, never a single-partition sort
-    bench("global rank (exact, 10M)", lambda: materialize(
+    _bench("global rank (exact, 10M)", lambda: _materialize(
         ranks.global_rank(rows, [F.asc("v"), F.asc("k")],
                           rank_name="r", total_name="n")))
 
@@ -493,11 +502,11 @@ def core_panel(spark, num_docs: int, num_rows: int) -> None:
         )
         isl = marked.select(
             "user_id", "s", "e", F.sum("ni").over(w_cum).alias("isl"))
-        return materialize(
+        return _materialize(
             isl.groupBy("user_id", "isl")
             .agg(F.min("s"), F.max("e"), F.count(F.lit(1))))
 
-    bench("interval merge (1000 users)", imerge)
+    _bench("interval merge (1000 users)", imerge)
 
     # --- round-7 session-2: clustering / LPA / SymSpell / HITS --------
     from sparkprep.operators import clustering
@@ -507,13 +516,13 @@ def core_panel(spark, num_docs: int, num_rows: int) -> None:
     # cliff to watch is the interpreted zip_with lambda (k x dims
     # evaluations per point per round)
     km_pts = clustering.quantize_points(vecs, "vec_id", "embedding", dims=8)
-    bench("kmeans lloyd (k=4, 3 rounds)", lambda: materialize(
+    _bench("kmeans lloyd (k=4, 3 rounds)", lambda: _materialize(
         clustering.kmeans_lloyd(km_pts, k=4, dims=8, rounds=3)))
 
     # sync LPA on the basket co-occurrence graph: per round one keyed
     # join + one map-combined argmax aggregate; the cliff is a hub
     # label fanning out (bounded here by the basket cap, as in prod)
-    bench("LPA communities (4 rounds)", lambda: materialize(
+    _bench("LPA communities (4 rounds)", lambda: _materialize(
         graph.lpa_communities(
             co_edges.select("item_a", "item_b")
             .withColumnRenamed("item_a", "u")
@@ -532,12 +541,12 @@ def core_panel(spark, num_docs: int, num_rows: int) -> None:
             (F.pmod(F.xxhash64(F.col("id") + 3), 100) + 10).cast("string"),
         ).alias("word")
     )
-    bench("symspell pairs (50k vocab)", lambda: materialize(
+    _bench("symspell pairs (50k vocab)", lambda: _materialize(
         dedup.symspell_pairs(sym_w, "word", max_edits=2)))
 
     # exact-integer HITS on the basket bipartite graph: two keyed
     # equi-join + map-combined sum rounds over num_rows/8 baskets
-    bench("HITS bipartite (2 rounds)", lambda: materialize(
+    _bench("HITS bipartite (2 rounds)", lambda: _materialize(
         graph.hits_bipartite(baskets, "basket", "item", rounds=2)))
 
 
@@ -625,6 +634,7 @@ def revenue_panel(spark, rep: int = 10, mult: float = 100.0) -> None:
 
 
 def graph_panel(spark, num_nodes: int = 1_000_000, num_edges: int = 10_000_000) -> None:
+    from sparkprep.checkpointing import lazy_checkpoint
     from sparkprep.operators import graph
 
     def endpoint(seed: int):
@@ -642,19 +652,16 @@ def graph_panel(spark, num_nodes: int = 1_000_000, num_edges: int = 10_000_000) 
     edges.write.mode("overwrite").parquet("/tmp/scale_graph_edges.parquet")
     edges = spark.read.parquet("/tmp/scale_graph_edges.parquet")
     n_e = edges.count()
-    hub = (
-        edges.select(F.explode(F.array("u", "v")).alias("n"))
-        .groupBy("n").agg(F.count(F.lit(1)).alias("d"))
-        .agg(F.max("d")).collect()[0][0]
-    )
+    deg = graph.degrees(edges)
+    hub = deg.agg(F.max("d")).collect()[0][0]
     print(
         f"--- graph panel: {num_nodes:,} nodes, {n_e:,} unique edges, "
         f"hub degree {hub:,} (co-purchase cap is 64) ---", flush=True,
     )
-    directed = edges.select(F.col("u").alias("src"), F.col("v").alias("dst")).union(
-        edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
+    directed = graph.directed_ends_capped(edges, a_col="u", b_col="v").select(
+        F.col("u").alias("src"), F.col("v").alias("dst")
     )
-    nodes = edges.select(F.explode(F.array("u", "v")).alias("node")).distinct()
+    nodes = deg.select("node")
     _bench("pagerank (3 iters)", lambda: _materialize(
         graph.pagerank(directed, nodes, iterations=3)))
     _bench("k_core (k=3)", lambda: _materialize(
@@ -663,15 +670,28 @@ def graph_panel(spark, num_nodes: int = 1_000_000, num_edges: int = 10_000_000) 
         graph.lpa_communities(edges, rounds=4)))
     _bench("BFS hops (4 rounds)", lambda: _materialize(
         graph.bfs_hops(edges, rounds=4)))
+
+    # the census and k_truss read a cut degree frame and a cut per-edge
+    # support frame, as queries.shared_frames builds them. The first two
+    # ops build their own leaves, as a session running only one of them
+    # does; the third builds them once for both, as a session running
+    # both does. Degree-ordered orientation: the hub contributes only
+    # rank-above neighbors to the wedge fan-out — the naive undirected
+    # form would enumerate hub-degree² (~2e10) wedge rows here
+    def leaves():
+        d = graph.degrees(edges).transform(lazy_checkpoint)
+        return graph.edge_support(edges, d).transform(lazy_checkpoint), d
+
+    def census_and_truss():
+        sup, d = leaves()
+        _materialize(graph.triangle_stats(sup, d))
+        return _materialize(graph.k_truss(sup, k=3, max_rounds=4))
+
     _bench("triangle census", lambda: _materialize(
-        graph.triangle_stats(
-            edges.select(F.col("u").alias("item_a"), F.col("v").alias("item_b"))
-        )))
-    # degree-ordered orientation: the hub contributes only rank-above
-    # neighbors to the wedge fan-out — the naive undirected form would
-    # enumerate hub-degree² (~2e10) wedge rows here
+        graph.triangle_stats(*leaves())))
     _bench("k_truss (k=3)", lambda: _materialize(
-        graph.k_truss(edges, k=3, max_rounds=4)))
+        graph.k_truss(leaves()[0], k=3, max_rounds=4)))
+    _bench("census + k_truss, one support", census_and_truss)
 
 
 # --- round-9 panel: per-ROW width (long documents) -------------------------
@@ -1021,8 +1041,16 @@ def main() -> None:
         "core", "revenue", "graph", "longdoc", "widevec", "streaming", "all"
     ):
         panel = args.pop(0)
-    spark = build_session(app_name="scale-smoke")
+    # the host's cores, not session.default_parallelism()'s fallback of
+    # 32: oversubscribing a small host buries op-level changes in noise
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    spark = build_session(
+        app_name="scale-smoke",
+        master=f"local[{cores}]",
+        shuffle_partitions=max(cores * 2, 8),
+    )
     spark.sparkContext.setLogLevel("ERROR")
+    print(f"master {spark.sparkContext.master}", flush=True)
     if panel in ("core", "all"):
         num_docs = int(args[0]) if args else 100_000
         num_rows = int(args[1]) if len(args) > 1 else 10_000_000

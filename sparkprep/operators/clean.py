@@ -144,11 +144,6 @@ def dedup_window(
     )
 
 
-def duplicates_only(df: DataFrame, keys=None, order_by=None) -> DataFrame:
-    """The inspectable duplicate rows (occur_id > 1, dedup.ipynb:8881)."""
-    return add_occurrence_id(df, keys, order_by).filter(F.col("occur_id") > 1)
-
-
 # ---------------------------------------------------------------------------
 # Validator + repair (EP2's rule table — dedup+invalid.ipynb:9322,9588-9628)
 # ---------------------------------------------------------------------------
@@ -264,12 +259,6 @@ def repair_percent_column(df: DataFrame, col: str) -> DataFrame:
     """X5 repair — ``regexp_replace(c,'%','')`` then double cast
     (dedup+invalid.ipynb:9624)."""
     return df.withColumn(col, F.regexp_replace(F.col(col), "%", "").cast("double"))
-
-
-def repair_extract_numeric(df: DataFrame, col: str, pattern: str = r"(\d+)") -> DataFrame:
-    """X6 repair — ``regexp_extract(c, '(\\d+)', 1)`` (dedup+invalid.ipynb:9626).
-    No-match yields '' (kept: the reference then filters ``!= ''`` — F7)."""
-    return df.withColumn(col, F.regexp_extract(F.col(col), pattern, 1))
 
 
 def dedup_keep_best(

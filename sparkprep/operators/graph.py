@@ -22,8 +22,13 @@ frame (one endpoint explode, one map-combined count);
 :func:`directed_ends_capped` without a cap is the both-directions
 adjacency (one row-local struct explode, never a union of two selects
 of one frame); ``_triangles`` is the degree-oriented triangle
-enumeration behind :func:`triangle_stats` and :func:`k_truss`; and
+enumeration behind :func:`edge_support`, the per-edge support frame
+that :func:`triangle_stats` and :func:`k_truss` take; and
 :func:`bfs_hops` is :func:`multi_bfs_hops` from one seed.
+:func:`triangle_stats` and :func:`k_truss` take the artifacts they
+consume (support and degree frames), not edges, so a session that
+holds them (``queries.shared_frames``) builds each once for every
+consumer.
 ``tests/test_graph_fixpoint.py::test_one_graph_vocabulary`` guards it.
 """
 
@@ -379,50 +384,60 @@ def _triangles(und: DataFrame, deg: DataFrame) -> DataFrame:
     )
 
 
-def triangle_stats(
-    edges: DataFrame,
-    a_col: str = "item_a",
-    b_col: str = "item_b",
-    round_to: int = 6,
-) -> DataFrame:
-    """Global triangle census of an undirected graph: one row with
-    node / edge / wedge / triangle counts and the global clustering
-    coefficient ``3·T / wedges``.
+def edge_support(und: DataFrame, deg: DataFrame) -> DataFrame:
+    """Per-edge triangle support ``(u, v, support)`` of ``und(u, v)``,
+    which holds each undirected edge ONCE (any per-edge endpoint order,
+    no self-loops, no duplicates — e.g. the ``item_a < item_b`` output
+    of :func:`cooccurrence_pairs`); ``deg(node, d)`` is :func:`degrees`
+    of ``und``. Output edges are canonical, ``u < v``.
 
-    ``edges`` must hold each undirected edge ONCE (any per-edge
-    endpoint order, no self-loops, no duplicates — e.g. the
-    ``item_a < item_b`` output of :func:`cooccurrence_pairs`).
-
-    Triangles come from the degree-oriented kernel ``_triangles``
-    (each found once, fan-out Σ out-deg², hub-safe). Wedge COUNT
-    (open+closed 2-paths) is Σ deg·(deg-1)/2 and the edge count
-    Σ deg / 2, both over the tiny aggregated degree frame — never
-    enumerated, never a separate scan. Every counter comes out of ONE
-    global aggregate over a null-tagged union of the triangles and the
-    degree frame (no chained 1-row cross joins, no ``count()`` job).
-    The final result is a 5-column single row: any oracle can replay
-    the unoriented 3-way self-join at test scale while this plan
-    survives hub skew.
+    Each triangle comes once out of the degree-oriented kernel
+    ``_triangles`` (fan-out Σ out-deg², hub-safe), is exploded to its
+    three canonical ``u < v`` edges, and one map-combined
+    ``groupBy(u, v)`` counts them. An edge appears iff it lies in at
+    least one triangle, so the frame is bounded by the edge count m
+    however many triangles the graph holds — the artifact both
+    :func:`triangle_stats` (Σ support = 3·T) and :func:`k_truss` (its
+    round-0 support) consume, so a session builds it once for both.
     """
-    # und feeds the degree build AND the orientation join; deg feeds
-    # two orientation joins plus the census aggregate — both
-    # multi-consumer over a potentially expensive edge-construction
-    # subtree, so truncate lineage once here
-    und = edges.select(
-        F.col(a_col).alias("u"), F.col(b_col).alias("v")
-    ).transform(lazy_checkpoint)
-    deg = degrees(und).transform(lazy_checkpoint)
-    # one global aggregate over the triangles and the degree frame (two
-    # different frames, so the union re-executes nothing): a
-    # null-tagged column per side, so each counter reads only its rows
-    tagged = _triangles(und, deg).select(
-        F.lit(1).alias("tri"), F.lit(None).cast("long").alias("d")
-    ).unionByName(deg.select(F.lit(None).cast("int").alias("tri"), "d"))
+    tri = _triangles(und, deg)
+    edges3 = tri.select(
+        F.explode(
+            F.array(
+                F.struct(F.least("x", "p").alias("u"), F.greatest("x", "p").alias("v")),
+                F.struct(F.least("x", "q").alias("u"), F.greatest("x", "q").alias("v")),
+                F.struct(F.least("p", "q").alias("u"), F.greatest("p", "q").alias("v")),
+            )
+        ).alias("e")
+    ).select("e.u", "e.v")
+    return edges3.groupBy("u", "v").agg(F.count(F.lit(1)).alias("support"))
+
+
+def triangle_stats(sup: DataFrame, deg: DataFrame, round_to: int = 6) -> DataFrame:
+    """Global triangle census of an undirected graph from its
+    :func:`edge_support` frame ``sup`` and its :func:`degrees` frame
+    ``deg``: one row with node / edge / wedge / triangle counts and the
+    global clustering coefficient ``3·T / wedges``.
+
+    The triangle count is Σ support / 3, exact because each triangle
+    adds 1 to each of its three edges. Wedge COUNT (open+closed
+    2-paths) is Σ deg·(deg-1)/2 and the edge count Σ deg / 2, both over
+    the degree frame — never enumerated, never a separate scan. Every
+    counter comes out of ONE global aggregate over a null-tagged union
+    of the support and degree frames (no chained 1-row cross joins, no
+    ``count()`` job). The result is a 5-column single row: any oracle
+    can replay the unoriented 3-way self-join at test scale while this
+    plan survives hub skew.
+    """
+    # a null-tagged column per side, so each counter reads only its rows
+    tagged = sup.select(
+        F.col("support").alias("s"), F.lit(None).cast("long").alias("d")
+    ).unionByName(deg.select(F.lit(None).cast("long").alias("s"), "d"))
     out = tagged.agg(
         F.count("d").alias("n_nodes"),
         F.expr("coalesce(sum(d), 0) div 2").alias("n_edges"),
         F.sum(F.expr("(d * (d - 1)) div 2")).alias("n_wedges"),
-        F.count("tri").alias("n_triangles"),
+        F.expr("coalesce(sum(s), 0) div 3").alias("n_triangles"),
     )
     return out.select(
         "n_nodes",
@@ -613,7 +628,7 @@ def k_core(
 
 
 def k_truss(
-    edges: DataFrame,
+    sup: DataFrame,
     k: int = 4,
     max_rounds: int = 12,
 ) -> DataFrame:
@@ -622,69 +637,44 @@ def k_truss(
     companion of :func:`k_core` (a k-truss is a stricter cohesion
     standard: every surviving tie is embedded in k−2 closed wedges,
     so bridges and stars that survive coring are peeled here).
-    ``edges(u, v)`` must be UNDIRECTED UNIQUE pairs (u < v).
 
-    Per round: triangle support per edge from the degree-oriented
-    kernel ``_triangles`` (triangle_stats' enumeration, over the
-    round's uncut :func:`degrees` frame) — each triangle is found
-    exactly ONCE, then exploded to its three canonical edges for the
-    map-combined support groupBy. The fan-out is Σ outdeg(x)² with
-    outdeg bounded by O(√E) (graph arboricity) — a 142k-degree
-    power-law hub
-    contributes its RANK-ABOVE neighbors only, never hub-degree²
-    wedge rows (the naive undirected-adjacency form dies exactly
-    there; scale_smoke's graph panel is the receipt). Edges below
-    k−2 support drop (including zero-triangle edges, which never
-    appear in the support frame, so ``k < 3`` — where a triangle-free
-    edge must survive — is rejected); loop disciplines are k_core's
-    (working set repartitioned on (u, v) before the loop, survivor set
-    and per-round orientation lazily checkpoint-ed — routed by the
-    engine checkpoint mode).
+    ``sup(u, v, support)`` is the round-0 :func:`edge_support` of the
+    graph. An edge in no triangle has no support row and is in no
+    k-truss for k ≥ 3, so ``sup`` alone defines the input; ``k < 3`` —
+    where a triangle-free edge must survive — is rejected.
 
-    The loop reads its fixpoint off the round's support aggregate:
-    when no edge of it is below k−2, the round peels only zero-support
-    edges, which close no triangle, so the supports just computed ARE
-    the survivors' final supports — no ``count()`` scalar and no
-    confirming round (at k=3 that is always the first round). Peeling
-    is monotone, so early exit at the fixpoint is result-identical to
-    a fixed-depth unrolled-CTE oracle replay (k_core's convention; pin
-    convergence headroom with a canary).
+    Each round tests ``sup`` for its fixpoint with ``isEmpty`` on its
+    below-k−2 filter, never a ``count()``: when no edge is below, the
+    round would peel only zero-support edges, which close no triangle,
+    so ``sup`` holds the survivors' final supports (at k=3 the round-0
+    support is always the answer). Otherwise the survivors are cut
+    (``sup`` came out of a ``groupBy(u, v)``, so they are cut as they
+    are — the loop-sizing rule in ``operators/physical.py``) and their
+    support is rebuilt from their own uncut :func:`degrees` and
+    lazily checkpoint-ed — routed by the engine checkpoint mode.
+    The rebuild's fan-out is Σ outdeg(x)² with outdeg bounded by
+    O(√E) (graph arboricity): a 142k-degree power-law hub contributes
+    its RANK-ABOVE neighbors only, never hub-degree² wedge rows
+    (scale_smoke's graph panel is the receipt).
+
+    Peeling is monotone, so early exit at the fixpoint is
+    result-identical to a fixed-depth unrolled-CTE oracle replay
+    (k_core's convention; pin convergence headroom with a canary).
     Returns surviving edges with their within-truss support
-    ``(u, v, support)`` — recomputed once on the final edge set when
-    ``max_rounds`` runs out, so that exit still reports honest supports.
+    ``(u, v, support)``; a ``max_rounds`` exit returns the last
+    support built, which is the honest support of the final edge set.
     """
     if int(k) < 3:
         raise ValueError(f"k_truss needs k >= 3, got k={k}")
     thr = int(k) - 2
-    e = (
-        edges.select("u", "v")
-        .repartition("u", "v")
-        .transform(lazy_checkpoint)
-    )
-
-    def support(cur: DataFrame) -> DataFrame:
-        # each triangle once, exploded to its three canonical edges
-        tri = _triangles(cur, degrees(cur))
-        edges3 = tri.select(
-            F.explode(
-                F.array(
-                    F.struct(F.least("x", "p").alias("u"), F.greatest("x", "p").alias("v")),
-                    F.struct(F.least("x", "q").alias("u"), F.greatest("x", "q").alias("v")),
-                    F.struct(F.least("p", "q").alias("u"), F.greatest("p", "q").alias("v")),
-                )
-            ).alias("e")
-        ).select("e.u", "e.v")
-        return edges3.groupBy("u", "v").agg(F.count(F.lit(1)).alias("support"))
-
     for _ in range(int(max_rounds)):
-        sup = lazy_checkpoint(support(e))
         if sup.filter(F.col("support") < thr).isEmpty():
-            return sup.select("u", "v", F.col("support").cast("long"))
+            break
         e = sup.filter(F.col("support") >= thr).select("u", "v").transform(
             lazy_checkpoint
         )
-    # max_rounds exit: honest supports recomputed on the final edge set
-    return support(e).select("u", "v", F.col("support").cast("long"))
+        sup = lazy_checkpoint(edge_support(e, degrees(e)))
+    return sup.select("u", "v", F.col("support").cast("long"))
 
 
 def lpa_communities(

@@ -157,17 +157,6 @@ def distinct_values(df: DataFrame, col: str) -> DataFrame:
     return df.select(col).distinct()
 
 
-def distinct_count(df: DataFrame, approx: bool = False, rsd: float = 0.01) -> int:
-    """A9 — ``df.distinct().count()`` (dedup.ipynb:8944). At 100 TB the
-    exact form is a full shuffle of every distinct row; ``approx=True``
-    switches to HyperLogLog++ (one pass, no shuffle of rows)."""
-    if approx:
-        return df.agg(
-            F.approx_count_distinct(F.struct(*df.columns), rsd).alias("n")
-        ).collect()[0]["n"]
-    return df.distinct().count()
-
-
 def profile_delta(before: dict, after: dict) -> dict:
     """Machine-readable diff of two :func:`profile_report` outputs — the
     reference's eyeballed before/after ``describe()`` comparisons

@@ -39,17 +39,6 @@ def filter_in(df: DataFrame, col: str, values) -> DataFrame:
     return df.filter(F.col(col).isin(*values))
 
 
-def union_of_filters(df: DataFrame, *predicates: Column) -> DataFrame:
-    """SET1 — literal union-of-filters surface for parity
-    (loanStat.py:301). Prefer :func:`filter_in`; this exists because bag
-    semantics differ if predicates overlap (union keeps both copies)."""
-    parts = [df.filter(p) for p in predicates]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.union(p)
-    return out
-
-
 def downsample_class(
     df: DataFrame, col: str, value, fraction: float, seed: int = 42, with_replacement: bool = True
 ) -> DataFrame:

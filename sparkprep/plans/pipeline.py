@@ -128,7 +128,3 @@ def explain_formatted(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
         df._jdf.queryExecution(), "formatted"
     )
-
-
-def plan_contains(df: DataFrame, needle: str) -> bool:
-    return needle in explain_formatted(df)

@@ -765,18 +765,18 @@ def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Q·4m² = Σ_c (4m·e_c − d_c²) with e_c = intra-community edges and
     d_c = community degree sum, every product in DECIMAL(38,0)
     (billion-edge m² overflows int64 under ANSI), ONE division at the
-    end. The edge set is localCheckpoint-ed (it feeds the degree
-    aggregate, the intra-edge join AND the m count); the 1-row m frame
-    is a sanctioned broadcast cross."""
+    end. The edge set is the shared pair leaf (it feeds the intra-edge
+    join AND the m count) and the degrees are the session's shared
+    degree frame; the 1-row m frame is a sanctioned broadcast cross."""
     from sparkprep.queries import shared_frames
 
-    # the shared pair frame is already a materialized leaf, so the
-    # three consumers (degrees, intra-edge join, m count) re-scan it
-    # cheaply — the per-query localCheckpoint became redundant
+    # the shared pair frame is already a materialized leaf, so its two
+    # consumers (intra-edge join, m count) re-scan it cheaply; degrees
+    # are the session's shared degree frame
     edges = shared_frames.copurchase_edges(spark, sf_dir)
     lbl = shared_frames.lpa_labels(spark, sf_dir, rounds=_LPA_ROUNDS)
     m_row = edges.agg(F.count(F.lit(1)).alias("m"))
-    deg = graph.degrees(edges)
+    deg = shared_frames.copurchase_degrees(spark, sf_dir)
     dc = (
         deg.join(lbl, "node")
         .groupBy("community")
@@ -1523,7 +1523,7 @@ def q_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     edges = shared_frames.copurchase_edges(spark, sf_dir, a="ea", b="eb")
     adj = graph.directed_ends_capped(edges, a_col="ea", b_col="eb")
-    deg = graph.degrees(edges, "ea", "eb").select(
+    deg = shared_frames.copurchase_degrees(spark, sf_dir).select(
         F.col("node").alias("u"), F.col("d").alias("degree")
     )
     top = deg.orderBy(F.desc("degree"), F.asc("u")).limit(_LCC_TOP)
@@ -1734,7 +1734,7 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     edges = shared_frames.copurchase_edges(spark, sf_dir, a="ea", b="eb")
     adj = graph.directed_ends_capped(edges, a_col="ea", b_col="eb")
-    deg = graph.degrees(edges, "ea", "eb").select(
+    deg = shared_frames.copurchase_degrees(spark, sf_dir).select(
         F.col("node").alias("u"), F.col("d").alias("degree")
     )
     n1 = adj.select(F.col("u").alias("z"), F.col("v").alias("a"))
@@ -1833,20 +1833,22 @@ def q_k_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge-grain cohesion standard beside k_core's node-grain one
     (bridges and star spokes that survive coring are peeled here), with
     each edge's final triangle support as the readout.
-    ``graph.k_truss`` peels distributively (per-round wedge fan-out +
-    close join + map-combined support groupBy, survivor set lazily
-    checkpoint-ed) and reads its fixpoint off the round's support
-    aggregate, never a ``count()``: at k=3 no supported edge is below
-    the threshold, so the first round's supports are final and support
-    is computed once. Early exit at the fixpoint is result-identical to
+    ``graph.k_truss`` starts from the session's shared per-edge
+    triangle support (``shared_frames.copurchase_support``, the leaf
+    triangle_count also reads), peels distributively (per-round wedge
+    fan-out + close join + map-combined support groupBy, survivor set
+    lazily checkpoint-ed) and reads its fixpoint off the round's
+    support, never a ``count()``: at k=3 no supported edge is below
+    the threshold, so the round-0 supports are final and the query
+    runs no triangle enumeration of its own. Early exit at the fixpoint is result-identical to
     the oracle's fixed-depth unrolled-CTE replay because edge-peeling
     is monotone (k_core's convention). One peel round on every testdata
     generation vs depth 8 — canary-pinned in
     tests/test_headroom_canaries.py."""
     from sparkprep.queries import shared_frames
 
-    edges = shared_frames.copurchase_edges(spark, sf_dir)
-    out = graph.k_truss(edges, k=_KT_K, max_rounds=_KT_DEPTH)
+    sup = shared_frames.copurchase_support(spark, sf_dir)
+    out = graph.k_truss(sup, k=_KT_K, max_rounds=_KT_DEPTH)
     return out.select(
         F.col("u").cast("long").alias("part_a"),
         F.col("v").cast("long").alias("part_b"),

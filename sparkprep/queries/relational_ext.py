@@ -1239,11 +1239,14 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     at sf0.1 — into a ~3.5k-edge affinity graph, the standard
     market-basket construction). Edge building reuses
     ``graph.cooccurrence_pairs`` (one groupBy + row-local pair
-    explode, fan-out capped per order); the census itself is
-    ``graph.triangle_stats``' degree-oriented enumeration, which
-    bounds the wedge join by Σ out-deg² = O(m^1.5) even when a hub
-    part dominates; all five counters come out of one global
-    aggregate (the edge count is Σ degree / 2), with no cross join of
+    explode, fan-out capped per order); the census is
+    ``graph.triangle_stats`` over the session's shared per-edge
+    triangle support (``shared_frames.copurchase_support``, the
+    degree-oriented enumeration that bounds the wedge join by
+    Σ out-deg² = O(m^1.5) even when a hub part dominates; k_truss
+    reads the same leaf) and shared degree frame; all five counters
+    come out of one global aggregate (the triangle count is
+    Σ support / 3, the edge count Σ degree / 2), with no cross join of
     1-row frames. The oracle replays the textbook unoriented 3-way
     self-join — feasible at sf0.01, exactly the plan the oriented
     version exists to avoid at scale. The 64-part fan-out cap never
@@ -1252,8 +1255,10 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     silently diverge)."""
     from sparkprep.queries import shared_frames
 
-    edges = shared_frames.copurchase_edges(spark, sf_dir, a="item_a", b="item_b")
-    return graph.triangle_stats(edges)
+    return graph.triangle_stats(
+        shared_frames.copurchase_support(spark, sf_dir),
+        shared_frames.copurchase_degrees(spark, sf_dir),
+    )
 
 
 _TRIANGLE_SQL = """
@@ -1723,17 +1728,16 @@ def q_degree_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     the structure screen that says whether pagerank/k_core/two_hop
     face a power-law hub problem (it is also the input to every
     "should this join be salted" decision). Same capped edge builder
-    as k_core (support >= 2, cap-64 canary-pinned); degrees are
-    ``graph.degrees`` (one endpoint explode, one map-combined count,
-    one scan of the edge frame); the log2 bucket
+    as k_core (support >= 2, cap-64 canary-pinned); degrees are the
+    session's shared ``graph.degrees`` frame
+    (``shared_frames.copurchase_degrees``); the log2 bucket
     is EXACT integer arithmetic on both engines — bit-length via
     binary-string length (Spark ``conv(d,10,2)``, DuckDB ``bin(d)``),
     never floor(log2(double)) whose boundary ulp can flip the bucket
     cross-engine."""
     from sparkprep.queries import shared_frames
 
-    edges = shared_frames.copurchase_edges(spark, sf_dir)
-    deg = graph.degrees(edges)
+    deg = shared_frames.copurchase_degrees(spark, sf_dir)
     bucket = (F.length(F.conv(F.col("d"), 10, 2)) - 1).cast("long")
     return (
         deg.groupBy(bucket.alias("log2_bucket"))

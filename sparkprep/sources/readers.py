@@ -130,19 +130,6 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
 
 
-def read_avro(spark: SparkSession, path: str) -> DataFrame:
-    """Avro row-format scan (Kafka/streaming-ecosystem interchange).
-    Avro is an EXTERNAL Spark module (spark-avro jar) — raise a clear
-    error when it isn't deployed instead of a late AnalysisException."""
-    try:
-        return spark.read.format("avro").load(path)
-    except Exception as exc:  # noqa: BLE001 — surface the deploy hint
-        raise RuntimeError(
-            "Avro source requires the spark-avro package "
-            "(--packages org.apache.spark:spark-avro_2.13:<spark-version>)"
-        ) from exc
-
-
 def read_jdbc(
     spark: SparkSession,
     url: str,
@@ -179,24 +166,6 @@ def read_jdbc(
     for k, v in options.items():
         reader = reader.option(k, v)
     return reader.load()
-
-
-def from_rows(spark: SparkSession, data, columns) -> DataFrame:
-    """S4 — in-memory fixture (nulls.ipynb#cell2: ``spark.createDataFrame``)."""
-    return spark.createDataFrame(data, columns)
-
-
-def add_ingest_audit(df: DataFrame) -> DataFrame:
-    """Attach file provenance — input file + a stable surrogate row id.
-
-    ``monotonically_increasing_id`` is partition-local (no shuffle); the
-    reference has no row lineage at all, which is why its dedup audit
-    needs a full-width window. Having an id column makes keep-first dedup
-    deterministic and cheap at scale.
-    """
-    return df.withColumn("_ingest_file", F.input_file_name()).withColumn(
-        "_row_id", F.monotonically_increasing_id()
-    )
 
 
 def read_kafka_stream(

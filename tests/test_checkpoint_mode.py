@@ -80,6 +80,29 @@ def test_k_core_same_under_both_modes(spark, tmp_path, reliable_mode):
     assert nodes == {1, 2, 3}
 
 
+def test_shared_graph_leaves_same_under_both_modes(spark, sf_dir, reliable_mode):
+    # triangle_count, k_truss and degree_dist read the session's shared
+    # co-purchase degree and support leaves; the leaves are memoized per
+    # session, so reset before each mode or the first mode's leaf is
+    # served to the second
+    from sparkprep.queries import registry, shared_frames
+
+    queries = registry()[0]
+
+    def run():
+        shared_frames.reset()
+        return {
+            n: sorted(tuple(r) for r in queries[n](spark, sf_dir).collect())
+            for n in ("triangle_count", "k_truss", "degree_dist")
+        }
+
+    reliable = run()
+    spark.conf.set(cp.MODE_KEY, "local")
+    local = run()
+    assert reliable == local
+    assert all(reliable.values())
+
+
 
 def test_bad_mode_rejected(spark):
     spark.conf.set(cp.MODE_KEY, "turbo")

@@ -3,8 +3,10 @@ and the graph family spells each primitive once.
 
 ``graph.k_core`` and ``graph.k_truss`` stop when the round's degree or
 support aggregate has no value below the threshold, and
-``graph.triangle_stats`` reads every counter from one aggregate. These
-tests pin both halves of that:
+``graph.triangle_stats`` reads every counter from one aggregate.
+``triangle_stats`` and ``k_truss`` take the per-edge triangle support
+(``graph.edge_support``) and degree frame, not edges. These tests pin
+both halves of that:
 
 - semantics: seeded differential checks against pure-Python peels,
   across ``k`` and ``max_rounds`` (the ``max_rounds`` exit included),
@@ -15,9 +17,11 @@ tests pin both halves of that:
 
 The shared kernels (``degrees``, the uncapped ``directed_ends_capped``,
 the triangle enumeration, the BFS loop) get the same differential
-treatment through ``triangle_stats``, ``assortativity``, ``bfs_hops``
-and ``multi_bfs_hops``, and ``test_one_graph_vocabulary`` keeps their
-copies from coming back.
+treatment through ``edge_support``, ``triangle_stats``,
+``assortativity``, ``bfs_hops`` and ``multi_bfs_hops``, and
+``test_one_graph_vocabulary`` keeps their copies from coming back;
+``test_queries_read_shared_graph_leaves`` keeps co-purchase queries on
+the session's shared degree and support frames.
 
 Inputs are ``VALUES`` frames: like a file source they carry size
 statistics, so the planner broadcasts the small sides as it does on the
@@ -49,6 +53,15 @@ def _values(spark, es):
         "SELECT CAST(u AS BIGINT) AS u, CAST(v AS BIGINT) AS v "
         f"FROM VALUES {rows} AS t(u, v)"
     )
+
+
+def _support(df):
+    return graph.edge_support(df, graph.degrees(df))
+
+
+def _census(df):
+    deg = graph.degrees(df)
+    return graph.triangle_stats(graph.edge_support(df, deg), deg)
 
 
 def _random_graph(seed, n=16, p=0.25):
@@ -116,16 +129,17 @@ def test_k_truss_matches_python_peel(spark, seed):
     df = _values(spark, es)
     for k in (3, 4):
         for rounds in _ROUNDS:
-            got = sorted(tuple(r) for r in graph.k_truss(df, k=k, max_rounds=rounds).collect())
+            got = sorted(
+                tuple(r) for r in graph.k_truss(_support(df), k=k, max_rounds=rounds).collect()
+            )
             assert got == _truss_ref(es, k, rounds), (k, rounds)
 
 
 def test_empty_graph(spark):
     df = _values(spark, [])
     assert graph.k_core(df, k=2).collect() == []
-    assert graph.k_truss(df, k=3).collect() == []
-    tri = df.withColumnRenamed("u", "item_a").withColumnRenamed("v", "item_b")
-    assert tuple(graph.triangle_stats(tri).collect()[0]) == (0, 0, None, 0, None)
+    assert graph.k_truss(_support(df), k=3).collect() == []
+    assert tuple(_census(df).collect()[0]) == (0, 0, None, 0, None)
 
 
 def _jobs(spark, group, fn):
@@ -154,8 +168,10 @@ def test_k_truss_k3_computes_support_once(spark):
     tune_for_engine(spark)
     bare = _values(spark, _tailed_triangle(0))
     tailed = _values(spark, _tailed_triangle(3))
-    n_bare = _jobs(spark, "k-truss-bare", lambda: graph.k_truss(bare, k=3).collect())
-    n_tailed = _jobs(spark, "k-truss-tailed", lambda: graph.k_truss(tailed, k=3).collect())
+    n_bare = _jobs(spark, "k-truss-bare", lambda: graph.k_truss(_support(bare), k=3).collect())
+    n_tailed = _jobs(
+        spark, "k-truss-tailed", lambda: graph.k_truss(_support(tailed), k=3).collect()
+    )
     assert n_tailed <= n_bare, (n_tailed, n_bare)
 
 
@@ -200,12 +216,36 @@ def test_triangle_stats_matches_python(spark, name):
     adj = _adjacency(es)
     tri = sum(len(adj[u] & adj[v]) for u, v in es) // 3
     wedges = sum(len(n) * (len(n) - 1) // 2 for n in adj.values())
-    df = _values(spark, es).withColumnRenamed("u", "item_a").withColumnRenamed("v", "item_b")
-    row = graph.triangle_stats(df).collect()[0]
+    row = _census(_values(spark, es)).collect()[0]
     assert (row.n_nodes, row.n_edges, row.n_wedges, row.n_triangles) == (
         len(adj), len(es), wedges, tri
     )
     assert row.clustering == pytest.approx(3 * tri / wedges, abs=1e-6)
+
+
+@pytest.mark.parametrize("name", list(_GRAPHS))
+def test_edge_support_matches_python(spark, name):
+    # one row per edge in at least one triangle, with its triangle count
+    es = _GRAPHS[name]
+    got = sorted(tuple(r) for r in _support(_values(spark, es)).collect())
+    assert got == sorted((u, v, s) for (u, v), s in _supports(es).items() if s > 0)
+
+
+def test_census_truss_and_degree_dist_share_one_build(spark, sf_dir):
+    # triangle_count builds the session's degree and support frames;
+    # k_truss and degree_dist then read the leaves. Rebuilding either
+    # costs more jobs than these bounds (9 for k_truss, 3 for
+    # degree_dist at sf0.001)
+    from sparkprep.queries import registry, shared_frames
+
+    queries = registry()[0]
+    shared_frames.reset()
+    tune_for_engine(spark)
+    runs = {
+        name: _jobs(spark, f"shared-{name}", lambda n=name: queries[n](spark, sf_dir).collect())
+        for name in ("triangle_count", "k_truss", "degree_dist")
+    }
+    assert runs["k_truss"] <= 2 and runs["degree_dist"] <= 2, runs
 
 
 @pytest.mark.parametrize("name", list(_GRAPHS))
@@ -252,6 +292,7 @@ _VOCAB_FILES = (
     "sparkprep/operators/graph.py",
     "sparkprep/queries/advanced.py",
     "sparkprep/queries/relational_ext.py",
+    "scripts/scale_smoke.py",
 )
 
 
@@ -323,7 +364,8 @@ def test_one_graph_vocabulary():
     two-struct endpoint-swap explode outside ``directed_ends_capped``
     (a struct that carries a payload column, like association_rules'
     support, is not an adjacency), and a one-key ``groupBy(...).agg(count)``
-    over exploded or directed endpoints outside ``degrees``."""
+    over exploded or directed endpoints outside ``degrees``. The scale
+    panel script builds its graph inputs from the same vocabulary."""
     root = pathlib.Path(__file__).resolve().parents[1]
     found = []
     for rel in _VOCAB_FILES:
@@ -355,3 +397,19 @@ def test_one_graph_vocabulary():
                 if isinstance(node, ast.For) and fn.name == "bfs_hops":
                     found.append(f"BFS loop at {where}")
     assert not found, "graph primitives re-spelled:\n" + "\n".join(found)
+
+
+def test_queries_read_shared_graph_leaves():
+    """Co-purchase queries read the session's degree and support frames
+    (``shared_frames.copurchase_degrees`` and ``copurchase_support``):
+    no query module but ``shared_frames`` calls ``degrees`` or
+    ``edge_support`` itself, so no query rebuilds either per run."""
+    root = pathlib.Path(__file__).resolve().parents[1] / "sparkprep" / "queries"
+    found = [
+        f"{path.name}:{node.lineno}"
+        for path in sorted(root.glob("*.py"))
+        if path.name != "shared_frames.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if _is_call(node, "degrees") or _is_call(node, "edge_support")
+    ]
+    assert not found, "graph artifacts rebuilt in a query module: " + ", ".join(found)

@@ -98,6 +98,10 @@ def test_grouped_holt_winters_short_groups_emit_nothing(spark):
 # ---------------------------------------------------------------------------
 
 
+def _support(df):
+    return graph.edge_support(df, graph.degrees(df))
+
+
 def test_k_truss_peels_pendants_and_triangle_free_structure(spark):
     # triangle {1,2,3} + pendant (3,4) + triangle-free square {5,6,7,8}
     edges = [
@@ -106,7 +110,7 @@ def test_k_truss_peels_pendants_and_triangle_free_structure(spark):
         (5, 6), (6, 7), (7, 8), (5, 8),
     ]
     df = spark.createDataFrame(pd.DataFrame(edges, columns=["u", "v"]))
-    out = graph.k_truss(df, k=3, max_rounds=8).toPandas()
+    out = graph.k_truss(_support(df), k=3, max_rounds=8).toPandas()
     got = {(r.u, r.v): r.support for r in out.itertuples()}
     assert got == {(1, 2): 1, (1, 3): 1, (2, 3): 1}
 
@@ -117,11 +121,11 @@ def test_k_truss_k4_needs_two_triangles_per_edge(spark):
     # (each in one triangle) collapses everything at k=4
     edges = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4)]
     df = spark.createDataFrame(pd.DataFrame(edges, columns=["u", "v"]))
-    assert graph.k_truss(df, k=4, max_rounds=8).count() == 0
+    assert graph.k_truss(_support(df), k=4, max_rounds=8).count() == 0
     # the full K4 survives at k=4: every edge in exactly 2 triangles
     k4 = edges + [(3, 4)]
     out = graph.k_truss(
-        spark.createDataFrame(pd.DataFrame(k4, columns=["u", "v"])),
+        _support(spark.createDataFrame(pd.DataFrame(k4, columns=["u", "v"]))),
         k=4,
         max_rounds=8,
     ).toPandas()
@@ -136,7 +140,7 @@ def test_k_truss_rejects_k_below_3(spark):
     df = spark.createDataFrame(pd.DataFrame(edges, columns=["u", "v"]))
     for k in (1, 2):
         with pytest.raises(ValueError, match="k >= 3"):
-            graph.k_truss(df, k=k)
+            graph.k_truss(_support(df), k=k)
 
 
 # ---------------------------------------------------------------------------

@@ -7,7 +7,7 @@ import datetime
 
 from pyspark.sql import functions as F
 
-from sparkprep.operators.graph import triangle_stats
+from sparkprep.operators.graph import degrees, edge_support, triangle_stats
 from sparkprep.operators.temporal import window_funnel
 
 
@@ -15,11 +15,17 @@ def _edges(spark, pairs):
     return spark.createDataFrame(pairs, ["item_a", "item_b"])
 
 
+def _census(e):
+    und = e.select(F.col("item_a").alias("u"), F.col("item_b").alias("v"))
+    deg = degrees(und)
+    return triangle_stats(edge_support(und, deg), deg)
+
+
 def test_triangle_k4(spark):
     # K4: 4 nodes, 6 edges, 4 triangles, wedges = 4 * C(3,2) = 12,
     # clustering = 3*4/12 = 1.0
     k4 = [(a, b) for a in range(4) for b in range(4) if a < b]
-    row = triangle_stats(_edges(spark, k4)).collect()[0]
+    row = _census(_edges(spark, k4)).collect()[0]
     assert (row.n_nodes, row.n_edges, row.n_wedges, row.n_triangles) == (
         4, 6, 12, 4,
     )
@@ -29,7 +35,7 @@ def test_triangle_k4(spark):
 def test_triangle_pendant_and_open_wedge(spark):
     # one triangle + a pendant edge off node 2: deg = (2,2,3,1)
     # wedges = 1+1+3+0 = 5, triangles = 1, clustering = 3/5
-    row = triangle_stats(_edges(spark, [(0, 1), (1, 2), (0, 2), (2, 3)])).collect()[0]
+    row = _census(_edges(spark, [(0, 1), (1, 2), (0, 2), (2, 3)])).collect()[0]
     assert (row.n_nodes, row.n_edges, row.n_wedges, row.n_triangles) == (
         4, 4, 5, 1,
     )
@@ -39,15 +45,15 @@ def test_triangle_pendant_and_open_wedge(spark):
 def test_triangle_orientation_invariance(spark):
     # per-edge endpoint order must not matter (the operator re-orients
     # by (degree, id) internally)
-    fwd = triangle_stats(_edges(spark, [(0, 1), (1, 2), (0, 2)])).collect()[0]
-    rev = triangle_stats(_edges(spark, [(1, 0), (2, 1), (2, 0)])).collect()[0]
+    fwd = _census(_edges(spark, [(0, 1), (1, 2), (0, 2)])).collect()[0]
+    rev = _census(_edges(spark, [(1, 0), (2, 1), (2, 0)])).collect()[0]
     assert fwd == rev
     assert fwd.n_triangles == 1
 
 
 def test_triangle_no_triangles(spark):
     # path graph: wedge exists, no triangle, clustering 0.0
-    row = triangle_stats(_edges(spark, [(0, 1), (1, 2)])).collect()[0]
+    row = _census(_edges(spark, [(0, 1), (1, 2)])).collect()[0]
     assert row.n_triangles == 0
     assert row.clustering == 0.0
 
@@ -381,7 +387,7 @@ def test_peak_concurrency_single_interval(spark):
 
 def test_triangle_single_edge(spark):
     # no wedges at all: clustering NULL (0-wedge try_divide), not 0/0
-    row = triangle_stats(_edges(spark, [(0, 1)])).collect()[0]
+    row = _census(_edges(spark, [(0, 1)])).collect()[0]
     assert (row.n_nodes, row.n_edges, row.n_wedges, row.n_triangles) == (
         2, 1, 0, 0,
     )

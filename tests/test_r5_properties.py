@@ -8,7 +8,7 @@ import itertools
 
 from hypothesis import given, settings, strategies as st
 
-from sparkprep.operators.graph import assortativity, triangle_stats
+from sparkprep.operators.graph import assortativity, degrees, edge_support, triangle_stats
 from sparkprep.operators.stats import anova_f, spearman
 
 # random edge sets over up to 8 nodes (canonical a < b, deduped)
@@ -41,8 +41,9 @@ def _brute_triangles(edges):
 @settings(max_examples=15, deadline=None)
 @given(_edges_strategy)
 def test_triangle_stats_matches_brute_force(spark, edges):
-    df = spark.createDataFrame(sorted(edges), ["item_a", "item_b"])
-    row = triangle_stats(df).collect()[0]
+    df = spark.createDataFrame(sorted(edges), ["u", "v"])
+    deg = degrees(df)
+    row = triangle_stats(edge_support(df, deg), deg).collect()[0]
     n, m, w, t = _brute_triangles(edges)
     assert (row.n_nodes, row.n_edges, row.n_wedges, row.n_triangles) == (
         n, m, w, t,
