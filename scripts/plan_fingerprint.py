@@ -18,10 +18,13 @@ expressions, aliases or projection order. Use it to show a refactor
 left every plan's shape alone: dump the parent commit and the change
 with the same ``--sf-dir`` and compare.
 
-Known false positive: ``waiting_suppliers`` and ``cramers_v`` order the
-children of their ``Expand`` (and the grouping keys above it) by state
-the process built before them, so two dumps of identical code can
-disagree on them. Rebuild just those two in fresh processes to check.
+Known false positives: ``waiting_suppliers``, ``cramers_v``,
+``chi_square`` and ``two_hop_reach`` order the children of their
+``Expand`` (and the grouping keys above it, e.g. two_hop_reach's
+count-distinct Exchange keys ``(u, v, CASE…, gid)`` vs
+``(u, CASE…, v, gid)``) by state the process built before them, so two
+dumps of identical code can disagree on them. Rebuild just those in
+fresh processes to check.
 """
 
 from __future__ import annotations

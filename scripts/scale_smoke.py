@@ -2,7 +2,10 @@
 the bench scale and report wall times, rows and each op's Spark
 counters (jobs, tasks, executor CPU, shuffle write, spill), to catch
 nonlinear cliffs (quadratic pair blowups, single-partition stages,
-interpreted-lambda hotspots) that sf0.1 is too small to expose. Runs
+interpreted-lambda hotspots) that sf0.1 is too small to expose.
+``cpu=`` is executor JVM task time only: the Python workers that run
+the Arrow kernels are not in it, so compare Arrow ops on wall time.
+``rows=`` is counted on the same noop write (an observed metric). Runs
 local[<host cores>] (``SPARK_GRAFT_CPUS`` when set, else
 ``os.cpu_count()``) and prints the master it used.
 
@@ -50,22 +53,29 @@ Measured round 9 (local[32], idle host):
     all 8 width-sensitive text/dedup ops green, 1.0-10.9s — per-row
     width scales linearly (minhash over 50M shingles 10.9s).
   widevec panel (50,000 vecs x 1024 dims; clean idle run):
-    FOUND a cliff: semantic_dedup's arrow engine verified candidate
-    pairs through interpreted 1024-element dot folds — 187s. Fixed by
-    folding each (cluster, sig) bucket into one array row and GEMM-ing
-    it in a scalar Arrow pandas_udf (ships each vector once, pair
-    fan-out never crosses the JVM->Python boundary): 8.9s same panel.
-    Same fix applied to embedding_near_dup_pairs/mutual_nn_pairs
-    (engine='arrow'): mutual NN native 77.6s on 1/5 corpus vs arrow
-    79.1s on the FULL corpus (~5x per-row). quantize fidelity arrow
-    6.3s on 5x the native slice's corpus (~3x per-row); cosine top-k
-    arrow 1.1s on 5x corpus vs native 2.6s on the slice. ann_lsh
-    (corpus signature GEMM'd arrow-side, (id, sig) joined back so
-    vectors never round-trip Python): 38.6s native -> 18.7s arrow.
-    ann_ivf (corpus cell assignment GEMM argmax, same shape): 58.3s
-    native -> 29.9s arrow (residual = probe-bounded native rerank).
-    negative_pairs needs NO twin: vectors only move for the <=k*n
+    FOUND a cliff: semantic_dedup's interpreted verify folded candidate
+    pairs through 1024-element Catalyst lambdas — 187s. Fixed by
+    folding each (cluster, sig) bucket into one array row and verifying
+    it in numpy over Arrow (ships each vector once, pair fan-out never
+    crosses the JVM->Python boundary): 8.9s same panel.
+    negative_pairs needs NO kernel: vectors only move for the <=k*n
     survivors by design — 12.0s at the same width.
+  widevec panel re-measured on a 4-core host (local[4]), after the five
+  bucketed vector operators went to one path each (Arrow kernels that
+  replay the Catalyst left fold bit for bit; GEMM only prefilters).
+  Wall time; cpu= counts executor JVM time only, so it leaves out the
+  Python workers that run every Arrow kernel:
+    semantic dedup (8x2^8)   21.5s  rows=50,000
+    near-dup pairs (>=0.95)  19.2s  rows=10,450,000
+    mutual NN (2^11)         66.9s  rows=1,000 (window sort spills 1.1 GB)
+    ann_lsh (20q, 4 probes)  14.2s  rows=100
+    ann_ivf (20q, 32 cells)  27.7s  rows=100
+    quantize fidelity native 8.6s on the 10k slice vs arrow 7.5s on
+    the full corpus; cosine top-k native 5.7s on the slice vs arrow
+    3.4s on the full corpus; matryoshka 4.5s; negative mining 11.9s.
+    The corpus has only 1,000 distinct vectors (50 copies each), so
+    buckets hold thousands of exact duplicates: the verify folds each
+    distinct vector pair once.
 
 Measured round 10 (local[32]):
   streaming panel (50,000 users, 12 hourly waves x 200,000 events, 2h
@@ -92,7 +102,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from perfbench.counters import collect
@@ -107,9 +117,12 @@ VOCAB = (
 
 def _materialize(df) -> int:
     # noop sink: full materialization; a bare count() would let
-    # Catalyst prune projections and fake instant "timings"
-    df.write.format("noop").mode("overwrite").save()
-    return -1
+    # Catalyst prune projections and fake instant "timings". The row
+    # count rides the same write as an observed metric (no extra job).
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.format(
+        "noop").mode("overwrite").save()
+    return obs.get["rows"]
 
 
 def _bench(name, fn):
@@ -743,10 +756,10 @@ def longdoc_panel(spark, num_docs: int = 1_000, tokens_per_doc: int = 50_000) ->
 
 # --- round-9 panel: per-VECTOR width (high-dim embeddings) ------------------
 # The embeddings table is 64-dim; interpreted HOF lambdas cost ~1µs per
-# ELEMENT (CLAUDE.md), so a 1024-dim corpus multiplies every native
-# vector op by 16x and is where the Arrow twins earn their keep. The
-# panel prints native vs Arrow on the same data so the crossover is a
-# recorded number, not folklore.
+# ELEMENT (CLAUDE.md), so a 1024-dim corpus multiplies every Catalyst
+# vector fold by 16x. The quantize and cosine top-k twins still print
+# native vs Arrow on the same data; the bucketed operators have one
+# path each.
 
 
 def widevec_panel(spark, num_vecs: int = 50_000, dims: int = 1_024) -> None:
@@ -788,32 +801,25 @@ def widevec_panel(spark, num_vecs: int = 50_000, dims: int = 1_024) -> None:
         similarity.cosine_topk_arrow(vecs, qv)))
     import math
 
+    # the five bucketed vector operators have one path each (Arrow
+    # kernels replaying the Catalyst left fold), run once on the corpus
     planes = max(8, math.ceil(math.log2(max(num_vecs, 1) / (8 * 25))))
-    _bench(f"semantic dedup ARROW (8x2^{planes})", lambda: _materialize(
-        similarity.semantic_dedup(vecs, dim=dims, num_planes=planes, engine="arrow")))
+    _bench(f"semantic dedup (8x2^{planes})", lambda: _materialize(
+        similarity.semantic_dedup(vecs, dim=dims, num_planes=planes)))
     _bench("matryoshka stats (k=64)", lambda: _materialize(
         quantize.matryoshka_stats(vecs, "embedding", k=64)))
-    slice_planes = max(8, math.ceil(math.log2(max(num_vecs // 5, 1) / 25)))
-    _bench(f"mutual NN NATIVE (2^{slice_planes}, 1/5 corpus)", lambda: _materialize(
-        similarity.mutual_nn_pairs(
-            native_slice, num_planes=slice_planes, dim=dims)))
     nn_planes = max(8, math.ceil(math.log2(max(num_vecs, 1) / 25)))
-    _bench(f"mutual NN ARROW (2^{nn_planes}, 5x corpus)", lambda: _materialize(
-        similarity.mutual_nn_pairs(
-            vecs, num_planes=nn_planes, dim=dims, engine="arrow")))
+    _bench(f"near-dup pairs (2^{nn_planes}, >=0.95)", lambda: _materialize(
+        similarity.embedding_near_dup_pairs(
+            vecs, threshold=0.95, num_planes=nn_planes, dim=dims)))
+    _bench(f"mutual NN (2^{nn_planes})", lambda: _materialize(
+        similarity.mutual_nn_pairs(vecs, num_planes=nn_planes, dim=dims)))
     q20 = vecs.filter(F.col("vec_id") < 20)
-    _bench(f"ann_lsh NATIVE (20q, 2^{nn_planes}, 4 probes)", lambda: _materialize(
+    _bench(f"ann_lsh (20q, 2^{nn_planes}, 4 probes)", lambda: _materialize(
         similarity.ann_lsh_topk(
             vecs, q20, num_planes=nn_planes, dim=dims, num_probes=4)))
-    _bench("ann_lsh ARROW (same panel)", lambda: _materialize(
-        similarity.ann_lsh_topk(
-            vecs, q20, num_planes=nn_planes, dim=dims, num_probes=4,
-            engine="arrow")))
-    _bench("ann_ivf NATIVE (20q, 32 cells)", lambda: _materialize(
+    _bench("ann_ivf (20q, 32 cells)", lambda: _materialize(
         similarity.ann_ivf_topk(vecs, q20, num_centroids=32, num_probes=2)))
-    _bench("ann_ivf ARROW (same panel)", lambda: _materialize(
-        similarity.ann_ivf_topk(
-            vecs, q20, num_centroids=32, num_probes=2, engine="arrow")))
     labeled = vecs.withColumn("label", F.pmod("vec_id", 16))
     _bench("negative mining (2000 buckets)", lambda: _materialize(
         similarity.negative_pairs(labeled, k=3, buckets=2000)))

@@ -1,17 +1,27 @@
-"""Similarity search over embedding columns (north-star extension ops):
-brute-force cosine top-k as correctness baseline, LSH-bucketed and
-IVF-style variants as the scale paths, plus embedding-cosine near-dup.
+"""Similarity search over embedding columns: brute-force cosine top-k
+as the correctness baseline, LSH-bucketed and IVF-style top-k as the
+scale paths, plus embedding-cosine near-dup, mutual NN and SemDeDup.
 
-Vector math strategies, by scale:
-- **native** (``F.zip_with`` + ``F.aggregate``): pure Catalyst, fully
-  engine-reproducible (oracle-checkable), fine up to ~10^5 pairs.
-  Higher-order lambdas run interpreted, so this is NOT the 100 TB path.
-- **arrow** (``mapInPandas`` + numpy): vectorized BLAS dot products over
-  Arrow batches against a broadcast query matrix — the scale path for
-  brute force; ~100x the native throughput.
-- **lsh / ivf**: prune the corpus before any exact math — the real
-  100 TB answer: candidates via random-hyperplane buckets (or coarse
-  centroids), exact rerank only within buckets.
+One vector path per operator. Spark plans the scans, the bucket joins
+and the shuffles; numpy over Arrow batches does the dense math of the
+corpus side (:func:`corpus_kernel`: signatures, IVF cells, SemDeDup
+clusters, norms, unit vectors) and of the bucket verify
+(:func:`_bucket_pairs`). Every double that reaches an output or a
+comparison is a LEFT FOLD from +0.0 over the double products in index
+order (:func:`_fold_dot`) — the arithmetic of the Catalyst helpers
+:func:`dot_native`, :func:`norm_native` and :func:`hyperplane_dots` —
+so the Arrow kernels and the Catalyst expressions agree bit for bit
+and the DuckDB oracles replay either. A GEMM (``a @ b.T``) sums in
+blocked order and moves the last bits of most dots; it only ever
+PREFILTERS candidates, with slack, and its values are never kept.
+Rounding (``F.round``, HALF_UP) and thresholds stay in Spark.
+
+The query side stays Catalyst expressions (signature and multi-probe
+margins from :func:`hyperplane_dots`, IVF probe cells from
+:func:`ivf_cell_expr`), and so does the per-candidate cosine rerank
+(:func:`cosine_from_norms`): both are bounded by the query panel.
+:func:`cosine_topk_arrow` is a standalone GEMM twin of
+:func:`cosine_topk_native` and makes no bit-exact claim.
 """
 
 from __future__ import annotations
@@ -25,17 +35,15 @@ from pyspark.sql import functions as F
 from sparkprep.checkpointing import lazy_checkpoint
 
 
-#: max vectors per folded bucket row in the Arrow verify stages — at
+#: max vectors per folded bucket row in the Arrow verify stage — at
 #: 1024-dim doubles one block row is <= 4096 * 8 KiB = 32 MiB, safely
 #: inside executor memory and Arrow record-size limits.
 BUCKET_BLOCK_CAP = 4096
 
-
 def _id_ddl(df: DataFrame, id_col: str) -> str:
     """DDL type of the id column, interpolated into every Arrow
-    mapInPandas / pandas_udf schema string — the arrow twins must not
-    silently assume bigint ids when the native engine handles any
-    orderable id type (ADVICE r9)."""
+    mapInPandas schema string — the kernels must not silently assume
+    bigint ids when the caller's ids are any orderable type."""
     return df.schema[id_col].dataType.simpleString()
 
 
@@ -49,25 +57,6 @@ def dot_native(a, b) -> Column:
 def norm_native(a) -> Column:
     return F.sqrt(
         F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
-    )
-
-
-def _unit_vector(vec_col, norm_col) -> Column:
-    """x_i / norm, with the norm evaluated ONCE per row. A plain
-    ``transform(v, x -> try_divide(x, __n))`` is a trap: CollapseProject
-    inlines a single-use ``__n`` alias into the lambda body, and
-    interpreted HOFs then re-evaluate the whole norm fold PER ELEMENT
-    (64 folds per 64-dim vector — 7x measured on the unit stage).
-    Routing the norm through ``array_repeat`` keeps it an argument
-    expression (one evaluation per row) no matter what the optimizer
-    collapses; the lambda touches only its own variables. try_divide:
-    a zero-norm vector must yield NULL units, not an ANSI
-    DIVIDE_BY_ZERO that kills the corpus-wide job. Values are
-    bit-identical to the transform form."""
-    return F.zip_with(
-        vec_col,
-        F.array_repeat(norm_col, F.size(vec_col)),
-        lambda x, n: F.try_divide(x.cast("double"), n),
     )
 
 
@@ -226,7 +215,7 @@ def hyperplane_dots(vec_col, planes: np.ndarray) -> Column:
 def signature_from_dots(dots_col, num_planes: int) -> Column:
     """Bucket id from a MATERIALIZED dots column (pass ``F.col``, not
     the dots expression — interpreted lambdas re-evaluate embedded
-    trees, see the near-dup norm note below)."""
+    trees per element)."""
     bits = [
         F.when(dots_col[b] >= 0, F.lit(1 << b).cast("long")).otherwise(
             F.lit(0).cast("long")
@@ -236,23 +225,102 @@ def signature_from_dots(dots_col, num_planes: int) -> Column:
     return sum(bits)
 
 
-def hyperplane_signature(vec_col, planes: np.ndarray) -> Column:
-    """Random-hyperplane LSH signature: bit b = sign(<v, plane_b>).
-    Planes are plan literals (seeded numpy), so signatures are
-    deterministic across runs and engines."""
-    bits = []
-    for b, plane in enumerate(planes):
-        dot = F.aggregate(
-            F.zip_with(
-                vec_col,
-                F.array(*[F.lit(float(x)) for x in plane]),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(dot >= 0, F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long")))
-    return sum(bits)
+def _fold_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Dot products over the FIRST axis of two broadcastable float64
+    arrays shaped ``(d, ...)``: +0.0, then each product added in index
+    order — bit-identical to :func:`dot_native` and
+    :func:`hyperplane_dots` (and, on ``(v, v)``, to the fold under
+    :func:`norm_native`). One vectorized step per coordinate, so the
+    other axes broadcast: ``(d, k, 1)`` against ``(d, 1, n)`` gives the
+    ``(k, n)`` dots of k planes with n vectors (long axis last: 3x
+    faster than ``(n, k)`` at 1024 dims), without a
+    ``n x k x d`` temporary. Never GEMM or ``np.sum`` here: both
+    re-associate, and the last bits move (70% of plane dots at 64
+    dims, 95% at 1024)."""
+    acc = np.zeros(np.broadcast_shapes(a.shape[1:], b.shape[1:]))
+    for x, y in zip(a, b):
+        acc += x * y
+    return acc
+
+
+def _fold_pairs(vt: np.ndarray, ia: np.ndarray, ib: np.ndarray) -> np.ndarray:
+    """:func:`_fold_dot` of the column pairs ``(vt[:, ia], vt[:, ib])``
+    of a ``(d, u)`` matrix, each DISTINCT column folded once: over the
+    dense (columns of ia) x (columns of ib) grid when that grid is at
+    most 8x the pairs (a near-dup bucket: most pairs are candidates),
+    else pair by pair in chunks of 4096 (scattered candidates)."""
+    u = vt.shape[1]
+    rows = np.flatnonzero(np.bincount(ia, minlength=u))
+    cols = np.flatnonzero(np.bincount(ib, minlength=u))
+    if len(rows) * len(cols) <= 8 * len(ia):
+        rpos, cpos = np.empty(u, dtype=np.int64), np.empty(u, dtype=np.int64)
+        rpos[rows], cpos[cols] = np.arange(len(rows)), np.arange(len(cols))
+        return _fold_dot(vt[:, rows, None], vt[:, None, cols])[rpos[ia], cpos[ib]]
+    out = np.empty(len(ia))
+    for lo in range(0, len(ia), 4096):
+        out[lo:lo + 4096] = _fold_dot(vt[:, ia[lo:lo + 4096]], vt[:, ib[lo:lo + 4096]])
+    return out
+
+
+def corpus_kernel(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    planes: np.ndarray | None = None,
+    cells: np.ndarray | None = None,
+    unit: bool = False,
+) -> DataFrame:
+    """The corpus side of every bucketed vector operator: ONE
+    ``mapInPandas`` pass, every value from :func:`_fold_dot`, so each
+    is bit-identical to its Catalyst spelling. Emits ``(id, __cn)``,
+    ``__cn`` = sqrt(fold(v, v)) as :func:`norm_native`, plus
+
+    - ``__sig`` (given ``planes``): bit b set iff fold(v, plane_b) >= 0,
+      as :func:`signature_from_dots`;
+    - ``__cell`` (given ``cells``): the FIRST maximum of fold(v, cell_c)
+      — the lowest-index tie-break of ``ivf_cell_expr``'s
+      ``array_sort((-dot, cid))`` and of SemDeDup's CASE chain;
+    - ``__unit`` (``unit=True``): v / ``__cn``, NULL at zero norm (a
+      zero vector pairs with nothing, as its NULL cosine did).
+
+    Only ``unit`` sends vectors back to the JVM; the ANN operators join
+    ``(id, __sig | __cell, __cn)`` back to the corpus by id, so ids must
+    be unique. A NULL vector becomes a NaN row: its dots fail every
+    comparison (signature 0, cell 0) and its norm and unit are NULL.
+    The dense math is O(rows x (planes + cells) x dim) numpy work per
+    Arrow batch, where the interpreted Catalyst folds cost ~1µs per
+    element."""
+    width = (planes if planes is not None else cells).shape[1]
+    schema = f"{id_col} {_id_ddl(df, id_col)}, __cn double"
+    schema += ", __sig long" if planes is not None else ""
+    schema += ", __cell long" if cells is not None else ""
+    schema += ", __unit array<double>" if unit else ""
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        nan_row = np.full(width, np.nan)
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            mat = np.asarray(
+                [nan_row if v is None else v for v in pdf[vec_col]], dtype=np.float64
+            )
+            vt = np.ascontiguousarray(mat.T)  # (d, n): one row per coordinate
+            norm = np.sqrt(_fold_dot(vt, vt))
+            out = {id_col: pdf[id_col].to_numpy(), "__cn": norm}
+            if planes is not None:
+                bits = np.left_shift(1, np.arange(len(planes), dtype=np.int64))
+                dots = _fold_dot(planes.T[:, :, None], vt[:, None, :])  # (k, n)
+                out["__sig"] = bits @ (dots >= 0)
+            if cells is not None:
+                dots = _fold_dot(cells.T[:, :, None], vt[:, None, :])
+                out["__cell"] = np.argmax(dots, axis=0)
+            if unit:
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    units = mat / norm[:, None]
+                out["__unit"] = [u if n > 0 else None for u, n in zip(units, norm)]
+            yield pd.DataFrame(out)
+
+    return df.select(id_col, vec_col).mapInPandas(kernel, schema)
 
 
 def ann_lsh_topk(
@@ -266,7 +334,6 @@ def ann_lsh_topk(
     seed: int = 42,
     round_to: int = 4,
     num_probes: int = 1,
-    engine: str = "native",
 ) -> DataFrame:
     """Approximate top-k: random-hyperplane bucket join, exact cosine
     rerank only inside the probed buckets.
@@ -284,47 +351,21 @@ def ann_lsh_topk(
     WITHOUT touching the corpus side: only the (tiny, broadcast)
     query side explodes.
 
-    ``engine='arrow'`` vectorizes the CORPUS signature (the wide-vector
-    cost center: num_planes x dims interpreted evals per row — 38.6s
-    at 50k x 1024-dim measured) as one GEMM per Arrow batch emitting
-    only (id, sig); the vectors themselves never cross the JVM→Python
-    boundary — the signature joins back to the corpus by id. The
-    rerank (probed buckets only) and query side stay native: both are
-    panel-bounded.
+    The corpus signature and norm come from :func:`corpus_kernel`
+    (num_planes x dim products per row, numpy over Arrow batches), as
+    ``(id, __sig, __cn)`` joined back to the corpus by id — the vectors
+    never round-trip through Python. The query side and the rerank
+    inside the probed buckets are Catalyst folds, bounded by the
+    query panel.
     """
     from pyspark.sql.window import Window
 
     rng = np.random.RandomState(seed)
     planes = rng.normal(size=(num_planes, dim))
-
-    if engine == "arrow":
-        pmat = planes.T
-        bits = np.power(2.0, np.arange(num_planes))
-
-        def corpus_sig(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                mat = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-                sig = (((mat @ pmat) >= 0) @ bits).astype(np.int64)
-                yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "__sig": sig})
-
-        sigs = emb_df.select(id_col, vec_col).mapInPandas(
-            corpus_sig, f"{id_col} {_id_ddl(emb_df, id_col)}, __sig long"
-        )
-        c = emb_df.select(
-            F.col(id_col), F.col(vec_col).alias("__cv")
-        ).join(sigs, id_col).select(
-            F.col(id_col).alias("neighbor_id"), "__cv", "__sig",
-            norm_native(F.col("__cv")).alias("__cn"),
-        )
-    else:
-        c = emb_df.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("__cv"),
-            hyperplane_signature(F.col(vec_col), planes).alias("__sig"),
-            norm_native(F.col(vec_col)).alias("__cn"),
-        )
+    sigs = corpus_kernel(emb_df, id_col, vec_col, planes=planes)
+    c = emb_df.select(F.col(id_col), F.col(vec_col).alias("__cv")).join(
+        sigs, id_col
+    ).select(F.col(id_col).alias("neighbor_id"), "__cv", "__sig", "__cn")
     # dots materialized in their own projection, signature + probe set
     # derived from the column (not the expression) — HOF re-eval trap.
     # Norms ride each join side so the per-pair rerank is ONE dot fold
@@ -413,9 +454,8 @@ def ivf_fit_centroid_units(
     this stays off the scale path. Centroids are pre-normalized
     DRIVER-side: ranking cells by dot(v, c/|c|) orders identically to
     cosine(v, c) — the 1/|v| factor is constant across cells — so the
-    per-row assignment costs num_centroids interpreted dot-folds
-    instead of dot + 2 norms each (48 → 16 folds/row measured as the
-    ann_ivf hot spot)."""
+    per-row assignment (corpus and probes) costs num_centroids dot folds
+    instead of dot + 2 norms each."""
     sample = [
         [float(x) for x in r[1]]
         for r in emb_df.select(id_col, vec_col)
@@ -472,17 +512,16 @@ def ann_ivf_topk(
     round_to: int = 4,
     lloyd_iterations: int = 2,
     sample_size: int = 1024,
-    engine: str = "native",
 ) -> DataFrame:
     """IVF-style ANN: coarse-quantize the corpus to Lloyd-refined
     centroids, search only the query's ``num_probes`` nearest cells.
 
-    ``engine='arrow'`` vectorizes the CORPUS cell assignment (the
-    wide-vector cost center: num_centroids x dims interpreted evals
-    per row — 58.3s at 50k x 1024-dim, 32 cells measured) as one GEMM
-    argmax per Arrow batch emitting only (id, cell); vectors never
-    cross the Python boundary (the cell frame joins back by id, ann_lsh's
-    shape). Query side and rerank stay native — both panel-bounded.
+    The corpus cell (first-max argmax of the folded centroid dots) and
+    norm come from :func:`corpus_kernel` as ``(id, __cell, __cn)``
+    joined back to the corpus by id — ann_lsh's shape, and the same
+    kernel ``pipelines.ann_index`` persists cells with. The query
+    side's probe cells are :func:`ivf_cell_expr` and the rerank is a
+    Catalyst fold, both bounded by the query panel.
 
     Centroids: a deterministic pseudo-random corpus sample (hash-order
     ``limit``) refined by ``lloyd_iterations`` rounds of spherical
@@ -507,57 +546,15 @@ def ann_ivf_topk(
         lloyd_iterations=lloyd_iterations,
         sample_size=sample_size,
     )
-    centroids = [(j, [float(x) for x in cunit[j]]) for j in range(num_centroids)]
-
-    def cell_scores(vec):
-        return [
-            (cid, dot_native(vec, F.array(*[F.lit(x) for x in cvec])))
-            for cid, cvec in centroids
-        ]
-
-    def top_cells(vec, n):
-        scored = F.array(
-            *[F.struct((-s).alias("neg"), F.lit(cid).cast("long").alias("cid"))
-              for cid, s in cell_scores(vec)]
-        )
-        return F.slice(F.array_sort(scored), 1, n)
-
-    if engine == "arrow":
-        cu_t = cunit.T
-
-        def corpus_cells(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                mat = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-                # argmax takes the FIRST maximum — the same smallest-cid
-                # tie-break as the native array_sort((-dot, cid)) chain
-                cell = np.argmax(mat @ cu_t, axis=1).astype(np.int64)
-                yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "__cell": cell})
-
-        cells = emb_df.select(id_col, vec_col).mapInPandas(
-            corpus_cells, f"{id_col} {_id_ddl(emb_df, id_col)}, __cell long"
-        )
-        c = emb_df.select(F.col(id_col), F.col(vec_col).alias("__cv")).join(
-            cells, id_col
-        ).select(
-            F.col(id_col).alias("neighbor_id"), "__cv", "__cell",
-            norm_native(F.col("__cv")).alias("__cn"),
-        )
-    else:
-        c = emb_df.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("__cv"),
-            top_cells(F.col(vec_col), 1)[0]["cid"].alias("__cell"),
-            norm_native(F.col(vec_col)).alias("__cn"),
-        )
+    cells = corpus_kernel(emb_df, id_col, vec_col, cells=cunit)
+    c = emb_df.select(F.col(id_col), F.col(vec_col).alias("__cv")).join(
+        cells, id_col
+    ).select(F.col(id_col).alias("neighbor_id"), "__cv", "__cell", "__cn")
     q = query_df.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("__qv"),
         norm_native(F.col(vec_col)).alias("__qn"),
-        F.explode(
-            F.transform(top_cells(F.col(vec_col), num_probes), lambda s: s["cid"])
-        ).alias("__cell"),
+        F.explode(ivf_cell_expr(cunit, F.col(vec_col), num_probes)).alias("__cell"),
     )
     scored = (
         c.join(F.broadcast(q), "__cell")
@@ -593,92 +590,53 @@ def embedding_near_dup_pairs(
     dim: int = 64,
     seed: int = 42,
     round_to: int = 4,
-    engine: str = "native",
     block_cap: int = BUCKET_BLOCK_CAP,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs (id_a < id_b, cosine >= threshold)
-    via hyperplane-bucket self-join: vectors with cosine ~1 almost always
-    share all sign bits, so the exact check runs only within buckets.
+    via hyperplane buckets: vectors with cosine ~1 almost always share
+    all sign bits, so the exact check runs only within buckets.
 
-    ``engine='native'`` is the bit-reproducible oracle path.
-    ``engine='arrow'`` is the wide-vector scale path (semantic_dedup's
-    shape): signature + unit come from one GEMM per Arrow batch, and
-    each signature bucket folds into ONE ordered array row whose pair
-    cosines a scalar Arrow pandas_udf GEMMs block-wise — every vector
-    crosses the JVM→Python boundary once; the per-pair dot never runs
-    interpreted (the 1µs/element HOF cost makes 1024-dim pair folds the
-    dominant term: mutual NN at 10k x 1024d measured 57.4s native →
-    see scale_smoke widevec). Differences vs native are the documented
-    ~1e-16 tolerance class (GEMM vs left-fold summation on near-zero
-    plane projections; np.round half-even vs F.round half-up)."""
-    rng = np.random.RandomState(seed)
-    planes = rng.normal(size=(num_planes, dim))
-    if engine == "arrow":
-        return _near_dup_pairs_arrow(
-            emb_df, id_col, vec_col, float(threshold), planes, int(round_to),
-            block_cap=block_cap,
-        )
-    # Normalize ONCE per vector (materialized alongside the signature),
-    # so the per-pair work is a single dot product instead of
-    # dot + 2 norms — interpreted higher-order lambdas are the cost
-    # center here, and pairs >> vectors inside any hot bucket.
-    # The norm must not appear INSIDE a lambda body: CollapseProject
-    # inlines a single-use alias into the consuming projection even
-    # across an intermediate select, so ``transform(v, x -> x / __n)``
-    # becomes ``transform(v, x -> x / sqrt(aggregate(v, ...)))`` — the
-    # interpreted fold re-evaluated per ELEMENT (64 norms per vector;
-    # 7x measured on the unit stage). ``_unit_vector`` routes the norm
-    # through ``array_repeat`` so it is an argument evaluated once per
-    # row, collapse or not.
-    staged = emb_df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        norm_native(F.col(vec_col)).alias("__n"),
+    :func:`corpus_kernel` gives each vector its signature and unit
+    vector in one Arrow pass; :func:`_bucket_pairs` folds each
+    signature bucket into bounded array rows and emits the candidate
+    pairs with their exact folded unit dot, so every vector crosses the
+    JVM→Python boundary once and no per-pair fold runs interpreted (the
+    ~1µs/element HOF cost made 1024-dim pair folds the dominant term).
+    ``cosine = F.round(dot, round_to)`` and the threshold run in Spark.
+    Zero-norm vectors have no unit vector and pair with nothing.
+    ``block_cap`` bounds the vectors in one folded row."""
+    planes = np.random.RandomState(seed).normal(size=(num_planes, dim))
+    # two consumers in the bucket fold (sizes, then members): cut once
+    sig = corpus_kernel(
+        emb_df, id_col, vec_col, planes=planes, unit=True
+    ).transform(lazy_checkpoint)
+    pairs = _bucket_pairs(sig, ["__sig"], id_col, threshold, round_to, block_cap).select(
+        "id_a", "id_b", F.round("__raw", round_to).alias("cosine")
     )
-    unit = _unit_vector(F.col(vec_col), F.col("__n"))
-    sig = staged.select(
-        F.col(id_col),
-        unit.alias("__unit"),
-        hyperplane_signature(F.col(vec_col), planes).alias("__sig"),
-    )
-    # the self-join consumes sig as BOTH sides under different aliases,
-    # so the exchanges never canonicalize equal and the whole
-    # normalize+signature subtree (num_planes interpreted plane dots
-    # per vector) would execute twice — truncate lineage once here
-    # (same family as the unions-of-selects re-execution landmine)
-    sig = sig.transform(lazy_checkpoint)
-    a = sig.select(F.col(id_col).alias("id_a"), F.col("__unit").alias("__va"), "__sig")
-    b = sig.select(F.col(id_col).alias("id_b"), F.col("__unit").alias("__vb"), "__sig")
-    return (
-        a.join(b, "__sig")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(dot_native(F.col("__va"), F.col("__vb")), round_to).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
+    # a unit dot never rounds below -1: an open threshold filters nothing
+    # (and would re-evaluate the BigDecimal round once more per pair)
+    return pairs if threshold <= -1 else pairs.filter(F.col("cosine") >= threshold)
 
 
 def _blocked_bucket_fold(
     frame: DataFrame, keys: list[str], id_col: str, cap: int = BUCKET_BLOCK_CAP
 ) -> DataFrame:
-    """Fold bucket members into BOUNDED array rows for the Arrow GEMM
-    verify stages (``_near_dup_pairs_arrow``, ``semantic_dedup``'s
-    arrow path).
+    """Fold bucket members into BOUNDED array rows for the Arrow verify
+    (:func:`_bucket_pairs`): ``(__gi, __gj, __i, __u, __b)``, the
+    member ids, unit vectors and block tags as aligned arrays.
 
     The unblocked form collected an entire ``keys`` bucket into ONE
     collect_list row: correct until a degenerate corpus (many
     near-identical vectors sharing a signature) produces a single row
-    of n x dim x 8 bytes and OOMs the executor (ADVICE r9). Here each
+    of n x dim x 8 bytes and OOMs the executor. Here each
     member is salted into ``ceil(n/cap)`` blocks by a deterministic id
     hash and emitted once per block-PAIR, so every unordered member
     pair co-occurs in exactly one ``(gi <= gj)`` group and a folded row
     holds at most ``2*cap`` vectors. Any bucket <= ``cap`` degenerates
-    to the original single fold (one (0,0) group, fan-out 1) — the
-    per-row block tag ``b`` tells the verify UDF which side of a cross
-    group a member belongs to.
+    to a single fold (one (0,0) group, fan-out 1) — the block tag
+    ``__b`` tells the verify which side of a cross group a member
+    belongs to. Member order inside a row is whatever the shuffle
+    delivered: the verify orders each pair by id itself.
 
     Bucket sizes come from a VECTOR-FREE aggregate joined back on the
     keys (AQE broadcasts the tiny sizes frame), NOT a window count: a
@@ -720,125 +678,100 @@ def _blocked_bucket_fold(
         F.col("__g.gj").alias("__gj"),
     )
     return exploded.groupBy(*keys, "__gi", "__gj").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col(id_col).alias("i"),
-                    F.col("__unit").alias("u"),
-                    F.col("__blk").alias("b"),
-                )
+        F.collect_list(
+            F.struct(
+                F.col(id_col).alias("i"),
+                F.col("__unit").alias("u"),
+                F.col("__blk").alias("b"),
             )
-        ).alias("__bucket")
+        ).alias("__m")
+    ).select(
+        "__gi",
+        "__gj",
+        F.col("__m.i").alias("__i"),
+        F.col("__m.u").alias("__u"),
+        F.col("__m.b").alias("__b"),
     )
 
 
-def _near_dup_pairs_arrow(
-    emb_df: DataFrame,
+def _bucket_pairs(
+    frame: DataFrame,
+    keys: list[str],
     id_col: str,
-    vec_col: str,
     threshold: float,
-    planes: np.ndarray,
     round_to: int,
-    block_cap: int = BUCKET_BLOCK_CAP,
+    cap: int = BUCKET_BLOCK_CAP,
+    best_b: bool = False,
 ) -> DataFrame:
-    """Arrow twin of the near-dup bucket self-join (see
-    embedding_near_dup_pairs docstring). Zero-norm vectors get NaN
-    units → NaN pair cosine → fails every >= threshold, matching the
-    native NULL-cosine semantics."""
-    from pyspark.sql.functions import pandas_udf
+    """The one bucket verify: candidate pairs ``(id_a < id_b, __raw)``
+    among the non-NULL ``__unit`` rows of ``frame`` that share ``keys``,
+    ``__raw`` the EXACT folded dot of their unit vectors (bit-identical
+    to ``dot_native`` on the same units).
 
-    pmat = planes.T
-    bits = np.power(2.0, np.arange(planes.shape[0]))
+    Each folded bucket row (:func:`_blocked_bucket_fold`) is GEMM-ed in
+    256-row blocks, a PREFILTER only: a pair is a candidate when its
+    GEMM value is at least ``threshold - 10**-round_to``. That slack
+    covers HALF_UP rounding (a pair with ``round(dot, round_to) >=
+    threshold`` has ``dot >= threshold - 0.5 * 10**-round_to``) with
+    room for GEMM's ~1e-13 error on unit vectors. Each candidate is
+    then re-dotted with :func:`_fold_pairs` over the row's DISTINCT
+    unit vectors (identical vectors fold to identical bits, so a bucket
+    of duplicates folds each distinct pair once); callers keep
+    ``F.round(__raw, round_to) >= threshold`` in Spark, so rounding and
+    the comparison are the Catalyst ones. With ``best_b`` each GEMM
+    block keeps only the largest ``__raw`` per ``id_b`` (columns
+    ``id_b, __raw``): HALF_UP rounding is monotone, so that row passes
+    a ``F.round(__raw) >= threshold`` test iff some pair does, and a
+    bucket of near-duplicates ships bucket-many rows, not pair-many.
+    Lineage-cut ``frame`` first (the fold reads it twice)."""
+    idt = _id_ddl(frame, id_col)
+    floor = float(threshold) - 10.0 ** -int(round_to)
+    folded = _blocked_bucket_fold(
+        frame.filter(F.col("__unit").isNotNull()), keys, id_col, cap=cap
+    )
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                unit = mat / norms  # 0-norm rows → NaN units
-            sig = (((mat @ pmat) >= 0) @ bits).astype(np.int64)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "__unit": list(unit),
-                    "__sig": sig,
-                }
-            )
+            out = []
+            for gi, gj, ids, units, blk in zip(
+                pdf["__gi"], pdf["__gj"], pdf["__i"], pdf["__u"], pdf["__b"]
+            ):
+                mat = np.ascontiguousarray(np.stack(units))
+                rowkey = mat.view(np.dtype((np.void, mat.shape[1] * 8))).ravel()
+                _, first, inv = np.unique(rowkey, return_index=True, return_inverse=True)
+                vt = np.ascontiguousarray(mat[first].T)  # (d, distinct vectors)
+                if gi == gj:
+                    left = right = np.arange(len(ids))
+                else:  # cross-block: left (b == gi) x right (b == gj)
+                    left, right = np.flatnonzero(blk == gi), np.flatnonzero(blk == gj)
+                lmat, rmat = mat[left], mat[right]
+                # 256-row GEMM blocks: memory bounds at (256 x n), never n^2
+                for lo in range(0, len(left), 256):
+                    cand = lmat[lo:lo + 256] @ rmat.T >= floor
+                    if gi == gj:  # each unordered pair once
+                        cand &= np.arange(lo, lo + len(cand))[:, None] < np.arange(len(right))
+                    rr, cc = np.nonzero(cand)
+                    if not len(rr):
+                        continue
+                    la, rb = left[lo + rr], right[cc]
+                    raw = _fold_pairs(vt, inv[la], inv[rb])
+                    swap = ids[la] > ids[rb]
+                    if best_b:
+                        best = np.full(len(ids), -np.inf)
+                        np.maximum.at(best, np.where(swap, la, rb), raw)
+                        hit = np.flatnonzero(best > -np.inf)
+                        out.append(pd.DataFrame({"id_b": ids[hit], "__raw": best[hit]}))
+                        continue
+                    out.append(pd.DataFrame({
+                        "id_a": np.where(swap, ids[rb], ids[la]),
+                        "id_b": np.where(swap, ids[la], ids[rb]),
+                        "__raw": raw,
+                    }))
+            if out:
+                yield pd.concat(out, ignore_index=True)
 
-    idt = _id_ddl(emb_df, id_col)
-    sig_df = emb_df.select(id_col, vec_col).mapInPandas(
-        assign, f"{id_col} {idt}, __unit array<double>, __sig long"
-    )
-    # two consumers (the bucket-size aggregate + the fold itself) —
-    # without the lineage cut the signature GEMM runs twice
-    sig_df = sig_df.transform(lazy_checkpoint)
-
-    @pandas_udf(f"array<struct<a: {idt}, b: {idt}, c: double>>")
-    def _bucket_pairs(
-        buckets: pd.Series, gis: pd.Series, gjs: pd.Series
-    ) -> pd.Series:
-        out = []
-        for bucket, gi, gj in zip(buckets, gis, gjs):
-            if gi == gj:
-                # within-block: ids sorted by the fold, so upper
-                # triangle gives id_a < id_b directly
-                n = len(bucket)
-                if n < 2:
-                    out.append([])
-                    continue
-                ids = [r["i"] for r in bucket]
-                mat = np.asarray([np.asarray(r["u"]) for r in bucket])
-                rows_out = []
-                # block the GEMM: memory bounds at (256 x n), never n^2
-                for lo in range(0, n, 256):
-                    hi = min(lo + 256, n)
-                    with np.errstate(invalid="ignore"):
-                        sims = np.round(mat[lo:hi] @ mat.T, round_to)
-                        rr, cc = np.nonzero(sims >= threshold)
-                    keep = (rr + lo) < cc
-                    for r_, c_ in zip((rr[keep] + lo).tolist(), cc[keep].tolist()):
-                        rows_out.append(
-                            {"a": ids[r_], "b": ids[c_], "c": float(sims[r_ - lo, c_])}
-                        )
-                out.append(rows_out)
-                continue
-            # cross-block: left (b == gi) x right (b == gj) full GEMM;
-            # ids interleave across blocks, so order each pair explicitly
-            left = [r for r in bucket if r["b"] == gi]
-            right = [r for r in bucket if r["b"] == gj]
-            if not left or not right:
-                out.append([])
-                continue
-            lids = [r["i"] for r in left]
-            rids = [r["i"] for r in right]
-            lmat = np.asarray([np.asarray(r["u"]) for r in left])
-            rmat = np.asarray([np.asarray(r["u"]) for r in right])
-            rows_out = []
-            for lo in range(0, len(left), 256):
-                hi = min(lo + 256, len(left))
-                with np.errstate(invalid="ignore"):
-                    sims = np.round(lmat[lo:hi] @ rmat.T, round_to)
-                    rr, cc = np.nonzero(sims >= threshold)
-                for r_, c_ in zip(rr.tolist(), cc.tolist()):
-                    li, ri = lids[r_ + lo], rids[c_]
-                    a, b = (li, ri) if li < ri else (ri, li)
-                    rows_out.append({"a": a, "b": b, "c": float(sims[r_, c_])})
-            out.append(rows_out)
-        return pd.Series(out)
-
-    folded = _blocked_bucket_fold(sig_df, ["__sig"], id_col, cap=block_cap)
-    return (
-        folded.select(
-            F.explode(_bucket_pairs("__bucket", "__gi", "__gj")).alias("__p")
-        )
-        .select(
-            F.col("__p.a").alias("id_a"),
-            F.col("__p.b").alias("id_b"),
-            F.col("__p.c").alias("cosine"),
-        )
-    )
+    pair = f"id_b {idt}, __raw double" if best_b else f"id_a {idt}, id_b {idt}, __raw double"
+    return folded.mapInPandas(verify, pair)
 
 
 def grouped_centroids(
@@ -895,96 +828,6 @@ def grouped_centroids(
     )
 
 
-def _semantic_assign_native(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    cents: np.ndarray,
-    planes: np.ndarray,
-    num_clusters: int,
-) -> DataFrame:
-    """Oracle-reproducible assignment: left-fold dots, first-k-wins
-    argmax CASE chain (ties to lowest index, mirrored in SQL)."""
-    # Norm evaluated once per row via _unit_vector — NOT referenced
-    # inside a transform lambda, where CollapseProject inlining would
-    # re-evaluate the fold per element (see _unit_vector docstring).
-    staged = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        norm_native(F.col(vec_col)).alias("__n"),
-    )
-    unit = _unit_vector(F.col(vec_col), F.col("__n"))
-    scored = staged.select(
-        F.col(id_col),
-        unit.alias("__unit"),
-        hyperplane_signature(F.col(vec_col), planes).alias("__sig"),
-        *[
-            dot_native(
-                F.col(vec_col),
-                F.array(*[F.lit(float(x)) for x in cents[k]]),
-            ).alias(f"__d{k}")
-            for k in range(num_clusters)
-        ],
-    )
-    # argmax over unit centroids == argmax cosine (|v| scales all dots
-    # equally); first-k-wins CASE chain = ties to lowest index.
-    cluster = None
-    for k in range(num_clusters - 1):
-        cond = None
-        for j in range(k + 1, num_clusters):
-            c2 = F.col(f"__d{k}") >= F.col(f"__d{j}")
-            cond = c2 if cond is None else (cond & c2)
-        cluster = (
-            F.when(cond, F.lit(k)) if cluster is None else cluster.when(cond, F.lit(k))
-        )
-    cluster = cluster.otherwise(F.lit(num_clusters - 1))
-    return scored.select(
-        F.col(id_col), F.col("__unit"), F.col("__sig"),
-        cluster.cast("long").alias("cluster"),
-    )
-
-
-def _semantic_assign_arrow(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    cents: np.ndarray,
-    planes: np.ndarray,
-) -> DataFrame:
-    """Scale-path assignment: one (batch x dim) @ (dim x K+P) GEMM per
-    Arrow batch replaces 8+num_planes interpreted dot-folds per row.
-    numpy argmax takes the FIRST maximum — the same lowest-index
-    tie-break as the native CASE chain."""
-    import pandas as pd
-
-    cmat = cents.T  # dim x K
-    pmat = planes.T  # dim x P
-    bits = np.power(2.0, np.arange(planes.shape[0]))
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-            cluster = np.argmax(mat @ cmat, axis=1).astype(np.int64)
-            sig = (((mat @ pmat) >= 0) @ bits).astype(np.int64)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "__unit": list(unit),
-                    "__sig": sig,
-                    "cluster": cluster,
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(
-        assign,
-        f"{id_col} {_id_ddl(df, id_col)}, __unit array<double>, "
-        "__sig long, cluster long",
-    )
-
-
 def semantic_dedup(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -995,7 +838,6 @@ def semantic_dedup(
     seed: int = 7,
     num_planes: int = 8,
     round_to: int = 4,
-    engine: str = "native",
     block_cap: int = BUCKET_BLOCK_CAP,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023, public):
@@ -1004,7 +846,7 @@ def semantic_dedup(
     ``>= tau``. Emits (id, cluster, keep) for every input row.
 
     Scale shape: cluster assignment is map-only (K fixed dot products
-    per row, no shuffle); candidate pairs come from an equi-join on
+    per row, no shuffle); candidate pairs come from buckets on
     (cluster, hyperplane-signature) — at tau >= 0.95 near-dups agree on
     every sign bit with overwhelming probability, so the quadratic term
     is bounded by the largest (cluster x signature) bucket, never by the
@@ -1020,133 +862,34 @@ def semantic_dedup(
     measured 61.7s at 500k vectors vs 21.9s with 12 planes;
     scripts/scale_smoke.py guards this).
 
-    Determinism: argmax ties break to the LOWEST cluster index (strict
-    CASE chain, mirrored in SQL); the keep rule is non-transitive by
-    design (a dropped item still shadows its own higher-id neighbors),
-    matching the one-pass semantics of the published method.
-
-    ``engine='native'`` keeps every double bit-reproducible for the
-    DuckDB oracle; ``engine='arrow'`` computes the assignment stage
-    (unit vectors, signature, centroid argmax) as one numpy GEMM over
-    Arrow batches — the 100 TB path (interpreted HOF folds are the cost
-    center; 20.1s native vs 16.0s arrow at 500k vectors, and the gap
-    grows with num_clusters + num_planes) — AND the verify stage: each
-    (cluster, sig) bucket folds into one ordered array row and a scalar
-    Arrow pandas_udf GEMMs it block-wise, so every vector crosses the
-    JVM→Python boundary once and the per-pair dot never runs
-    interpreted (187s → 23s measured at 50k x 1024-dim vectors,
-    scripts/scale_smoke.py widevec). Results agree with native except
-    on ~1e-16 argmax/rounding ties (np.round is half-even, F.round
-    half-up — same documented tolerance class; see
-    test_semantic_dedup_arrow_agrees_with_native).
+    One path: :func:`corpus_kernel` assigns unit vector, signature and
+    cluster (first-max argmax of the folded centroid dots — ties to the
+    LOWEST cluster index, which the oracle's CASE chain mirrors) in one
+    Arrow pass, and :func:`_bucket_pairs` emits each (cluster, sig)
+    bucket's best candidate per higher id with its exact folded dot;
+    an id whose ``F.round(dot, round_to) >= tau`` is dropped. The
+    keep rule is non-transitive by design (a dropped item still
+    shadows its own higher-id neighbors), matching the one-pass
+    semantics of the published method. ``block_cap`` bounds the
+    vectors in one folded bucket row.
     """
     rng = np.random.RandomState(seed)
     cents = rng.normal(size=(num_clusters, dim))
     cents = cents / np.linalg.norm(cents, axis=1, keepdims=True)
     planes = np.random.RandomState(seed + 100).normal(size=(num_planes, dim))
-
-    if engine == "arrow":
-        assigned = _semantic_assign_arrow(df, id_col, vec_col, cents, planes)
-    else:
-        assigned = _semantic_assign_native(
-            df, id_col, vec_col, cents, planes, num_clusters
+    # cut ONCE: `assigned` feeds the bucket fold twice and the output
+    assigned = corpus_kernel(
+        df, id_col, vec_col, planes=planes, cells=cents, unit=True
+    ).withColumnRenamed("__cell", "cluster").transform(lazy_checkpoint)
+    dropped = (
+        _bucket_pairs(
+            assigned, ["cluster", "__sig"], id_col, tau, round_to, block_cap, best_b=True
         )
-    # materialize ONCE: `assigned` feeds both self-join sides and the
-    # final output — without the (lazy) checkpoint the 8+num_planes
-    # interpreted dot-folds per row execute three times (28s -> 22s
-    # measured at 500k vectors, 12 planes)
-    assigned = assigned.transform(lazy_checkpoint)
-    if engine == "arrow":
-        # Verify stage, scale path: the native pair filter evaluates an
-        # interpreted 1024-element dot fold PER CANDIDATE PAIR (1.2e9
-        # element-evals = 187s measured at 50k x 1024d in the widevec
-        # panel). Instead fold each (cluster, sig) bucket into ONE
-        # ordered array row (ships each vector once — pair fan-out
-        # never crosses the JVM->Python boundary) and GEMM the bucket
-        # in a scalar Arrow pandas_udf: one groupBy, no per-group
-        # applyInPandas overhead (the croston 1.4ms/group trap).
-        from pyspark.sql.functions import pandas_udf
-
-        tau_ = float(tau)
-        round_ = int(round_to)
-
-        @pandas_udf(f"array<{_id_ddl(df, id_col)}>")
-        def _bucket_dropped(
-            buckets: pd.Series, gis: pd.Series, gjs: pd.Series
-        ) -> pd.Series:
-            out = []
-            for bucket, gi, gj in zip(buckets, gis, gjs):
-                dropped_ids: set = set()
-                if gi == gj:
-                    n = len(bucket)
-                    if n < 2:
-                        out.append([])
-                        continue
-                    ids = [r["i"] for r in bucket]
-                    mat = np.asarray([np.asarray(r["u"]) for r in bucket])
-                    # block the GEMM so memory bounds at (block x n),
-                    # never n^2
-                    for lo in range(0, n, 256):
-                        hi = min(lo + 256, n)
-                        sims = np.round(mat[lo:hi] @ mat.T, round_)
-                        rows, cols = np.nonzero(sims >= tau_)
-                        keep = (rows + lo) < cols  # id_a < id_b (sorted)
-                        dropped_ids.update(ids[c] for c in cols[keep].tolist())
-                else:
-                    # cross-block: the HIGHER id of any >= tau pair is
-                    # dropped (the keep rule is pairwise, so blocking
-                    # cannot change the dropped set)
-                    left = [r for r in bucket if r["b"] == gi]
-                    right = [r for r in bucket if r["b"] == gj]
-                    if not left or not right:
-                        out.append([])
-                        continue
-                    lids = [r["i"] for r in left]
-                    rids = [r["i"] for r in right]
-                    lmat = np.asarray([np.asarray(r["u"]) for r in left])
-                    rmat = np.asarray([np.asarray(r["u"]) for r in right])
-                    for lo in range(0, len(left), 256):
-                        hi = min(lo + 256, len(left))
-                        sims = np.round(lmat[lo:hi] @ rmat.T, round_)
-                        rows, cols = np.nonzero(sims >= tau_)
-                        dropped_ids.update(
-                            max(lids[r + lo], rids[c])
-                            for r, c in zip(rows.tolist(), cols.tolist())
-                        )
-                out.append(sorted(dropped_ids))
-            return pd.Series(out)
-
-        folded = _blocked_bucket_fold(
-            assigned, ["cluster", "__sig"], id_col, cap=block_cap
-        )
-        dropped = (
-            folded.select(
-                F.explode(_bucket_dropped("__bucket", "__gi", "__gj")).alias(id_col)
-            )
-            .distinct()
-            .withColumn("__dropped", F.lit(True))
-        )
-    else:
-        a = assigned.select(
-            F.col("cluster"), F.col("__sig"),
-            F.col(id_col).alias("__id_a"), F.col("__unit").alias("__va"),
-        )
-        b = assigned.select(
-            F.col("cluster"), F.col("__sig"),
-            F.col(id_col).alias("__id_b"), F.col("__unit").alias("__vb"),
-        )
-        # Rounded-then-compared cosine: boundary-stable across engines
-        # (identical double rounding on both sides of the oracle).
-        dropped = (
-            a.join(b, ["cluster", "__sig"])
-            .filter(F.col("__id_a") < F.col("__id_b"))
-            .filter(
-                F.round(dot_native(F.col("__va"), F.col("__vb")), round_to) >= tau
-            )
-            .select(F.col("__id_b").alias(id_col))
-            .distinct()
-            .withColumn("__dropped", F.lit(True))
-        )
+        .filter(F.round("__raw", round_to) >= tau)
+        .select(F.col("id_b").alias(id_col))
+        .distinct()
+        .withColumn("__dropped", F.lit(True))
+    )
     return (
         assigned.join(dropped, id_col, "left")
         .select(
@@ -1165,7 +908,6 @@ def mutual_nn_pairs(
     dim: int = 64,
     seed: int = 42,
     round_to: int = 4,
-    engine: str = "native",
 ) -> DataFrame:
     """Reciprocal (mutual) nearest-neighbor pairs within hyperplane
     LSH buckets — the canonical-pair picker for dedup merge queues: a
@@ -1188,7 +930,6 @@ def mutual_nn_pairs(
     pairs = embedding_near_dup_pairs(
         emb_df, id_col, vec_col, threshold=-1.0,
         num_planes=num_planes, dim=dim, seed=seed, round_to=round_to,
-        engine=engine,
     )
     directed = pairs.select(
         F.explode(

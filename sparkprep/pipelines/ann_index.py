@@ -10,14 +10,15 @@ no shuffle, no full-corpus read). This module is that lifecycle:
 
 - :func:`build_ann_index` — fit (shared `ivf_fit_centroid_units`, so
   the index and the ad-hoc operator can never disagree on cell
-  geometry), assign, write hive-partitioned corpus + centroid table +
-  per-cell manifest. ``partitionBy("cell")`` is the writer-side layout
+  geometry), assign (the same `similarity.corpus_kernel` cells
+  `ann_ivf_topk` uses), write hive-partitioned corpus + centroid
+  table + per-cell manifest. ``partitionBy("cell")`` is the writer-side layout
   (CLAUDE.md: one-directory-per-key needs the writer, not a
   repartition).
 - :func:`query_ann_index` — load the (num_centroids-row) centroid
   table, compute each query's probe cells, read ONLY the probed
   partitions, rerank by exact cosine. Result-identical to
-  ``ann_ivf_topk(engine='native')`` at the same parameters
+  ``ann_ivf_topk`` at the same parameters
   (tests/test_ann_index.py pins the parity and the pruning).
 
 Scale notes: the probe-cell list is bounded by |queries| x num_probes
@@ -64,10 +65,9 @@ def build_ann_index(
         lloyd_iterations=lloyd_iterations,
         sample_size=sample_size,
     )
-    assigned = emb_df.select(
-        id_col,
-        vec_col,
-        sim.ivf_cell_expr(cunit, F.col(vec_col), 1)[0].alias("cell"),
+    cells = sim.corpus_kernel(emb_df, id_col, vec_col, cells=cunit)
+    assigned = emb_df.select(id_col, vec_col).join(
+        cells.select(id_col, F.col("__cell").alias("cell")), id_col
     )
     corpus_path = os.path.join(out_dir, "corpus")
     assigned.write.mode("overwrite").partitionBy("cell").parquet(corpus_path)

@@ -89,9 +89,13 @@ def prepare_training_corpus(
     (shard, pos) order → JSONL shards under ``out_dir``. Returns a
     manifest with the per-step funnel (rows in/out, seconds) and the
     shard layout. Fully deterministic: same corpus + salt → identical
-    shards, any engine can replay the keep/drop decisions."""
+    shards, any engine can replay the keep/drop decisions. The step
+    row counts are observed on the shard write
+    (``Pipeline.run_observed``), so the funnel adds no job per step."""
     total = docs.count() if count_rows else None
-    kept, report = corpus_prep_pipeline(id_col, est_threshold, count_rows).run(docs)
+    kept, finish = corpus_prep_pipeline(
+        id_col, est_threshold, count_rows
+    ).run_observed(docs)
     order = mix.training_order(kept, id_col, num_shards=num_shards, salt=salt)
     ordered = kept.join(order, id_col)
     # hive-style shard directories (shard=K/part-*): hash repartition
@@ -109,7 +113,7 @@ def prepare_training_corpus(
     )
     return {
         "rows_in": total,
-        "steps": report.as_rows(),
+        "steps": finish().as_rows(),
         "out_dir": out_dir,
         "num_shards": num_shards,
         "salt": salt,

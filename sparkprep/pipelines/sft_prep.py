@@ -82,12 +82,13 @@ def prepare_sft_set(
     """End-to-end SFT prep: assemble → gate → deterministic (shard, pos)
     order → JSONL shards under ``out_dir``. Returns a manifest with the
     per-step funnel and shard layout. Fully deterministic: same events +
-    salt → identical shards."""
+    salt → identical shards. The step row counts are observed on the
+    shard write (``Pipeline.run_observed``): no job per counted step."""
     order_cols = order_cols or ["ts", "event_id"]
     total = events.count() if count_rows else None
-    kept, report = sft_prep_pipeline(
+    kept, finish = sft_prep_pipeline(
         key_col, order_cols, msg_col, min_turns, max_chars, count_rows
-    ).run(events)
+    ).run_observed(events)
     order = mix.training_order(kept, key_col, num_shards=num_shards, salt=salt)
     ordered = kept.join(order, key_col)
     # one hive directory per shard — the corpus_prep layout rationale
@@ -103,7 +104,7 @@ def prepare_sft_set(
     )
     return {
         "events_in": total,
-        "steps": report.as_rows(),
+        "steps": finish().as_rows(),
         "out_dir": out_dir,
         "num_shards": num_shards,
         "salt": salt,

@@ -21,9 +21,9 @@ from pyspark.sql import DataFrame
 class Step:
     name: str
     fn: Callable[[DataFrame], DataFrame]
-    # row counting forces a job per step under ``run`` (none under
-    # ``run_observed``); default off (lazy end-to-end), turn on for
-    # audited runs (the reference's dedup audit mode)
+    # audited step: ``run_observed`` counts its rows inside the caller's
+    # one action (no extra job); default off (lazy end-to-end), turn on
+    # for audited runs (the reference's dedup audit mode)
     count_rows: bool = False
 
 
@@ -53,10 +53,11 @@ class Pipeline:
     """Sequential DataFrame transformation with a run report.
 
     Lazy by default: steps only build the plan (one Spark job at the
-    terminal action, letting Catalyst fuse everything). With
-    ``count_rows`` steps, ``run`` materializes each counted step — use
-    deliberately, exactly like the reference's audit counts — and
-    ``run_observed`` counts them inside the caller's action instead.
+    terminal action, letting Catalyst fuse everything).
+    ``run_observed`` is how every pipeline runs: ``count_rows`` steps
+    are counted inside the caller's one action. ``run`` re-executes
+    the plan once per counted step; no pipeline calls it, and it stays
+    only because the perfbench tracer wraps it by name.
     """
 
     def __init__(self, *steps: Step):
@@ -72,7 +73,7 @@ class Pipeline:
         so the SINGLE terminal action the caller runs yields every
         counted step's row count — no per-step count() jobs (``run``
         pays one re-execution per counted step; this pays zero).
-        Uncounted steps report ``rows_out=None``, as in ``run``.
+        Uncounted steps report ``rows_out=None``.
 
         Returns ``(out, finish)``; call ``finish()`` AFTER running an
         action on ``out`` (or a descendant) to collect the RunReport.
@@ -83,8 +84,8 @@ class Pipeline:
         an observed step runs that step twice in one action (EP1's
         ``normalize`` cross-joins a broadcast aggregate of its own
         input), each copy of the observe node has its own accumulator
-        and the report takes one copy's count — equal to ``run``'s
-        count (tests/test_loanstats_pipeline.py pins this).
+        and the report takes one copy's count — equal to a per-step
+        ``count()`` (tests/test_loanstats_pipeline.py pins this).
         """
         from pyspark.sql import Observation
         from pyspark.sql import functions as F

@@ -175,3 +175,24 @@ def test_no_bool_checkpoint_flag_in_engine():
                 if bool_default or bool_annotation:
                     flagged.append(f"{path.relative_to(pkg.parent)}:{node.name}")
     assert not flagged, f"bool checkpoint flags: {flagged}"
+
+
+def test_no_engine_flag():
+    # one vector path per operator: the Arrow kernels replay the
+    # Catalyst left fold bit for bit, so no function in sparkprep/ takes
+    # an `engine` selector and no caller anywhere passes one
+    root = pathlib.Path(cp.__file__).parent.parent
+    files = [p for d in ("sparkprep", "scripts", "examples") for p in sorted((root / d).rglob("*.py"))]
+    files.append(root / "bench.py")
+    flagged = []
+    for path in files:
+        in_engine = path.is_relative_to(root / "sparkprep")
+        for node in ast.walk(ast.parse(path.read_text())):
+            where = f"{path.relative_to(root)}:{getattr(node, 'lineno', '?')}"
+            if in_engine and isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                a = node.args
+                if any(x.arg == "engine" for x in a.posonlyargs + a.args + a.kwonlyargs):
+                    flagged.append(f"{where} takes engine")
+            if isinstance(node, ast.Call) and any(k.arg == "engine" for k in node.keywords):
+                flagged.append(f"{where} passes engine=")
+    assert not flagged, f"engine selectors: {flagged}"

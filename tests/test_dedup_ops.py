@@ -2,6 +2,12 @@
 covers semantics the oracle queries can't (keep-first dedup choice,
 short-document edge cases, LSH recall vs brute force)."""
 
+import math
+from collections import defaultdict
+from decimal import ROUND_HALF_UP, Decimal
+from itertools import combinations
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,6 +21,89 @@ ROWS = [
     (3, "completely different text about spark dataframes and shuffle partitions here"),
     (4, "ein ganz anderer text ohne jede ueberlappung mit den anderen texten hier"),
 ]
+
+
+# --- test-local replay of the Catalyst vector arithmetic -------------------
+# The reference side of the vector-operator tests: pure Python, one left
+# fold from +0.0 over double products in index order (dot_native /
+# norm_native / hyperplane_dots), unit = x / norm, signatures from
+# ``dot >= 0`` bits, first-max cells, and Spark's HALF_UP ``round`` on
+# the shortest decimal repr — what the deleted Catalyst paths computed.
+
+
+def _fold(a, b):
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += float(x) * float(y)
+    return acc
+
+
+def _half_up(x, n):
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-n), ROUND_HALF_UP))
+
+
+def _sig(v, planes):
+    return sum(1 << b for b, p in enumerate(planes) if _fold(v, p) >= 0)
+
+
+def _first_max(dots):
+    return dots.index(max(dots))
+
+
+def _rows(df):
+    return [(r[0], list(r[1])) for r in df.collect()]
+
+
+def _replay_pairs(rows, keyed, threshold, round_to=4):
+    """(id_a < id_b) -> rounded unit cosine of the pairs sharing a key,
+    zero-norm vectors excluded (their NULL cosine fails every >=)."""
+    buckets = defaultdict(list)
+    for i, v in rows:
+        n = math.sqrt(_fold(v, v))
+        if n > 0:
+            buckets[keyed(i, v)].append((i, [x / n for x in v]))
+    out = {}
+    for members in buckets.values():
+        for (ia, ua), (ib, ub) in combinations(sorted(members, key=lambda m: m[0]), 2):
+            cos = _half_up(_fold(ua, ub), round_to)
+            if cos >= threshold:
+                out[(ia, ib)] = cos
+    return out
+
+
+def _replay_near_dup(rows, threshold, num_planes, dim=64, seed=42):
+    planes = np.random.RandomState(seed).normal(size=(num_planes, dim)).tolist()
+    return _replay_pairs(rows, lambda i, v: _sig(v, planes), threshold)
+
+
+def _replay_semantic(rows, num_clusters=8, dim=64, tau=0.95, seed=7, num_planes=8):
+    """vec_id -> (cluster, keep)."""
+    cents = np.random.RandomState(seed).normal(size=(num_clusters, dim))
+    cents = (cents / np.linalg.norm(cents, axis=1, keepdims=True)).tolist()
+    planes = np.random.RandomState(seed + 100).normal(size=(num_planes, dim)).tolist()
+    cluster = {i: _first_max([_fold(v, c) for c in cents]) for i, v in rows}
+    pairs = _replay_pairs(rows, lambda i, v: (cluster[i], _sig(v, planes)), tau)
+    dropped = {b for _a, b in pairs}
+    return {i: (cluster[i], i not in dropped) for i, _v in rows}
+
+
+def _replay_topk(rows, queries, k, candidates, round_to=4):
+    """Exact cosine rerank of each query's candidates (cosine_from_norms:
+    dot over the product of the two norms), desc cosine, asc id."""
+    norm = {i: math.sqrt(_fold(v, v)) for i, v in rows}
+    out = []
+    for qi, qv in queries:
+        qn = math.sqrt(_fold(qv, qv))
+        scored = sorted(
+            (-(_fold(qv, v) / (qn * norm[i])), i)
+            for i, v in rows
+            if i != qi and candidates(qv, i, v)
+        )
+        out += [
+            (qi, i, r, _half_up(-neg, round_to))
+            for r, (neg, i) in enumerate(scored[:k], 1)
+        ]
+    return sorted(out)
 
 
 @pytest.fixture(scope="module")
@@ -251,13 +340,10 @@ def test_semantic_dedup_arrow_agrees_with_native(spark, sf_dir):
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).select(
         "vec_id", "embedding"
     )
-    nat = {
-        r["vec_id"]: (r["cluster"], r["keep"])
-        for r in semantic_dedup(emb, engine="native").collect()
-    }
+    nat = _replay_semantic(_rows(emb))
     arr = {
         r["vec_id"]: (r["cluster"], r["keep"])
-        for r in semantic_dedup(emb, engine="arrow").collect()
+        for r in semantic_dedup(emb).collect()
     }
     assert nat == arr
 
@@ -377,13 +463,10 @@ def test_near_dup_pairs_arrow_agrees_with_native(spark, sf_dir):
         "vec_id", "embedding"
     )
     kw = dict(threshold=-1.0, num_planes=6)
-    nat = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in embedding_near_dup_pairs(emb, engine="native", **kw).collect()
-    }
+    nat = _replay_near_dup(_rows(emb), **kw)
     arr = {
         (r["id_a"], r["id_b"]): r["cosine"]
-        for r in embedding_near_dup_pairs(emb, engine="arrow", **kw).collect()
+        for r in embedding_near_dup_pairs(emb, **kw).collect()
     }
     assert nat == arr
 
@@ -396,15 +479,25 @@ def test_mutual_nn_arrow_agrees_with_native(spark, sf_dir):
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).select(
         "vec_id", "embedding"
     )
-    nat = sorted(map(tuple, mutual_nn_pairs(emb, engine="native").collect()))
-    arr = sorted(map(tuple, mutual_nn_pairs(emb, engine="arrow").collect()))
+    pairs = _replay_near_dup(_rows(emb), threshold=-1.0, num_planes=8)
+    best = {}
+    for (a, b), cos in pairs.items():
+        for src, dst in ((a, b), (b, a)):
+            best[src] = min(best.get(src, (2.0, dst)), (-cos, dst))
+    nat = sorted(
+        (src, dst, -best[src][0])
+        for src, (_neg, dst) in best.items()
+        if src < dst and best[dst][1] == src
+    )
+    arr = sorted(map(tuple, mutual_nn_pairs(emb).collect()))
     assert nat == arr
 
 
 def test_near_dup_pairs_arrow_blocked_fold_same_pairs(spark, sf_dir):
     """ADVICE r9: the arrow verify fold salt-splits oversize buckets into
     block-pairs. A tiny cap forces the cross-block path on every bucket;
-    the pair SET must be blocking-invariant (identical to native)."""
+    the pair SET must be blocking-invariant (identical to the replay of
+    the Catalyst arithmetic)."""
     import os
 
     from sparkprep.operators.similarity import embedding_near_dup_pairs
@@ -413,15 +506,10 @@ def test_near_dup_pairs_arrow_blocked_fold_same_pairs(spark, sf_dir):
         "vec_id", "embedding"
     )
     kw = dict(threshold=-1.0, num_planes=6)
-    nat = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in embedding_near_dup_pairs(emb, engine="native", **kw).collect()
-    }
+    nat = _replay_near_dup(_rows(emb), **kw)
     blocked = {
         (r["id_a"], r["id_b"]): r["cosine"]
-        for r in embedding_near_dup_pairs(
-            emb, engine="arrow", block_cap=4, **kw
-        ).collect()
+        for r in embedding_near_dup_pairs(emb, block_cap=4, **kw).collect()
     }
     assert nat == blocked
 
@@ -434,21 +522,16 @@ def test_semantic_dedup_arrow_blocked_fold_same_keeps(spark, sf_dir):
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).select(
         "vec_id", "embedding"
     )
-    nat = {
-        r["vec_id"]: (r["cluster"], r["keep"])
-        for r in semantic_dedup(emb, engine="native", tau=0.5).collect()
-    }
+    nat = _replay_semantic(_rows(emb), tau=0.5)
     blocked = {
         r["vec_id"]: (r["cluster"], r["keep"])
-        for r in semantic_dedup(
-            emb, engine="arrow", tau=0.5, block_cap=3
-        ).collect()
+        for r in semantic_dedup(emb, tau=0.5, block_cap=3).collect()
     }
     assert nat == blocked
 
 
 def test_arrow_twins_handle_string_ids(spark):
-    """ADVICE r9: arrow paths interpolated the id type instead of
+    """ADVICE r9: the Arrow kernels interpolate the id type instead of
     hardcoding bigint — a string-id corpus must work end-to-end."""
     from sparkprep.operators.quantize import reconstruction_stats_arrow
     from sparkprep.operators.similarity import (
@@ -461,15 +544,13 @@ def test_arrow_twins_handle_string_ids(spark):
     df = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
 
     pairs = embedding_near_dup_pairs(
-        df, threshold=0.99, num_planes=2, dim=8, engine="arrow"
+        df, threshold=0.99, num_planes=2, dim=8
     ).collect()
     assert all(isinstance(r.id_a, str) and r.id_a < r.id_b for r in pairs)
-    nat = embedding_near_dup_pairs(
-        df, threshold=0.99, num_planes=2, dim=8, engine="native"
-    ).collect()
-    assert {(r.id_a, r.id_b) for r in pairs} == {(r.id_a, r.id_b) for r in nat}
+    nat = _replay_near_dup(rows, 0.99, num_planes=2, dim=8)
+    assert {(r.id_a, r.id_b) for r in pairs} == set(nat)
 
-    sem = semantic_dedup(df, num_clusters=2, dim=8, tau=0.99, engine="arrow")
+    sem = semantic_dedup(df, num_clusters=2, dim=8, tau=0.99)
     assert {type(r["vec_id"]) for r in sem.collect()} == {str}
 
     rec = reconstruction_stats_arrow(df, "vec_id", "embedding").collect()
@@ -482,10 +563,10 @@ def test_near_dup_pairs_arrow_drops_zero_norm(spark):
     rows = [(0, [0.0] * 8), (1, [1.0] * 8), (2, [1.0] * 8)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     out = embedding_near_dup_pairs(
-        df, threshold=-1.0, num_planes=2, dim=8, engine="arrow"
+        df, threshold=-1.0, num_planes=2, dim=8
     ).collect()
-    # the zero-norm vector's NaN cosine fails every threshold — same
-    # as the native NULL-cosine semantics
+    # the zero-norm vector has no unit vector and pairs with nothing —
+    # the NULL-cosine semantics of the Catalyst fold
     assert {(r.id_a, r.id_b) for r in out} == {(1, 2)}
     assert out[0].cosine == 1.0
 
@@ -546,8 +627,16 @@ def test_ann_lsh_arrow_agrees_with_native(spark, sf_dir):
 
     q = emb.filter(F.col("vec_id") < 5)
     kw = dict(k=3, num_planes=6, num_probes=3)
-    nat = sorted(map(tuple, ann_lsh_topk(emb, q, engine="native", **kw).collect()))
-    arr = sorted(map(tuple, ann_lsh_topk(emb, q, engine="arrow", **kw).collect()))
+    planes = np.random.RandomState(42).normal(size=(6, 64)).tolist()
+
+    def probed(qv, _i, v):
+        d = [_fold(qv, p) for p in planes]
+        s0 = _sig(qv, planes)
+        flips = sorted(range(6), key=lambda b: (abs(d[b]), b))[:2]
+        return _sig(v, planes) in {s0} | {s0 ^ (1 << b) for b in flips}
+
+    nat = _replay_topk(_rows(emb), _rows(q), 3, probed)
+    arr = sorted(map(tuple, ann_lsh_topk(emb, q, **kw).collect()))
     assert nat == arr
 
 
@@ -563,6 +652,12 @@ def test_ann_ivf_arrow_agrees_with_native(spark, sf_dir):
     )
     q = emb.filter(F.col("vec_id") < 5)
     kw = dict(k=3, num_centroids=8, num_probes=2)
-    nat = sorted(map(tuple, ann_ivf_topk(emb, q, engine="native", **kw).collect()))
-    arr = sorted(map(tuple, ann_ivf_topk(emb, q, engine="arrow", **kw).collect()))
+    cunit = sim.ivf_fit_centroid_units(emb, num_centroids=8, seed=42).tolist()
+
+    def probed(qv, _i, v):
+        cells = sorted(range(8), key=lambda c: (-_fold(qv, cunit[c]), c))[:2]
+        return _first_max([_fold(v, c) for c in cunit]) in cells
+
+    nat = _replay_topk(_rows(emb), _rows(q), 3, probed)
+    arr = sorted(map(tuple, ann_ivf_topk(emb, q, **kw).collect()))
     assert nat == arr

@@ -164,7 +164,9 @@ def test_pipeline_report(spark):
         .add("filter", lambda d: d.filter(F.col("id") > 10))
         .add("agg", lambda d: d.groupBy("k").count(), count_rows=True)
     )
-    out, report = pipe.run(df)
+    out, finish = pipe.run_observed(df)
+    out.collect()
+    report = finish()
     assert report.steps[1].rows_out == 7
     assert report.total_seconds > 0
     assert [r["step"] for r in report.as_rows()] == ["filter", "agg"]

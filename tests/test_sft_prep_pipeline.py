@@ -76,7 +76,7 @@ def test_sft_gate_drops_short_and_huge(spark):
         "user_id", ["pos"], "msg", min_turns=2, max_chars=200,
         count_rows=True,
     )
-    kept, report = pipe.run(df)
+    kept, finish = pipe.run_observed(df)
     assert [r.user_id for r in kept.collect()] == [1]
-    steps = {s["step"]: s["rows_out"] for s in report.as_rows()}
+    steps = {s["step"]: s["rows_out"] for s in finish().as_rows()}
     assert steps["assemble"] == 3 and steps["turn_char_gate"] == 1
