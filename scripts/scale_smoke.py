@@ -25,6 +25,10 @@ Usage: python scripts/scale_smoke.py [core|revenue|graph|longdoc|widevec|streami
                                   iterative graph family — validates
                                   hub guards + per-round checkpoint
                                   discipline at 10-50x bench edges
+  widevec [num_vecs] [dims] [dup|distinct]
+                                  wide-vector operators; ``dup`` repeats
+                                  1,000 distinct vectors, ``distinct``
+                                  has no two equal vectors
 Writes nothing to the repo; synthesizes under /tmp.
 
 Measured round 9 (local[32], idle host):
@@ -762,7 +766,14 @@ def longdoc_panel(spark, num_docs: int = 1_000, tokens_per_doc: int = 50_000) ->
 # path each.
 
 
-def widevec_panel(spark, num_vecs: int = 50_000, dims: int = 1_024) -> None:
+def widevec_panel(
+    spark, num_vecs: int = 50_000, dims: int = 1_024, corpus: str = "dup"
+) -> None:
+    """``corpus="dup"``: 1,000 distinct vectors, each 50 times (ids that
+    agree mod 1,000 share a vector), so buckets hold thousands of exact
+    duplicates. ``corpus="distinct"``: every vector distinct, in groups
+    of 10 noisy copies of a seeded base vector (cosine ~0.99 within a
+    group), so every candidate pair folds its own dot."""
     from sparkprep.operators import quantize, similarity
 
     def gen(batches):
@@ -771,8 +782,15 @@ def widevec_panel(spark, num_vecs: int = 50_000, dims: int = 1_024) -> None:
 
         for b in batches:
             ids = b["id"].to_numpy()
-            grid = (ids[:, None] * 2654435761 + np.arange(dims)[None, :] * 97) % 1000
-            arr = grid / 500.0 - 1.0
+            if corpus == "dup":
+                grid = (ids[:, None] * 2654435761 + np.arange(dims)[None, :] * 97) % 1000
+                arr = grid / 500.0 - 1.0
+            else:
+                arr = np.stack([
+                    np.random.RandomState(i // 10).normal(size=dims)
+                    + 0.1 * np.random.RandomState(1_000_000 + i).normal(size=dims)
+                    for i in ids
+                ])
             yield pd.DataFrame({"vec_id": ids, "embedding": list(arr)})
 
     vecs = (
@@ -783,7 +801,7 @@ def widevec_panel(spark, num_vecs: int = 50_000, dims: int = 1_024) -> None:
     vecs.write.mode("overwrite").parquet("/tmp/scale_widevecs.parquet")
     vecs = spark.read.parquet("/tmp/scale_widevecs.parquet")
     print(
-        f"--- widevec panel: {num_vecs:,} vecs x {dims} dims "
+        f"--- widevec panel: {num_vecs:,} {corpus} vecs x {dims} dims "
         f"(bench embeddings are 64-dim) ---", flush=True,
     )
     native_slice = vecs.filter(F.col("vec_id") < num_vecs // 5)
@@ -1076,7 +1094,10 @@ def main() -> None:
     if panel in ("widevec", "all"):
         nv = int(args[0]) if panel == "widevec" and args else 50_000
         dims = int(args[1]) if panel == "widevec" and len(args) > 1 else 1_024
-        widevec_panel(spark, nv, dims)
+        corpus = args[2] if panel == "widevec" and len(args) > 2 else "dup"
+        if corpus not in ("dup", "distinct"):
+            raise SystemExit(f"widevec corpus must be dup or distinct, got {corpus!r}")
+        widevec_panel(spark, nv, dims, corpus)
     if panel in ("streaming", "all"):
         nu = int(args[0]) if panel == "streaming" and args else 50_000
         nw = int(args[1]) if panel == "streaming" and len(args) > 1 else 12
