@@ -6,7 +6,8 @@ One vector path per operator. Spark plans the scans, the bucket joins
 and the shuffles; numpy over Arrow batches does the dense math of the
 corpus side (:func:`corpus_kernel`: signatures, IVF cells, SemDeDup
 clusters, norms, unit vectors) and of the bucket verify
-(:func:`_bucket_pairs`). Every double that reaches an output or a
+(:func:`_bucket_pairs`: all pairs over a threshold, the best pair per
+id, or each id's nearest). Every double that reaches an output or a
 comparison is a LEFT FOLD from +0.0 over the double products in index
 order (:func:`_fold_dot`) — the arithmetic of the Catalyst helpers
 :func:`dot_native`, :func:`norm_native` and :func:`hyperplane_dots` —
@@ -245,21 +246,24 @@ def _fold_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
 
 def _fold_pairs(vt: np.ndarray, ia: np.ndarray, ib: np.ndarray) -> np.ndarray:
     """:func:`_fold_dot` of the column pairs ``(vt[:, ia], vt[:, ib])``
-    of a ``(d, u)`` matrix, each DISTINCT column folded once: over the
-    dense (columns of ia) x (columns of ib) grid when that grid is at
-    most 8x the pairs (a near-dup bucket: most pairs are candidates),
-    else pair by pair in chunks of 4096 (scattered candidates)."""
+    of a ``(d, u)`` matrix, in chunks of 4096 pairs, each DISTINCT
+    unordered pair folded once (``x * y == y * x`` exactly, so (a, b)
+    and (b, a) fold to the same bits): a bucket of duplicate vectors
+    folds a handful of pairs, a bucket of distinct vectors folds each
+    candidate once."""
     u = vt.shape[1]
-    rows = np.flatnonzero(np.bincount(ia, minlength=u))
-    cols = np.flatnonzero(np.bincount(ib, minlength=u))
-    if len(rows) * len(cols) <= 8 * len(ia):
-        rpos, cpos = np.empty(u, dtype=np.int64), np.empty(u, dtype=np.int64)
-        rpos[rows], cpos[cols] = np.arange(len(rows)), np.arange(len(cols))
-        return _fold_dot(vt[:, rows, None], vt[:, None, cols])[rpos[ia], cpos[ib]]
-    out = np.empty(len(ia))
-    for lo in range(0, len(ia), 4096):
-        out[lo:lo + 4096] = _fold_dot(vt[:, ia[lo:lo + 4096]], vt[:, ib[lo:lo + 4096]])
-    return out
+    key, back = np.unique(
+        np.minimum(ia, ib) * u + np.maximum(ia, ib), return_inverse=True
+    )
+    ka, kb = np.divmod(key, u)
+    out = np.empty(len(key))
+    for lo in range(0, len(key), 4096):
+        # np.take, not vt[:, idx]: that returns a column-major copy, and
+        # the fold's row steps then stride across it (10x slower)
+        out[lo:lo + 4096] = _fold_dot(
+            np.take(vt, ka[lo:lo + 4096], axis=1), np.take(vt, kb[lo:lo + 4096], axis=1)
+        )
+    return out[back]
 
 
 def corpus_kernel(
@@ -286,7 +290,11 @@ def corpus_kernel(
     Only ``unit`` sends vectors back to the JVM; the ANN operators join
     ``(id, __sig | __cell, __cn)`` back to the corpus by id, so ids must
     be unique. A NULL vector becomes a NaN row: its dots fail every
-    comparison (signature 0, cell 0) and its norm and unit are NULL.
+    comparison (signature 0, as the Catalyst NULL dots) and its norm and
+    unit are NULL. Its ``__cell`` is NULL too, because the two Catalyst
+    spellings disagree there: ``ivf_cell_expr`` sorts NULL dots by cid
+    (cell 0), SemDeDup's CASE chain falls through to the last cluster;
+    each caller coalesces to its own.
     The dense math is O(rows x (planes + cells) x dim) numpy work per
     Arrow batch, where the interpreted Catalyst folds cost ~1µs per
     element."""
@@ -301,10 +309,12 @@ def corpus_kernel(
         for pdf in batches:
             if pdf.empty:
                 continue
-            mat = np.asarray(
-                [nan_row if v is None else v for v in pdf[vec_col]], dtype=np.float64
+            null = pdf[vec_col].isna().to_numpy()
+            # (d, n), one row per coordinate, stacked straight from the
+            # row arrays: 2x faster than building (n, d) and transposing
+            vt = np.stack(
+                [nan_row if v is None else v for v in pdf[vec_col]], axis=1, dtype=np.float64
             )
-            vt = np.ascontiguousarray(mat.T)  # (d, n): one row per coordinate
             norm = np.sqrt(_fold_dot(vt, vt))
             out = {id_col: pdf[id_col].to_numpy(), "__cn": norm}
             if planes is not None:
@@ -313,10 +323,11 @@ def corpus_kernel(
                 out["__sig"] = bits @ (dots >= 0)
             if cells is not None:
                 dots = _fold_dot(cells.T[:, :, None], vt[:, None, :])
-                out["__cell"] = np.argmax(dots, axis=0)
+                out["__cell"] = pd.array(np.argmax(dots, axis=0), dtype="Int64")
+                out["__cell"][null] = pd.NA
             if unit:
                 with np.errstate(divide="ignore", invalid="ignore"):
-                    units = mat / norm[:, None]
+                    units = np.divide(vt.T, norm[:, None], order="C")
                 out["__unit"] = [u if n > 0 else None for u, n in zip(units, norm)]
             yield pd.DataFrame(out)
 
@@ -549,7 +560,11 @@ def ann_ivf_topk(
     cells = corpus_kernel(emb_df, id_col, vec_col, cells=cunit)
     c = emb_df.select(F.col(id_col), F.col(vec_col).alias("__cv")).join(
         cells, id_col
-    ).select(F.col(id_col).alias("neighbor_id"), "__cv", "__cell", "__cn")
+    ).select(
+        F.col(id_col).alias("neighbor_id"), "__cv",
+        F.coalesce("__cell", F.lit(0)).alias("__cell"),  # ivf_cell_expr's NULL order
+        "__cn",
+    )
     q = query_df.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("__qv"),
@@ -701,77 +716,123 @@ def _bucket_pairs(
     threshold: float,
     round_to: int,
     cap: int = BUCKET_BLOCK_CAP,
-    best_b: bool = False,
+    out: str = "pairs",
 ) -> DataFrame:
-    """The one bucket verify: candidate pairs ``(id_a < id_b, __raw)``
-    among the non-NULL ``__unit`` rows of ``frame`` that share ``keys``,
-    ``__raw`` the EXACT folded dot of their unit vectors (bit-identical
-    to ``dot_native`` on the same units).
+    """The one bucket verify over the non-NULL ``__unit`` rows of
+    ``frame`` that share ``keys``. Every ``__raw`` it emits is the EXACT
+    folded dot of two unit vectors (bit-identical to ``dot_native`` on
+    the same units); callers keep ``F.round(__raw, round_to)`` and every
+    comparison on it in Spark, so rounding is the Catalyst HALF_UP.
+    ``out`` picks the rows:
 
-    Each folded bucket row (:func:`_blocked_bucket_fold`) is GEMM-ed in
-    256-row blocks, a PREFILTER only: a pair is a candidate when its
-    GEMM value is at least ``threshold - 10**-round_to``. That slack
-    covers HALF_UP rounding (a pair with ``round(dot, round_to) >=
-    threshold`` has ``dot >= threshold - 0.5 * 10**-round_to``) with
-    room for GEMM's ~1e-13 error on unit vectors. Each candidate is
-    then re-dotted with :func:`_fold_pairs` over the row's DISTINCT
-    unit vectors (identical vectors fold to identical bits, so a bucket
-    of duplicates folds each distinct pair once); callers keep
-    ``F.round(__raw, round_to) >= threshold`` in Spark, so rounding and
-    the comparison are the Catalyst ones. With ``best_b`` each GEMM
-    block keeps only the largest ``__raw`` per ``id_b`` (columns
-    ``id_b, __raw``): HALF_UP rounding is monotone, so that row passes
-    a ``F.round(__raw) >= threshold`` test iff some pair does, and a
-    bucket of near-duplicates ships bucket-many rows, not pair-many.
-    Lineage-cut ``frame`` first (the fold reads it twice)."""
+    - ``"pairs"``: ``(id_a, id_b, __raw)``, id_a < id_b, for each pair
+      whose GEMM dot is at least ``threshold - slack``;
+    - ``"best_b"``: ``(id_b, __raw)``, the best such pair per id_b in
+      each flush (SemDeDup: HALF_UP rounding is monotone, so that row
+      passes ``F.round(__raw) >= threshold`` iff some pair does, and a
+      bucket of near-duplicates ships bucket-many rows, not pair-many);
+    - ``"nearest"``: directed ``(src, dst, __raw)`` for the dsts whose
+      GEMM dot is within ``2 * slack`` of src's best GEMM dot in the
+      bucket row (mutual NN; ``threshold`` unused). A dst whose rounded
+      cosine ties src's best has ``raw >= best - 10**-round_to``, so it
+      is always among them, and a per-src top-1 over these rows equals
+      the top-1 over all of src's bucket pairs.
+
+    ``slack = max(10**-round_to, 1e-9)`` covers HALF_UP rounding (a pair
+    with ``round(dot, round_to) >= threshold`` has ``dot >= threshold -
+    0.5 * 10**-round_to``) plus the gap between GEMM and the fold, which
+    on unit vectors is at most ~2 * dim * 2**-53 (2.3e-13 at 1024 dims):
+    the 1e-9 floor keeps that room at any ``round_to``. The GEMM, run in
+    256-row blocks of each folded bucket row
+    (:func:`_blocked_bucket_fold`), only picks candidates; its values
+    are dropped. The candidates of all bucket rows in an Arrow batch
+    are folded together by :func:`_fold_pairs` over the batch's
+    DISTINCT unit vectors (flushed every ~1M candidates), so a batch of
+    small buckets pays one fold, not one per bucket. A repeated id never
+    pairs with itself. Lineage-cut ``frame`` first (the fold reads it
+    twice)."""
     idt = _id_ddl(frame, id_col)
-    floor = float(threshold) - 10.0 ** -int(round_to)
+    slack = max(10.0 ** -int(round_to), 1e-9)
+    floor = float(threshold) - slack
     folded = _blocked_bucket_fold(
         frame.filter(F.col("__unit").isNotNull()), keys, id_col, cap=cap
     )
 
     def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = []
-            for gi, gj, ids, units, blk in zip(
-                pdf["__gi"], pdf["__gj"], pdf["__i"], pdf["__u"], pdf["__b"]
-            ):
-                mat = np.ascontiguousarray(np.stack(units))
-                rowkey = mat.view(np.dtype((np.void, mat.shape[1] * 8))).ravel()
-                _, first, inv = np.unique(rowkey, return_index=True, return_inverse=True)
-                vt = np.ascontiguousarray(mat[first].T)  # (d, distinct vectors)
-                if gi == gj:
-                    left = right = np.arange(len(ids))
-                else:  # cross-block: left (b == gi) x right (b == gj)
-                    left, right = np.flatnonzero(blk == gi), np.flatnonzero(blk == gj)
-                lmat, rmat = mat[left], mat[right]
-                # 256-row GEMM blocks: memory bounds at (256 x n), never n^2
-                for lo in range(0, len(left), 256):
-                    cand = lmat[lo:lo + 256] @ rmat.T >= floor
-                    if gi == gj:  # each unordered pair once
-                        cand &= np.arange(lo, lo + len(cand))[:, None] < np.arange(len(right))
-                    rr, cc = np.nonzero(cand)
-                    if not len(rr):
-                        continue
-                    la, rb = left[lo + rr], right[cc]
-                    raw = _fold_pairs(vt, inv[la], inv[rb])
-                    swap = ids[la] > ids[rb]
-                    if best_b:
-                        best = np.full(len(ids), -np.inf)
-                        np.maximum.at(best, np.where(swap, la, rb), raw)
-                        hit = np.flatnonzero(best > -np.inf)
-                        out.append(pd.DataFrame({"id_b": ids[hit], "__raw": best[hit]}))
-                        continue
-                    out.append(pd.DataFrame({
-                        "id_a": np.where(swap, ids[rb], ids[la]),
-                        "id_b": np.where(swap, ids[la], ids[rb]),
-                        "__raw": raw,
-                    }))
-            if out:
-                yield pd.concat(out, ignore_index=True)
+            if pdf.empty:
+                continue
+            sizes = pdf["__i"].map(len).to_numpy()
+            starts = np.concatenate([[0], np.cumsum(sizes)])
+            ids = np.concatenate(pdf["__i"].to_list())
+            blk = np.concatenate(pdf["__b"].to_list())
+            mat = np.ascontiguousarray(np.concatenate([np.stack(u) for u in pdf["__u"]]))
+            rowkey = mat.view(np.dtype((np.void, mat.shape[1] * 8))).ravel()
+            _, first, inv = np.unique(rowkey, return_index=True, return_inverse=True)
+            vt = np.ascontiguousarray(mat[first].T)  # (d, distinct vectors)
+            pending, npend = [], 0
 
-    pair = f"id_b {idt}, __raw double" if best_b else f"id_a {idt}, id_b {idt}, __raw double"
-    return folded.mapInPandas(verify, pair)
+            def flush():
+                la, rb = np.concatenate([p[0] for p in pending]), np.concatenate(
+                    [p[1] for p in pending]
+                )
+                raw = _fold_pairs(vt, inv[la], inv[rb])
+                if out == "nearest":
+                    return pd.DataFrame({"src": ids[la], "dst": ids[rb], "__raw": raw})
+                swap = ids[la] > ids[rb]
+                if out == "best_b":
+                    best = np.full(len(ids), -np.inf)
+                    np.maximum.at(best, np.where(swap, la, rb), raw)
+                    hit = np.flatnonzero(best > -np.inf)
+                    return pd.DataFrame({"id_b": ids[hit], "__raw": best[hit]})
+                return pd.DataFrame({
+                    "id_a": np.where(swap, ids[rb], ids[la]),
+                    "id_b": np.where(swap, ids[la], ids[rb]),
+                    "__raw": raw,
+                })
+
+            for lo_row, hi_row, gi, gj in zip(starts[:-1], starts[1:], pdf["__gi"], pdf["__gj"]):
+                row = np.arange(lo_row, hi_row)
+                if gi == gj:
+                    sides = [(row, row)]
+                else:  # cross-block: left (b == gi) x right (b == gj)
+                    left, right = row[blk[row] == gi], row[blk[row] == gj]
+                    sides = [(left, right)] + ([(right, left)] if out == "nearest" else [])
+                for left, right in sides:
+                    if not len(right):
+                        continue
+                    rmat_t = mat[right].T
+                    # 256-row GEMM blocks: memory bounds at (256 x n), never n^2
+                    for lo in range(0, len(left), 256):
+                        gemm = mat[left[lo:lo + 256]] @ rmat_t
+                        if out == "nearest":
+                            if gi == gj:  # src is never its own neighbor
+                                gemm[np.arange(len(gemm)), lo + np.arange(len(gemm))] = -np.inf
+                            cand = gemm >= gemm.max(axis=1, keepdims=True) - 2 * slack
+                            cand &= gemm > -np.inf
+                        else:
+                            cand = gemm >= floor
+                            if gi == gj:  # each unordered pair once
+                                cand &= np.arange(lo, lo + len(cand))[:, None] < np.arange(len(right))
+                        rr, cc = np.nonzero(cand)
+                        la, rb = left[lo + rr], right[cc]
+                        distinct = ids[la] != ids[rb]  # a repeated id never pairs with itself
+                        la, rb = la[distinct], rb[distinct]
+                        if len(la):
+                            pending.append((la, rb))
+                            npend += len(la)
+                        if npend >= 1 << 20:
+                            yield flush()
+                            pending, npend = [], 0
+            if pending:
+                yield flush()
+
+    schema = {
+        "pairs": f"id_a {idt}, id_b {idt}, __raw double",
+        "best_b": f"id_b {idt}, __raw double",
+        "nearest": f"src {idt}, dst {idt}, __raw double",
+    }[out]
+    return folded.mapInPandas(verify, schema)
 
 
 def grouped_centroids(
@@ -880,10 +941,12 @@ def semantic_dedup(
     # cut ONCE: `assigned` feeds the bucket fold twice and the output
     assigned = corpus_kernel(
         df, id_col, vec_col, planes=planes, cells=cents, unit=True
-    ).withColumnRenamed("__cell", "cluster").transform(lazy_checkpoint)
+    ).withColumn(  # a NULL vector: the CASE chain's fall-through
+        "cluster", F.coalesce("__cell", F.lit(num_clusters - 1))
+    ).drop("__cell").transform(lazy_checkpoint)
     dropped = (
         _bucket_pairs(
-            assigned, ["cluster", "__sig"], id_col, tau, round_to, block_cap, best_b=True
+            assigned, ["cluster", "__sig"], id_col, tau, round_to, block_cap, out="best_b"
         )
         .filter(F.round("__raw", round_to) >= tau)
         .select(F.col("id_b").alias(id_col))
@@ -915,38 +978,27 @@ def mutual_nn_pairs(
     neighbor, which suppresses the hub vectors that one-directional
     top-1 lists glue to half the corpus.
 
-    Candidate generation reuses :func:`embedding_near_dup_pairs` with
-    the threshold open (≥ −1), so pair cost stays bucket-bounded (the
-    all-pairs exact variant this replaces is O(n²·d)). Each undirected
-    candidate explodes to its two directions in one row-local
-    struct-array explode (never a union of selects — re-execution
-    trap); per-source top-1 is a keyed window (desc cosine, asc
-    neighbor id — deterministic under rounded-cosine ties); mutuality
-    is one self-equi-join on the reversed pair. Vectors alone in
-    their bucket (or zero-norm → NULL cosine) simply drop out.
+    Candidates are the pairs of each signature bucket (the buckets of
+    :func:`embedding_near_dup_pairs` at the same seed), so pair cost
+    stays bucket-bounded (the all-pairs exact variant this replaces is
+    O(n²·d)). The bucket verify (:func:`_bucket_pairs`, ``"nearest"``)
+    emits, per source, only the directed rows that can tie its best
+    rounded cosine, each with its exact folded dot; per-source top-1 is
+    a keyed window over those (desc cosine, asc neighbor id —
+    deterministic under rounded-cosine ties), so the window sorts about
+    one row per source instead of both directions of every bucket pair;
+    mutuality is one self-equi-join on the reversed pair. Vectors alone
+    in their bucket (or zero-norm: no unit vector) simply drop out.
     """
     from pyspark.sql.window import Window
 
-    pairs = embedding_near_dup_pairs(
-        emb_df, id_col, vec_col, threshold=-1.0,
-        num_planes=num_planes, dim=dim, seed=seed, round_to=round_to,
+    planes = np.random.RandomState(seed).normal(size=(num_planes, dim))
+    sig = corpus_kernel(
+        emb_df, id_col, vec_col, planes=planes, unit=True
+    ).transform(lazy_checkpoint)  # two consumers in the bucket fold
+    directed = _bucket_pairs(sig, ["__sig"], id_col, -1.0, round_to, out="nearest").select(
+        "src", "dst", F.round("__raw", round_to).alias("cosine")
     )
-    directed = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("id_a").alias("src"),
-                    F.col("id_b").alias("dst"),
-                    F.col("cosine"),
-                ),
-                F.struct(
-                    F.col("id_b").alias("src"),
-                    F.col("id_a").alias("dst"),
-                    F.col("cosine"),
-                ),
-            )
-        ).alias("__e")
-    ).select("__e.src", "__e.dst", "__e.cosine")
     w = Window.partitionBy("src").orderBy(F.desc("cosine"), F.asc("dst"))
     top1 = (
         directed.withColumn("__rk", F.row_number().over(w))

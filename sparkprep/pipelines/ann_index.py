@@ -67,7 +67,8 @@ def build_ann_index(
     )
     cells = sim.corpus_kernel(emb_df, id_col, vec_col, cells=cunit)
     assigned = emb_df.select(id_col, vec_col).join(
-        cells.select(id_col, F.col("__cell").alias("cell")), id_col
+        # a NULL vector's cell: ivf_cell_expr's NULL order (cell 0)
+        cells.select(id_col, F.coalesce("__cell", F.lit(0)).alias("cell")), id_col
     )
     corpus_path = os.path.join(out_dir, "corpus")
     assigned.write.mode("overwrite").partitionBy("cell").parquet(corpus_path)

@@ -493,6 +493,31 @@ def test_mutual_nn_arrow_agrees_with_native(spark, sf_dir):
     assert nat == arr
 
 
+def test_nearest_verify_keeps_each_top1_across_blocks(spark):
+    """mutual NN's verify emits, per source, only the rows that can tie
+    its best rounded cosine. A cap of 3 splits every bucket into
+    cross-block groups, and exact and scaled copies tie at cosine 1.0:
+    the per-source top-1 over the emitted rows must equal the top-1 over
+    all of the source's bucket pairs, and each emitted dot is the fold."""
+    base = np.random.RandomState(5).normal(size=(12, 8))
+    vecs = np.vstack([base, base[:4], base[:2] * 3.0])
+    rows = [(i, v.tolist()) for i, v in enumerate(vecs)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    planes = np.random.RandomState(42).normal(size=(1, 8))
+    sig = sim.corpus_kernel(df, "vec_id", "embedding", planes=planes, unit=True)
+    near = sim._bucket_pairs(sig, ["__sig"], "vec_id", -1.0, 4, cap=3, out="nearest")
+    units = {i: [x / math.sqrt(_fold(v, v)) for x in v] for i, v in rows}
+    got = defaultdict(list)
+    for r in near.collect():
+        assert r["__raw"] == _fold(units[r["src"]], units[r["dst"]])
+        got[r["src"]].append((-_half_up(r["__raw"], 4), r["dst"]))
+    want = {}
+    for (a, b), cos in _replay_near_dup(rows, threshold=-1.0, num_planes=1, dim=8).items():
+        for src, dst in ((a, b), (b, a)):
+            want[src] = min(want.get(src, (2.0, dst)), (-cos, dst))
+    assert {src: min(c) for src, c in got.items()} == want
+
+
 def test_near_dup_pairs_arrow_blocked_fold_same_pairs(spark, sf_dir):
     """ADVICE r9: the arrow verify fold salt-splits oversize buckets into
     block-pairs. A tiny cap forces the cross-block path on every bucket;

@@ -98,9 +98,11 @@ def test_fold_dot_bit_identical_to_catalyst(spark, dim):
         .collect()
     }
     want = _hex([pair_ref[i] for i in ia])
-    assert _hex(sim._fold_pairs(vt, ia, ib)) == want  # pair by pair
+    assert _hex(sim._fold_pairs(vt, ia, ib)) == want
+    # every ordered pair: each unordered pair folds once, both orders agree
     grid = sim._fold_pairs(vt, np.repeat(ia, len(ia)), np.tile(ib, len(ia)))
-    assert _hex(grid[ia * len(ia) + ia]) == want  # dense grid
+    assert _hex(grid[ia * len(ia) + ia]) == want
+    assert _hex(grid[ib * len(ia) + ib]) == want  # the (b, a) order
 
 
 @pytest.mark.parametrize("dim", [64, 1024])
@@ -164,7 +166,53 @@ def test_null_vector_never_pairs(spark):
         df, threshold=-1.0, num_planes=2, dim=4
     ).collect()
     assert [(r.id_a, r.id_b, r.cosine) for r in out] == [(1, 2, 1.0)]
-    sem = {r.vec_id: r.keep for r in sim.semantic_dedup(
+    sem = {r.vec_id: (r.cluster, r.keep) for r in sim.semantic_dedup(
         df, num_clusters=2, dim=4, tau=0.5, num_planes=2
     ).collect()}
-    assert sem == {0: True, 1: True, 2: False}
+    # the NULL row lands where SemDeDup's CASE chain falls through: the
+    # last cluster (its NULL dots fail every >=)
+    assert sem[0] == (1, True)
+    assert {i: keep for i, (_, keep) in sem.items()} == {0: True, 1: True, 2: False}
+    cells = sim.corpus_kernel(df, "vec_id", "embedding", cells=np.eye(4)[:2])
+    assert {r["vec_id"]: r["__cell"] for r in cells.collect()} == {0: None, 1: 1, 2: 1}
+
+
+def test_repeated_id_never_pairs_with_itself(spark):
+    """A corpus id that occurs twice yields no (x, x) pair, so SemDeDup
+    never drops an id for its own copy."""
+    df = spark.createDataFrame(
+        [(1, [1.0, 2.0, 3.0, 4.0]), (1, [1.0, 2.0, 3.0, 4.0]), (2, [1.0, 2.0, 3.0, 4.1])],
+        "vec_id long, embedding array<double>",
+    )
+    out = sim.embedding_near_dup_pairs(
+        df, threshold=0.9, num_planes=2, dim=4
+    ).collect()
+    assert sorted((r.id_a, r.id_b) for r in out) == [(1, 2), (1, 2)]
+    sem = sim.semantic_dedup(df, num_clusters=2, dim=4, tau=0.9, num_planes=2).collect()
+    assert sorted((r.vec_id, r.keep) for r in sem) == [(1, True), (1, True), (2, False)]
+
+
+def test_prefilter_keeps_pair_at_threshold_for_any_round_to(spark):
+    """At ``round_to=17`` the rounding slack is below one ulp of the
+    cosine, so the GEMM prefilter alone would drop a pair whose GEMM dot
+    lands under its folded dot. The pair's folded dot is the threshold,
+    so it must come back."""
+    dim = 256
+    for seed in range(200):
+        rng = np.random.RandomState(seed)
+        base = rng.normal(size=dim)
+        rows = np.vstack([base, base + 1e-3 * rng.normal(size=dim)])
+        units = rows / np.sqrt(sim._fold_dot(rows.T, rows.T))[:, None]
+        raw = float(sim._fold_dot(units[0], units[1]))
+        gemm = units @ units.copy().T  # two buffers, as the verify (a @ a.T is SYRK)
+        if gemm[0, 1] < raw and gemm[1, 0] < raw:
+            break
+    else:
+        pytest.skip("no pair whose GEMM dot is below its folded dot")
+    df = spark.createDataFrame(
+        [(0, rows[0].tolist()), (1, rows[1].tolist())], "vec_id long, embedding array<double>"
+    )
+    out = sim.embedding_near_dup_pairs(
+        df, threshold=raw, num_planes=1, dim=dim, round_to=17
+    ).collect()
+    assert [(r.id_a, r.id_b) for r in out] == [(0, 1)]
