@@ -66,20 +66,28 @@ Measured round 9 (local[32], idle host):
     survivors by design — 12.0s at the same width.
   widevec panel re-measured on a 4-core host (local[4]), after the five
   bucketed vector operators went to one path each (Arrow kernels that
-  replay the Catalyst left fold bit for bit; GEMM only prefilters).
-  Wall time; cpu= counts executor JVM time only, so it leaves out the
-  Python workers that run every Arrow kernel:
-    semantic dedup (8x2^8)   21.5s  rows=50,000
-    near-dup pairs (>=0.95)  19.2s  rows=10,450,000
-    mutual NN (2^11)         66.9s  rows=1,000 (window sort spills 1.1 GB)
-    ann_lsh (20q, 4 probes)  14.2s  rows=100
-    ann_ivf (20q, 32 cells)  27.7s  rows=100
-    quantize fidelity native 8.6s on the 10k slice vs arrow 7.5s on
-    the full corpus; cosine top-k native 5.7s on the slice vs arrow
-    3.4s on the full corpus; matryoshka 4.5s; negative mining 11.9s.
-    The corpus has only 1,000 distinct vectors (50 copies each), so
+  replay the Catalyst left fold bit for bit; GEMM only prefilters) and
+  mutual NN's verify began sending each source only the rows that can
+  tie its best. Wall time, best of two alternating runs of the five
+  operators with this panel's parameters (quantize, cosine top-k,
+  matryoshka and negative mining were not re-run); cpu= counts
+  executor JVM time only, so it leaves out the Python workers that run
+  every Arrow kernel:
+                             dup corpus               distinct corpus
+    semantic dedup (8x2^8)   19.2s  rows=50,000       16.7s  rows=50,000
+    near-dup pairs (>=0.95)  16.3s  rows=10,450,000   10.5s  rows=134,180
+    mutual NN (2^11)         12.4s  rows=1,000        11.5s  rows=11,614
+    ann_lsh (20q, 4 probes)  13.2s  rows=100          12.3s  rows=100
+    ann_ivf (20q, 32 cells)  28.4s  rows=100          24.6s  rows=100
+    Mutual NN took 59-77s on the dup corpus before (old Arrow twin and
+    first one-path version alike): its window sorted both directions
+    of all 25.7M bucket pairs (51M rows, 940 MB spill).
+    The dup corpus has only 1,000 distinct vectors (50 copies each), so
     buckets hold thousands of exact duplicates: the verify folds each
-    distinct vector pair once.
+    distinct vector pair once. Earlier run: quantize fidelity native
+    8.6s on the 10k slice vs arrow 7.5s on the full corpus; cosine
+    top-k native 5.7s on the slice vs arrow 3.4s on the full corpus;
+    matryoshka 4.5s; negative mining 11.9s.
 
 Measured round 10 (local[32]):
   streaming panel (50,000 users, 12 hourly waves x 200,000 events, 2h
