@@ -84,10 +84,20 @@ Measured round 9 (local[32], idle host):
     of all 25.7M bucket pairs (51M rows, 940 MB spill).
     The dup corpus has only 1,000 distinct vectors (50 copies each), so
     buckets hold thousands of exact duplicates: the verify folds each
-    distinct vector pair once. Earlier run: quantize fidelity native
-    8.6s on the 10k slice vs arrow 7.5s on the full corpus; cosine
-    top-k native 5.7s on the slice vs arrow 3.4s on the full corpus;
-    matryoshka 4.5s; negative mining 11.9s.
+    distinct vector pair once. Earlier run: quantize fidelity 8.6s and
+    cosine top-k 5.7s on the 10k slice; matryoshka 4.5s; negative
+    mining 11.9s.
+  Mutual NN and knn label consistency re-measured after both began
+  reading one in-bucket top-k (the verify keeps, per source, only the
+  rows within two rounding units of its k-th best): local[4], wall
+  time, scratch driver with this panel's generators and parameters,
+  a warm-up job first, two alternating runs a side, best of two:
+                             dup corpus               distinct corpus
+    mutual NN (2^11)         17.4s  rows=1,000        17.2s  rows=11,614
+    knn (k=5, 2^11)          14.0s  rows=50,000       12.9s  rows=49,986
+    knn took 49.8s on the dup corpus (15.8s distinct) while it still
+    exploded every open-threshold pair to both directions and sorted
+    them; row counts and content digests are unchanged.
 
 Measured round 10 (local[32]):
   streaming panel (50,000 users, 12 hourly waves x 200,000 events, 2h
@@ -813,22 +823,16 @@ def widevec_panel(
         f"(bench embeddings are 64-dim) ---", flush=True,
     )
     native_slice = vecs.filter(F.col("vec_id") < num_vecs // 5)
-    _bench(f"quantize fidelity NATIVE ({num_vecs // 5 // 1000}k)", lambda: _materialize(
+    _bench(f"quantize fidelity ({num_vecs // 5 // 1000}k)", lambda: _materialize(
         quantize.reconstruction_stats(native_slice, "embedding").select(
             "vec_id", "mean_abs_err", "cos_fidelity")))
-    _bench("quantize fidelity ARROW (5x corpus)", lambda: _materialize(
-        quantize.reconstruction_stats_arrow(vecs, "vec_id", "embedding").select(
-            "vec_id", "mean_abs_err", "cos_fidelity")))
     queries = vecs.filter(F.col("vec_id") < 3)
-    _bench("cosine top-k NATIVE (3 queries)", lambda: _materialize(
+    _bench(f"cosine top-k (3 queries, {num_vecs // 5 // 1000}k)", lambda: _materialize(
         similarity.cosine_topk_native(native_slice, queries)))
-    qv = {int(r["vec_id"]): list(r["embedding"]) for r in queries.collect()}
-    _bench("cosine top-k ARROW (3 queries, 5x corpus)", lambda: _materialize(
-        similarity.cosine_topk_arrow(vecs, qv)))
     import math
 
-    # the five bucketed vector operators have one path each (Arrow
-    # kernels replaying the Catalyst left fold), run once on the corpus
+    # the bucketed vector operators have one path each (Arrow kernels
+    # replaying the Catalyst left fold), run once on the corpus
     planes = max(8, math.ceil(math.log2(max(num_vecs, 1) / (8 * 25))))
     _bench(f"semantic dedup (8x2^{planes})", lambda: _materialize(
         similarity.semantic_dedup(vecs, dim=dims, num_planes=planes)))
@@ -847,6 +851,8 @@ def widevec_panel(
     _bench("ann_ivf (20q, 32 cells)", lambda: _materialize(
         similarity.ann_ivf_topk(vecs, q20, num_centroids=32, num_probes=2)))
     labeled = vecs.withColumn("label", F.pmod("vec_id", 16))
+    _bench(f"knn label consistency (k=5, 2^{nn_planes})", lambda: _materialize(
+        similarity.knn_label_consistency(labeled, k=5, num_planes=nn_planes, dim=dims)))
     _bench("negative mining (2000 buckets)", lambda: _materialize(
         similarity.negative_pairs(labeled, k=3, buckets=2000)))
 

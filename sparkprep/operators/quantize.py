@@ -139,57 +139,3 @@ def matryoshka_stats(
         F.try_divide(norm_k, norm_full).alias("cos_trunc"),
     ).drop("_vd", "_vk", "_ss_full", "_ss_k")
 
-
-def reconstruction_stats_arrow(
-    df: DataFrame, id_col: str, vec_col: str, levels: int = 255
-) -> DataFrame:
-    """Wide-vector twin of :func:`reconstruction_stats` (numpy per
-    Arrow batch): at 1024-dim vectors the native form pays ~6 HOF
-    passes x dims interpreted element-evals per row (~1 ms/row
-    measured — scripts/scale_smoke.py widevec); here the whole batch
-    quantizes/dequantizes as vectorized numpy. Emits (id, q_min,
-    q_max, codes, mean_abs_err, cos_fidelity) — same math
-    (floor(z+0.5) boundary rule, NaN→NULL fidelity for zero vectors),
-    differing from native only by float summation order (GEMM/pairwise
-    vs left fold, ~1e-16)."""
-    import pandas as pd
-    from collections.abc import Iterator as _It
-
-    lv = float(levels)
-
-    def stats(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        import numpy as np
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            vmin = mat.min(axis=1)
-            vmax = mat.max(axis=1)
-            span = vmax - vmin
-            safe = np.where(span == 0, 1.0, span)
-            codes = np.floor((mat - vmin[:, None]) / safe[:, None] * lv + 0.5)
-            codes = np.where(span[:, None] == 0, 0.0, codes)
-            dq = vmin[:, None] + codes / lv * span[:, None]
-            mae = np.abs(mat - dq).mean(axis=1)
-            dot = np.einsum("ij,ij->i", mat, dq)
-            denom = np.linalg.norm(mat, axis=1) * np.linalg.norm(dq, axis=1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(denom == 0, np.nan, dot / denom)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "q_min": vmin,
-                    "q_max": vmax,
-                    "codes": list(codes.astype(np.int32)),
-                    "mean_abs_err": mae,
-                    "cos_fidelity": cos,
-                }
-            )
-
-    idt = df.schema[id_col].dataType.simpleString()
-    return df.select(id_col, vec_col).mapInPandas(
-        stats,
-        f"{id_col} {idt}, q_min double, q_max double, codes array<int>, "
-        "mean_abs_err double, cos_fidelity double",
-    )

@@ -7,7 +7,7 @@ and the shuffles; numpy over Arrow batches does the dense math of the
 corpus side (:func:`corpus_kernel`: signatures, IVF cells, SemDeDup
 clusters, norms, unit vectors) and of the bucket verify
 (:func:`_bucket_pairs`: all pairs over a threshold, the best pair per
-id, or each id's nearest). Every double that reaches an output or a
+id, or each id's k nearest). Every double that reaches an output or a
 comparison is a LEFT FOLD from +0.0 over the double products in index
 order (:func:`_fold_dot`) — the arithmetic of the Catalyst helpers
 :func:`dot_native`, :func:`norm_native` and :func:`hyperplane_dots` —
@@ -21,8 +21,9 @@ The query side stays Catalyst expressions (signature and multi-probe
 margins from :func:`hyperplane_dots`, IVF probe cells from
 :func:`ivf_cell_expr`), and so does the per-candidate cosine rerank
 (:func:`cosine_from_norms`): both are bounded by the query panel.
-:func:`cosine_topk_arrow` is a standalone GEMM twin of
-:func:`cosine_topk_native` and makes no bit-exact claim.
+The one twin left, :func:`embedding_covariance_arrow`, answers a
+different question: float64 sums for :func:`fit_pca`, against the
+DECIMAL-exact :func:`embedding_covariance` the oracle replays.
 """
 
 from __future__ import annotations
@@ -131,66 +132,6 @@ def cosine_topk_native(
     )
 
 
-def cosine_topk_arrow(
-    emb_df: DataFrame,
-    query_vecs: dict[int, list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-) -> DataFrame:
-    """Brute-force top-k with numpy over Arrow batches — the scale-path
-    twin of :func:`cosine_topk_native`.
-
-    The query matrix rides inside the serialized closure (broadcast by
-    Spark); each Arrow batch computes a (batch x queries) GEMM and emits
-    only per-batch top-k, so the driver-side reduce is tiny. Final exact
-    top-k via groupBy window on batch winners (k * num_batches rows).
-    """
-    import pandas as pd
-    from pyspark.sql.window import Window
-
-    qids = sorted(query_vecs)
-    qmat = np.asarray([query_vecs[i] for i in qids], dtype=np.float64)
-    qnorm = np.linalg.norm(qmat, axis=1)
-
-    idt = _id_ddl(emb_df, id_col)
-    out_schema = f"query_id {idt}, neighbor_id {idt}, cosine double"
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy()
-            mat = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            sims = (mat @ qmat.T) / (
-                np.linalg.norm(mat, axis=1)[:, None] * qnorm[None, :]
-            )
-            frames = []
-            for j, qid in enumerate(qids):
-                col = sims[:, j]
-                keep = min(k + 1, len(col))
-                top = np.argpartition(-col, keep - 1)[:keep]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "neighbor_id": ids[top],
-                            "cosine": col[top],
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
-
-    scored = emb_df.select(id_col, vec_col).mapInPandas(score, out_schema)
-    scored = scored.filter(F.col("neighbor_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long"), F.round("cosine", 4).alias("cosine"))
-    )
-
-
 def hyperplane_dots(vec_col, planes: np.ndarray) -> Column:
     """Per-plane dot products as ONE array<double> column — the shared
     base for both the bucket signature and multi-probe margin ranking
@@ -294,7 +235,11 @@ def corpus_kernel(
     unit are NULL. Its ``__cell`` is NULL too, because the two Catalyst
     spellings disagree there: ``ivf_cell_expr`` sorts NULL dots by cid
     (cell 0), SemDeDup's CASE chain falls through to the last cluster;
-    each caller coalesces to its own.
+    each caller coalesces to its own. A vector with a NaN coordinate is
+    a NULL vector here (signature 0, NULL norm, unit and cell). That
+    departs from Catalyst, which orders NaN above every number (all
+    signature bits set, NaN norm): a NaN vector has no direction, so it
+    gets no bucket and no neighbours.
     The dense math is O(rows x (planes + cells) x dim) numpy work per
     Arrow batch, where the interpreted Catalyst folds cost ~1µs per
     element."""
@@ -309,12 +254,12 @@ def corpus_kernel(
         for pdf in batches:
             if pdf.empty:
                 continue
-            null = pdf[vec_col].isna().to_numpy()
             # (d, n), one row per coordinate, stacked straight from the
             # row arrays: 2x faster than building (n, d) and transposing
             vt = np.stack(
                 [nan_row if v is None else v for v in pdf[vec_col]], axis=1, dtype=np.float64
             )
+            null = np.isnan(vt).any(axis=0)  # NULL vectors and NaN coordinates
             norm = np.sqrt(_fold_dot(vt, vt))
             out = {id_col: pdf[id_col].to_numpy(), "__cn": norm}
             if planes is not None:
@@ -625,12 +570,24 @@ def embedding_near_dup_pairs(
     sig = corpus_kernel(
         emb_df, id_col, vec_col, planes=planes, unit=True
     ).transform(lazy_checkpoint)
-    pairs = _bucket_pairs(sig, ["__sig"], id_col, threshold, round_to, block_cap).select(
-        "id_a", "id_b", F.round("__raw", round_to).alias("cosine")
-    )
-    # a unit dot never rounds below -1: an open threshold filters nothing
-    # (and would re-evaluate the BigDecimal round once more per pair)
-    return pairs if threshold <= -1 else pairs.filter(F.col("cosine") >= threshold)
+    pairs = _bucket_pairs(sig, ["__sig"], id_col, threshold, round_to, block_cap)
+    # a unit dot never rounds below -1: an open threshold filters nothing.
+    # Otherwise the filter runs under the projection, so a bare
+    # `cosine >= threshold` rounds every pair twice. The double test
+    # settles all but the pairs near the bar: raw >= threshold + slack
+    # gives round(raw) >= raw - 0.5 * 10**-round_to >= threshold (HALF_UP,
+    # slack >= 10**-round_to), and Or evaluates round only when it fails.
+    if threshold > -1:
+        pairs = pairs.filter(
+            (F.col("__raw") >= float(threshold) + _slack(round_to))
+            | (F.round("__raw", round_to) >= threshold)
+        )
+    return pairs.select("id_a", "id_b", F.round("__raw", round_to).alias("cosine"))
+
+
+def _slack(round_to: int) -> float:
+    """The verify's room around a rounded threshold: see :func:`_bucket_pairs`."""
+    return max(10.0 ** -int(round_to), 1e-9)
 
 
 def _blocked_bucket_fold(
@@ -717,6 +674,7 @@ def _bucket_pairs(
     round_to: int,
     cap: int = BUCKET_BLOCK_CAP,
     out: str = "pairs",
+    k: int = 1,
 ) -> DataFrame:
     """The one bucket verify over the non-NULL ``__unit`` rows of
     ``frame`` that share ``keys``. Every ``__raw`` it emits is the EXACT
@@ -732,11 +690,12 @@ def _bucket_pairs(
       passes ``F.round(__raw) >= threshold`` iff some pair does, and a
       bucket of near-duplicates ships bucket-many rows, not pair-many);
     - ``"nearest"``: directed ``(src, dst, __raw)`` for the dsts whose
-      GEMM dot is within ``2 * slack`` of src's best GEMM dot in the
-      bucket row (mutual NN; ``threshold`` unused). A dst whose rounded
-      cosine ties src's best has ``raw >= best - 10**-round_to``, so it
-      is always among them, and a per-src top-1 over these rows equals
-      the top-1 over all of src's bucket pairs.
+      GEMM dot is within ``2 * slack`` of src's ``k``-th best GEMM dot
+      in the bucket row (:func:`_bucket_topk`; ``threshold`` unused). A
+      dst more than ``2 * slack`` below k others in one row has a raw
+      dot more than ``10**-round_to`` below theirs, so k rounded cosines
+      strictly beat it, and a per-src top-k over these rows equals the
+      top-k over all of src's bucket pairs.
 
     ``slack = max(10**-round_to, 1e-9)`` covers HALF_UP rounding (a pair
     with ``round(dot, round_to) >= threshold`` has ``dot >= threshold -
@@ -749,10 +708,11 @@ def _bucket_pairs(
     are folded together by :func:`_fold_pairs` over the batch's
     DISTINCT unit vectors (flushed every ~1M candidates), so a batch of
     small buckets pays one fold, not one per bucket. A repeated id never
-    pairs with itself. Lineage-cut ``frame`` first (the fold reads it
-    twice)."""
+    pairs with itself: same-id GEMM entries are -inf before any cut, so
+    a copy of src never sets its band. Lineage-cut ``frame`` first (the
+    fold reads it twice)."""
     idt = _id_ddl(frame, id_col)
-    slack = max(10.0 ** -int(round_to), 1e-9)
+    slack = _slack(round_to)
     floor = float(threshold) - slack
     folded = _blocked_bucket_fold(
         frame.filter(F.col("__unit").isNotNull()), keys, id_col, cap=cap
@@ -765,6 +725,7 @@ def _bucket_pairs(
             sizes = pdf["__i"].map(len).to_numpy()
             starts = np.concatenate([[0], np.cumsum(sizes)])
             ids = np.concatenate(pdf["__i"].to_list())
+            idc = pd.factorize(ids)[0]  # int codes: the same-id mask at any id type
             blk = np.concatenate(pdf["__b"].to_list())
             mat = np.ascontiguousarray(np.concatenate([np.stack(u) for u in pdf["__u"]]))
             rowkey = mat.view(np.dtype((np.void, mat.shape[1] * 8))).ravel()
@@ -804,23 +765,24 @@ def _bucket_pairs(
                     rmat_t = mat[right].T
                     # 256-row GEMM blocks: memory bounds at (256 x n), never n^2
                     for lo in range(0, len(left), 256):
-                        gemm = mat[left[lo:lo + 256]] @ rmat_t
-                        if out == "nearest":
-                            if gi == gj:  # src is never its own neighbor
-                                gemm[np.arange(len(gemm)), lo + np.arange(len(gemm))] = -np.inf
-                            cand = gemm >= gemm.max(axis=1, keepdims=True) - 2 * slack
-                            cand &= gemm > -np.inf
+                        src = left[lo:lo + 256]
+                        gemm = mat[src] @ rmat_t
+                        gemm[idc[src][:, None] == idc[right]] = -np.inf
+                        if out == "nearest":  # within 2 * slack of src's k-th best
+                            kk = min(k, len(right))
+                            # max is 5x cheaper than a partition at k = 1
+                            kth = gemm.max(axis=1, keepdims=True) if kk == 1 else (
+                                np.partition(gemm, -kk, axis=1)[:, -kk, None]
+                            )
+                            cand = (gemm >= kth - 2 * slack) & (gemm > -np.inf)
                         else:
                             cand = gemm >= floor
                             if gi == gj:  # each unordered pair once
                                 cand &= np.arange(lo, lo + len(cand))[:, None] < np.arange(len(right))
                         rr, cc = np.nonzero(cand)
-                        la, rb = left[lo + rr], right[cc]
-                        distinct = ids[la] != ids[rb]  # a repeated id never pairs with itself
-                        la, rb = la[distinct], rb[distinct]
-                        if len(la):
-                            pending.append((la, rb))
-                            npend += len(la)
+                        if len(rr):
+                            pending.append((src[rr], right[cc]))
+                            npend += len(rr)
                         if npend >= 1 << 20:
                             yield flush()
                             pending, npend = [], 0
@@ -963,6 +925,45 @@ def semantic_dedup(
     )
 
 
+def _bucket_topk(
+    emb_df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    num_planes: int,
+    dim: int,
+    seed: int,
+    round_to: int,
+) -> DataFrame:
+    """Each vector's ``k`` nearest in-bucket neighbours as ``(src, dst,
+    cosine)``, ``cosine = F.round(dot, round_to)``, ranked (desc cosine,
+    asc dst — deterministic under rounded-cosine ties): the one top-k of
+    :func:`mutual_nn_pairs` (k = 1) and :func:`knn_label_consistency`.
+
+    The buckets are :func:`embedding_near_dup_pairs`' at the same seed;
+    the verify (:func:`_bucket_pairs`, ``"nearest"``) sends each source
+    only the rows that can enter its top-k, each with its exact folded
+    dot, so the keyed window (WindowGroupLimit under ``rank <= k``) sorts
+    about k rows per source instead of both directions of every bucket
+    pair. Vectors alone in their bucket (or without a unit vector: zero
+    norm, NULL or NaN) have no row."""
+    from pyspark.sql.window import Window
+
+    planes = np.random.RandomState(seed).normal(size=(num_planes, dim))
+    sig = corpus_kernel(
+        emb_df, id_col, vec_col, planes=planes, unit=True
+    ).transform(lazy_checkpoint)  # two consumers in the bucket fold
+    near = _bucket_pairs(sig, ["__sig"], id_col, -1.0, round_to, out="nearest", k=k).select(
+        "src", "dst", F.round("__raw", round_to).alias("cosine")
+    )
+    w = Window.partitionBy("src").orderBy(F.desc("cosine"), F.asc("dst"))
+    return (
+        near.withColumn("__rk", F.row_number().over(w))
+        .filter(F.col("__rk") <= int(k))
+        .select("src", "dst", "cosine")
+    )
+
+
 def mutual_nn_pairs(
     emb_df: DataFrame,
     id_col: str = "vec_id",
@@ -978,32 +979,12 @@ def mutual_nn_pairs(
     neighbor, which suppresses the hub vectors that one-directional
     top-1 lists glue to half the corpus.
 
-    Candidates are the pairs of each signature bucket (the buckets of
-    :func:`embedding_near_dup_pairs` at the same seed), so pair cost
+    Each side's best is :func:`_bucket_topk` at k = 1, so pair cost
     stays bucket-bounded (the all-pairs exact variant this replaces is
-    O(n²·d)). The bucket verify (:func:`_bucket_pairs`, ``"nearest"``)
-    emits, per source, only the directed rows that can tie its best
-    rounded cosine, each with its exact folded dot; per-source top-1 is
-    a keyed window over those (desc cosine, asc neighbor id —
-    deterministic under rounded-cosine ties), so the window sorts about
-    one row per source instead of both directions of every bucket pair;
-    mutuality is one self-equi-join on the reversed pair. Vectors alone
-    in their bucket (or zero-norm: no unit vector) simply drop out.
+    O(n²·d)); mutuality is one self-equi-join on the reversed pair.
     """
-    from pyspark.sql.window import Window
-
-    planes = np.random.RandomState(seed).normal(size=(num_planes, dim))
-    sig = corpus_kernel(
-        emb_df, id_col, vec_col, planes=planes, unit=True
-    ).transform(lazy_checkpoint)  # two consumers in the bucket fold
-    directed = _bucket_pairs(sig, ["__sig"], id_col, -1.0, round_to, out="nearest").select(
-        "src", "dst", F.round("__raw", round_to).alias("cosine")
-    )
-    w = Window.partitionBy("src").orderBy(F.desc("cosine"), F.asc("dst"))
-    top1 = (
-        directed.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") == 1)
-        .select("src", "dst", "cosine")
+    top1 = _bucket_topk(
+        emb_df, id_col, vec_col, 1, num_planes, dim, seed, round_to
     ).transform(lazy_checkpoint)  # consumed as BOTH join sides
     reverse = top1.select(
         F.col("dst").alias("src"), F.col("src").alias("dst")
@@ -1475,42 +1456,15 @@ def knn_label_consistency(
     a row whose neighborhood overwhelmingly disagrees is a labeling
     suspect worth human review before training.
 
-    Candidates stay LSH-bucket-bounded (reuses
-    :func:`embedding_near_dup_pairs` with the threshold open), each
-    undirected pair explodes to both directions row-locally, and the
-    per-source top-k is a keyed window whose ``rank ≤ k`` filter
-    compiles to WindowGroupLimit (map-side per-group limit — the
-    scale-safe top-k shape). Labels attach by two keyed equi-joins on
-    the id (entity-grain: never broadcast at corpus scale, AQE decides
-    here). Vectors alone in their bucket drop out — they have no
-    neighborhood to vote.
+    The neighbours are :func:`_bucket_topk`: LSH-bucket-bounded, and
+    the verify sends each source only the rows that can enter its
+    top-k. Labels attach by two keyed equi-joins on the id
+    (entity-grain: never broadcast at corpus scale, AQE decides here).
+    Vectors alone in their bucket drop out — they have no neighborhood
+    to vote.
     """
-    from pyspark.sql.window import Window
-
-    pairs = embedding_near_dup_pairs(
-        emb_df.select(id_col, vec_col), id_col, vec_col, threshold=-1.0,
-        num_planes=num_planes, dim=dim, seed=seed, round_to=round_to,
-    )
-    directed = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("id_a").alias("src"),
-                    F.col("id_b").alias("dst"),
-                    F.col("cosine"),
-                ),
-                F.struct(
-                    F.col("id_b").alias("src"),
-                    F.col("id_a").alias("dst"),
-                    F.col("cosine"),
-                ),
-            )
-        ).alias("__e")
-    ).select("__e.src", "__e.dst", "__e.cosine")
-    w = Window.partitionBy("src").orderBy(F.desc("cosine"), F.asc("dst"))
-    topk = (
-        directed.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= int(k))
+    topk = _bucket_topk(
+        emb_df, id_col, vec_col, k, num_planes, dim, seed, round_to
     )
     labels = emb_df.select(
         F.col(id_col).alias("__id"), F.col(label_col).alias("__lbl")

@@ -196,3 +196,26 @@ def test_no_engine_flag():
             if isinstance(node, ast.Call) and any(k.arg == "engine" for k in node.keywords):
                 flagged.append(f"{where} passes engine=")
     assert not flagged, f"engine selectors: {flagged}"
+
+
+def test_no_arrow_twin():
+    # one vector path per operator: no function in sparkprep/ is named
+    # `<stem>_arrow` beside a `<stem>` or `<stem>_native` that answers
+    # the same question. embedding_covariance is the one exception: its
+    # DECIMAL-exact sums are the query's (oracle-replayed) answer, its
+    # float64 twin feeds fit_pca at 1e-9, and the exact form is 10x
+    # slower (14 s vs 1.4 s at sf0.1), so neither can replace the other
+    allowed = {"embedding_covariance"}
+    pkg = pathlib.Path(cp.__file__).parent
+    names = {
+        node.name
+        for path in sorted(pkg.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+    }
+    twins = sorted(
+        n for n in names
+        if n.endswith("_arrow") and n[:-6] not in allowed
+        and ({n[:-6], n[:-6] + "_native"} & names)
+    )
+    assert not twins, f"Arrow twins of an existing operator: {twins}"

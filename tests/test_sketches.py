@@ -77,6 +77,10 @@ def test_quantize_constant_vector_exact(spark):
     out = quantize.reconstruction_stats(df, "v", levels=255).collect()[0]
     assert out["codes"] == [0, 0, 0]
     assert out["mean_abs_err"] == 0.0
+    # a zero vector has no direction: NULL fidelity, not an ANSI error
+    zero = spark.createDataFrame([(2, [0.0, 0.0, 0.0])], "id int, v array<double>")
+    out = quantize.reconstruction_stats(zero, "v", levels=255).collect()[0]
+    assert out["codes"] == [0, 0, 0] and out["cos_fidelity"] is None
 
 
 def test_quantize_codes_in_range(spark, sf_dir):

@@ -175,6 +175,20 @@ def test_null_vector_never_pairs(spark):
     assert {i: keep for i, (_, keep) in sem.items()} == {0: True, 1: True, 2: False}
     cells = sim.corpus_kernel(df, "vec_id", "embedding", cells=np.eye(4)[:2])
     assert {r["vec_id"]: r["__cell"] for r in cells.collect()} == {0: None, 1: 1, 2: 1}
+    # a NaN coordinate makes a NULL vector: no bucket, norm, unit or cell
+    nan = spark.createDataFrame(
+        [(0, None), (1, [float("nan"), 1.0]), (2, [1.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    got = {
+        r["vec_id"]: r.asDict()
+        for r in sim.corpus_kernel(
+            nan, "vec_id", "embedding", planes=np.ones((2, 2)), cells=np.eye(2), unit=True
+        ).collect()
+    }
+    want = {"__cn": None, "__sig": 0, "__cell": None, "__unit": None}
+    assert {k: got[0][k] for k in want} == {k: got[1][k] for k in want} == want
+    assert got[2]["__sig"] == 3 and got[2]["__cell"] == 0
 
 
 def test_repeated_id_never_pairs_with_itself(spark):
@@ -190,6 +204,14 @@ def test_repeated_id_never_pairs_with_itself(spark):
     assert sorted((r.id_a, r.id_b) for r in out) == [(1, 2), (1, 2)]
     sem = sim.semantic_dedup(df, num_clusters=2, dim=4, tau=0.9, num_planes=2).collect()
     assert sorted((r.vec_id, r.keep) for r in sem) == [(1, True), (1, True), (2, False)]
+    # the two id-1 rows are each other's closest vectors, but a copy of
+    # src's own id must not set its nearest band: 2 is id 1's nearest
+    near = spark.createDataFrame(
+        [(1, [1.0, 2.0, 3.0, 4.0]), (1, [1.0, 2.0, 3.0, 4.0]), (2, [1.0, 2.0, 3.0, 5.0])],
+        "vec_id long, embedding array<double>",
+    )
+    mnn = sim.mutual_nn_pairs(near, num_planes=2, dim=4).collect()
+    assert [(r.id_a, r.id_b, r.cosine) for r in mnn] == [(1, 2, 0.994)]
 
 
 def test_prefilter_keeps_pair_at_threshold_for_any_round_to(spark):
