@@ -1,20 +1,21 @@
 """Entity-grain quantile scoring, exact vs 100x form, as a runnable
-proof: the customer-value trio (RFM quintiles, Lorenz deciles, Gini)
-computed twice — once with the oracle-exact global ntile/rank windows
-(one task sorts every customer) and once with ``ranks.global_rank`` /
-``global_ntile`` (repartitionByRange + per-partition window + broadcast
-offsets — every stage parallel) — then asserted BIT-IDENTICAL.
+proof: RFM quintiles computed twice — once with the oracle-exact global
+ntile windows (one task sorts every customer) and once with
+``ranks.multi_order_global_ntile`` (repartitionByRange + per-partition
+window + broadcast offsets — every stage parallel) — then asserted
+BIT-IDENTICAL.
 
     python examples/scale_rank_demo.py [sf_dir]
 
-Read-only; prints each pair's row counts, equality verdict, and the
+Read-only; prints the row count, the equality verdict, and the
 plan-shape difference that matters at 100 TB: the exact form's physical
 plan contains an ``Exchange SinglePartition`` feeding a Window over the
-per-customer frame, the scale form's does not (its only single-partition
-exchange is the O(32)-row offsets frame). At driver scale the exact
+per-customer frame, the scale form's does not. At driver scale the exact
 form is faster (fixed scheduling overhead dominates); past the point
 where the per-customer frame outgrows one task, only the scale form
 survives — which is why the registry keeps both under one oracle.
+(Gini and the Lorenz deciles have one range-pass form only: there the
+parallel form cost nothing at driver scale.)
 """
 
 import os
@@ -22,48 +23,30 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from sparkprep.queries.relational_ext import (  # noqa: E402
-    q_gini_revenue,
-    q_lorenz_curve,
-    q_rfm_segments,
-)
-from sparkprep.queries.scale_ops import (  # noqa: E402
-    q_gini_scale,
-    q_lorenz_scale,
-    q_rfm_scale,
-)
+from sparkprep.queries.relational_ext import q_rfm_segments  # noqa: E402
+from sparkprep.queries.scale_ops import q_rfm_scale  # noqa: E402
 from sparkprep.session import build_session  # noqa: E402
-
-PAIRS = [
-    ("rfm quintile grid", q_rfm_segments, q_rfm_scale),
-    ("lorenz deciles", q_lorenz_curve, q_lorenz_scale),
-    ("gini coefficient", q_gini_revenue, q_gini_scale),
-]
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = build_session(app_name="scale-rank-demo")
     spark.sparkContext.setLogLevel("ERROR")
-    rc = 0
-    for title, exact_fn, scale_fn in PAIRS:
-        exact_df = exact_fn(spark, sf_dir)
-        scale_df = scale_fn(spark, sf_dir)
-        exact = sorted(map(tuple, exact_df.collect()))
-        scale = sorted(map(tuple, scale_df.collect()))
-        same = exact == scale
-        rc |= 0 if same else 1
-        plan = exact_df._sc._jvm.PythonSQLUtils.explainString(
-            exact_df._jdf.queryExecution(), "simple"
-        )
-        n_single = plan.count("Exchange SinglePartition")
-        print(
-            f"{title:18s} rows={len(exact):5d}  bit-identical={same}  "
-            f"exact-plan single-partition exchanges={n_single}"
-        )
-    print("PASS" if rc == 0 else "FAIL")
+    exact_df = q_rfm_segments(spark, sf_dir)
+    exact = sorted(map(tuple, exact_df.collect()))
+    scale = sorted(map(tuple, q_rfm_scale(spark, sf_dir).collect()))
+    same = exact == scale
+    plan = exact_df._sc._jvm.PythonSQLUtils.explainString(
+        exact_df._jdf.queryExecution(), "simple"
+    )
+    n_single = plan.count("Exchange SinglePartition")
+    print(
+        f"rfm quintile grid  rows={len(exact):5d}  bit-identical={same}  "
+        f"exact-plan single-partition exchanges={n_single}"
+    )
+    print("PASS" if same else "FAIL")
     spark.stop()
-    return rc
+    return 0 if same else 1
 
 
 if __name__ == "__main__":

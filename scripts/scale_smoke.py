@@ -6,8 +6,9 @@ interpreted-lambda hotspots) that sf0.1 is too small to expose.
 ``cpu=`` is executor JVM task time only: the Python workers that run
 the Arrow kernels are not in it, so compare Arrow ops on wall time.
 ``rows=`` is counted on the same noop write (an observed metric). Runs
-local[<host cores>] (``SPARK_GRAFT_CPUS`` when set, else
-``os.cpu_count()``) and prints the master it used.
+local[<host cores>] (``session.default_parallelism()``:
+``SPARK_GRAFT_CPUS`` when set, else the process's CPU affinity set) and
+prints the master it used.
 
 Usage: python scripts/scale_smoke.py [core|revenue|graph|longdoc|widevec|streaming|all] [args...]
   core    [num_docs] [num_rows]   text/dedup/similarity panel (default)
@@ -600,8 +601,6 @@ _REVENUE_QUERIES = [
     "growth_decomposition",
     "gini_revenue",
     "lorenz_curve",
-    "gini_scale",
-    "lorenz_scale",
     "theil_index",
     "revenue_concentration",
     "top_movers",
@@ -1079,14 +1078,7 @@ def main() -> None:
         "core", "revenue", "graph", "longdoc", "widevec", "streaming", "all"
     ):
         panel = args.pop(0)
-    # the host's cores, not session.default_parallelism()'s fallback of
-    # 32: oversubscribing a small host buries op-level changes in noise
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
-    spark = build_session(
-        app_name="scale-smoke",
-        master=f"local[{cores}]",
-        shuffle_partitions=max(cores * 2, 8),
-    )
+    spark = build_session(app_name="scale-smoke")
     spark.sparkContext.setLogLevel("ERROR")
     print(f"master {spark.sparkContext.master}", flush=True)
     if panel in ("core", "all"):

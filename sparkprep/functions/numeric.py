@@ -27,31 +27,14 @@ def minmax_scalars(df: DataFrame, *cols: str) -> dict[str, tuple[float, float]]:
 
 
 def minmax_normalize(df: DataFrame, *cols: str, suffix: str = "") -> DataFrame:
-    """X9 — ``(x - mn) / (mx - mn)`` as native arithmetic.
+    """X9 — ``(x - mn) / (mx - mn)`` as native arithmetic, with no
+    driver round-trip: the scalar aggregate is cross-joined back as a
+    broadcast.
 
     ``suffix=''`` replaces in place like the reference
     (loanStat.py:287); pass e.g. ``'_norm'`` to keep the original.
-    Degenerate columns (mx == mn) normalize to null (0/0), matching the
-    UDF's ZeroDivisionError-free... actually the reference UDF would
-    raise; we choose null and document the divergence.
-    """
-    scalars = minmax_scalars(df, *cols)
-    out = df
-    for c in cols:
-        mn, mx = scalars[c]
-        denom = mx - mn
-        expr = (
-            F.lit(None).cast("double")
-            if denom == 0
-            else (F.col(c) - F.lit(mn)) / F.lit(denom)
-        )
-        out = out.withColumn(c + suffix, expr)
-    return out
-
-
-def minmax_normalize_distributed(df: DataFrame, *cols: str, suffix: str = "") -> DataFrame:
-    """Fully-lazy variant: no driver round-trip — the scalar aggregate is
-    cross-joined back as a broadcast.
+    Degenerate columns (mx == mn) normalize to null, where the
+    reference UDF would raise ZeroDivisionError (documented divergence).
 
     NOT implemented as ``min() over ()``: an empty-frame window moves ALL
     rows to a single partition (WindowExec warns exactly this), which is
@@ -66,8 +49,8 @@ def minmax_normalize_distributed(df: DataFrame, *cols: str, suffix: str = "") ->
     out = df.crossJoin(F.broadcast(scalars))
     for c in cols:
         mn, mx = F.col(f"__mn_{c}"), F.col(f"__mx_{c}")
-        # degenerate column (mx == mn) -> null, matching minmax_normalize;
-        # a bare division trips ANSI divide-by-zero
+        # degenerate column (mx == mn) -> null; a bare division trips
+        # ANSI divide-by-zero
         denom = F.when(mx != mn, mx - mn)
         out = out.withColumn(c + suffix, (F.col(c) - mn) / denom)
     return out.drop(*[f"__{p}_{c}" for c in cols for p in ("mn", "mx")])

@@ -294,6 +294,27 @@ def incremental_minhash_filter(
     return new_df.join(flagged, id_col, "left_anti")
 
 
+def _shingle_overlaps(
+    df: DataFrame, text_col: str, id_col: str, k: int
+) -> DataFrame:
+    """(id_a, id_b, n_inter, n_a, n_b) for every doc pair id_a < id_b
+    sharing at least one shingle: shingle self-equi-join for |A∩B|, then
+    both shingle-set sizes attached by id."""
+    sh = explode_shingles(df, text_col, id_col, k)
+    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
+    a = sh.select(F.col(id_col).alias("id_a"), "shingle")
+    b = sh.select(F.col(id_col).alias("id_b"), "shingle")
+    inter = (
+        a.join(b, "shingle")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+    )
+    na = sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("n_a"))
+    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n").alias("n_b"))
+    return inter.join(na, "id_a").join(nb, "id_b")
+
+
 def jaccard_pairs(
     df: DataFrame,
     text_col: str,
@@ -309,22 +330,9 @@ def jaccard_pairs(
     identical-shingle groups — use as ground truth / verifier for the
     LSH path, or on bounded subsets; the LSH path is the 100 TB route.
     """
-    sh = explode_shingles(df, text_col, id_col, k)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    a = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    na = sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("n_a"))
-    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n").alias("n_b"))
     jac = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
     return (
-        inter.join(na, "id_a")
-        .join(nb, "id_b")
+        _shingle_overlaps(df, text_col, id_col, k)
         .select("id_a", "id_b", F.round(jac, round_to).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
@@ -349,23 +357,10 @@ def containment_pairs(
     groups); jaccard is emitted alongside so the asymmetry is visible.
     At 100 TB, run it on LSH candidates, not the raw corpus.
     """
-    sh = explode_shingles(df, text_col, id_col, k)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    a = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    na = sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("n_a"))
-    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n").alias("n_b"))
     cont = F.col("n_inter") / F.least("n_a", "n_b")
     jac = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
     return (
-        inter.join(na, "id_a")
-        .join(nb, "id_b")
+        _shingle_overlaps(df, text_col, id_col, k)
         .select(
             "id_a",
             "id_b",

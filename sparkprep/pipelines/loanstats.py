@@ -80,7 +80,7 @@ def loanstats_prep_pipeline(count_rows: bool = False) -> Pipeline:
         .add("transform_and_cast", _transform_step, count_rows)
         .add(
             "normalize",
-            lambda d: npx.minmax_normalize_distributed(d, "annual_inc", "loan_amnt"),
+            lambda d: npx.minmax_normalize(d, "annual_inc", "loan_amnt"),
         )
         .add(
             "filter_status",

@@ -54,7 +54,7 @@ def q_minmax_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X9 — min-max normalize via broadcast scalar join (vs. the
     reference's 4 collect()s + Python UDF, loanStat.py:241-287)."""
     cust = t(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
-    out = npx.minmax_normalize_distributed(cust, "c_acctbal", suffix="_norm")
+    out = npx.minmax_normalize(cust, "c_acctbal", suffix="_norm")
     return out.select("c_custkey", F.round("c_acctbal_norm", 6).alias("acctbal_norm"))
 
 
@@ -335,13 +335,13 @@ def q_ep1_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
             sx.month_token("earliest_cr_line").alias("cr_month"),
         )
     )
-    # NOTE (r10): minmax_normalize_distributed's crossJoin(broadcast(agg))
+    # NOTE (r10): minmax_normalize's crossJoin(broadcast(agg))
     # does re-execute the synth+parse subtree for the min/max side, but an
     # interleaved A/B measured a lazy checkpoint of `prepped` as a WASH at
     # sf0.1 (2.55s vs 2.51s min) — the double execution is a codegen'd
     # projection; a checkpoint trades it for a full write+read of the
     # prepped table, which only gets worse at 100 TB. Deliberately left.
-    normalized = npx.minmax_normalize_distributed(prepped, "annual_inc", suffix="_norm")
+    normalized = npx.minmax_normalize(prepped, "annual_inc", suffix="_norm")
     out = transform.filter_in(normalized, "loan_status", ["Fully Paid", "Charged Off"])
     return out.select(
         "l_orderkey", "l_linenumber", "loan_amnt", "term", "int_rate",

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparkprep.operators import graph, transform
+from sparkprep.operators import graph, ranks, transform
 from sparkprep.queries import t
 from sparkprep.checkpointing import lazy_checkpoint
 
@@ -1344,18 +1344,17 @@ FROM delays GROUP BY 1
 
 
 def per_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared staging for gini_revenue / lorenz_curve AND their scale
-    twins (scale_ops.q_gini_scale / q_lorenz_scale, which share these
-    queries' oracles): per-customer exact-decimal revenue off one keyed
-    join. ONE code path — the twins' bit-identity contract must not
-    depend on two hand-synced copies of the money formula.
+    """Shared staging for theil_index and for
+    ``shared_frames.customer_revenue_ranked`` (the rank scaffold that
+    gini_revenue, lorenz_curve and value_deciles read):
+    per-customer exact-decimal revenue off one keyed join. ONE code
+    path — the money formula must not live in two hand-synced copies.
 
-    Session-shared + lazily checkpointed (r10): SEVEN registry queries
-    (gini/lorenz/theil exact forms, their scale twins, value_deciles)
-    each re-ran the lineitem⋈orders join + 150k-customer wide-decimal
-    aggregate; the shared_frames discipline materializes it once per
-    (session, sf_dir) — the computed-once artifact a 100 TB pipeline
-    would persist anyway."""
+    Session-shared + lazily checkpointed (r10): the revenue-family
+    queries each re-ran the lineitem⋈orders join + 150k-customer
+    wide-decimal aggregate; the shared_frames discipline materializes
+    it once per (session, sf_dir) — the computed-once artifact a
+    100 TB pipeline would persist anyway."""
     from sparkprep.checkpointing import lazy_checkpoint
     from sparkprep.queries import shared_frames
 
@@ -1785,9 +1784,7 @@ def q_tail_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile() documents "per-group sort" as its 100 TB trade; this
     is the exact global form that scales."""
     orders = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    from sparkprep.operators import ranks as _ranks
-
-    ranked = _ranks.global_rank(
+    ranked = ranks.global_rank(
         orders,
         [F.asc("o_totalprice"), F.asc("o_orderkey")],
         rank_name="__r",
@@ -2191,23 +2188,18 @@ def q_gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     number beside revenue_concentration's HHI/top-10 share. Identity
     G = 2·Σᵢ i·xᵢ / (n·Σx) − (n+1)/n over revenues sorted ascending:
     per-customer revenue is an exact DECIMAL sum off one keyed join;
-    the rank window runs on the AGGREGATED per-customer frame (|cust|
-    rows — the sanctioned post-agg global window, same shape as
-    revenue_concentration), with (revenue, custkey) ordering so ties
-    are deterministic (equal values make Σ i·xᵢ order-invariant
+    the rank i is the ``__rank`` of the session-shared
+    ``customer_revenue_ranked`` scaffold (one ``ranks.range_prefix``
+    pass: range partition + per-partition window + broadcast offsets,
+    so no task sorts every customer), with (revenue, custkey) ordering
+    so ties are deterministic (equal values make Σ i·xᵢ order-invariant
     anyway). Σ i·xᵢ is decimal-exact (bigint × decimal); the finish is
-    4 IEEE ops.
+    4 IEEE ops. ``gini_scale`` is the same function under a second
+    registry name."""
+    from sparkprep.queries import shared_frames
 
-    100x toggle: the rank window is over the ENTITY-grain per-customer
-    frame (one task sorts every customer at scale) — use ``gini_scale``
-    (scale_ops.q_gini_scale: ranks.global_rank distributed row_number,
-    bit-identical output, same oracle) beyond driver SFs."""
-    from pyspark.sql.window import Window
-
-    per_cust = per_customer_revenue(spark, sf_dir)
-    w = Window.orderBy("__rev", "o_custkey")
-    ranked = per_cust.select(
-        "__rev", F.row_number().over(w).cast("long").alias("__i")
+    ranked = shared_frames.customer_revenue_ranked(spark, sf_dir).select(
+        "__rev", F.col("__rank").alias("__i")
     )
     sums = ranked.agg(
         F.count(F.lit(1)).alias("__n"),
@@ -2252,21 +2244,24 @@ def q_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decile-level Lorenz table behind gini_revenue: customers sorted
     by revenue into ntile(10) buckets, each decile's exact-decimal
     revenue, share of total, and the running (Lorenz) cumulative
-    share. Both windows — the ntile and the cumulative sum — run over
-    the AGGREGATED per-customer / 10-row frames; shares are single
-    double divisions of exact decimal sums. (rev, custkey) ordering
-    pins ntile boundaries under ties for the oracle.
-
-    100x toggle: the decile ntile is over the ENTITY-grain per-customer
-    frame — use ``lorenz_scale`` (scale_ops.q_lorenz_scale:
-    ranks.global_ntile, bit-identical output, same oracle) beyond
-    driver SFs; only the 10-row cumulative windows remain global."""
+    share. The deciles come row-locally from the session-shared
+    ``customer_revenue_ranked`` scaffold through
+    ``ranks.ntile_from_rank`` (SQL ntile's integer math, bit-identical
+    to ``ntile(10) OVER (ORDER BY rev, custkey)``), so no task sorts
+    every customer; only the cumulative and total windows stay global,
+    over the 10-row decile frame. Shares are single double divisions
+    of exact decimal sums. ``lorenz_scale`` is the same function under
+    a second registry name."""
     from pyspark.sql.window import Window
 
-    per_cust = per_customer_revenue(spark, sf_dir)
-    w = Window.orderBy("__rev", "o_custkey")
-    deciles = per_cust.select(
-        "__rev", F.ntile(10).over(w).cast("long").alias("decile")
+    from sparkprep.queries import shared_frames
+
+    ranked = shared_frames.customer_revenue_ranked(spark, sf_dir)
+    deciles = ranked.select(
+        "__rev",
+        ranks.ntile_from_rank(F.col("__rank"), F.col("__n"), 10).alias(
+            "decile"
+        ),
     )
     agg = deciles.groupBy("decile").agg(
         F.count(F.lit(1)).cast("long").alias("n_customers"),
@@ -2275,8 +2270,7 @@ def q_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_cum = Window.orderBy("decile").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    w_all = Window.partitionBy()
-    total = F.sum("__drev").over(w_all)
+    total = F.sum("__drev").over(Window.partitionBy())
     return agg.select(
         "decile",
         "n_customers",
@@ -3209,8 +3203,6 @@ def q_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     total order. The class boundary compares exact integers
     (100·cum ≥ 80·total), so bucketing is engine-identical; the
     readout aggregates the |parts| frame down to three rows."""
-    from sparkprep.operators import ranks
-
     li = t(spark, sf_dir, "lineitem")
     rev = (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast(
         "decimal(18,4)"

@@ -25,7 +25,8 @@ The frames this module builds, and their consumers:
 - ``kmeans_assignment`` — the Lloyd assignment: kmeans_assign,
   silhouette_score;
 - ``customer_revenue_ranked`` — one range-prefix pass over customer
-  revenue: gini_scale, lorenz_scale, value_deciles.
+  revenue: gini_revenue, lorenz_curve (also registered as gini_scale
+  and lorenz_scale), value_deciles.
 
 ``relational_ext`` (per_customer_revenue, rfm_staged) and ``llmprep``
 (minhash_sigs_near, cc_labels, simhash_sketch) memoize their own
@@ -156,8 +157,8 @@ def lpa_labels(spark: SparkSession, sf_dir: str, rounds: int) -> DataFrame:
 
 def customer_revenue_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One ``ranks.range_prefix`` pass over per-customer revenue in the
-    ONE total ordering (revenue asc, custkey asc) that gini_scale,
-    lorenz_scale AND value_deciles all sort by — each previously ran its
+    ONE total ordering (revenue asc, custkey asc) that gini_revenue,
+    lorenz_curve AND value_deciles all sort by — each previously ran its
     own ranks.global_rank/ntile/cumsum pass (sampling job + range
     exchange + checkpoint + counts apiece) over the same 150k-row frame.
     The pass emits everything each consumer derives row-locally:

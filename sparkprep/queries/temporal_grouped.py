@@ -1032,33 +1032,86 @@ ORDER BY day
 """
 
 
+_ROLL_W_US = 3_600_000_000  # trailing-hour frame, µs
+
+
 def q_rolling_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-hour EXACT p50/p90 per event type (RANGE frame) — the
     robust twin of anomaly_flags' mean/sigma: rolling medians don't
     chase a single spike. Both quantiles and the support count share
-    ONE window spec -> one WindowExec, one keyed shuffle. Exact
-    ``percentile`` == DuckDB ``quantile_cont`` (same linear
-    interpolation); at 100 TB swap in percentile_approx over the same
-    frame (documented exactness-for-oracle trade, as stats_extended).
+    ONE window spec -> one WindowExec. Exact ``percentile`` == DuckDB
+    ``quantile_cont`` (same linear interpolation); at 100 TB swap in
+    percentile_approx over the same frame (documented
+    exactness-for-oracle trade, as stats_extended).
 
-    100x toggle: the window key has ~5 distinct values, so each type's
-    stream sorts in one task at scale — use ``rolling_quantiles_scale``
-    (scale_ops.q_rolling_quantiles_scale: bucket-overlap spread over
-    (type, hour-bucket), bit-identical output, same oracle)."""
+    BUCKET-OVERLAP spread for bounded time frames: keyed by event_type
+    alone (~5 keys) the window would sort each type's whole stream in
+    one task. Because the frame is BOUNDED (trailing hour), every row
+    only ever needs history from its own hour-bucket and the previous
+    one — so each row is emitted into bucket b (as itself) and b+1 (as
+    borrowed history), the window partitions by (type, bucket) —
+    high-cardinality, fully parallel — and borrowed copies are dropped
+    from the output. Frame membership is provably identical (t−W ≥
+    (b−1)·W bounds history to one bucket back), so the output is
+    bit-identical to the (type)-keyed window. Cost: 2x the rows.
+    ``rolling_quantiles_scale`` is the same function under a second
+    registry name."""
     from pyspark.sql.window import Window
 
-    ev = t(spark, sf_dir, "events").select("event_id", "event_type", "ts", "value")
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy(F.unix_micros(F.col("ts")))
-        .rangeBetween(-3_600_000_000, 0)
-    )
-    return ev.select(
+    ev = t(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
-        F.round(F.expr("percentile(value, 0.5)").over(w), 4).alias("roll_p50"),
-        F.round(F.expr("percentile(value, 0.9)").over(w), 4).alias("roll_p90"),
-        F.count("value").over(w).cast("long").alias("n_in_window"),
+        "value",
+        F.unix_micros(F.col("ts")).alias("__us"),
+    )
+    copies = (
+        ev.withColumn("__b", F.expr(f"__us div {_ROLL_W_US}"))
+        .select(
+            "event_id",
+            "event_type",
+            "value",
+            "__us",
+            F.explode(
+                F.array(
+                    F.struct(
+                        F.col("__b").alias("pb"), F.lit(True).alias("own")
+                    ),
+                    F.struct(
+                        (F.col("__b") + 1).alias("pb"),
+                        F.lit(False).alias("own"),
+                    ),
+                )
+            ).alias("__c"),
+        )
+        .select(
+            "event_id",
+            "event_type",
+            "value",
+            "__us",
+            F.col("__c.pb").alias("__pb"),
+            F.col("__c.own").alias("__own"),
+        )
+    )
+    w = (
+        Window.partitionBy("event_type", "__pb")
+        .orderBy("__us")
+        .rangeBetween(-_ROLL_W_US, 0)
+    )
+    return (
+        copies.select(
+            "event_id",
+            "event_type",
+            F.round(F.expr("percentile(value, 0.5)").over(w), 4).alias(
+                "roll_p50"
+            ),
+            F.round(F.expr("percentile(value, 0.9)").over(w), 4).alias(
+                "roll_p90"
+            ),
+            F.count("value").over(w).cast("long").alias("n_in_window"),
+            "__own",
+        )
+        .filter(F.col("__own"))
+        .drop("__own")
     )
 
 

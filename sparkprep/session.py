@@ -24,11 +24,13 @@ from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    """Core count the harness gives us (``SPARK_GRAFT_CPUS``), else 32."""
+    """Core count the harness gives us (``SPARK_GRAFT_CPUS``), else the
+    cores this process may run on: oversubscribing a small host buries
+    per-query changes in scheduling noise."""
     try:
-        return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    except ValueError:
-        return 32
+        return int(os.environ["SPARK_GRAFT_CPUS"])
+    except (KeyError, ValueError):
+        return len(os.sched_getaffinity(0))
 
 
 def build_session(

@@ -181,6 +181,7 @@ _BOUNDED_GLOBAL_WINDOW = {
     "equidepth_bins": "O(32) ranks.global_ntile offsets frame only (raw-fact ntile distributed)",
     "earth_movers": "SinglePartition is the 1-row bin-range (min/max) scalar; the cumulative-count window is priority-KEYED over the dense |priorities| x |bins| grid (~5 x 60)",
     "gains_table": "10-row decile frame + O(32) ranks.global_ntile offsets",
+    "gini_revenue": "O(32) per-partition offsets frame of the shared customer_revenue_ranked scaffold only (rank itself distributed)",
     "gini_scale": "O(32) per-partition offsets frame of the shared customer_revenue_ranked scaffold only (rank itself distributed)",
     "hybrid_rrf": "bounded top-k retrieval legs",
     "isotonic_fit": "<=50-row bin-prefix window (fixed integer bin grid)",
@@ -191,6 +192,7 @@ _BOUNDED_GLOBAL_WINDOW = {
     "l_diversity": "same QI-class frame as k_anonymity",
     "length_histogram": "fixed length-bin frame",
     "lm_score": "score-bin frame",
+    "lorenz_curve": "10-row decile cum/total frames + O(32) offsets frame of the shared customer_revenue_ranked scaffold",
     "lorenz_scale": "10-row decile cum/total frames + O(32) offsets frame of the shared customer_revenue_ranked scaffold",
     "mann_whitney": "50-row quantity value-frequency rank frame",
     "kruskal_wallis": "50-row quantity value-frequency rank frame",
@@ -234,8 +236,6 @@ _BOUNDED_GLOBAL_WINDOW = {
 # each exact query must NAME its twin.
 _ENTITY_GRAIN_TOGGLED = {
     "rfm_segments": "rfm_scale",
-    "lorenz_curve": "lorenz_scale",
-    "gini_revenue": "gini_scale",
 }
 
 
@@ -252,7 +252,7 @@ def test_global_windows_bounded_or_toggled(all_plans):
     stale = sorted(
         (set(_BOUNDED_GLOBAL_WINDOW) | set(_ENTITY_GRAIN_TOGGLED))
         - hits
-        - set(_ENTITY_GRAIN_TOGGLED)  # exact trio may lose the window someday
+        - set(_ENTITY_GRAIN_TOGGLED)  # the exact form may lose the window someday
     )
     # keep the registry honest: entries for queries that no longer have
     # a global window are stale documentation

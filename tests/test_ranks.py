@@ -2,9 +2,11 @@
 global_cumsum) — the distributed exact twins of the single-partition
 ``Window.orderBy`` rank/ntile/running sum (VERDICT r5 #2).
 
-The scale queries (gini_scale / lorenz_scale / rfm_scale) are asserted
-bit-identical to their exact window forms in test_entry_oracle's sf0.001
-replay (they share oracles); these tests pin the operator itself:
+The range-pass queries (gini_revenue / lorenz_curve, also registered
+as gini_scale / lorenz_scale, and rfm_scale) are replayed against their
+window-form DuckDB oracles in test_entry_oracle's sf0.001 replay, which
+makes rfm_scale bit-identical to rfm_segments; these tests pin the
+operator itself:
 exact equality with Spark's own window functions across ties, n < k,
 skewed values, and multi-key orderings — plus the plan contract that no
 single-partition sort of the INPUT frame appears.

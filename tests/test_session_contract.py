@@ -11,7 +11,7 @@ import pytest
 
 import __spark_entry__ as entry_mod
 from sparkprep.queries import t
-from sparkprep.session import tune_for_engine
+from sparkprep.session import default_parallelism, tune_for_engine
 from tests.oracle_util import assert_matches_oracle
 
 QUERIES = entry_mod.queries()
@@ -82,3 +82,11 @@ def test_pin_sensitive_query_on_hostile_session(spark, sf_dir, duck, name):
         assert_matches_oracle(df, duck, ORACLES[name])
     finally:
         tune_for_engine(spark)
+
+
+def test_default_parallelism_falls_back_to_host_cores(monkeypatch):
+    # unset, the session sizes itself to the cores this process may use
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_parallelism() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_parallelism() == 3
