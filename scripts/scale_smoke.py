@@ -224,7 +224,7 @@ def core_panel(spark, num_docs: int, num_rows: int) -> None:
         docs, "text", "doc_id")))
     _bench("simhash", lambda: _materialize(dedup.simhash(docs, "text", "doc_id")))
     _bench("minhash LSH pairs (est>=0.8)", lambda: _materialize(dedup.minhash_candidate_pairs(
-        docs, "text", "doc_id", est_threshold=0.8)))
+        dedup.minhash_signatures(docs, "text", "doc_id"), "doc_id", est_threshold=0.8)))
     _bench("unigram LM score", lambda: _materialize(text.unigram_lm_score(
         docs, "text", "doc_id")))
     # pair graph: num_docs/10 chains of length 10 -> CC must converge in
@@ -243,8 +243,11 @@ def core_panel(spark, num_docs: int, num_rows: int) -> None:
         F.regexp_replace("text", r"^\S+ ", "").alias("text"),
     )
     _bench("incremental dedup (10% batch)", lambda: _materialize(
-        dedup.incremental_minhash_filter(batch, docs, "text", "doc_id",
-                                         est_threshold=0.5)))
+        dedup.incremental_minhash_filter(
+            batch,
+            dedup.minhash_signatures(batch, "text", "doc_id"),
+            dedup.minhash_signatures(docs, "text", "doc_id"),
+            "doc_id", est_threshold=0.5)))
     vecs = spark.range(num_docs).select(
         F.col("id").alias("vec_id"),
         F.transform(
@@ -295,8 +298,8 @@ def core_panel(spark, num_docs: int, num_rows: int) -> None:
         cdf = chunks.select(
             (F.col("doc_id") * 1000 + F.col("chunk_id")).alias("cid"), "chunk_text"
         )
-        return _materialize(dedup.minhash_candidate_pairs(
-            cdf, "chunk_text", "cid", est_threshold=0.8))
+        sig = dedup.minhash_signatures(cdf, "chunk_text", "cid")
+        return _materialize(dedup.minhash_candidate_pairs(sig, "cid", est_threshold=0.8))
 
     _bench("chunk-level minhash pairs", chunk_minhash)
 

@@ -7,5 +7,5 @@ from sparkprep.functions.strings import (  # noqa: F401
     strip_trailing_percent,
     term_to_double,
 )
-from sparkprep.functions.numeric import minmax_scalars, minmax_normalize  # noqa: F401
+from sparkprep.functions.numeric import minmax_normalize  # noqa: F401
 from sparkprep.functions.logs import parse_apache_log  # noqa: F401

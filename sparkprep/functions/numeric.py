@@ -14,18 +14,6 @@ from pyspark.sql import functions as F
 from sparkprep.checkpointing import lazy_checkpoint
 
 
-def minmax_scalars(df: DataFrame, *cols: str) -> dict[str, tuple[float, float]]:
-    """All (min, max) pairs in one aggregate job.
-
-    Replaces loanStat.py:241-266 (4 collect() round-trips → 1).
-    """
-    aggs = []
-    for c in cols:
-        aggs += [F.min(c).alias(f"__mn_{c}"), F.max(c).alias(f"__mx_{c}")]
-    row = df.agg(*aggs).collect()[0]
-    return {c: (row[f"__mn_{c}"], row[f"__mx_{c}"]) for c in cols}
-
-
 def minmax_normalize(df: DataFrame, *cols: str, suffix: str = "") -> DataFrame:
     """X9 — ``(x - mn) / (mx - mn)`` as native arithmetic, with no
     driver round-trip: the scalar aggregate is cross-joined back as a

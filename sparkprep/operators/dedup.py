@@ -15,6 +15,15 @@ self-join — so the shuffle structure is explicit and AQE-manageable:
 
 Config defaults (16 hashes, 4 bands x 4 rows) target the classic
 S-curve: P(candidate) = 1-(1-J^r)^b ≈ 0.97 at J=0.8, ≈0.04 at J=0.3.
+
+One vocabulary: each near-dup consumer takes the artifact it reads —
+the :func:`minhash_signatures` frame (pairs, incremental filter,
+estimator eval), the :func:`simhash` sketch (simhash pairs) or the
+:func:`connected_components` labels (clusters, representatives) — and
+never builds it, so a session that holds one builds it once for every
+consumer. The signature width is read off the frame's ``h<i>``
+columns. :func:`minhash_dedup` is the one raw-corpus entry.
+``tests/test_dedup_ops.py::test_dedup_takes_its_sketch`` guards it.
 """
 
 from __future__ import annotations
@@ -24,6 +33,7 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sparkprep.operators.graph import directed_ends_capped
 from sparkprep.operators.text import tokens
 from sparkprep.checkpointing import lazy_checkpoint
 
@@ -76,10 +86,19 @@ def minhash_signatures(
     k: int = 3,
     seed: int = 42,
 ) -> DataFrame:
-    """(id, h0..h{n-1}) MinHash signature columns.
+    """(id, h0..h{n-1}) MinHash signature columns — the one builder of
+    the signature frame every MinHash consumer below takes.
 
     h_i(doc) = min over shingles s of (a_i * H(s) + b_i) mod p.
     One explode + ONE groupBy shuffle; the N mins partial-aggregate.
+
+    Returned behind a lazy lineage cut: every consumer scans the frame
+    two or three times (banding plus both sides of the signature
+    join-back) through exchanges hashed on different keys, so AQE's
+    ReusedExchange cannot cover them — without the cut the whole
+    shingle-explode + N-min groupBy re-executed per scan (3x measured
+    at sf0.1). The O(docs x hashes) frame is the compact artifact a
+    100 TB run persists anyway before pair generation.
     """
     coeffs = hash_coeffs(num_hashes, seed)
     hashed = explode_shingles(df, text_col, id_col, k).select(
@@ -89,12 +108,15 @@ def minhash_signatures(
         F.min((F.lit(a) * F.col("__h") + F.lit(b)) % F.lit(MERSENNE_P)).alias(f"h{i}")
         for i, (a, b) in enumerate(coeffs)
     ]
-    return hashed.groupBy(id_col).agg(*aggs)
+    return hashed.groupBy(id_col).agg(*aggs).transform(lazy_checkpoint)
 
 
-def lsh_bands(
-    sig_df: DataFrame, id_col: str, num_hashes: int, bands: int
-) -> DataFrame:
+def _num_hashes(sig: DataFrame) -> int:
+    """Signature width, read off the frame's h0..h{n-1} columns."""
+    return sum(1 for c in sig.columns if c[:1] == "h" and c[1:].isdigit())
+
+
+def lsh_bands(sig: DataFrame, id_col: str, bands: int) -> DataFrame:
     """(id, band, band_key): concatenate each band's signature rows into
     one md5 band key. Rows-per-band r = num_hashes // bands.
 
@@ -103,6 +125,7 @@ def lsh_bands(
     times, re-running the whole shingle+groupBy computation per band
     (and again per join side downstream).
     """
+    num_hashes = _num_hashes(sig)
     if bands < 1 or bands > num_hashes or num_hashes % bands != 0:
         # bands > num_hashes makes r=0 -> every band key is md5('') ->
         # the equi-join degenerates to all-pairs PER BAND (the exact
@@ -126,49 +149,41 @@ def lsh_bands(
             for b in range(bands)
         ]
     )
-    return sig_df.select(F.col(id_col), F.explode(band_structs).alias("__b")).select(
+    return sig.select(F.col(id_col), F.explode(band_structs).alias("__b")).select(
         id_col, F.col("__b.band").alias("band"), F.col("__b.band_key").alias("band_key")
     )
 
 
+def _agreement(num_hashes: int) -> Column:
+    """Share of agreeing components between the ``a<i>`` and ``b<i>``
+    signature columns of a candidate pair (the unbiased MinHash
+    estimate of their Jaccard)."""
+    agree = sum(
+        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0) for i in range(num_hashes)
+    )
+    return agree / F.lit(float(num_hashes))
+
+
 def minhash_candidate_pairs(
-    df: DataFrame,
-    text_col: str,
+    sig: DataFrame,
     id_col: str,
-    num_hashes: int = 16,
-    k: int = 3,
     bands: int = 4,
-    seed: int = 42,
     est_threshold: float | None = None,
-    sig_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Near-dup candidate pairs via MinHash-LSH:
-    (id_a, id_b, est_jaccard) with id_a < id_b.
+    """Near-dup candidate pairs via MinHash-LSH over a
+    :func:`minhash_signatures` frame: (id_a, id_b, est_jaccard) with
+    id_a < id_b.
 
     est_jaccard = fraction of agreeing signature components (unbiased
     MinHash estimator). The heavy lifting is ONE equi-join on
     (band, band_key); no quadratic pair enumeration ever materializes.
-
-    ``sig_df``: an already-materialized :func:`minhash_signatures`
-    frame for ``df`` (same num_hashes/k/seed) — callers that run
-    several LSH consumers over one corpus (pairs, estimator eval,
-    cluster labels, banding advisor) pass a session-shared signature
-    leaf so the shingle+groupBy subtree is paid once per session, not
-    once per query (r10).
+    Callers that run several LSH consumers over one corpus (pairs,
+    estimator eval, cluster labels, banding advisor) pass one
+    session-shared signature frame, so the shingle+groupBy subtree is
+    paid once per session, not once per query.
     """
-    if sig_df is not None:
-        sig = sig_df
-    else:
-        sig = minhash_signatures(df, text_col, id_col, num_hashes, k, seed)
-        # sig feeds THREE scans (banding + both sides of the signature
-        # join-back) whose exchanges hash on different keys, so AQE's
-        # ReusedExchange cannot cover them — without truncation the whole
-        # shingle-explode + N-min groupBy re-executes per scan (3x
-        # measured at sf0.1). One lazy localCheckpoint materializes the
-        # O(docs x hashes) signature frame once; at 100 TB that is the
-        # compact artifact you'd persist anyway before pair generation.
-        sig = sig.transform(lazy_checkpoint)
-    banded = lsh_bands(sig, id_col, num_hashes, bands)
+    num_hashes = _num_hashes(sig)
+    banded = lsh_bands(sig, id_col, bands)
     left = banded.select(
         F.col(id_col).alias("id_a"), "band", "band_key"
     )
@@ -185,10 +200,7 @@ def minhash_candidate_pairs(
     sig_b = sig.select(
         F.col(id_col).alias("id_b"), *[F.col(f"h{i}").alias(f"b{i}") for i in range(num_hashes)]
     )
-    agree = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0) for i in range(num_hashes)
-    )
-    est = (agree / F.lit(float(num_hashes))).alias("est_jaccard")
+    est = _agreement(num_hashes).alias("est_jaccard")
     out = pairs.join(sig_a, "id_a").join(sig_b, "id_b").select("id_a", "id_b", est)
     if est_threshold is not None:
         out = out.filter(F.col("est_jaccard") >= est_threshold)
@@ -208,63 +220,41 @@ def minhash_dedup(
     """Greedy near-dup removal: drop every doc that has a near-dup with a
     smaller id (keep-first by id — the scalable standard; NOT transitive
     closure, which needs iterative connected components; see docstring
-    note in SURVEY §7 extension plan)."""
-    pairs = minhash_candidate_pairs(
-        df, text_col, id_col, num_hashes, k, bands, seed, est_threshold
-    )
+    note in SURVEY §7 extension plan). The one raw-corpus entry of the
+    MinHash family: signatures, then pairs."""
+    sig = minhash_signatures(df, text_col, id_col, num_hashes, k, seed)
+    pairs = minhash_candidate_pairs(sig, id_col, bands, est_threshold)
     losers = pairs.select(F.col("id_b").alias(id_col)).dropDuplicates()
     return df.join(losers, id_col, "left_anti")
 
 
 def incremental_minhash_filter(
     new_df: DataFrame,
-    ref_df: DataFrame,
-    text_col: str,
+    sig_new: DataFrame,
+    sig_ref: DataFrame,
     id_col: str,
-    num_hashes: int = 16,
-    k: int = 3,
     bands: int = 4,
-    seed: int = 42,
     est_threshold: float = 0.8,
-    sig_new_df: DataFrame | None = None,
-    sig_ref_df: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental dedup: drop new-batch docs near-duplicating the
     existing reference corpus.
 
     The daily-ingest form of near-dup removal: at 100 TB you never
-    re-pair the whole corpus — the reference side's signatures and band
-    table are compute-once artifacts (store them; here they're derived
-    inline from ``ref_df`` with the same seed so both sides sketch
-    identically), and each batch costs one band equi-join proportional
-    to the BATCH, never ref x ref. Candidates are new-vs-ref only;
-    agreement >= est_threshold on the signature components flags the
-    new doc; survivors return unchanged. Keys of `new_df` and `ref_df`
-    must be disjoint (callers namespace batch ids).
-
-    ``sig_new_df`` / ``sig_ref_df``: prebuilt signature frames (the
-    compute-once artifact above, e.g. row-subsets of a session-shared
-    signature leaf). When absent each side is built here and lazily
-    checkpointed — every side feeds TWO consumers (its band table and
-    the agreement join-back), so without a lineage cut the shingle
-    pipeline executed once per consumer (r10).
+    re-pair the whole corpus — the reference side's signatures
+    (``sig_ref``) are a compute-once artifact, built with the same
+    :func:`minhash_signatures` parameters as the batch's ``sig_new`` so
+    both sides sketch identically, and each batch costs one band
+    equi-join proportional to the BATCH, never ref x ref. Candidates
+    are new-vs-ref only; agreement >= est_threshold on the signature
+    components flags the new doc; survivors of ``new_df`` return
+    unchanged. Keys of the two sides must be disjoint (callers
+    namespace batch ids).
     """
-    if sig_new_df is not None:
-        sig_new = sig_new_df
-    else:
-        sig_new = minhash_signatures(
-            new_df, text_col, id_col, num_hashes, k, seed
-        ).transform(lazy_checkpoint)
-    if sig_ref_df is not None:
-        sig_ref = sig_ref_df
-    else:
-        sig_ref = minhash_signatures(
-            ref_df, text_col, id_col, num_hashes, k, seed
-        ).transform(lazy_checkpoint)
-    bands_new = lsh_bands(sig_new, id_col, num_hashes, bands).select(
+    num_hashes = _num_hashes(sig_new)
+    bands_new = lsh_bands(sig_new, id_col, bands).select(
         F.col(id_col).alias("new_id"), "band", "band_key"
     )
-    bands_ref = lsh_bands(sig_ref, id_col, num_hashes, bands).select(
+    bands_ref = lsh_bands(sig_ref, id_col, bands).select(
         F.col(id_col).alias("ref_id"), "band", "band_key"
     )
     cand = (
@@ -280,14 +270,10 @@ def incremental_minhash_filter(
         F.col(id_col).alias("ref_id"),
         *[F.col(f"h{i}").alias(f"b{i}") for i in range(num_hashes)],
     )
-    agree = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(num_hashes)
-    )
     flagged = (
         cand.join(sa, "new_id")
         .join(sb, "ref_id")
-        .filter(agree / F.lit(float(num_hashes)) >= est_threshold)
+        .filter(_agreement(num_hashes) >= est_threshold)
         .select(F.col("new_id").alias(id_col))
         .dropDuplicates()
     )
@@ -321,7 +307,6 @@ def jaccard_pairs(
     id_col: str,
     k: int = 3,
     threshold: float = 0.3,
-    round_to: int = 4,
 ) -> DataFrame:
     """EXACT n-gram Jaccard pairs (id_a, id_b, jaccard >= threshold).
 
@@ -333,7 +318,7 @@ def jaccard_pairs(
     jac = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
     return (
         _shingle_overlaps(df, text_col, id_col, k)
-        .select("id_a", "id_b", F.round(jac, round_to).alias("jaccard"))
+        .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -344,7 +329,6 @@ def containment_pairs(
     id_col: str,
     k: int = 3,
     threshold: float = 0.5,
-    round_to: int = 4,
 ) -> DataFrame:
     """Asymmetric shingle CONTAINMENT pairs: |A∩B| / min(|A|, |B|).
 
@@ -364,8 +348,8 @@ def containment_pairs(
         .select(
             "id_a",
             "id_b",
-            F.round(cont, round_to).alias("containment"),
-            F.round(jac, round_to).alias("jaccard"),
+            F.round(cont, 4).alias("containment"),
+            F.round(jac, 4).alias("jaccard"),
         )
         .filter(F.col("containment") >= threshold)
     )
@@ -376,7 +360,6 @@ def duplicate_window_coverage(
     text_col: str,
     id_col: str,
     k: int = 8,
-    round_to: int = 4,
 ) -> DataFrame:
     """Exact substring-duplication coverage: the share of each doc's
     DISTINCT k-token windows that also occur in another doc — the
@@ -414,7 +397,7 @@ def duplicate_window_coverage(
             id_col,
             "n_windows",
             "n_shared",
-            F.round(F.try_divide("n_shared", "n_windows"), round_to).alias(
+            F.round(F.try_divide("n_shared", "n_windows"), 4).alias(
                 "dup_coverage"
             ),
         )
@@ -423,12 +406,10 @@ def duplicate_window_coverage(
 
 def connected_components(
     pairs: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
     max_iterations: int = 20,
 ) -> DataFrame:
     """Transitive dedup clusters: connected components over a near-dup
-    pair graph via iterative min-label propagation.
+    ``(id_a, id_b)`` pair graph via iterative min-label propagation.
 
     Greedy pair-based dedup (``minhash_dedup``) is not transitive (A~B,
     B~C but A!~C still all one cluster); this closes the transitive
@@ -447,24 +428,12 @@ def connected_components(
 
     Returns (node, component) with component = min node id reachable.
     """
-    # symmetrize via explode-over-struct-array, NOT union-of-selects: a
-    # union of two selects from `pairs` plants the (expensive) pair-
+    # symmetrize with the graph family's one both-directions explode,
+    # NOT a union of two selects: that plants the (expensive) pair-
     # generation subtree in the plan TWICE and re-executes it when edges
     # first materializes (CLAUDE.md landmine; ~2x MinHash cost measured
-    # on dedup_clusters cold runs). Explode emits both directions in one
-    # row-local pass.
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
-                    F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
-                )
-            ).alias("e")
-        )
-        .select("e.u", "e.v")
-        .dropDuplicates()
-    )
+    # on dedup_clusters cold runs).
+    edges = directed_ends_capped(pairs, a_col="id_a", b_col="id_b").dropDuplicates()
     # Loop discipline (the loop-sizing rule in operators/physical.py): a
     # near-dup pair graph is TINY relative to the corpus (edges ∝
     # duplicates), and dropDuplicates already ends in an exchange, so
@@ -542,31 +511,16 @@ def connected_components(
     return labels.select("node", "component")
 
 
-def dedup_clusters(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 16,
-    k: int = 3,
-    bands: int = 4,
-    seed: int = 42,
-    est_threshold: float = 0.8,
-    cc: DataFrame | None = None,
-) -> DataFrame:
-    """MinHash pairs → transitive clusters → (id, cluster_rep); docs
-    with no near-dup get themselves as rep. Drop ``id != cluster_rep``
-    rows for a transitively-correct dedup.
+def dedup_clusters(df: DataFrame, id_col: str, cc: DataFrame) -> DataFrame:
+    """Transitive near-dup clusters → (id, cluster_rep); docs with no
+    near-dup get themselves as rep. Drop ``id != cluster_rep`` rows for
+    a transitively-correct dedup.
 
-    ``cc`` accepts a precomputed ``connected_components`` (node,
-    component) frame so a family of consumers (labels, split, reps)
-    pays the MinHash+CC subtree ONCE per session instead of once per
-    query — the frame is already materialized by the CC convergence
-    loop, so reuse is a leaf scan."""
-    if cc is None:
-        prs = minhash_candidate_pairs(
-            df, text_col, id_col, num_hashes, k, bands, seed, est_threshold
-        )
-        cc = connected_components(prs)
+    ``cc`` is the :func:`connected_components` (node, component) frame
+    of the corpus's near-dup pairs, so a family of consumers (labels,
+    split, reps) shares ONE MinHash+CC build per session — the frame is
+    already materialized by the CC convergence loop, so reuse is a leaf
+    scan."""
     return (
         df.select(F.col(id_col))
         .join(cc, df[id_col] == cc.node, "left")
@@ -578,16 +532,7 @@ def dedup_clusters(
 
 
 def cluster_representatives(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    quality_col: str,
-    num_hashes: int = 16,
-    k: int = 3,
-    bands: int = 4,
-    seed: int = 42,
-    est_threshold: float = 0.8,
-    cc: DataFrame | None = None,
+    df: DataFrame, id_col: str, quality_col: str, cc: DataFrame
 ) -> DataFrame:
     """The dedup DECISION table: transitive near-dup clusters
     (``dedup_clusters``) resolved to one kept representative per cluster
@@ -612,14 +557,7 @@ def cluster_representatives(
     # inline dedup_clusters' label join so quality rides along in the
     # SAME left join: going through dedup_clusters() would join the
     # corpus twice (once for labels, once for quality) — one full-frame
-    # equi-join saved, identical result. A precomputed ``cc`` (the
-    # dedup_clusters session-sharing contract) skips the MinHash+CC
-    # subtree entirely.
-    if cc is None:
-        prs = minhash_candidate_pairs(
-            df, text_col, id_col, num_hashes, k, bands, seed, est_threshold
-        )
-        cc = connected_components(prs)
+    # equi-join saved, identical result.
     lab = (
         df.select(F.col(id_col), F.col(quality_col))
         .join(cc, df[id_col] == cc.node, "left")
@@ -693,33 +631,25 @@ def simhash(
 
 
 def simhash_pairs(
-    df: DataFrame,
-    text_col: str,
+    sketch: DataFrame,
     id_col: str,
     bits: int = 32,
     max_hamming: int = 3,
     chunks: int = 4,
-    sketch_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance ≤ max_hamming.
+    """Near-dup pairs by SimHash hamming distance ≤ max_hamming over a
+    ``bits``-wide :func:`simhash` frame ``sketch`` (id, simhash).
 
     Candidate generation is banded like LSH: split the sketch into
     `chunks` bit-ranges; by pigeonhole any pair within hamming ≤
     chunks-1 shares at least one exact chunk, so candidates come from
     equi-joins on (chunk_idx, chunk_value) — never an all-pairs scan.
-
-    ``sketch_df``: a prebuilt :func:`simhash` frame for ``df`` (same
-    bits) — e.g. a session-shared checkpointed leaf, so the token
-    explode + 32-sum sketch aggregate is paid once per session instead
-    of once per consumer (r10).
+    A session-shared sketch leaf pays the token explode + 32-sum
+    sketch aggregate once per session instead of once per consumer.
+    An uncut sketch needs no checkpoint either: the self-join sides
+    canonicalize to the same exchange despite differing aliases, so AQE
+    ReusedExchange computes it once.
     """
-    # NOTE: when the sketch is built inline, no checkpoint/persist is
-    # needed — the self-join sides canonicalize to the same exchange
-    # despite differing aliases, so AQE ReusedExchange computes the
-    # sketch once (verified: eager localCheckpoint gained nothing at
-    # sf0.1; the ~5s warm cost is the 1.2M-pair join output + dedup
-    # shuffle, inherent to the semantics).
-    sh = sketch_df if sketch_df is not None else simhash(df, text_col, id_col, bits)
     width = bits // chunks
     mask = (1 << width) - 1
     # one explode, not a union of selects — a union re-executes the
@@ -735,7 +665,7 @@ def simhash_pairs(
             for i in range(chunks)
         ]
     )
-    chunked = sh.select(
+    chunked = sketch.select(
         F.col(id_col), F.col("simhash"), F.explode(chunk_structs).alias("__c")
     ).select(
         id_col, "simhash",
@@ -773,16 +703,13 @@ def simhash_pairs(
 
 def minhash_estimator_eval(
     df: DataFrame,
+    sig: DataFrame,
     text_col: str,
     id_col: str,
-    num_hashes: int = 16,
     k: int = 3,
     bands: int = 4,
-    seed: int = 42,
     est_threshold: float = 0.5,
     sim_threshold: float = 0.5,
-    round_to: int = 4,
-    sig_df: DataFrame | None = None,
 ) -> DataFrame:
     """Calibration report for the MinHash-LSH estimator, in one row:
     candidate count, MAE and signed bias of ``est_jaccard`` vs the
@@ -790,6 +717,9 @@ def minhash_estimator_eval(
     exact similarity clears ``sim_threshold``). The measurement that
     turns band/hash parameter choices from folklore into numbers —
     run it on a sample before committing a 100 TB dedup pass.
+
+    ``sig`` is the :func:`minhash_signatures` frame of ``df``; ``k`` is
+    its shingle width, because the exact Jaccard re-shingles ``df``.
 
     Cost discipline: the exact Jaccard — quadratic in general — is
     computed ONLY over docs that appear in some candidate pair (semi-
@@ -801,10 +731,7 @@ def minhash_estimator_eval(
     aggregate is order-independent and engine-exact before the final
     presentation rounding.
     """
-    cand = minhash_candidate_pairs(
-        df, text_col, id_col, num_hashes, k, bands, seed, est_threshold,
-        sig_df=sig_df,
-    )
+    cand = minhash_candidate_pairs(sig, id_col, bands, est_threshold)
     # cand anchors three consumers (id roll-up via union, and the
     # final left join) — lazily checkpoint so the LSH pipeline runs
     # once, not once per consumer; the candidate list is tiny relative
@@ -868,12 +795,8 @@ def minhash_estimator_eval(
     n = F.count(F.lit(1))
     return j.agg(
         n.cast("long").alias("n_candidates"),
-        F.round(F.try_divide(F.sum(abs6).cast("double"), n), round_to).alias(
-            "mae"
-        ),
-        F.round(F.try_divide(F.sum(err6).cast("double"), n), round_to).alias(
-            "bias"
-        ),
+        F.round(F.try_divide(F.sum(abs6).cast("double"), n), 4).alias("mae"),
+        F.round(F.try_divide(F.sum(err6).cast("double"), n), 4).alias("bias"),
         F.round(
             F.try_divide(
                 F.sum(
@@ -881,7 +804,7 @@ def minhash_estimator_eval(
                 ),
                 n,
             ),
-            round_to,
+            4,
         ).alias("precision"),
     )
 
@@ -892,7 +815,6 @@ def prefix_jaccard_join(
     id_col: str,
     k: int = 3,
     threshold: float = 0.5,
-    round_to: int = 6,
 ) -> DataFrame:
     """EXACT shingle-set Jaccard join (``id_a, id_b, jaccard >=
     threshold``) via PREFIX FILTERING (PPJoin-family) — the scalable
@@ -925,8 +847,8 @@ def prefix_jaccard_join(
     phase costs candidates × doc length, never corpus × corpus. The
     final Jaccard is ONE IEEE division of exact int64 counts —
     bit-identical on any engine — and the threshold compares that
-    exact value, so the survivor set is engine-exact; ``round_to``
-    only shapes the reported column.
+    exact value, so the survivor set is engine-exact; the 6-digit
+    rounding only shapes the reported column.
     """
     tok_rows = explode_shingles(
         df, text_col, id_col, k
@@ -995,7 +917,7 @@ def prefix_jaccard_join(
     jac = F.col("__ni") / (F.col("n_a") + F.col("n_b") - F.col("__ni"))
     return (
         inter.filter(jac >= threshold)
-        .select("id_a", "id_b", F.round(jac, round_to).alias("jaccard"))
+        .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
     )
 
 

@@ -28,7 +28,9 @@ that :func:`triangle_stats` and :func:`k_truss` take; and
 :func:`triangle_stats` and :func:`k_truss` take the artifacts they
 consume (support and degree frames), not edges, so a session that
 holds them (``queries.shared_frames``) builds each once for every
-consumer.
+consumer. ``dedup.connected_components`` symmetrizes its near-dup pair
+graph with :func:`directed_ends_capped` too, and the dedup consumers
+likewise take the sketch or label frame they read (``operators/dedup``).
 ``tests/test_graph_fixpoint.py::test_one_graph_vocabulary`` guards it.
 """
 

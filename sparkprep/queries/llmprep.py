@@ -128,7 +128,7 @@ def _shared_near_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
         return dd.minhash_signatures(
             corpus, "text", "doc_id", num_hashes=_NUM_HASHES, k=_K,
             seed=_SEED,
-        ).transform(lazy_checkpoint)
+        )
 
     return shared_frames.session_frame(spark, "minhash_sigs_near", sf_dir, build)
 
@@ -137,12 +137,9 @@ def _shared_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkprep.queries import shared_frames
 
     def build() -> DataFrame:
-        corpus = _corpus_near(spark, sf_dir)
         prs = dd.minhash_candidate_pairs(
-            corpus, "text", "doc_id",
-            num_hashes=_NUM_HASHES, k=_K, bands=_BANDS, seed=_SEED,
-            est_threshold=0.8,
-            sig_df=_shared_near_sigs(spark, sf_dir),
+            _shared_near_sigs(spark, sf_dir), "doc_id",
+            bands=_BANDS, est_threshold=0.8,
         )
         return dd.connected_components(prs)
 
@@ -152,12 +149,9 @@ def _shared_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup candidate pairs with signature-agreement
     similarity estimate. est >= 0.5 keeps the (doc, mutant) pairs."""
-    corpus = _corpus_near(spark, sf_dir)
     return dd.minhash_candidate_pairs(
-        corpus, "text", "doc_id",
-        num_hashes=_NUM_HASHES, k=_K, bands=_BANDS, seed=_SEED,
-        est_threshold=_EST_THRESHOLD,
-        sig_df=_shared_near_sigs(spark, sf_dir),
+        _shared_near_sigs(spark, sf_dir), "doc_id",
+        bands=_BANDS, est_threshold=_EST_THRESHOLD,
     )
 
 
@@ -393,11 +387,9 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs, hamming <= 3 via 4-chunk banding
     (pigeonhole-complete at this threshold: any pair within hamming 3
     shares at least one exact 8-bit chunk)."""
-    corpus = _corpus_near(spark, sf_dir)
     return dd.simhash_pairs(
-        corpus, "text", "doc_id",
+        _shared_simhash_sketch(spark, sf_dir), "doc_id",
         bits=_SIM_BITS, max_hamming=3, chunks=_SIM_CHUNKS,
-        sketch_df=_shared_simhash_sketch(spark, sf_dir),
     )
 
 
@@ -796,8 +788,7 @@ def q_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = _corpus_near(spark, sf_dir)
     clusters = dd.dedup_clusters(
-        corpus, "text", "doc_id",
-        cc=_shared_cc_labels(spark, sf_dir),
+        corpus, "doc_id", _shared_cc_labels(spark, sf_dir)
     )
     out = mix.grouped_split(
         clusters, "cluster_rep",
@@ -834,10 +825,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels come from the session-shared ``_shared_cc_labels`` frame
     (one MinHash+CC per session for the whole family)."""
     corpus = _corpus_near(spark, sf_dir)
-    return dd.dedup_clusters(
-        corpus, "text", "doc_id",
-        cc=_shared_cc_labels(spark, sf_dir),
-    )
+    return dd.dedup_clusters(corpus, "doc_id", _shared_cc_labels(spark, sf_dir))
 
 
 def _cc_reps_ctes() -> str:
@@ -883,8 +871,7 @@ def q_cluster_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_chars", F.length("text").cast("long")
     )
     return dd.cluster_representatives(
-        corpus, "text", "doc_id", "n_chars",
-        cc=_shared_cc_labels(spark, sf_dir),
+        corpus, "doc_id", "n_chars", _shared_cc_labels(spark, sf_dir)
     ).orderBy("doc_id")
 
 
@@ -993,10 +980,11 @@ def q_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the rollup side column-prunes to cid only, so its "recompute" never
     # touches the chunk text — and checkpointing the full chunk-text
     # frame would be strictly worse at 100 TB. Deliberately left.
+    sig = dd.minhash_signatures(
+        cdf, "chunk_text", "cid", num_hashes=_NUM_HASHES, k=_K, seed=_SEED
+    )
     pairs = dd.minhash_candidate_pairs(
-        cdf, "chunk_text", "cid",
-        num_hashes=_NUM_HASHES, k=_K, bands=_BANDS, seed=_SEED,
-        est_threshold=_CHUNK_EST,
+        sig, "cid", bands=_BANDS, est_threshold=_CHUNK_EST
     )
     cross = pairs.filter(F.expr("id_a div 1000") != F.expr("id_b div 1000"))
     matched = (
@@ -1331,10 +1319,8 @@ def q_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.5 — exact side computed over candidate-involved docs ONLY."""
     corpus = _corpus_near(spark, sf_dir)
     return dd.minhash_estimator_eval(
-        corpus, "text", "doc_id",
-        num_hashes=_NUM_HASHES, k=_K, bands=_BANDS, seed=_SEED,
-        est_threshold=_EST_THRESHOLD, sim_threshold=0.5,
-        sig_df=_shared_near_sigs(spark, sf_dir),
+        corpus, _shared_near_sigs(spark, sf_dir), "text", "doc_id",
+        k=_K, bands=_BANDS, est_threshold=_EST_THRESHOLD, sim_threshold=0.5,
     )
 
 
@@ -1942,7 +1928,7 @@ def q_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
         r = _NUM_HASHES // b
         p50, p80 = _lsh_curve_points(b, r)
         g = (
-            dd.lsh_bands(sigs, "doc_id", _NUM_HASHES, b)
+            dd.lsh_bands(sigs, "doc_id", b)
             .groupBy("band", "band_key")
             .agg(F.count(F.lit(1)).alias("m"))
         )

@@ -184,13 +184,12 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sigs = _shared_near_sigs(spark, sf_dir)
     survivors = dd.incremental_minhash_filter(
-        batch, docs, "text", "doc_id",
-        num_hashes=_NUM_HASHES, k=_K, bands=_BANDS, seed=_SEED,
+        batch,
+        sigs.filter((F.col("doc_id") >= 10000) & (F.col("doc_id") % 5 == 0)),
+        sigs.filter(F.col("doc_id") < 10000),
+        "doc_id",
+        bands=_BANDS,
         est_threshold=_INC_THRESHOLD,
-        sig_new_df=sigs.filter(
-            (F.col("doc_id") >= 10000) & (F.col("doc_id") % 5 == 0)
-        ),
-        sig_ref_df=sigs.filter(F.col("doc_id") < 10000),
     )
     return survivors.select("doc_id")
 

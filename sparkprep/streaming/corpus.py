@@ -6,9 +6,12 @@ validates the streaming logic, exactly like streaming/events.
 Stages:
 - the Gopher gate is a stateless map, so it runs on the stream as-is;
 - near-dedup against the existing corpus is per-micro-batch via
-  ``foreachBatch`` + ``dedup.incremental_minhash_filter`` (cost ∝
-  batch, the only sane shape for a 100 TB reference corpus — stateful
-  stream-internal dedup would hold corpus-sized state).
+  ``foreachBatch`` + ``dedup.incremental_minhash_filter``
+  (``events.foreach_batch_incremental_dedup``): the reference corpus's
+  MinHash signature frame is built once, when the sink is made, and
+  each batch sketches only itself, so cost ∝ batch — the only sane
+  shape for a 100 TB reference corpus (stateful stream-internal dedup
+  would hold corpus-sized state).
 """
 
 from __future__ import annotations

@@ -272,20 +272,25 @@ def foreach_batch_incremental_dedup(
     text_col: str,
     id_col: str,
     out_path: str,
-    **minhash_kw,
+    est_threshold: float = 0.8,
 ):
     """Streaming ingest dedup: each micro-batch of arriving documents is
     near-dup-filtered against the STATIC reference corpus
     (``dedup.incremental_minhash_filter`` — new-vs-ref band join, cost
-    per batch ∝ batch) and survivors append to ``out_path``. Batches
-    are independent by design (batch-vs-batch dups are the previous
-    batch's job once it lands in the reference index); production
-    rotates the reference snapshot between epochs."""
-    from sparkprep.operators.dedup import incremental_minhash_filter
+    per batch ∝ batch) and survivors append to ``out_path``. The
+    reference signature frame is built once, when the sink is made, and
+    every micro-batch reuses it; each batch sketches only itself.
+    Batches are independent by design (batch-vs-batch dups are the
+    previous batch's job once it lands in the reference index);
+    production rotates the reference snapshot between epochs."""
+    from sparkprep.operators import dedup
+
+    sig_ref = dedup.minhash_signatures(ref_df, text_col, id_col)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        survivors = incremental_minhash_filter(
-            batch_df, ref_df, text_col, id_col, **minhash_kw
+        sig_new = dedup.minhash_signatures(batch_df, text_col, id_col)
+        survivors = dedup.incremental_minhash_filter(
+            batch_df, sig_new, sig_ref, id_col, est_threshold=est_threshold
         )
         survivors.write.mode("append").parquet(out_path)
 

@@ -180,9 +180,8 @@ def test_chunk_overlap_planted_full_and_zero(spark):
     cdf = chunks.select(
         (F.col("doc_id") * 1000 + F.col("chunk_id")).alias("cid"), "chunk_text"
     )
-    pairs = dd.minhash_candidate_pairs(
-        cdf, "chunk_text", "cid", est_threshold=0.8
-    )
+    sig = dd.minhash_signatures(cdf, "chunk_text", "cid")
+    pairs = dd.minhash_candidate_pairs(sig, "cid", est_threshold=0.8)
     cross = pairs.filter(F.expr("id_a div 1000") != F.expr("id_b div 1000"))
     matched = (
         cross.select(F.explode(F.array("id_a", "id_b")).alias("cid"))

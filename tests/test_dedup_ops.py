@@ -111,13 +111,63 @@ def docs(spark):
     return spark.createDataFrame(ROWS, ["doc_id", "text"])
 
 
+def _minhash_sig(df):
+    return dd.minhash_signatures(df, "text", "doc_id")
+
+
+def _cc(df, est_threshold):
+    return dd.connected_components(
+        dd.minhash_candidate_pairs(_minhash_sig(df), "doc_id", est_threshold=est_threshold)
+    )
+
+
+_ARTIFACT_PARAMS = {"sig_df", "sig_new_df", "sig_ref_df", "sketch_df", "cc"}
+
+
+def test_dedup_takes_its_sketch():
+    """Dedup consumers take the artifact they read and never build it:
+    no ``None``-default sketch/label parameter (the build-it-here
+    branch), no call of ``minhash_signatures`` outside the raw-corpus
+    entry ``minhash_dedup``, and no call of ``simhash`` or
+    ``connected_components`` inside the module."""
+    import ast
+    import inspect
+
+    tree = ast.parse(inspect.getsource(dd))
+    found = []
+    for fn in tree.body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        a = fn.args
+        positional = a.posonlyargs + a.args
+        defaulted = list(zip(positional[len(positional) - len(a.defaults):], a.defaults))
+        defaulted += [(p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+        for param, default in defaulted:
+            if (
+                param.arg in _ARTIFACT_PARAMS
+                and isinstance(default, ast.Constant)
+                and default.value is None
+            ):
+                found.append(f"{fn.name}: {param.arg}=None")
+        for node in ast.walk(fn):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            if name == "minhash_signatures" and fn.name != "minhash_dedup":
+                found.append(f"{fn.name}:{node.lineno} builds signatures")
+            if name in ("simhash", "connected_components"):
+                found.append(f"{fn.name}:{node.lineno} calls {name}")
+    assert not found, "dedup consumers build their own artifact:\n" + "\n".join(found)
+
+
 def test_minhash_dedup_keeps_first_by_id(docs):
     kept = sorted(r.doc_id for r in dd.minhash_dedup(docs, "text", "doc_id", est_threshold=0.5).collect())
     assert kept == [1, 3, 4]
 
 
 def test_minhash_pairs_match_exact_jaccard_ranking(docs):
-    pairs = dd.minhash_candidate_pairs(docs, "text", "doc_id", est_threshold=0.5).collect()
+    pairs = dd.minhash_candidate_pairs(_minhash_sig(docs), "doc_id", est_threshold=0.5).collect()
     assert [(p.id_a, p.id_b) for p in pairs] == [(1, 2)]
     exact = dd.jaccard_pairs(docs, "text", "doc_id", threshold=0.5).collect()
     assert [(p.id_a, p.id_b) for p in exact] == [(1, 2)]
@@ -133,7 +183,8 @@ def test_short_docs_yield_no_shingles(spark):
 
 
 def test_simhash_banding_finds_planted_pair(docs):
-    pairs = dd.simhash_pairs(docs, "text", "doc_id", max_hamming=10).collect()
+    sketch = dd.simhash(docs, "text", "doc_id")
+    pairs = dd.simhash_pairs(sketch, "doc_id", max_hamming=10).collect()
     assert [(p.id_a, p.id_b) for p in pairs] == [(1, 2)]
 
 
@@ -172,7 +223,7 @@ def test_connected_components_long_chain_converges(spark):
 
 
 def test_dedup_clusters_keep_reps(docs):
-    clusters = dd.dedup_clusters(docs, "text", "doc_id", est_threshold=0.5)
+    clusters = dd.dedup_clusters(docs, "doc_id", _cc(docs, 0.5))
     got = {r.doc_id: r.cluster_rep for r in clusters.collect()}
     assert got == {1: 1, 2: 1, 3: 3, 4: 4}
 
@@ -182,7 +233,7 @@ def test_cluster_representatives_keep_best(docs):
     # picks 1; singletons 3 and 4 keep themselves with cluster_size 1
     sized = docs.withColumn("n_chars", F.length("text").cast("long"))
     out = dd.cluster_representatives(
-        sized, "text", "doc_id", "n_chars", est_threshold=0.5
+        sized, "doc_id", "n_chars", _cc(docs, 0.5)
     ).collect()
     by_id = {r.doc_id: r for r in out}
     assert len(out) == 4
@@ -205,7 +256,7 @@ def test_cluster_representatives_quality_tiebreak(spark):
         "n_chars", F.length("text").cast("long")
     )
     out = {r.doc_id: r.keep for r in dd.cluster_representatives(
-        df, "text", "doc_id", "n_chars", est_threshold=0.5
+        df, "doc_id", "n_chars", _cc(df, 0.5)
     ).collect()}
     assert out == {10: True, 11: False}
 
@@ -342,8 +393,9 @@ def test_semantic_dedup_arrow_agrees_with_native(spark, sf_dir):
 def test_minhash_eval_calibration_on_planted_pair(docs, spark):
     """(1,2) is the only candidate; exact jaccard is computable by hand
     from the shingle sets, so MAE/bias/precision pin to it exactly."""
+    sig = _minhash_sig(docs)
     rep = dd.minhash_estimator_eval(
-        docs, "text", "doc_id", est_threshold=0.5, sim_threshold=0.5
+        docs, sig, "text", "doc_id", est_threshold=0.5, sim_threshold=0.5
     ).collect()[0]
     assert rep.n_candidates == 1
     # exact jaccard of (1,2): doc2's shingles are a subset chain of doc1's
@@ -353,7 +405,7 @@ def test_minhash_eval_calibration_on_planted_pair(docs, spark):
         if (r.id_a, r.id_b) == (1, 2)
     ][0]
     est = dd.minhash_candidate_pairs(
-        docs, "text", "doc_id", est_threshold=0.5
+        sig, "doc_id", est_threshold=0.5
     ).collect()[0].est_jaccard
     assert rep.mae == pytest.approx(abs(est - exact), abs=1e-3)
     assert rep.bias == pytest.approx(est - exact, abs=1e-3)
@@ -367,7 +419,7 @@ def test_minhash_eval_empty_candidates(spark):
         ["doc_id", "text"],
     )
     rep = dd.minhash_estimator_eval(
-        lonely, "text", "doc_id", est_threshold=0.5
+        lonely, _minhash_sig(lonely), "text", "doc_id", est_threshold=0.5
     ).collect()[0]
     assert rep.n_candidates == 0
     assert rep.mae is None and rep.bias is None and rep.precision is None
@@ -434,12 +486,14 @@ def test_cc_family_shares_one_labels_frame(spark, sf_dir):
     assert a is b, "second call must hit the session cache"
     # parity with the unshared operator path
     corpus = lp._corpus_near(spark, sf_dir)
-    fresh = dd.dedup_clusters(
-        corpus, "text", "doc_id",
-        num_hashes=lp._NUM_HASHES, k=lp._K, bands=lp._BANDS, seed=lp._SEED,
-        est_threshold=0.8,
+    sig = dd.minhash_signatures(
+        corpus, "text", "doc_id", num_hashes=lp._NUM_HASHES, k=lp._K, seed=lp._SEED
     )
-    shared = dd.dedup_clusters(corpus, "text", "doc_id", cc=a)
+    fresh_cc = dd.connected_components(
+        dd.minhash_candidate_pairs(sig, "doc_id", bands=lp._BANDS, est_threshold=0.8)
+    )
+    fresh = dd.dedup_clusters(corpus, "doc_id", fresh_cc)
+    shared = dd.dedup_clusters(corpus, "doc_id", a)
     rows_fresh = sorted(map(tuple, fresh.collect()))
     rows_shared = sorted(map(tuple, shared.collect()))
     assert rows_fresh == rows_shared

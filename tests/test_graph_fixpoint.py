@@ -290,6 +290,7 @@ def test_multi_bfs_hops_matches_python_bfs(spark, name):
 
 _VOCAB_FILES = (
     "sparkprep/operators/graph.py",
+    "sparkprep/operators/dedup.py",
     "sparkprep/queries/advanced.py",
     "sparkprep/queries/relational_ext.py",
     "scripts/scale_smoke.py",
@@ -360,7 +361,8 @@ def test_one_graph_vocabulary():
     ``graph.degrees``, the both-directions adjacency is the uncapped
     ``graph.directed_ends_capped``, and ``bfs_hops`` runs no loop of its
     own (it is ``multi_bfs_hops`` from one seed). Flags, in the three
-    graph-family modules, a union of two selects of one frame, a
+    graph-family modules and ``operators/dedup.py`` (whose connected
+    components symmetrize a near-dup pair graph), a union of two selects of one frame, a
     two-struct endpoint-swap explode outside ``directed_ends_capped``
     (a struct that carries a payload column, like association_rules'
     support, is not an adjacency), and a one-key ``groupBy(...).agg(count)``

@@ -97,7 +97,8 @@ def test_asof_join_name_clash_raises(spark):
 
 def test_lsh_bands_validation(spark):
     df = spark.createDataFrame([Row(doc_id=1, text="a b c d")])
+    sig = dedup.minhash_signatures(df, "text", "doc_id", num_hashes=16)
     with pytest.raises(ValueError, match="must divide"):
-        dedup.minhash_candidate_pairs(df, "text", "doc_id", num_hashes=16, bands=32)
+        dedup.minhash_candidate_pairs(sig, "doc_id", bands=32)
     with pytest.raises(ValueError, match="must divide"):
-        dedup.minhash_candidate_pairs(df, "text", "doc_id", num_hashes=16, bands=5)
+        dedup.minhash_candidate_pairs(sig, "doc_id", bands=5)

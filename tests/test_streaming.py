@@ -165,7 +165,7 @@ def test_stream_stream_join_matches_batch(spark, sf_dir, ckpt):
     assert got_rows, "expected at least one attributed purchase"
 
 
-def test_streaming_incremental_dedup_matches_batch(spark, sf_dir, ckpt):
+def test_streaming_incremental_dedup_matches_batch(spark, sf_dir, ckpt, monkeypatch):
     # two micro-batches of arriving docs (half mutants of the reference
     # corpus, half fresh) dedup against the static corpus per batch;
     # the union of survivors must equal the batch-mode answer.
@@ -173,7 +173,7 @@ def test_streaming_incremental_dedup_matches_batch(spark, sf_dir, ckpt):
 
     from pyspark.sql import functions as F
 
-    from sparkprep.operators.dedup import incremental_minhash_filter
+    from sparkprep.operators import dedup
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     mutants = docs.filter(F.col("doc_id") % 7 == 0).select(
@@ -196,6 +196,16 @@ def test_streaming_incremental_dedup_matches_batch(spark, sf_dir, ckpt):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
+    # the sink sketches the static reference once, when it is made, and
+    # each micro-batch only itself: 1 + 2 signature builds, not 2 per batch
+    builds = []
+    build = dedup.minhash_signatures
+
+    def counted(*args, **kwargs):
+        builds.append(args)
+        return build(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "minhash_signatures", counted)
     st.run_available_now(
         stream,
         foreach_batch=st.foreach_batch_incremental_dedup(
@@ -203,11 +213,17 @@ def test_streaming_incremental_dedup_matches_batch(spark, sf_dir, ckpt):
         ),
         checkpoint=f"{ckpt}/inc_dedup",
     )
+    monkeypatch.undo()
+    assert len(builds) == 3
     got = sorted(r["doc_id"] for r in spark.read.parquet(out).collect())
     expected = sorted(
         r["doc_id"]
-        for r in incremental_minhash_filter(
-            arriving, docs, "text", "doc_id", est_threshold=0.5
+        for r in dedup.incremental_minhash_filter(
+            arriving,
+            dedup.minhash_signatures(arriving, "text", "doc_id"),
+            dedup.minhash_signatures(docs, "text", "doc_id"),
+            "doc_id",
+            est_threshold=0.5,
         ).collect()
     )
     assert got == expected
